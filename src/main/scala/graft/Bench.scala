@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: executes every catalog query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
   *
@@ -13,15 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.prepare(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Graft.localSession("graft-bench", cpus)
 
     // Per-query execution datasheet (rows/bytes/shuffle/spill/task-skew
     // keyed by per-pass bench-<query>#p<pass> job groups; the written
@@ -30,83 +21,27 @@ object Bench {
     val metrics = new graft.pipeline.MetricsListener
     spark.sparkContext.addSparkListener(metrics)
 
-    // Per-query watchdog: the wall-clock budget below is only checked BETWEEN
-    // queries, so one genuinely hung query would still ride the process into
-    // the driver's kill (rc=124, no JSON). Each query runs in its own thread
-    // under a job group; past the deadline the group is cancelled (Spark
-    // tasks respond to cancellation at the next record boundary) and the
-    // query is scored -1 for the pass — a lost sample, not a lost round.
+    // The wall-clock budget below is only checked between queries, so each
+    // execution also runs under the per-query watchdog: a hung query is
+    // scored -1 for the pass (a lost sample, not a lost run). Each
+    // execution has its own job group, bench-<name>#p<pass>, so the metrics
+    // sheet can report the winning pass alone instead of a sum over
+    // warm-up, every pass and cancelled attempts.
     val queryTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_SEC", "600").toLong
-    // Each execution runs under its OWN job group (bench-<name>#p<pass>):
-    // the metrics datasheet then reports the winning pass's numbers alone,
-    // instead of summing warm-up + every pass + cancelled attempts into
-    // incomparable totals (cross-round comparability needs per-execution
-    // semantics, matching the min-across-passes timing).
-    def run(name: String, group: String): Double = {
-      val t0 = System.nanoTime()
-      @volatile var failed: Throwable = null
-      val worker = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable => failed = e }
-        finally spark.sparkContext.clearJobGroup()
-      }, group)
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(queryTimeoutSec * 1000)
-      if (worker.isAlive) {
-        System.err.println(s"[bench] $name TIMED OUT after ${queryTimeoutSec}s — cancelling")
-        spark.sparkContext.cancelJobGroup(group)
-        // Structured-Streaming executions (q164) submit their micro-batch
-        // jobs from the stream-execution thread under the query's OWN job
-        // group (its runId) — cancelJobGroup(group) never touches them and
-        // awaitTermination would block the worker forever. Stop any active
-        // streaming query — from a BOUNDED daemon thread, because stop()
-        // itself joins the stream thread with stopTimeout=0 (wait forever
-        // by default): a stream stuck in uninterruptible IO would
-        // otherwise convert this per-query timeout into a whole-bench
-        // hang. The bench runs queries one at a time, so anything active
-        // belongs to the timed-out execution.
-        def stopActiveStreams(): Unit = spark.streams.active.foreach { sq =>
-          System.err.println(s"[bench] stopping streaming query ${sq.name}")
-          val stopper = new Thread(() =>
-            try sq.stop() catch { case e: Exception =>
-              System.err.println(s"[bench] stop failed: $e") })
-          stopper.setDaemon(true)
-          stopper.start()
-          stopper.join(15000)
-          if (stopper.isAlive)
-            System.err.println(s"[bench] ${sq.name} did not stop within 15s — abandoning")
-        }
-        stopActiveStreams()
-        worker.join(30000)
-        // A worker timed out BETWEEN schema read and start() registers its
-        // stream only after the first sweep — re-check once post-grace so
-        // a late-starting stream can't park in awaitTermination unnoticed.
-        if (worker.isAlive) stopActiveStreams()
-        // Spark cancellation is best-effort (tasks yield at record
-        // boundaries): a worker still alive after the grace join keeps
-        // competing for executor threads and contaminates the NEXT queries'
-        // samples in this pass. Flag it loudly so a pass with a zombie can
-        // be discounted when reading the numbers.
-        if (worker.isAlive)
-          System.err.println(
-            s"[bench] $name worker STILL RUNNING after cancel+30s grace — " +
-              "subsequent timings in this pass may be contaminated")
-        return -1.0
+      Harness.envPositiveLong("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_SEC").getOrElse(600L)
+    def run(name: String, group: String): Double =
+      Watchdog.run(spark, group, queryTimeoutSec) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+      } match {
+        case Watchdog.Ok(t) =>
+          System.err.println(f"[bench] $name $t%.2fs"); t
+        case Watchdog.Failed(e) =>
+          System.err.println(s"[bench] $name failed: $e"); -1.0
+        case Watchdog.TimedOut => -1.0
       }
-      if (failed != null) {
-        System.err.println(s"[bench] $name failed: $failed"); return -1.0
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name $t%.2fs")
-      t
-    }
 
-    // Host-calibration probe (VERDICT r11 #2): a FIXED, Spark-free
+    // Host-calibration probe: a FIXED, Spark-free
     // micro-benchmark run at every pass boundary and recorded into the
     // metrics datasheet, so cross-round wall-clock drift (this host shows
     // ±16% windows — see the interleaving comment below) is attributable
@@ -172,14 +107,14 @@ object Bench {
     // adding passes up to the cap OR until the wall-clock budget runs out,
     // whichever comes first. A query is reported failed (-1) only when it
     // fails in EVERY pass.
-    val basePasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val maxPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_RUNS", "6").toInt
+    val basePasses = Harness.envPositiveLong("SPARK_GRAFT_BENCH_RUNS").getOrElse(3L)
+    val maxPasses = Harness.envPositiveLong("SPARK_GRAFT_BENCH_MAX_RUNS").getOrElse(6L)
     // HARD wall-clock budget: the driver kills the whole process at its own
     // timeout (observed ~90 min), and a killed bench reports NOTHING — so
     // past the budget we stop starting new work (even mid-pass, once every
     // query has at least one sample) and print the JSON line with whatever
     // minima we have. A partial second pass is strictly better than rc=124.
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700").toDouble
+    val budgetSec = Harness.envPositiveLong("SPARK_GRAFT_BENCH_BUDGET_SEC").getOrElse(2700L)
     val startNanos = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - startNanos) / 1e9
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
@@ -247,71 +182,41 @@ object Bench {
       if (ok.isEmpty) (n, -1.0, -1) else { val best = ok.minBy(_._1); (n, best._1, best._2) }
     }
     val results = resultsWithPass.map { case (n, t, _) => n -> t }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // queries_ok cross-checks the round's correctness artifact: if the
-    // verify gate ever reports an empty/implausibly small result map again
-    // (round 8's `{}`), this independent count of queries that EXECUTED
-    // end-to-end is the contradiction that flags it.
+    // queries_ok cross-checks the correctness record: an empty or
+    // implausibly small verify result map contradicts this independent
+    // count of queries that executed end to end.
     val nOk = results.count(_._2 >= 0)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries_ok":$nOk,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries_ok":$nOk,"queries":$qs,"sf":${Json.str(sfDir)}}"""
     println(json)
     Console.out.flush()
-    // The round's primary perf artifact must not depend on log-tail
-    // capture: at 90+ queries the full JSON line overflows the driver's
-    // tail window (round 5 lost q01-q31 to exactly this), so ALSO write it
-    // to a stable file in the repo. The file is (over)written every run
-    // and committed, making the per-query record loss-proof even when the
-    // process is killed right after this point.
-    // Output location: full-path overrides (SPARK_GRAFT_BENCH_OUT /
+    // The full record must not depend on log-tail capture (at 90+ queries
+    // the line overflows a typical tail window), so it is also written to
+    // a file. Full-path overrides (SPARK_GRAFT_BENCH_OUT /
     // SPARK_GRAFT_METRICS_OUT) win; otherwise files land in
-    // SPARK_GRAFT_BENCH_OUT_DIR. The default is the process cwd — EXCEPT
-    // when cwd is a repo root (a `.git` directory is present): there the
-    // default flips to a tmpdir fallback, because every ad-hoc or
-    // driver-side pass launched from the repo root was clobbering the
-    // committed bench_out.json/bench_metrics.json records (r10 finding).
-    // A deliberate record refresh sets SPARK_GRAFT_BENCH_OUT_DIR=.
-    // explicitly. The fallback is per-user under java.io.tmpdir (ADVICE
-    // r11: a fixed world-shared /tmp/graft_bench lets another user's run
-    // own the files and concurrent users clobber each other). Subset runs
-    // (SPARK_GRAFT_BENCH_ONLY set) get a ".subset" suffix so a partial
-    // sweep can never overwrite a full one.
-    val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT_DIR",
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(".git")))
-          java.nio.file.Paths.get(
-            sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-            s"graft_bench-${sys.props.getOrElse("user.name", "unknown")}").toString
-        else "."))
+    // SPARK_GRAFT_BENCH_OUT_DIR, default [[Harness.defaultOutDir]]. Subset
+    // runs (SPARK_GRAFT_BENCH_ONLY set) get a ".subset" suffix so a
+    // partial sweep can never overwrite a full one.
+    val outDir = sys.env.get("SPARK_GRAFT_BENCH_OUT_DIR")
+      .map(java.nio.file.Paths.get(_)).getOrElse(Harness.defaultOutDir)
     val subsetSuffix = if (only.isDefined) ".subset" else ""
     val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
       .map(java.nio.file.Paths.get(_))
       .getOrElse(outDir.resolve(s"bench_out$subsetSuffix.json"))
-    try {
-      val parent = outPath.toAbsolutePath.getParent
-      if (parent != null) java.nio.file.Files.createDirectories(parent)
-      // The FILE record carries run-provenance fields the one-line stdout
-      // contract does not (VERDICT r13 #8: the sf10 watch item existed
-      // largely because the old committed record's pass count/sampling was
-      // unknowable). Committed record refreshes copy this file, so every
-      // future record self-describes its sampling. The stdout line above
-      // stays byte-identical — the driver parses it.
-      val fileJson = json.stripSuffix("}") +
-        s""","passes":${passTimes.size},"partial_pass":${partialSamples.nonEmpty},""" +
-        s""""timeout_s":$queryTimeoutSec,"budget_s":${budgetSec.toLong},"cpus":$cpus}"""
-      java.nio.file.Files.writeString(outPath, fileJson + "\n")
-    } catch { case e: Throwable => System.err.println(s"[bench] bench_out write failed: $e") }
-    // stderr gets ONLY a compact line (total + 10 slowest): a 90-query
-    // line on stderr is what overflowed the tail window; the compact form
-    // always fits and names the file carrying the full record.
+    // The file record also carries the run's sampling (pass count, budget,
+    // width), so a committed record describes itself. The stdout line
+    // above keeps its fields: callers parse it.
+    try Harness.writeFile(outPath, json.stripSuffix("}") +
+      s""","passes":${passTimes.size},"partial_pass":${partialSamples.nonEmpty},""" +
+      s""""timeout_s":$queryTimeoutSec,"budget_s":$budgetSec,"cpus":$cpus}""")
+    catch { case e: Throwable => System.err.println(s"[bench] bench_out write failed: $e") }
+    // stderr gets ONLY a compact line (total + 10 slowest), which always
+    // fits a tail window and names the file carrying the full record.
     val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v) =>
-        // Locale.ROOT — a comma-decimal JVM locale would make this record
-        // unparseable, the exact loss mode the compact line guards against
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.str(k) + ":" + Json.fixed(v, 2) }.mkString("{", ",", "}")
     System.err.println(
-      s"""{"metric":"total","value":$total,"unit":"sec","slowest10":$slow,"sf":"$sfDir","full":"$outPath"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","slowest10":$slow,"sf":${Json.str(sfDir)},"full":${Json.str(outPath.toString)}}""")
     System.err.flush()
     // Metrics datasheet: drain the async listener bus by POLLING until the
     // task count stabilizes (a fixed sleep silently truncates the tail of
@@ -334,21 +239,15 @@ object Bench {
     val selection = resultsWithPass.collect {
       case (n, t, p) if t >= 0 => s"bench-$n" -> s"bench-$n#p$p"
     }
-    try {
-      val parent = metricsPath.toAbsolutePath.getParent
-      if (parent != null) java.nio.file.Files.createDirectories(parent)
-      // "calibration" leads the sheet: one probe per pass boundary (index
-      // i ran before pass i; the last entry is the post-run probe), so a
-      // committed record carries its own host-speed evidence.
-      val calibJson = calibrations.map { case (b, c, io) =>
-        String.format(java.util.Locale.ROOT,
-          """{"boundary":%d,"cpu_sec":%.4f,"fsync128_sec":%.4f}""",
-          Integer.valueOf(b), Double.box(c), Double.box(io))
-      }.mkString("[", ",", "]")
-      val sheet = metrics.selectedJson(selection,
-        leading = Seq("calibration" -> calibJson))
-      java.nio.file.Files.writeString(metricsPath, sheet + "\n")
-    } catch { case e: Throwable => System.err.println(s"[bench] metrics write failed: $e") }
+    // "calibration" leads the sheet: one probe per pass boundary (index i
+    // ran before pass i; the last entry is the post-run probe), so a
+    // committed record carries its own host-speed evidence.
+    val calibJson = calibrations.map { case (b, c, io) =>
+      s"""{"boundary":$b,"cpu_sec":${Json.fixed(c, 4)},"fsync128_sec":${Json.fixed(io, 4)}}"""
+    }.mkString("[", ",", "]")
+    try Harness.writeFile(metricsPath,
+      metrics.selectedJson(selection, leading = Seq("calibration" -> calibJson)))
+    catch { case e: Throwable => System.err.println(s"[bench] metrics write failed: $e") }
     spark.stop()
   }
 }

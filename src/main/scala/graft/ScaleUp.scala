@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal dataset generator: replicates an sf-directory `factor`×
@@ -39,15 +39,7 @@ object ScaleUp {
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1 && factor < tags.length,
       s"factor must be in [1, ${tags.length - 1}], got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.prepare(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("graft-scaleup")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def wr(df: DataFrame, t: String): Unit = {

@@ -111,8 +111,10 @@ object BpeTrainer {
   /** [[train]] plus the number of batched ROUNDS actually executed — the
     * quantity the top-B batching contract promises is ≈ nMerges/batchSize
     * (conflict skips can stretch it slightly). Exposed for the scale
-    * rehearsal ([[graft.BpeScale]]); the training semantics are
-    * [[train]]'s, verbatim. */
+    * rehearsal recorded in `BPE_SCALE_sf1.json` (by the `graft.BpeScale`
+    * main, last present at commit 6325750:
+    * `git show 6325750:src/main/scala/graft/BpeScale.scala`); the
+    * training semantics are [[train]]'s, verbatim. */
   def trainRounds(
       vocab: DataFrame,
       nMerges: Int,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.functions.{HashFunctions, TextFunctions}
 
 /** Thrown DRIVER-SIDE, at operator-call time, when a simjoin blowup guard's
@@ -785,8 +786,10 @@ object Dedup {
     * join is planned, naming the estimate — turning "6 hours of shuffle
     * spill" into an immediate, actionable error (raise τ, use shingles,
     * set `maxPrefixFreq`). "Use shingles" is now a committed measurement,
-    * not prose: `KCORE_DEMO_sf10.json` (graft.KCoreDemo) runs q148's
-    * exact k-core shape twice at sf10 — unigram (the fixture's dense
+    * not prose: `KCORE_DEMO_sf10.json` records q148's exact k-core shape
+    * run twice at sf10 (by the `graft.KCoreDemo` main, last present at
+    * commit 6325750: `git show 6325750:src/main/scala/graft/KCoreDemo.scala`)
+    * — unigram (the fixture's dense
     * 31-token vocabulary) reproduces the committed 54 GB disk / 238 GB
     * memory verify-sort spill at 956 s wall, while 3-shingles with every
     * other parameter identical runs the same operator with ZERO spill at
@@ -811,7 +814,7 @@ object Dedup {
     * candidate join is planned).
     *
     * Uncapped callers skip the guard job AND the measured width pins —
-    * the r9-measured fast path for fixture-scale corpora, but it means a
+    * the measured fast path for fixture-scale corpora, but it means a
     * production-scale caller should ALWAYS set a cap (maxPairsPerEntry is
     * the scale-invariant one): the cap is the blowup certificate, and the
     * same measured mass buys the data-proportional exchange widths that
@@ -887,8 +890,8 @@ object Dedup {
     // operator-call time when a cap is requested (the operator is already
     // eager — `ordered` is a localCheckpoint — so this adds one
     // index-sized aggregation job from the checkpoint, not a new
-    // eagerness class). Fold-into-the-checkpoint-pass considered and
-    // SKIPPED (r12, VERDICT r11 #5's own skip clause): measured cost is
+    // eagerness class). Folding it into the checkpoint pass was considered
+    // and skipped: measured cost is
     // 0.47-0.5 s warm at sf0.1 (1.4 s cold), dominated by the index-sized
     // explode+shuffle that prefix counting inherently needs — the
     // checkpoint job materializes per-DOC rows, and piggybacking a
@@ -902,7 +905,7 @@ object Dedup {
     // candidate and verify widths below — an output-exploding join's
     // right width is pair-proportional, and only the guard knows the pair
     // mass. Uncapped callers skip the guard job AND the pins entirely and
-    // get the planner's own choices — the r9-measured fast path for
+    // get the planner's own choices — the measured fast path for
     // fixture-scale dense graphs (q148's 31-token-vocabulary unigram
     // corpus: the guard job + pinned exchanges cost more than the whole
     // uncapped query). n·(n−1) runs in decimal(38,0) (a single 10¹⁰-doc
@@ -932,9 +935,6 @@ object Dedup {
             s"entries exceed the cap (maxCandidatePairs=$maxCandidatePairs, " +
             s"maxPairsPerEntry=$maxPairsPerEntry) — raise tau, use shingles, " +
             "or set maxPrefixFreq")
-      if (sys.env.contains("GRAFT_SIMJOIN_DEBUG"))
-        System.err.println(s"[simjoin-guard] pairs=${(p2 / 2).toBigInt} " +
-          s"idxEntries=${idxEntries.toBigInt} tau=$tauNum/$tauDen k=$shingleK")
       p2
     }
     val indexed = pruned
@@ -947,7 +947,7 @@ object Dedup {
     // I(d+n) ≥ n(|A|+|B|)), which is strictly tighter than the previous
     // ⌈τ·max(|A|,|B|)⌉ requirement (for |A|=|B|=s it needs ~2τs/(1+τ)
     // instead of τs — at τ=0.9 that admits positions ≤ ~5% of the prefix
-    // instead of ~10%, r14; the candidate shuffle is the operator's
+    // instead of ~10%; the candidate shuffle is the operator's
     // dominant byte mover, guide §2.3). Lossless BECAUSE the pair's
     // globally-smallest common token passes it (every common element sits
     // at or after it in both sorted sets) — an argument that needs that
@@ -991,7 +991,7 @@ object Dedup {
     // so this costs no extra shuffle — it only fixes the reducer count.
     val pairsPerTask = BigDecimal(1L << 20)
     // The pins engage for EVERY guarded call, with no small-mass floor —
-    // a floor was tried (r11) and measured SLOWER at fixture scale: the
+    // a floor was tried and measured SLOWER at fixture scale: the
     // pin's value is not spreading the pair mass (210k pairs at sf0.1 is
     // ~6 task-seconds) but holding the index exchange at session width so
     // the whole candidate→verify chain inherits real parallelism.
@@ -999,9 +999,7 @@ object Dedup {
     // broadcast self-joins that collapse the downstream chain to a few
     // tasks and serialize the CPU-dense verify work (measured in-window:
     // q165 5.06→7.05 s, q167 2.69→4.04 s with a 2²¹-pair floor; the
-    // unguarded r9 tree rebuilt today shows the same collapsed walls, so
-    // the r10 record's apparent +16% vs r9 was host-window drift, not pin
-    // overhead — pinned HEAD is ~11% FASTER than the unpinned r9 tree
+    // pinned operator also measured ~11% faster than an unpinned build
     // method-for-method in the same window).
     val pinned = guarded
     val probe = if (!pinned) indexed else {
@@ -1055,13 +1053,13 @@ object Dedup {
     // second repartition between the joins ships the JOINED rows — pairs
     // with their full token arrays attached — and measured 32 MB → 404 MB
     // total shuffle, 4.8 s → 12 s wall on q148's dense unigram graph.
-    // (r11) The former doc_a-keyed verify repartition is gone: the pinned
-    // dedup above already leaves the pair table hash-partitioned on
-    // (doc_a, doc_b) at the mass-proportional width, so the verify joins
-    // run map-side (broadcast doc table) in exactly those partitions — a
-    // second exchange shipped the deduped pairs again for nothing. The
-    // (doc_a, doc_b) key also spreads hub documents that a doc_a-only
-    // key concentrated into one reducer (the r10 ADVICE caveat).
+    // No doc_a-keyed verify repartition: the pinned dedup above already
+    // leaves the pair table hash-partitioned on (doc_a, doc_b) at the
+    // mass-proportional width, so the verify joins run map-side (broadcast
+    // doc table) in exactly those partitions — a second exchange would
+    // ship the deduped pairs again for nothing. The (doc_a, doc_b) key
+    // also spreads hub documents that a doc_a-only key concentrates into
+    // one reducer.
     val orderedA = ordered.select(col("__doc").as("doc_a"),
       array_sort(col("__tk")).as("__ta"), col("__sz").as("n_a"))
     val orderedB = ordered.select(col("__doc").as("doc_b"),
@@ -1079,17 +1077,18 @@ object Dedup {
     // as it arrives, per-partition build = corpus/width rows of token
     // arrays. The explicit repartitions pin the probe exchanges at the
     // same mass-proportional width as the dedup (AQE's byte-based sizing
-    // under-provisions CPU-dense verify stages — the measured r11/r12
-    // finding behind every width pin in this operator); both exchanges
+    // under-provisions CPU-dense verify stages — the measured finding
+    // behind every width pin in this operator); both exchanges
     // exist under sort-merge too, so this changes strategy and width,
-    // never adds a shuffle. Join strategy is semantics-free; the r13 NR6
-    // caveat (SHJ regressing q148 6.7 → 21.6 s) was the CANDIDATE
+    // never adds a shuffle. Join strategy is semantics-free; the measured
+    // SHJ regression (q148 6.7 → 21.6 s) was on the CANDIDATE
     // self-join, whose giant shared-token build buckets are the opposite
     // shape — here the build side is the small leg by construction.
     // env for deployments, system property as the in-JVM test hook
-    val shjMinPairs = sys.env.get("SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS")
-      .orElse(sys.props.get("graft.simjoin.shj.min.pairs"))
-      .map(_.toLong).getOrElse(1L << 28)
+    val shjMinPairs = Harness.positiveLong("SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS",
+      sys.env.get("SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS")
+        .orElse(sys.props.get("graft.simjoin.shj.min.pairs")))
+      .getOrElse(1L << 28)
     val verified =
       if (guarded && pairMass2 / 2 > BigDecimal(shjMinPairs))
         cand

@@ -4,6 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
+import graft.{Harness, Json}
+
 /** Per-query execution metrics via `SparkListener` — the engine's parity
   * artifact for the reference's Prometheus/Grafana stack (reference
   * `docker-compose.yml:40-103`, `prometheus.yml`, `docs/MONITORING.md`
@@ -37,7 +39,7 @@ final class MetricsListener extends SparkListener {
     // Driver actions (Spark jobs) in the group — the iterative-loop
     // families' wall is per-round driver barriers, so job count is the
     // noise-free mechanism evidence for any "fewer actions per round"
-    // change (VERDICT r13 #3), where wall-clock needs a calm window.
+    // change, where wall-clock needs a calm window.
     var nJobs: Long = 0L
     var nTasks: Long = 0L
     var totalTaskMs: Long = 0L
@@ -67,11 +69,10 @@ final class MetricsListener extends SparkListener {
       }
 
     /** Absolute max task ms WITHIN the hot stage — the tail the skew
-      * RATIO divides by a shrinking mean (VERDICT r12 #4: q73's width-pin
-      * cut total task-seconds 44% at a fixed ~1 s tail, and the ratio
-      * READ WORSE for a better plan). A floor adjudication cites this
-      * number staying flat across the change; a genuine hot key shows it
-      * GROWING with data. */
+      * RATIO divides by a shrinking mean, so a plan that cuts total task
+      * time at a fixed tail reads WORSE on the ratio. A floor
+      * adjudication cites this number staying flat across the change; a
+      * genuine hot key shows it GROWING with data. */
     def hotStageTailMs: Long =
       if (stageTasks.isEmpty) 0L else stageTasks.values.maxBy(_._2)._3
 
@@ -90,11 +91,8 @@ final class MetricsListener extends SparkListener {
     def json: String =
       s"""{"n_jobs":$nJobs,"n_tasks":$nTasks,"failed_tasks":$failedTasks,""" +
         s""""total_task_ms":$totalTaskMs,"max_task_ms":$maxTaskMs,""" +
-        // Locale.ROOT: the f"" interpolator honors the JVM default locale,
-        // and a comma-decimal locale (de_DE …) would emit 1,234 here —
-        // unparseable JSON, silently zeroing the round's metrics artifact
-        s""""task_skew":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(skew))},""" +
-        s""""hot_stage_skew":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(hotStageSkew))},""" +
+        s""""task_skew":${Json.fixed(skew, 3)},""" +
+        s""""hot_stage_skew":${Json.fixed(hotStageSkew, 3)},""" +
         s""""hot_stage_tail_ms":$hotStageTailMs,""" +
         s""""input_records":$inputRecords,"input_bytes":$inputBytes,""" +
         s""""output_records":$outputRecords,""" +
@@ -164,7 +162,7 @@ final class MetricsListener extends SparkListener {
   def snapshotJson(): String = {
     import scala.jdk.CollectionConverters._
     byGroup.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v.synchronized(v.json) }
+      .map { case (k, v) => Json.str(k) + ":" + v.synchronized(v.json) }
       .mkString("{", ",", "}")
   }
 
@@ -178,24 +176,19 @@ final class MetricsListener extends SparkListener {
   /** [[selectedJson]] with `leading` entries (key → raw JSON value)
     * prepended as ordinary members of the same object — how Bench embeds
     * the calibration array. Built as one member list, so the sheet's
-    * shape can never depend on textual surgery over the selection's
-    * rendering (ADVICE r12: the `substring(1)` splice silently coupled
-    * Bench to this method always emitting `{...}`). */
+    * shape never depends on textual surgery over the selection's
+    * rendering. */
   def selectedJson(
       selection: Seq[(String, String)],
       leading: Seq[(String, String)]): String = {
     val members =
-      leading.map { case (k, raw) => "\"" + k + "\":" + raw } ++
+      leading.map { case (k, raw) => Json.str(k) + ":" + raw } ++
         selection.flatMap { case (out, group) =>
-          groupJson(group).map("\"" + out + "\":" + _)
+          groupJson(group).map(Json.str(out) + ":" + _)
         }
     members.mkString("{", ",", "}")
   }
 
   /** Write the datasheet file (parent dirs created). */
-  def write(path: java.nio.file.Path): Unit = {
-    val parent = path.toAbsolutePath.getParent
-    if (parent != null) java.nio.file.Files.createDirectories(parent)
-    java.nio.file.Files.writeString(path, snapshotJson() + "\n")
-  }
+  def write(path: java.nio.file.Path): Unit = Harness.writeFile(path, snapshotJson())
 }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Graft
 import graft.sources.GeoJsonSource
 
@@ -20,13 +18,7 @@ object MilanApp {
     val whDir = opts.getOrElse("warehouse", sys.error("--warehouse required"))
     val all = opts.contains("all")
 
-    val spark = Graft.prepare(
-      SparkSession.builder()
-        .master(opts.getOrElse("master", "local[*]"))
-        .appName("milan-etl")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("milan-etl")
     val pipe = new MilanPipeline(spark, whDir)
 
     if (all || opts.contains("geometries")) {

@@ -2,13 +2,10 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-import graft.Graft
+import graft.{Graft, Harness, Json}
 import graft.sources.{GeoJsonFixture, GeoJsonSource}
 
-/** End-to-end Milan pipeline run record (VERDICT r11 #6) — the reference's
+/** End-to-end Milan pipeline run record — the reference's
   * E1 (`main.py --all`, reference main.py:56-94) executed as ONE run over
   * synthesized inputs, emitting a committed datasheet (`MILAN_E2E.json`):
   * per-stage wall seconds, row/file counts, the double-load ledger proof,
@@ -31,9 +28,7 @@ import graft.sources.{GeoJsonFixture, GeoJsonSource}
   *     bad-datetime drop, null→0 fill, negative clamp, cell-range filter,
   *     province normalization).
   *
-  * Two shapes (VERDICT r12 #1 — the operators were proven piecewise and
-  * at sf10, but the E1 COMPOSITION had only run at 1/100th the
-  * reference's own data shape):
+  * Two shapes:
   *   - default (small): 2 day-files per table over 20k ids, grid 100,
   *     provinces 33 — the seconds-fast refresh fixture (`MILAN_E2E.json`);
   *   - `--full`: the reference's ACTUAL workload shape (notebook cells
@@ -44,9 +39,9 @@ import graft.sources.{GeoJsonFixture, GeoJsonSource}
   *     dynamic-partition overwrite width at 7 (event_date, src_file)
   *     partitions per table, audit wall — at the reference's own scale.
   *
-  * Output path: first non-flag arg, else `MILAN_E2E[_full].json` under
-  * the Bench convention's per-user tmp fallback when cwd is a repo root
-  * (a deliberate refresh passes the repo path explicitly).
+  * Output path: first non-flag arg, else `MILAN_E2E[_full].json` in
+  * [[Harness.defaultOutDir]] (a deliberate refresh passes the repo path
+  * explicitly).
   *
   * Usage: runMain graft.pipeline.MilanE2E [--full] [outPath]
   */
@@ -55,19 +50,10 @@ object MilanE2E {
   def main(args: Array[String]): Unit = {
     val full = args.contains("--full")
     val outArg = args.filterNot(_ == "--full").headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.prepare(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("milan-e2e")
 
-    // Per-user root (ADVICE r12: a fixed world-shared path is wiped on
-    // entry — two users on one host would clobber each other's in-flight
-    // runs; same convention as the graft_bench-$USER fallback).
+    // Per-user root: it is wiped on entry, so a world-shared path would let
+    // two users on one host clobber each other's in-flight runs.
     val root = Paths.get(sys.props("java.io.tmpdir"),
       s"graft-milan-e2e-${sys.props.getOrElse("user.name", "unknown")}")
     IngestHarness.deleteRecursively(root)
@@ -80,8 +66,7 @@ object MilanE2E {
       val a = f
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    def j(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+    def j(d: Double): String = Json.fixed(d, 3)
 
     // ---- stage fixtures (not timed as pipeline work: input synthesis) --
     // Full shape = the reference's measured workload: 1,891,928 traffic /
@@ -141,7 +126,7 @@ object MilanE2E {
         .toSeq.sortBy(_._1)
     }
     val auditJson = audit
-      .map { case (c, v) => "\"" + c + "\":" + v }.mkString("{", ",", "}")
+      .map { case (c, v) => Json.str(c) + ":" + v }.mkString("{", ",", "}")
 
     val json =
       s"""{"shape":"${if (full) "full_reference_scale" else "small"}",
@@ -156,16 +141,9 @@ object MilanE2E {
     println(json)
 
     val defaultName = if (full) "MILAN_E2E_full.json" else "MILAN_E2E.json"
-    val outPath = outArg.map(Paths.get(_)).getOrElse {
-      if (Files.isDirectory(Paths.get(".git")))
-        Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          s"graft_bench-${sys.props.getOrElse("user.name", "unknown")}",
-          defaultName)
-      else Paths.get(defaultName)
-    }
-    val parent = outPath.toAbsolutePath.getParent
-    if (parent != null) Files.createDirectories(parent)
-    Files.writeString(outPath, json + "\n")
+    val outPath = outArg.map(Paths.get(_))
+      .getOrElse(Harness.defaultOutDir.resolve(defaultName))
+    Harness.writeFile(outPath, json)
     System.err.println(s"[milan-e2e] wrote $outPath")
 
     IngestHarness.deleteRecursively(root)

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Harness
+
 /** Shared scaffolding for running a streaming frame through the REAL
   * Structured-Streaming engine to a terminal, value-checkable result:
   * checkpointed memory sink + `Trigger.AvailableNow()`, fresh
@@ -94,25 +96,10 @@ private[streaming] object StreamingHarness {
     * own per-partition state budget (typically 64-256 MiB of STATE — note
     * this knob meters INPUT bytes, a proxy that overweights input-heavy /
     * state-light streams, which is why it stays env-tunable). */
-  /** Parse an env var that must be a POSITIVE long; a malformed or
-    * non-positive value fails loudly NAMING the variable (a bare .toLong
-    * threw an anonymous NumberFormatException, and a zero budget divided
-    * by zero three lines later — ADVICE r13). */
-  private def envPositiveLong(name: String): Option[Long] =
-    sys.env.get(name).map { raw =>
-      val v = try raw.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$raw'")
-      }
-      if (v <= 0) throw new IllegalArgumentException(
-        s"$name must be a positive integer, got '$raw'")
-      v
-    }
-
   def adaptiveStatePartitions(
       spark: SparkSession, inputPaths: Seq[String]): Seq[(String, String)] = {
-    val n = envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      val per = envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES")
+    val n = Harness.envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
+      val per = Harness.envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES")
         .getOrElse(8L << 20)
       def bytes(f: java.io.File): Long =
         if (f.isFile) f.length

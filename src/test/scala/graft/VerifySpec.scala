@@ -1,15 +1,14 @@
 package graft
 
 /** Pins the gate-handshake tripwire: a verify run that dumps ZERO query
-  * directories must fail loudly (round 8's `CORRECTNESS_r08.json` came back
-  * `{}` while the engine was green — an empty gate artifact must never be
-  * producible silently again). */
+  * directories must fail loudly — an empty gate artifact reads like a green
+  * engine and must never be producible silently. */
 class VerifySpec extends SparkSpec {
 
   test("runAll with a filter matching nothing dumps zero queries") {
     val out = java.nio.file.Files.createTempDirectory("graft-verify-spec").toString
     val (ok, failed) =
-      Verify.runAll(spark, "/nonexistent-sf-dir", out, Some(Set("__no_such_query__")), 1)
+      Verify.runAll(spark, "/nonexistent-sf-dir", out, Some(Set("__no_such_query__")), 1, 600)
     assert(ok == 0 && failed == 0)
   }
 
