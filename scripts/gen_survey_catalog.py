@@ -1,19 +1,22 @@
 #!/usr/bin/env python3
 """Regenerate SURVEY.md §8.1 — the mechanical catalog audit table.
 
-One row per `SparkEntry.queries` key: the query's one-line purpose (first
-line of its `// ---- qNN` comment block), the graft operators/functions its
-body references, and whether it is value-oracled (`oracleSql` entry) or
-rows-only. Parsed straight from Queries.scala so the table cannot drift
-from the code; run after every catalog change:
+One row per catalog entry: its family (the `<Family>Queries.scala` file
+that declares it), the query's one-line purpose (first line of its
+`// ---- qNN` comment block), the graft operators/functions its body
+references, and its oracle. Parsed straight from the family files under
+src/main/scala/graft/catalog so the table cannot drift from the code; run
+after every catalog change:
 
     python3 scripts/gen_survey_catalog.py        # rewrites SURVEY.md in place
     python3 scripts/gen_survey_catalog.py --stdout
 """
+import glob
+import os
 import re
 import sys
 
-SRC = "src/main/scala/graft/Queries.scala"
+SRC_GLOB = "src/main/scala/graft/catalog/*Queries.scala"
 SURVEY = "SURVEY.md"
 BEGIN = "<!-- BEGIN GENERATED CATALOG TABLE (scripts/gen_survey_catalog.py) -->"
 END = "<!-- END GENERATED CATALOG TABLE -->"
@@ -31,57 +34,47 @@ OPERATOR_RE = re.compile(
 
 
 def main():
-    src = open(SRC).read()
-
-    # catalog key -> qNN val name, in declaration order of the `all` map
-    entries = re.findall(r'"(q\d+[a-z0-9_]*)"\s*->\s*(q\d+)\b,?', src)
-    # first mapping block is `all`; oracle keys from the second block
-    oracle_keys = set(re.findall(r'"(q\d+[a-z0-9_]*)"\s*->\s*q\d+Sql\b', src))
-    seen, catalog = set(), []
-    for key, q in entries:
-        if key in seen:
-            continue
-        seen.add(key)
-        catalog.append((key, q))
-
-    # qNN -> (description, body). A header may name several queries that
-    # share one block ("// ---- q26/q27"): each name gets the block.
-    blocks = {}
-    for m in re.finditer(
-        r"// -{10,} (q\d+[a-z]?(?:/q\d+[a-z]?)*)\n(.*?)(?=\n  // -{10,} q|\n  // -{30,}\n\n  val all)",
-        src, re.S):
-        header, block = m.group(1), m.group(2)
-        comment_lines = [
-            line.strip().lstrip("/ ").strip()
-            for line in block.splitlines() if line.strip().startswith("//")
-        ]
-        desc = ""
-        for line in comment_lines:
-            desc += (" " if desc else "") + line
-            if len(desc) > 90:
-                break
-        desc = re.sub(r"\s+", " ", desc)[:140].rstrip()
-        body = re.sub(r"//[^\n]*", "", block)  # ops from code, not comments
-        ops = sorted(set(OPERATOR_RE.findall(body)))
-        for q in header.split("/"):
-            blocks[q] = (desc, ops)
-
+    # (query number, catalog key, family, description, operators)
     rows = []
-    for key, q in catalog:
-        desc, ops = blocks.get(q, ("", []))
-        oracle = "value" if key in oracle_keys else "rows-only"
-        rows.append(
-            f"| {key} | {desc or '—'} | {', '.join(ops) or 'DataFrame ops'} | {oracle} |")
+    for path in sorted(glob.glob(SRC_GLOB)):
+        family = os.path.basename(path)[:-len("Queries.scala")].lower()
+        src = open(path).read()
+        # A header may name several queries that share one block
+        # ("// ---- q26/q27"): each entry in the block gets its description.
+        for m in re.finditer(
+                r"// -{10,} (q\d+[a-z]?(?:/q\d+[a-z]?)*)\n(.*?)(?=\n  // -{10,} q|\n}\n)",
+                src, re.S):
+            block = m.group(2)
+            comment_lines = [
+                line.strip().lstrip("/ ").strip()
+                for line in block.splitlines() if line.strip().startswith("//")
+            ]
+            desc = ""
+            for line in comment_lines:
+                desc += (" " if desc else "") + line
+                if len(desc) > 90:
+                    break
+            desc = re.sub(r"\s+", " ", desc)[:140].rstrip()
+            body = re.sub(r"//[^\n]*", "", block)  # ops from code, not comments
+            ops = sorted(set(OPERATOR_RE.findall(body)))
+            for key in re.findall(r'= query\("(q(\d+)[a-z0-9_]*)"\)', block):
+                rows.append((int(key[1]), key[0], family, desc, ops))
+    rows.sort()
+    keys = [r[1] for r in rows]
+    assert len(keys) == len(set(keys)), "duplicate catalog key"
+    rows = [
+        f"| {key} | {family} | {desc or '—'} | {', '.join(ops) or 'DataFrame ops'} | value |"
+        for _, key, family, desc, ops in rows]
 
     table = "\n".join([
         BEGIN,
         "",
         f"{len(rows)} catalog queries; \"value\" = DuckDB oracle hash-checks "
-        "every cell, \"rows-only\" = driver row-count check. Regenerate with "
+        "every cell (every entry has an oracle). Regenerate with "
         "`python3 scripts/gen_survey_catalog.py` after any catalog change.",
         "",
-        "| Catalog query | Purpose (from the in-code comment) | graft modules exercised | Oracle |",
-        "|---|---|---|---|",
+        "| Catalog query | Family | Purpose (from the in-code comment) | graft modules exercised | Oracle |",
+        "|---|---|---|---|---|",
         *rows,
         "",
         END,

@@ -12,6 +12,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.cpus
+    val only = Harness.queryFilter("SPARK_GRAFT_BENCH_ONLY", sys.env.get("SPARK_GRAFT_BENCH_ONLY"),
+      SparkEntry.queries.keySet)
     val spark = Graft.localSession("graft-bench", cpus)
 
     // Per-query execution datasheet (rows/bytes/shuffle/spill/task-skew
@@ -117,7 +119,6 @@ object Bench {
     val budgetSec = Harness.envPositiveLong("SPARK_GRAFT_BENCH_BUDGET_SEC").getOrElse(2700L)
     val startNanos = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - startNanos) / 1e9
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val passTimes = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
@@ -205,11 +206,15 @@ object Bench {
       .map(java.nio.file.Paths.get(_))
       .getOrElse(outDir.resolve(s"bench_out$subsetSuffix.json"))
     // The file record also carries the run's sampling (pass count, budget,
-    // width), so a committed record describes itself. The stdout line
-    // above keeps its fields: callers parse it.
+    // width) and each catalog family's sum of winning times, so a committed
+    // record describes itself. The stdout line above keeps its fields:
+    // callers parse it.
+    val familyOf = graft.catalog.Catalog.entries.map(e => e.name -> e.family).toMap
+    val families = results.filter(_._2 >= 0).groupMapReduce(r => familyOf(r._1))(_._2)(_ + _)
+      .toSeq.sorted.map { case (f, t) => Json.str(f) + ":" + t }.mkString("{", ",", "}")
     try Harness.writeFile(outPath, json.stripSuffix("}") +
       s""","passes":${passTimes.size},"partial_pass":${partialSamples.nonEmpty},""" +
-      s""""timeout_s":$queryTimeoutSec,"budget_s":$budgetSec,"cpus":$cpus}""")
+      s""""timeout_s":$queryTimeoutSec,"budget_s":$budgetSec,"cpus":$cpus,"families":$families}""")
     catch { case e: Throwable => System.err.println(s"[bench] bench_out write failed: $e") }
     // stderr gets ONLY a compact line (total + 10 slowest), which always
     // fits a tail window and names the file carrying the full record.

@@ -22,6 +22,20 @@ object Harness {
   def envPositiveLong(name: String): Option[Long] =
     positiveLong(name, sys.env.get(name))
 
+  /** `raw` (the value of variable `name`, if set) as a set of catalog query
+    * names: comma-separated, each trimmed, empty items dropped. A list
+    * naming no query, or naming one not in `known`, fails naming the
+    * variable and the unknown names: a misspelled filter would otherwise
+    * run fewer queries than asked, or none, and still exit 0. */
+  def queryFilter(name: String, raw: Option[String], known: Set[String]): Option[Set[String]] =
+    raw.map { s =>
+      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, s"$name names no query, got '$s'")
+      val unknown = names -- known
+      require(unknown.isEmpty, s"$name names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
   /** `local[N]` width of every main: `SPARK_GRAFT_CPUS`, default 32. */
   def cpus: Int = envPositiveLong("SPARK_GRAFT_CPUS").fold(32)(_.toInt)
 

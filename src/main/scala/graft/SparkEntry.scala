@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * The catalog itself lives in [[Queries]]; this object is the stable
-  * harness-facing surface.
+import graft.catalog.Catalog
+
+/** Driver contract (SURVEY.md §7): the harness-facing surface of the query
+  * catalog. The catalog itself is [[graft.catalog.Catalog]], one file per
+  * operator family under `graft/catalog`; the maps here are views of it.
   */
 object SparkEntry {
 
@@ -12,14 +14,16 @@ object SparkEntry {
     * query shape, get_top_cells — reference src/etl.py:283-299); driver
     * smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.all("q03_top_users")(spark, "/root/testdata/sf0.001")
+    queries("q03_top_users")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** Every catalog query by name: its plan over a table directory. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.entries.map(e => e.name -> e.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables — including the sketch ops (q26 MinHash,
-    * q27 SimHash, q30 LSH ANN), whose xxhash64/splitmix64 pipelines are
-    * ported to DuckDB SQL in [[DuckHash]]. */
-  def oracleSql: Map[String, String] = Queries.oracles
+  /** For each key in queries, equivalent SQL runnable by DuckDB on the same
+    * parquet tables — including the sketch ops (q26 MinHash, q27 SimHash,
+    * q30 LSH ANN), whose xxhash64/splitmix64 pipelines are ported to DuckDB
+    * SQL in [[DuckHash]]. */
+  def oracleSql: Map[String, String] =
+    Catalog.entries.map(e => e.name -> e.oracle).toMap
 }

@@ -64,12 +64,12 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Graft.localSession("graft-verify")
     // Local-iteration subset: SPARK_GRAFT_VERIFY_ONLY=q117_x,q118_y dumps
     // just those queries (local_verify.py compares whatever dirs exist).
     // The driver never sets it, so the gate always sees the full catalog.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Harness.queryFilter("SPARK_GRAFT_VERIFY_ONLY", sys.env.get("SPARK_GRAFT_VERIFY_ONLY"),
+      SparkEntry.queries.keySet)
+    val spark = Graft.localSession("graft-verify")
     val parallelism =
       Harness.envPositiveLong("SPARK_GRAFT_VERIFY_PARALLEL").fold(4)(_.toInt)
     val queryTimeoutSec =

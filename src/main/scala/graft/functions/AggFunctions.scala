@@ -71,7 +71,7 @@ object AggFunctions {
     val unit = math.pow(10, scale).toLong
     val u = (c.cast(DecimalType(18, scale)) * unit).cast(DecimalType(18, 0))
     val ssu = sum(u * u) // exact integer, units of 10^(-2·scale)
-    // MAGNITUDE-TIERED conversion (mirrored in Queries.dStd — keep in
+    // MAGNITUDE-TIERED conversion (mirrored in catalog.Shared.dStd — keep in
     // lockstep): truncate ssu by the smallest power of 10 that brings the
     // quotient under 2^53, so small-magnitude columns (l_discount-like,
     // ssu < 9e15) convert EXACTLY — flooring them to whole units would

@@ -82,7 +82,7 @@ object Layout {
     * computed WITHOUT rewriting or scanning the table again.
     *
     * `tiles` is a footprint table `(n_rows, x_min, x_max, y_min, y_max)` +
-    * any id columns — exactly what [[graft.Queries]] q99 emits per z-range,
+    * any id columns — exactly what catalog query q99 emits per z-range,
     * and what a parquet footer min/max index gives per file. `boxes` is a
     * tiny probe table `(box_id, x_lo, x_hi, y_lo, y_hi)` (inclusive
     * bounds). A tile is PRUNED for a box when the ranges miss on either

@@ -175,7 +175,7 @@ object IngestHarness {
     // needs a fresh warehouse per invocation (first = 2, second = 0 — a
     // reused ledger would read (0, 0)), and per-pass createTempDirectory
     // dirs accumulate orphaned warehouses in tmpdir over a gate + bench
-    // session (the Queries.fixtureDir rationale). Keyed by (prefix,
+    // session (the catalog.Shared.fixtureDir rationale). Keyed by (prefix,
     // caller key) so the traffic/mobility twins and different sf dirs
     // never wipe each other.
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),

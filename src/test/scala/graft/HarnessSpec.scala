@@ -14,6 +14,22 @@ class HarnessSpec extends AnyFunSuite {
     assert(Harness.positiveLong("SPARK_GRAFT_BENCH_RUNS", None).isEmpty)
   }
 
+  test("queryFilter trims names, and fails naming the variable on unknown or no names") {
+    val known = Set("q01_pricing_summary", "q02_hourly_rollup")
+    assert(Harness.queryFilter("SPARK_GRAFT_VERIFY_ONLY", None, known).isEmpty)
+    assert(Harness.queryFilter("SPARK_GRAFT_VERIFY_ONLY", Some(" q01_pricing_summary ,,q02_hourly_rollup,"),
+      known).contains(known))
+    val unknown = intercept[IllegalArgumentException](
+      Harness.queryFilter("SPARK_GRAFT_VERIFY_ONLY", Some("q01_pricing_summary,q02_typo,q999"), known))
+    assert(unknown.getMessage.contains("SPARK_GRAFT_VERIFY_ONLY"), unknown.getMessage)
+    assert(unknown.getMessage.contains("q02_typo, q999"), unknown.getMessage)
+    for (raw <- Seq("", " , ,")) {
+      val empty = intercept[IllegalArgumentException](
+        Harness.queryFilter("SPARK_GRAFT_BENCH_ONLY", Some(raw), known))
+      assert(empty.getMessage.contains("SPARK_GRAFT_BENCH_ONLY"), empty.getMessage)
+    }
+  }
+
   test("Json.str escapes quotes, backslashes and control characters") {
     assert(Json.str("a\"b\\c\nd\te\u0001") == "\"a\\\"b\\\\c\\nd\\te\\u0001\"")
   }

@@ -11,11 +11,6 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query entry") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
-
   test("presentation-type convention: catalog outputs only gate-safe types") {
     // The driver's cross-engine hash is representation-sensitive: DuckDB
     // surfaces HUGEINT / DECIMAL(38,x) as float64 while Spark parquet
