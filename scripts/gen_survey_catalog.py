@@ -25,7 +25,7 @@ END = "<!-- END GENERATED CATALOG TABLE -->"
 # test (package prefixes stripped). Built from the package listing.
 OPERATOR_RE = re.compile(
     r"\b(?:graft\.(?:operators|functions|streaming|plans|multimodal)\.)?"
-    r"(AsOfJoin|Audit|Bucketing|Centrality|Chunking|Cleaning|ConnectedComponents|"
+    r"(AsOfJoin|Audit|Centrality|Chunking|Cleaning|ConnectedComponents|"
     r"Dedup|Diagnostics|Encoding|Funnel|Importance|Layout|Linkage|Merge|Packing|"
     r"Retention|Rollup|Sampling|Similarity|Sketches|SkewJoin|TfIdf|"
     r"AggFunctions|GeoFunctions|HashFunctions|PiiFunctions|TextFunctions|"

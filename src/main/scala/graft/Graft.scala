@@ -35,12 +35,8 @@ object Graft {
     // coalesces down but the initial number still bounds task-launch cost.
     if (c.get("spark.sql.shuffle.partitions") == "200")
       c.set("spark.sql.shuffle.partitions", "32")
-    // Live-session twin of GraftExtensions' injectOptimizerRule: fuse
-    // same-column scalar percentiles into one array-form buffer (see
-    // [[graft.plans.FusePercentiles]]).
-    if (!spark.experimental.extraOptimizations.contains(plans.FusePercentiles))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.FusePercentiles
+    // The engine's optimizer rule and SQL functions, from one place.
+    plans.GraftFunctions.register(spark)
     spark
   }
 

@@ -177,8 +177,7 @@ object AnalyticsQueries extends Family {
   // standard engagement matrix. Activity dedups to (user, week) FIRST
   // (shuffle = distinct pairs, not events), cohorts join on the user_id
   // partitioning the table already has; week offsets are exact integer
-  // day arithmetic in both engines. Retention.weeklyCohorts adds the
-  // share-of-cohort column (FunnelSpec-covered).
+  // day arithmetic in both engines.
   val q84 = query("q84_retention_cohorts")((s, dir) =>
     Retention.cohortMatrix(Tables.events(s, dir), "user_id", "ts")
       .orderBy("cohort_week", "week_offset"))(

@@ -531,7 +531,7 @@ object RelationalQueries extends Family {
   // ---------------------------------------------------------------- q100
   // Five-number summary written the NAIVE way — five separate scalar
   // percentile calls on the same column. [[graft.plans.FusePercentiles]]
-  // (injected by Graft.prepare / GraftExtensions) rewrites them into ONE
+  // (installed by Graft.prepare) rewrites them into ONE
   // array-form value buffer at optimization time, so this costs the same
   // as q37's hand-fused form: one multiset per group instead of five.
   // FusePercentilesSpec pins the fused plan shape; this entry keeps the

@@ -72,8 +72,8 @@ object TablesQueries extends Family {
   // Z-order tiles (Layout.zOrder2): Morton-interleave (partkey, suppkey)
   // and roll up per 2^14-wide z-range tile. Each tile's x/y min-max spans
   // stay small BECAUSE the curve is locality-preserving — the property
-  // that makes z-clustered parquet files bbox-prunable (Layout.clusterByZ
-  // is the storage-side user; LayoutSpec measures the footprint win). The
+  // that makes z-clustered parquet files bbox-prunable (Layout.pruningAudit
+  // costs that win from the tile footprints). The
   // interleave is pure shift/mask composition, replayed bit-for-bit by
   // the oracle in SQL.
   val q99 = query("q99_zorder_tiles")((s, dir) => {

@@ -44,17 +44,6 @@ object TextFunctions {
   def fingerprintMd5(text: Column): Column =
     md5(normalize(text).cast("binary"))
 
-  /** Rolling 64-bit polynomial fingerprint over normalized tokens:
-    * h = fold(h * B + tokenHash) with wrapping long arithmetic. Unlike md5
-    * this composes incrementally, the shape used for content-defined
-    * chunking. Codegen'd aggregate over the token array. */
-  def rollingHash64(text: Column): Column =
-    aggregate(
-      tokens(normalize(text)),
-      lit(1125899906842597L),
-      (acc, t) => acc * lit(31L) + HashFunctions.tokenHash(t)
-    )
-
   /** k-shingles over an ALREADY-MATERIALIZED token array column. Callers
     * with a DataFrame at hand should project `tokens(text)` into its own
     * column first and pass that here: the slice-per-shingle lambda then
@@ -166,10 +155,6 @@ object TextFunctions {
     "zh" -> Seq.empty // handled by CJK codepoint detection below
   )
 
-  def markerCount(text: Column, markers: Seq[String]): Column =
-    if (markers.isEmpty) lit(0)
-    else size(filter(tokens(lower(text)), t => t.isin(markers: _*)))
-
   def cjkCharCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[\\x{4e00}-\\x{9fff}]", ""))
 
@@ -182,7 +167,7 @@ object TextFunctions {
     * set-membership checks, no re-tokenization). The argmax is then a second
     * fold over the zipped (count, lang) array, so the count array expression
     * is referenced exactly once — higher-order functions sit outside
-    * Catalyst's subexpression elimination, and a per-language `markerCount`
+    * Catalyst's subexpression elimination, and a per-language marker count
     * would re-split the text per language (measured 4x the regex work). */
   def langId(text: Column): Column = {
     val langs = LangMarkers.collect { case (l, ms) if ms.nonEmpty => (l, ms) }
@@ -256,7 +241,7 @@ object TextFunctions {
     *     collapse — HTML5's ignore-first-newline rule applies, inner
     *     inline markup still strips to a (collapsible) space, and
     *     document-EDGE trim still applies to restored whitespace.
-    *     Accepted regex-tier limitation (ADVICE r11, pinned in TextSpec):
+    *     Accepted regex-tier limitation (pinned in TextSpec):
     *     entity decode (step 5) runs AFTER sentineling, so whitespace
     *     produced by character references inside a pre span (`&#10;`,
     *     `&#9;`, `&#32;`, `&Tab;`) is NOT protected and collapses like

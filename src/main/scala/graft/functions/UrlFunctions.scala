@@ -33,10 +33,6 @@ object UrlFunctions {
   private val PathRe = "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
   private val TrackingParamRe = "^(utm_[A-Za-z0-9_]*|fbclid|gclid|msclkid)="
 
-  /** Lowercased host (no port). */
-  def urlHost(u: Column): Column =
-    lower(regexp_extract(regexp_extract(u, HostPortRe, 1), "^([^:]*)", 1))
-
   /** The canonical URL string (see object doc for the normal form). */
   def canonicalizeUrl(u: Column): Column = {
     val scheme = lower(regexp_extract(u, SchemeRe, 1))

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.DecimalType
 object VectorFunctions {
 
   // Element quantization (DECIMAL(18,6)) lives in the ExactVecScaled /
-  // IvfArgminL2 kernels since r13; only the accumulator type is still
-  // composed column-side (sumExactDec).
+  // IvfArgminL2 kernels; only the accumulator type is still composed
+  // column-side (sumExactDec).
   // Precision 30, not 38: Spark's decimal addition widens precision by one,
   // and past the 38 cap it TRIMS SCALE in the add result itself (scale 12 →
   // 11) before any re-cast can intervene. (30,12)+(30,12) → (31,12) stays
@@ -36,7 +36,7 @@ object VectorFunctions {
     * rounding measurably often). From there everything is exact decimal:
     * products at scale 12, order-independent sum, one cast back to double.
     *
-    * Since r13 the decimal pipeline runs inside the
+    * The decimal pipeline runs inside the
     * [[graft.plans.ExactVecScaled]] codegen kernel (scaled-long arithmetic,
     * same DECIMAL(18,6)-quantize / scale-12-sum rational, bit-identical
     * result) — the old `aggregate(zip_with(...))` composition was
@@ -58,8 +58,7 @@ object VectorFunctions {
   /** [[l2SqExact]] WITHOUT the final double cast — DECIMAL(30,12) out, for
     * callers that keep accumulating exactly across terms (the PQ ADC sum
     * over per-subspace distances, where a double-fold's addition order
-    * would diverge cross-engine). Kernel-backed since r13 (see
-    * [[dotExact]]). */
+    * would diverge cross-engine). Kernel-backed (see [[dotExact]]). */
   def l2SqExactDec(a: Column, b: Column): Column =
     graft.plans.GraftFunctions.l2SqExactDec(a, b)
 
@@ -85,12 +84,6 @@ object VectorFunctions {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / sqrt(norm2(a) * norm2(b))
-
-  /** L2-normalize a vector (double elements out). */
-  def l2Normalize(a: Column): Column = {
-    val n = sqrt(norm2(a))
-    transform(a, x => x.cast("double") / n)
-  }
 
   /** Sign bits of `numPlanes` pseudo-random hyperplane projections — the
     * random-hyperplane LSH family for cosine similarity (Charikar 2002).

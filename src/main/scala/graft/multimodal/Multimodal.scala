@@ -2,62 +2,29 @@ package graft.multimodal
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Multimodal-column plumbing: image/audio/video payloads ride as opaque
-  * `binary` columns with a typed metadata struct; decode / feature-extract /
-  * frame-sample run as **batched partition transforms** (the Scala analog of
-  * a Pandas-UDF `mapInPandas`: fixed-size record batches through a
-  * vectorizable kernel).
+/** Multimodal-column operators: each one expands ids into synthetic media,
+  * runs a REAL encode → decode round trip as a row-local partition
+  * transform (no shuffle), and reports integer signatures of the decoded
+  * payload that a SQL oracle replays without any media library.
   *
-  * All three modalities decode for REAL with zero native deps: images via
-  * JDK `javax.imageio` ([[ImageIoCodec]] — PNG/BMP/GIF/JPEG), audio via
+  * All three modalities decode with zero native deps: images via JDK
+  * `javax.imageio` ([[ImageIoCodec]] — PNG/BMP/GIF/JPEG), audio via
   * `javax.sound.sampled` ([[WavCodec]] — WAV/PCM), video via the JDK GIF
   * sequence reader/writer ([[GifVideoCodec]] — frame-addressable animated
-  * GIF). Payloads in formats the JRE can't touch (H.264, MP3, WebP, …)
-  * fall back to [[StubCodec]], a clearly-marked deterministic fake
-  * standing in for the native decoders this container doesn't ship — the
-  * Spark-side contract (schema, batching, partitioning, output shape) is
-  * real and tested either way, and a production codec drops into the same
-  * `decode` signature.
+  * GIF). A payload a codec cannot decode comes back as `None`, never as
+  * an exception.
   */
 object Multimodal {
-
-  /** One media record: payload + typed metadata. */
-  final case class MediaRecord(
-      media_id: Long,
-      kind: String, // "image" | "audio" | "video"
-      payload: Array[Byte],
-      format: String,
-      width: Int,
-      height: Int,
-      duration_ms: Long
-  )
-
-  /** Extracted features per record. */
-  final case class MediaFeatures(
-      media_id: Long,
-      kind: String,
-      n_bytes: Long,
-      sha256_hex: String,
-      decoded_width: Int,
-      decoded_height: Int,
-      n_frames_sampled: Int,
-      byte_histogram: Array[Long] // 16-bucket byte-value histogram
-  )
 
   /** REAL image codec over JDK `javax.imageio` — no native deps, ships in
     * every JRE. Handles the formats the JDK decodes out of the box (PNG,
     * BMP, GIF, JPEG, WBMP, TIFF on JDK 9+); anything else — or a payload
-    * that only claims to be an image — falls back to [[StubCodec]], so
-    * the pipeline never throws on dirty media columns (at 100 TB there
-    * WILL be truncated and mislabeled payloads; a decode failure is a
-    * row-level fallback, not a job failure).
+    * that only claims to be an image — decodes to `None`, so dirty media
+    * columns never throw (a decode failure is a row-level outcome, not a
+    * job failure).
     *
     * Magic-byte sniffing runs first: `ImageIO.read` on an arbitrary
-    * multi-MB non-image payload wastes a full reader probe per row, and
-    * the q31 corpus payloads are synthetic bytes that would all pay it.
+    * multi-MB non-image payload wastes a full reader probe per row.
     */
   object ImageIoCodec {
     import java.awt.image.BufferedImage
@@ -104,20 +71,6 @@ object Multimodal {
       finally ios.close()
       bos.toByteArray
     }
-
-    /** Real decoded dimensions, if this payload is a decodable image. */
-    def decodeDims(payload: Array[Byte]): Option[(Int, Int)] =
-      decode(payload).map(img => (img.getWidth, img.getHeight))
-
-    /** Real decode → scale → PNG re-encode. None if not decodable. */
-    def resample(payload: Array[Byte], targetW: Int, targetH: Int): Option[Array[Byte]] =
-      decode(payload).map { img =>
-        val out = new BufferedImage(targetW, targetH, BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        try g.drawImage(img, 0, 0, targetW, targetH, null)
-        finally g.dispose()
-        encodePng(out)
-      }
   }
 
   /** REAL audio codec over JDK `javax.sound.sampled` — like
@@ -126,7 +79,7 @@ object Multimodal {
     * interchange format a training-data audio pipeline actually stages
     * (compressed formats get transcoded to PCM upstream, once, not per
     * read). Compressed codecs (MP3/Opus/AAC) have no JDK decoder — those
-    * payloads fail the RIFF sniff and fall back to [[StubCodec]], the same
+    * payloads fail the RIFF sniff and decode to `None`, the same
     * row-level never-throw contract as images.
     *
     * All streams are in-memory (`ByteArrayInputStream` both directions):
@@ -235,9 +188,8 @@ object Multimodal {
     * [[grayFrame]] palette the encode→decode round trip is LOSSLESS
     * (index bytes stored verbatim), which is what makes an exact-sum
     * oracle possible. Compressed codecs (H.264/VP9/AV1) have no JDK
-    * decoder — those payloads fail the GIF sniff and fall back to
-    * [[StubCodec]], the same row-level never-throw contract as the other
-    * two codecs. */
+    * decoder — those payloads fail the GIF sniff and decode to `None`,
+    * the same row-level never-throw contract as the other two codecs. */
   object GifVideoCodec {
     import java.awt.image.{BufferedImage, IndexColorModel}
     import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -323,206 +275,6 @@ object Multimodal {
         } catch { case _: Exception => None }
         finally try iis.close() catch { case _: java.io.IOException => () }
       }
-
-    /** Real decoded (width, height, frameCount), if this payload is a
-      * decodable GIF container. */
-    def decodeDims(payload: Array[Byte]): Option[(Int, Int, Int)] =
-      decodeFrames(payload).collect {
-        case fs if fs.nonEmpty => (fs.head.getWidth, fs.head.getHeight, fs.length)
-      }
-  }
-
-  /** STUB CODEC — deterministic fake decode for the formats the JVM can't
-    * touch without native libs (compressed video and audio; exotic image
-    * formats). Image payloads route through [[ImageIoCodec]], WAV audio
-    * through [[WavCodec]], and GIF video through [[GifVideoCodec]] first;
-    * this is the fallback contract a JNI/javacpp build would replace. */
-  object StubCodec {
-    /** "Decode" dimensions from content bytes (deterministic fake). */
-    def decodeDims(payload: Array[Byte]): (Int, Int) = {
-      val n = payload.length
-      (32 + n % 480, 32 + (n * 7) % 480)
-    }
-
-    /** Sample up to `maxFrames` frame offsets, evenly spaced (real decoder
-      * would seek keyframes; offsets here are byte positions). */
-    def sampleFrameOffsets(payload: Array[Byte], maxFrames: Int): Seq[Int] = {
-      val n = payload.length
-      if (n == 0) Seq.empty
-      else (0 until math.min(maxFrames, n)).map(i => (i.toLong * n / math.min(maxFrames, n)).toInt)
-    }
-
-    /** "Resample" a payload to a target pixel budget (deterministic fake:
-      * evenly-strided byte subsample to w*h/16 bytes — a real codec decodes,
-      * scales, re-encodes; the output-size-∝-target contract is what the
-      * pipeline depends on). */
-    def resample(payload: Array[Byte], targetW: Int, targetH: Int): Array[Byte] = {
-      val n = payload.length
-      // Pixel budget in Long: Int targetW*targetH overflows near 46341².
-      val outLen = math.min(n.toLong, math.max(1L, targetW.toLong * targetH / 16)).toInt
-      if (n == 0) payload
-      else Array.tabulate(outLen)(i => payload((i.toLong * n / outLen).toInt))
-    }
-  }
-
-  val BatchSize = 256
-
-  /** Feature extraction as a batched mapPartitions: records stream through
-    * in fixed-size batches (the Pandas-UDF batch shape), one codec context
-    * per batch. Partition-parallel, no shuffle. */
-  def extractFeatures(ds: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { iter =>
-      iter.grouped(BatchSize).flatMap { batch =>
-        // per-batch context (real codec: decoder instance reuse)
-        val md = MessageDigest.getInstance("SHA-256")
-        batch.map { r =>
-          md.reset()
-          val digest = md.digest(r.payload).map("%02x".format(_)).mkString
-          // Route by DECLARED kind first: only image records try the image
-          // decoder, only audio records the WAV decoder. A payload of some
-          // OTHER kind whose first bytes happen to pass a loose magic sniff
-          // (BMP needs just 'B''M') must still take the stub path — the
-          // q31 oracle replays the stub for non-decodable rows, and the
-          // declared-kind contract is what keeps that decision
-          // engine-independent. Audio "dims" are (frames-per-channel,
-          // channels) — the two axes of a PCM buffer.
-          val videoDims = if (r.kind == "video") GifVideoCodec.decodeDims(r.payload) else None
-          val (w, h) = (r.kind match {
-            case "image" => ImageIoCodec.decodeDims(r.payload)
-            case "audio" =>
-              WavCodec.decodeWav(r.payload).map { case (_, ch, samples) =>
-                (samples.length / math.max(ch, 1), ch)
-              }
-            case "video" => videoDims.map { case (vw, vh, _) => (vw, vh) }
-            case _ => None
-          }).getOrElse(StubCodec.decodeDims(r.payload))
-          val nFrames = r.kind match {
-            case "video" =>
-              videoDims.map { case (_, _, n) => math.min(n, 8) }
-                .getOrElse(StubCodec.sampleFrameOffsets(r.payload, 8).size)
-            case _ => 0
-          }
-          val hist = new Array[Long](16)
-          r.payload.foreach(b => hist((b & 0xff) >> 4) += 1)
-          MediaFeatures(r.media_id, r.kind, r.payload.length.toLong, digest, w, h, nFrames, hist)
-        }
-      }
-    }
-  }
-
-  /** Resized media record produced by [[resize]]. */
-  final case class ResizedMedia(
-      media_id: Long,
-      kind: String,
-      payload: Array[Byte],
-      width: Int,
-      height: Int)
-
-  /** Resize every payload to a target resolution — same batched
-    * partition-transform shape as [[extractFeatures]] (one codec context
-    * per batch, no shuffle); the stub resample stands in for the real
-    * decode→scale→encode kernel. */
-  def resize(ds: Dataset[MediaRecord], targetW: Int, targetH: Int): Dataset[ResizedMedia] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { iter =>
-      iter.grouped(BatchSize).flatMap { batch =>
-        batch.map { r =>
-          // Same declared-kind routing as extractFeatures: only image
-          // records attempt the real decode→scale→encode.
-          val resampled = (if (r.kind == "image")
-              ImageIoCodec.resample(r.payload, targetW, targetH)
-            else None)
-            .getOrElse(StubCodec.resample(r.payload, targetW, targetH))
-          ResizedMedia(r.media_id, r.kind, resampled, targetW, targetH)
-        }
-      }
-    }
-  }
-
-  /** One sampled frame: the row-per-frame shape a video pipeline feeds to
-    * a downstream image encoder. */
-  final case class SampledFrame(
-      media_id: Long,
-      frame_idx: Int,
-      byte_offset: Long,
-      frame_bytes: Array[Byte])
-
-  /** Frame sampling as a ROW-EXPANDING batched partition transform (the
-    * flatMap sibling of [[extractFeatures]]'s 1:1 map): every video record
-    * yields up to `maxFrames` evenly-spaced frames, each a `frameBytes`
-    * slice at the stub codec's offset (a real decoder seeks keyframes and
-    * emits encoded frames through the same signature). Non-video records
-    * yield nothing. Partition-parallel, no shuffle; downstream per-frame
-    * work (encode, embed, dedup) starts from exactly this schema. */
-  def sampleFrames(
-      ds: Dataset[MediaRecord],
-      maxFrames: Int = 8,
-      frameBytes: Int = 64): Dataset[SampledFrame] = {
-    import ds.sparkSession.implicits._
-    // No grouped(BatchSize) here: unlike extractFeatures there is no
-    // per-batch codec context to amortize, and batching would only pin up
-    // to 256 full video payloads in memory at once. Record-at-a-time keeps
-    // the buffering O(1 payload).
-    ds.mapPartitions { iter =>
-      iter.filter(_.kind == "video").flatMap { r =>
-        StubCodec.sampleFrameOffsets(r.payload, maxFrames).zipWithIndex.map {
-          case (off, i) =>
-            val end = math.min(off + frameBytes, r.payload.length)
-            SampledFrame(r.media_id, i, off.toLong, r.payload.slice(off, end))
-        }
-      }
-    }
-  }
-
-  /** One REAL decoded video frame: the row-per-frame shape downstream
-    * image work (embed, dedup, caption) starts from. `src_frame` is the
-    * frame's index in the container (sampling is sparse — it differs from
-    * `frame_idx`, the dense output ordinal); the pixels travel re-encoded
-    * as lossless PNG. */
-  final case class DecodedFrame(
-      media_id: Long,
-      frame_idx: Int,
-      src_frame: Int,
-      width: Int,
-      height: Int,
-      frame_png: Array[Byte])
-
-  /** REAL frame sampling — [[sampleFrames]]'s decoded sibling for payloads
-    * that are genuine GIF containers: demux → pick up to `maxFrames`
-    * evenly-spaced frames → re-encode each as PNG. Non-video records and
-    * payloads the JDK can't demux yield nothing (callers route those
-    * through the stub slicer if they need a fallback row). Record-at-a-time
-    * partition transform, no shuffle, O(1 payload) buffering. */
-  def sampleGifFrames(
-      ds: Dataset[MediaRecord],
-      maxFrames: Int = 8): Dataset[DecodedFrame] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { iter =>
-      iter.filter(_.kind == "video").flatMap { r =>
-        GifVideoCodec.decodeFrames(r.payload).toSeq.flatMap { frames =>
-          val n = frames.length
-          val take = math.min(maxFrames, n)
-          (0 until take).map { i =>
-            val src = (i.toLong * n / take).toInt
-            val img = frames(src)
-            // Copy to INT_RGB before the PNG leg: a gray-palette indexed
-            // image round-trips PNG with its SAMPLES intact but comes back
-            // under a linear-gray ColorModel, so getRGB reinterprets the
-            // values (observed: 50 → 122, the linear→sRGB curve). sRGB
-            // INT_RGB is the colorspace-stable carrier (q168-proven
-            // lossless).
-            val rgb = new java.awt.image.BufferedImage(
-              img.getWidth, img.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = rgb.createGraphics()
-            try g.drawImage(img, 0, 0, null)
-            finally g.dispose()
-            DecodedFrame(r.media_id, i, src, img.getWidth, img.getHeight,
-              ImageIoCodec.encodePng(rgb))
-          }
-        }
-      }
-    }
   }
 
   /** One decoded round-trip record per input id: real decoded dimensions
@@ -544,10 +296,10 @@ object Multimodal {
     * oracle computes without decoding anything. A lossy codec, a channel
     * swap, a stride bug, or a truncated write all break the equality.
     *
-    * Row-local partition transform, no shuffle. Unlike
-    * [[extractFeatures]] there is no `grouped(BatchSize)` staging: ImageIO
-    * allocates its reader/writer per call, so there is no per-batch codec
-    * context to amortize, and record-at-a-time keeps buffering O(1 image).
+    * Row-local partition transform, no shuffle, and no batch staging:
+    * ImageIO allocates its reader/writer per call, so there is no
+    * per-batch codec context to amortize, and record-at-a-time keeps
+    * buffering O(1 image).
     */
   def codecRoundTrip(
       ids: org.apache.spark.sql.Dataset[java.lang.Long],
@@ -681,8 +433,8 @@ object Multimodal {
     * (`mix64((id·nFrames + f)·w·h + i) & 255`), the frames become a real
     * animated GIF through the JDK sequence writer, demux+decode runs back
     * through [[GifVideoCodec]], `maxFrames` frames are sampled
-    * evenly-spaced (the [[sampleGifFrames]] stride), and each sampled
-    * frame reports its source index, decoded dimensions, and exact pixel
+    * evenly-spaced (output frame `i` of `take` is source frame
+    * `i·n/take`), and each sampled frame reports its source index, decoded dimensions, and exact pixel
     * sum. The gray palette makes GIF lossless here, so each sum MUST equal
     * the direct sum of that frame's synthetic bytes — which a SQL engine
     * replays without any image library. A frame-order bug, a dropped or
@@ -797,18 +549,4 @@ object Multimodal {
     }
   }
 
-  /** Wrap any table with a binary payload column into MediaRecords (schema
-    * adapter used by tests and the q31 catalog query). */
-  def fromBinaryColumn(df: DataFrame, idCol: String, payloadCol: String, kind: String): Dataset[MediaRecord] = {
-    import df.sparkSession.implicits._
-    df.select(
-      col(idCol).cast("long").as("media_id"),
-      lit(kind).as("kind"),
-      col(payloadCol).cast("binary").as("payload"),
-      lit("stub").as("format"),
-      lit(0).as("width"),
-      lit(0).as("height"),
-      lit(0L).as("duration_ms")
-    ).as[MediaRecord]
-  }
 }

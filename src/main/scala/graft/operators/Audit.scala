@@ -63,17 +63,11 @@ object Audit {
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
-  def pkViolationCount(df: DataFrame, keys: Seq[String]): Long =
-    pkViolations(df, keys).count()
-
   /** FK-coverage audit (reference FKs src/database.py:83,95-96): child rows
     * whose key has no parent — broadcast left-anti join (dims are small;
     * the fact side never shuffles). */
   def fkOrphans(child: DataFrame, parent: DataFrame, keys: Seq[String]): DataFrame =
     child.join(broadcast(parent.select(keys.map(col): _*).distinct()), keys, "left_anti")
-
-  def fkOrphanCount(child: DataFrame, parent: DataFrame, keys: Seq[String]): Long =
-    fkOrphans(child, parent, keys).count()
 
   /** One foreign-key edge of a schema: `name` labels the report row;
     * child rows reference `parent` via positional `childKeys → parentKeys`. */
@@ -115,13 +109,6 @@ object Audit {
           col("orphans"),
           expr("((child_rows - orphans) * 1000000) div child_rows").as("coverage_ppm"))
     }.reduce(_ unionAll _)
-  }
-
-  /** Single-pass per-column null profile (reference notebook
-    * `df.isnull().sum()`, cells 6/7/9/21). */
-  def nullCounts(df: DataFrame): DataFrame = {
-    val aggs = df.columns.toSeq.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(c))
-    df.agg(aggs.head, aggs.tail: _*)
   }
 
   /** k-anonymity audit over a quasi-identifier combination: group sizes

@@ -237,8 +237,8 @@ object Centrality {
     // as an observe() metric (CollectMetrics is a row-level aggregate over
     // the materialization the checkpoint already pays for), so each round
     // runs ONE driver action for degree+convergence instead of
-    // checkpoint-then-count — the r13 gap ranking charged this family's
-    // wall to per-round driver barriers, not compute.
+    // checkpoint-then-count — this family's wall was measured to go to
+    // per-round driver barriers, not compute.
     var iter = 0
     while (true) {
       iter += 1

@@ -35,11 +35,6 @@ object Cleaning {
       if (d.columns.contains(c)) d else d.withColumn(c, lit(0.0))
     }
 
-  /** F1 — drop rows whose timestamp failed to parse
-    * (reference src/etl.py:135-136). */
-  def dropNullTimestamp(df: DataFrame, col: String): DataFrame =
-    df.filter(df(col).isNotNull)
-
   /** F2 — keep rows with cell_id in [0, 9999]
     * (reference src/etl.py:155-156; DDL CHECK src/database.py:69). */
   def cellIdInRange(df: DataFrame, col: String = "cell_id", lo: Int = 0, hi: Int = 9999): DataFrame =
@@ -159,18 +154,6 @@ object Cleaning {
     df.select(
       idCols.map(col) :+
         expr(s"stack(${valueCols.size}, $pairs) AS (`$varName`, `$valName`)"): _*
-    )
-  }
-
-  /** Rejection accounting (reference logs initial/final/rejected counts,
-    * src/etl.py:129-169). Computed as a single-pass conditional aggregation
-    * rather than multiple count() actions. */
-  def trafficRejectionStats(raw: DataFrame): DataFrame = {
-    val ts = coerceTimestamp(col("datetime"))
-    raw.agg(
-      count(lit(1)).as("initial"),
-      sum(when(ts.isNull, 1).otherwise(0)).as("invalid_dates"),
-      sum(when(ts.isNotNull && !col("CellID").between(0, 9999), 1).otherwise(0)).as("invalid_cells")
     )
   }
 }

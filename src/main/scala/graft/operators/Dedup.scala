@@ -260,35 +260,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Survivor selection from near-dup candidate PAIRS: drop every document
-    * that appears as the GREATER id of any pair (the standard greedy rule —
-    * each dup cluster keeps its smallest id; deterministic, single
-    * broadcast-able distinct of losers, no iterative connected components).
-    * Compose with any pair generator: `dropNearDuplicates(df, id,
-    * minHashLshPairs(df, ...))` turns candidates into a cleaned corpus. */
-  def dropNearDuplicates(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = pairs.select(col("doc_b").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** Incoming rows surviving incremental dedup: drop every incoming doc
-    * that LSH-collides with the already-ingested reference corpus
-    * ([[minHashLshPairsAgainst]]), keep the rest. The anti-join key list is
-    * collision-sized (tiny), so it broadcasts. */
-  def dropAgainstReference(
-      incoming: DataFrame,
-      reference: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      numHashes: Int = 64,
-      rowsPerBand: Int = 4
-  ): DataFrame = {
-    val flagged = minHashLshPairsAgainst(incoming, reference, idCol, textCol, k, numHashes, rowsPerBand)
-      .select(col("new_doc").as(idCol)).distinct()
-    incoming.join(flagged, Seq(idCol), "left_anti")
-  }
-
   /** Estimated Jaccard from MinHash signatures (fraction of agreeing
     * components) for verifying LSH candidates without re-shingling. */
   def minHashJaccardEstimate(sigA: Column, sigB: Column): Column =
@@ -317,16 +288,6 @@ object Dedup {
     aggregate(bits, lit(0L), (acc, bit) => acc * 2 + bit)
   }
 
-  /** Hamming distance between two 64-bit sketches. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs within `maxHamming`, using pigeonhole chunk
-    * blocking: the 64-bit sketch is split into `maxHamming + 1` chunks, so
-    * any pair within the radius must agree on at least one whole chunk and
-    * the join is equi on chunk values, never a cross product. The chunk
-    * count is DERIVED from the radius — recall is complete for every legal
-    * `maxHamming` (narrower chunks at larger radii trade join selectivity,
-    * not correctness). */
   /** Benchmark decontamination: for each corpus document, the number of its
     * distinct word k-shingles that also appear in ANY eval-set document,
     * plus a `contaminated` flag at `minShared` — the train/eval overlap scan
@@ -379,33 +340,6 @@ object Dedup {
         col("doc").as(idCol),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
       .withColumn("contaminated", col("n_overlap") >= minShared)
-  }
-
-  def simHashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 63, s"maxHamming must be in [0, 63], got $maxHamming")
-    val nChunks = maxHamming + 1
-    // Distribute 64 bits as evenly as possible across the chunks.
-    val widths = Array.tabulate(nChunks)(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val chunkCols = (0 until nChunks).map { i =>
-      val mask = if (widths(i) == 64) -1L else (1L << widths(i)) - 1L
-      shiftrightunsigned(col("sk"), offsets(i)).bitwiseAND(lit(mask))
-    }
-    val sk = df.select(col(idCol).as("doc"), simHash64(col(textCol)).as("sk"))
-    val chunked = sk.select(
-      col("doc"), col("sk"),
-      posexplode(array(chunkCols: _*)).as(Seq("chunk_idx", "chunk"))
-    )
-    chunked.as("a")
-      .join(
-        chunked.as("b"),
-        col("a.chunk_idx") === col("b.chunk_idx") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc") < col("b.doc")
-      )
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        hamming64(col("a.sk"), col("b.sk")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
 
   /** Duplicated-span statistics: for every document, how many of its

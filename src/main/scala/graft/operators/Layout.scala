@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * answer for the reference's spatial grid workload (reference
   * `src/etl.py:137-159` loads the 10 000-cell Milan grid whose queries
   * are exactly such bbox probes; [[Spatial]] is the in-query tier,
-  * z-layout the storage tier — same division as [[Bucketing]] vs
-  * `Tables.spread` for equi-joins).
+  * z-layout the storage tier).
   *
   * The z-value is composed from built-in integer ops (shifts/masks — the
   * classic parallel bit-spread), so it rides whole-stage codegen with no
@@ -57,23 +56,6 @@ object Layout {
     val cells = (1L << ZBits) - 1
     least(lit(cells), greatest(lit(0L),
       floor((c - lit(lo)) / lit(hi - lo) * lit(cells.toDouble + 1)).cast("long")))
-  }
-
-  /** Re-layout `df` clustered by the z-curve over (x, y): range-partition
-    * into `numFiles` z-ranges and sort within each, so a subsequent
-    * parquet write emits one tight-footprint file per partition. The
-    * ordering column is dropped from the result — layout is a storage
-    * property, not schema. */
-  def clusterByZ(
-      df: DataFrame,
-      x: Column,
-      y: Column,
-      numFiles: Int): DataFrame = {
-    require(numFiles > 0, "numFiles must be positive")
-    df.withColumn("__z", zOrder2(x, y))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
   }
 
   /** File-skipping audit: quantify what a z-clustered layout would prune

@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: first-activity and (user, week) distinct both aggregate
   * on the user key, so the log shuffles on `userCol` once and the second
   * aggregation plus the cohort join reuse that partitioning; the final
-  * (cohort, offset) rollup shrinks to matrix size (weeks²). Retention
-  * shares come from a broadcast self-join against the offset-0 diagonal —
-  * the matrix is dashboard-sized, never the log.
+  * (cohort, offset) rollup shrinks to matrix size (weeks²).
   */
 object Retention {
 
@@ -37,22 +35,6 @@ object Retention {
         col("cohort_week"),
         (datediff(col("week"), col("cohort_week")) / 7).cast("long").as("week_offset"))
       .agg(count(lit(1)).as("n_users"))
-  }
-
-  /** [[cohortMatrix]] plus the `retention` share of each cohort's size
-    * (offset 0 ⇒ 1.0), via a broadcast self-join against the offset-0
-    * diagonal — the matrix is dashboard-sized, never the log. */
-  def weeklyCohorts(
-      events: DataFrame,
-      userCol: String,
-      tsCol: String): DataFrame = {
-    val matrix = cohortMatrix(events, userCol, tsCol)
-    val sizes = matrix.filter(col("week_offset") === 0L)
-      .select(col("cohort_week"), col("n_users").as("__cohort_size"))
-    matrix.join(broadcast(sizes), Seq("cohort_week"))
-      .withColumn("retention",
-        col("n_users").cast("double") / col("__cohort_size").cast("double"))
-      .drop("__cohort_size")
   }
 
   /** Daily audience accounting: per calendar day, active users, NEW users

@@ -33,10 +33,6 @@ object Sampling {
   private def requireIntegralId(df: DataFrame, idCol: String, op: String): Unit =
     Guards.requireIntegralColumns(df, Seq(idCol), op)
 
-  /** Bernoulli sample at `fraction`, deterministic in (`idCol`, `salt`). */
-  def hashSample(df: DataFrame, idCol: String, fraction: Double, salt: Long = 0L): DataFrame =
-    df.filter(hashBucket(col(idCol), salt) < lit(math.round(fraction * Buckets)))
-
   /** Per-group quantile thresholds from a deterministic hash sample — the
     * scale tier for "drop each language's bottom quartile by quality":
     * exact per-group percentiles sort the whole group (billion-row buffer

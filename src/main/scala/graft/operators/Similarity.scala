@@ -234,7 +234,7 @@ object Similarity {
   /** Add a `cluster` column: the label of the nearest centroid (exact
     * decimal squared-L2, ties to the smaller label). Map-only — the
     * centroid matrix ships once per task inside the
-    * [[graft.plans.IvfArgminL2]] kernel (r11; the previous k-way `least`
+    * [[graft.plans.IvfArgminL2]] kernel (the previous k-way `least`
     * over per-centroid struct literals inlined k × dim coordinates into
     * the plan — codegen-explosive past k ≈ 64, while SemDeDup's scale
     * contract is k ∝ N). Same quantized arithmetic, and the distance
@@ -729,7 +729,7 @@ object Similarity {
     * populations stay bounded — the paper trains cluster counts
     * proportional to the corpus (110k clusters for LAION), keeping n_c
     * (and so pairs-per-vector) CONSTANT as data grows. A fixed kClusters
-    * is a fixture parameter: the r11 sf10 rehearsal measured k=8 over
+    * is a fixture parameter: an sf10 rehearsal measured k=8 over
     * 200k vectors at Σ n_c²/2 ≈ 2.5 BILLION exact-cosine pairs — a
     * silent >600 s timeout. `maxPairsPerVector` (> 0 to enable) is the
     * scale-relative blowup guard against exactly that: it measures the

@@ -26,9 +26,8 @@ import org.apache.spark.sql.types.DoubleType
   *
   * Catalog queries q37/q41/q76/q87 hand-apply this shape; the rule teaches it
   * to Catalyst so any plan — including `spark.sql` text a user brings — gets
-  * it. Registered via [[GraftExtensions]] (`injectOptimizerRule`) and
-  * [[graft.Graft.prepare]] (`spark.experimental.extraOptimizations`, the
-  * live-session path).
+  * it. Installed as a session optimizer rule by [[GraftFunctions.register]],
+  * which [[graft.Graft.prepare]] calls on every engine session.
   *
   * Fusion requires, per group: same canonicalized child and frequency
   * expression, non-distinct, unfiltered, forward (not `reverse`) aggregates

@@ -1,17 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Registration surface for the engine's native Catalyst expressions —
-  * usable three ways:
+  * usable two ways:
   *
   *   - Column API: `GraftFunctions.cosineFast(a, b)`
-  *   - existing session: `GraftFunctions.register(spark)` then
+  *   - SQL: `GraftFunctions.register(spark)` (which [[graft.Graft.prepare]]
+  *     calls on every engine session), then
   *     `spark.sql("SELECT graft_cosine(a, b) ...")`
-  *   - cluster-wide: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   */
 object GraftFunctions {
 
@@ -25,15 +25,12 @@ object GraftFunctions {
   def minHashSig(hashes: Column, numHashes: Int): Column =
     ColumnBridge.column(MinHashSig(ColumnBridge.expression(hashes), numHashes))
 
-  private[plans] val cosineBuilder: Seq[Expression] => Expression = { children =>
+  private val cosineBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "graft_cosine expects exactly 2 arguments")
     CosineSimilarity(children(0), children(1))
   }
 
-  private[plans] val cosineInfo =
-    new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine")
-
-  private[plans] val minhashBuilder: Seq[Expression] => Expression = { children =>
+  private val minhashBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "graft_minhash expects (hashes, numHashes)")
     val n = children(1) match {
       case e if e.foldable => e.eval(null).asInstanceOf[Number].intValue()
@@ -42,9 +39,6 @@ object GraftFunctions {
     }
     MinHashSig(children(0), n)
   }
-
-  private[plans] val minhashInfo =
-    new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash")
 
   /** Fused importance-scoring kernel (see [[EnrichedTokenCount]]): packed
     * `(n_tokens << 32) | n_enriched` of `tokens` against the verdict
@@ -91,26 +85,20 @@ object GraftFunctions {
     ColumnBridge.column(
       ExactVecScaled(ColumnBridge.expression(a), ColumnBridge.expression(b), dot = false))
 
-  private[plans] val nfcBuilder: Seq[Expression] => Expression = { children =>
+  private val nfcBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 1, "graft_nfc expects exactly 1 argument")
     NfcNormalize(children.head)
   }
-
-  private[plans] val nfcInfo =
-    new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc")
 
   /** HTML character-reference decode (see [[HtmlEntityDecode]]) — named
     * entities + decimal/hex numeric refs, single-pass single-decode. */
   def htmlUnescape(s: Column): Column =
     ColumnBridge.column(HtmlEntityDecode(ColumnBridge.expression(s)))
 
-  private[plans] val htmlUnescapeBuilder: Seq[Expression] => Expression = { children =>
+  private val htmlUnescapeBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 1, "graft_html_unescape expects exactly 1 argument")
     HtmlEntityDecode(children.head)
   }
-
-  private[plans] val htmlUnescapeInfo =
-    new ExpressionInfo(classOf[HtmlEntityDecode].getName, "graft_html_unescape")
 
   /** `<pre>` whitespace → C0 sentinels (see [[PreWhitespaceSentinels]]) —
     * the protect half of htmlToText's preformatted-block rule; the
@@ -118,13 +106,10 @@ object GraftFunctions {
   def preSentinels(s: Column): Column =
     ColumnBridge.column(PreWhitespaceSentinels(ColumnBridge.expression(s)))
 
-  private[plans] val preSentinelsBuilder: Seq[Expression] => Expression = { children =>
+  private val preSentinelsBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 1, "graft_pre_sentinels expects exactly 1 argument")
     PreWhitespaceSentinels(children.head)
   }
-
-  private[plans] val preSentinelsInfo =
-    new ExpressionInfo(classOf[PreWhitespaceSentinels].getName, "graft_pre_sentinels")
 
   /** Grouped top-k aggregate (see [[TopKAgg]]): the k largest `(ord, id)`
     * pairs by (ord DESC, id ASC), in rank order. Use instead of a
@@ -135,7 +120,7 @@ object GraftFunctions {
       TopKAgg(ColumnBridge.expression(ord), ColumnBridge.expression(id), k)
         .toAggregateExpression())
 
-  private[plans] val topkBuilder: Seq[Expression] => Expression = { children =>
+  private val topkBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 3, "graft_topk expects (ord, id, k)")
     val k = children(2) match {
       case e if e.foldable => e.eval(null).asInstanceOf[Number].intValue()
@@ -144,9 +129,6 @@ object GraftFunctions {
     }
     TopKAgg(children(0), children(1), k)
   }
-
-  private[plans] val topkInfo =
-    new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk")
 
   /** Bottom-k-by-hash aggregate (see [[KmvAgg]]): the k pairs with the
     * smallest signed-long hash `h`, payload `v` carried through, sorted by
@@ -157,7 +139,7 @@ object GraftFunctions {
       KmvAgg(ColumnBridge.expression(h), ColumnBridge.expression(v), k)
         .toAggregateExpression())
 
-  private[plans] val kmvBuilder: Seq[Expression] => Expression = { children =>
+  private val kmvBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 3, "graft_kmv expects (h, v, k)")
     val k = children(2) match {
       case e if e.foldable => e.eval(null).asInstanceOf[Number].intValue()
@@ -167,57 +149,36 @@ object GraftFunctions {
     KmvAgg(children(0), children(1), k)
   }
 
-  private[plans] val kmvInfo =
-    new ExpressionInfo(classOf[KmvAgg].getName, "graft_kmv")
+  /** Each SQL function's name, info and builder, built once so that a
+    * repeated registration hands the registry the same objects. */
+  private val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("graft_cosine", classOf[CosineSimilarity], cosineBuilder),
+      ("graft_minhash", classOf[MinHashSig], minhashBuilder),
+      ("graft_nfc", classOf[NfcNormalize], nfcBuilder),
+      ("graft_html_unescape", classOf[HtmlEntityDecode], htmlUnescapeBuilder),
+      ("graft_pre_sentinels", classOf[PreWhitespaceSentinels], preSentinelsBuilder),
+      ("graft_topk", classOf[TopKAgg], topkBuilder),
+      ("graft_kmv", classOf[KmvAgg], kmvBuilder),
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    }
 
-  /** Register the engine's functions into an already-running session. */
+  /** The one registration path: install the [[FusePercentiles]] optimizer
+    * rule and the `graft_*` SQL functions into a running session.
+    * Idempotent. The rule's check-and-append holds the session's
+    * experimental-methods lock, so concurrent callers (Verify's worker
+    * threads all reach [[graft.Graft.prepare]]) append it exactly once;
+    * re-registering a function with the same builder replaces it with
+    * itself. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("graft_cosine"), cosineInfo, cosineBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("graft_minhash"), minhashInfo, minhashBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("graft_nfc"), nfcInfo, nfcBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(
-        FunctionIdentifier("graft_html_unescape"), htmlUnescapeInfo, htmlUnescapeBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(
-        FunctionIdentifier("graft_pre_sentinels"), preSentinelsInfo, preSentinelsBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("graft_topk"), topkInfo, topkBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("graft_kmv"), kmvInfo, kmvBuilder)
+    val experimental = spark.experimental
+    experimental.synchronized {
+      if (!experimental.extraOptimizations.contains(FusePercentiles))
+        experimental.extraOptimizations = experimental.extraOptimizations :+ FusePercentiles
+    }
+    val registry = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (id, info, builder) => registry.registerFunction(id, info, builder) }
   }
 }
 
-/** `spark.sql.extensions` entry point injecting the engine's functions at
-  * session build time (the deployment path for a real cluster). Reuses the
-  * registry-path builders so BOTH paths validate arity and the
-  * numHashes-must-be-a-literal contract identically. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => FusePercentiles)
-    ext.injectFunction(
-      (FunctionIdentifier("graft_cosine"), GraftFunctions.cosineInfo,
-        GraftFunctions.cosineBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_minhash"), GraftFunctions.minhashInfo,
-        GraftFunctions.minhashBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_nfc"), GraftFunctions.nfcInfo,
-        GraftFunctions.nfcBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_html_unescape"), GraftFunctions.htmlUnescapeInfo,
-        GraftFunctions.htmlUnescapeBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_pre_sentinels"), GraftFunctions.preSentinelsInfo,
-        GraftFunctions.preSentinelsBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_topk"), GraftFunctions.topkInfo,
-        GraftFunctions.topkBuilder))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_kmv"), GraftFunctions.kmvInfo,
-        GraftFunctions.kmvBuilder))
-  }
-}

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * form built a k-way `least` over per-centroid `struct(l2SqExact, label)`
   * columns, inlining every centroid coordinate as a plan literal — plan
   * size and codegen grow as k × dim, workable at the fixture k = 8 but
-  * codegen-explosive at paper-scale cluster counts (measured r11: k = 800
+  * codegen-explosive at paper-scale cluster counts (measured: k = 800
   * × 64 dims = 51k literals, the scaled-k SemDeDup demo crawled in
   * compilation). Here the matrix ships ONCE per task as a reference
   * object (the [[BpeMergeFold]] convention) and the argmin is a tight
@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * compare matches the DuckDB oracle's decimal arithmetic strictly
   * better — they differ only where two distances collide within a
   * double ulp, where the double form was the one diverging from the
-  * oracle.) Overflow contract (corrected r12, ADVICE r11): with 10⁻⁶
+  * oracle.) Overflow contract: with 10⁻⁶
   * quantization, Σ over `dim` of (Δq)² stays within Long for coordinate
   * magnitudes up to ~√(2⁶³/dim)/2 × 10⁻⁶ — ≈ 48 at 1,000 dims, ≈ 190 at
   * 64 dims — NOT ~10⁵ as previously claimed. Embeddings are O(1) by the
@@ -82,8 +82,7 @@ case class IvfArgminL2(
     val cm = ctx.addReferenceObj("ivfCents", cents, "long[][]")
     // freshName, not a fixed local: two graft_ivf_argmin calls fused into
     // one whole-stage-codegen function would otherwise declare `r` twice —
-    // a Janino compile failure and a silent interpreted-mode fallback
-    // (ADVICE r11).
+    // a Janino compile failure and a silent interpreted-mode fallback.
     val r = ctx.freshName("ivfArgminRes")
     nullSafeCodeGen(ctx, ev, a => {
       s"""

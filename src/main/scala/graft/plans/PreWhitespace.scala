@@ -31,8 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - an unterminated `<pre>` protects to end-of-input, the browser
   *     behavior for truncated pages.
   *
-  * Regex-tier fidelity limits, deliberate and pinned in TextSpec
-  * (ADVICE r11): the opening tag ends at the FIRST `>` — a quoted
+  * Regex-tier fidelity limits, deliberate and pinned in TextSpec: the
+  * opening tag ends at the FIRST `>` — a quoted
   * attribute containing `>` (`<pre data-x="a>b">`) truncates the tag
   * there and the attribute remainder is protected as content (a real
   * attribute scanner is parser-tier); and self-closing detection is

@@ -17,8 +17,7 @@ import graft.Harness
   *
   * The memory sink is the GATE harness, not the production path: it
   * materializes the result on the driver, which is fine for a correctness
-  * check and wrong at 100 TB — production streams write through
-  * [[StreamingSink]]'s foreachBatch + idempotent-merge.
+  * check and wrong at 100 TB, where a stream writes to a durable sink.
   */
 private[streaming] object StreamingHarness {
 

@@ -15,11 +15,7 @@ import graft.plans.GraftFunctions
   * re-ranking would grow without limit.
   *
   * Complete/update output only (top-k is not monotone: a new row can
-  * evict an old leader), so this pairs with a sink that upserts by group
-  * — e.g. [[StreamingSink.upsertSnapshot]] keyed on (group, rnk) with
-  * `outputMode = "update"` and a constant version column (update-mode
-  * ties resolve updates-first, so each trigger's re-emission wins);
-  * StreamingSinkSpec drives exactly that composition.
+  * evict an old leader), so a durable consumer upserts by (group, rnk).
   */
 object StreamingLeaders {
 

@@ -72,15 +72,19 @@ class AsOfRangeSpec extends SparkSpec {
     ))
   }
 
+  /** Bernoulli sample at `fraction` through [[Sampling.hashBucket]]. */
+  private def hashSample(df: org.apache.spark.sql.DataFrame, fraction: Double, salt: Long) =
+    df.filter(Sampling.hashBucket(col("id"), salt) < lit(math.round(fraction * Sampling.Buckets)))
+
   test("hashSample is deterministic, disjoint under different salts, and near-rate") {
     val df = (0L until 4000L).toDF("id")
-    val a = Sampling.hashSample(df, "id", 0.25, salt = 1L)
-    val b = Sampling.hashSample(df, "id", 0.25, salt = 1L)
+    val a = hashSample(df, 0.25, salt = 1L)
+    val b = hashSample(df, 0.25, salt = 1L)
     assert(a.collect().map(_.getLong(0)).toSeq == b.collect().map(_.getLong(0)).toSeq)
     val n = a.count()
     assert(n > 4000 * 0.20 && n < 4000 * 0.30, s"rate off: $n/4000")
     // different salt → a (near-)independent draw, not the same subset
-    val c = Sampling.hashSample(df, "id", 0.25, salt = 2L).collect().map(_.getLong(0)).toSet
+    val c = hashSample(df, 0.25, salt = 2L).collect().map(_.getLong(0)).toSet
     val aSet = a.collect().map(_.getLong(0)).toSet
     val overlap = aSet.intersect(c).size.toDouble / n
     assert(overlap < 0.40, s"salted samples nearly identical: $overlap")
@@ -104,8 +108,7 @@ class AsOfRangeSpec extends SparkSpec {
       val b = math.floorMod(mix64(i + 7L * 0x9E3779B97F4A7C15L), 1000000L)
       b < 600000L
     }
-    val got = Sampling
-      .hashSample(ids.toDF("id"), "id", 0.6, salt = 7L)
+    val got = hashSample(ids.toDF("id"), 0.6, salt = 7L)
       .collect().map(_.getLong(0)).toSeq
     assert(got.sorted == expected.sorted)
   }

@@ -37,22 +37,15 @@ class AuditSpec extends SparkSpec {
 
   test("pkViolations finds duplicate key groups") {
     val df = Seq((1, 1), (1, 1), (1, 2)).toDF("k1", "k2")
-    assert(Audit.pkViolationCount(df, Seq("k1", "k2")) == 1L)
+    assert(Audit.pkViolations(df, Seq("k1", "k2")).count() == 1L)
   }
 
   test("fkOrphans finds child keys missing from parent via broadcast anti join") {
     val child = Seq(1, 2, 3, 99).toDF("id")
     val parent = Seq(1, 2, 3).toDF("id")
-    assert(Audit.fkOrphanCount(child, parent, Seq("id")) == 1L)
+    assert(Audit.fkOrphans(child, parent, Seq("id")).count() == 1L)
     val plan = Audit.fkOrphans(child, parent, Seq("id")).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
-  }
-
-  test("nullCounts profiles all columns in one aggregation") {
-    val df = Seq((Some(1), Some("a")), (None, Some("b")), (Some(3), None))
-      .toDF("x", "y")
-    val r = Audit.nullCounts(df).collect()(0)
-    assert(r.getLong(0) == 1L && r.getLong(1) == 1L)
   }
 
   test("kAnonymity: group sizes, risk share, null QI forms its own group") {

@@ -68,11 +68,4 @@ class CleaningSpec extends SparkSpec {
     assert(out.map(_.getAs[String]("provincia")).toSeq == Seq("Milano", "Pavia"))
     assert(out(1).getAs[Double]("cell2province") == 0.0) // NaN→0
   }
-
-  test("trafficRejectionStats accounts invalid dates and cells in one pass") {
-    val stats = Cleaning.trafficRejectionStats(trafficFixture).collect()(0)
-    assert(stats.getAs[Long]("initial") == 5)
-    assert(stats.getAs[Long]("invalid_dates") == 1)
-    assert(stats.getAs[Long]("invalid_cells") == 1)
-  }
 }

@@ -151,12 +151,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((11L, 0L)))
     // intra-incoming duplicates are NOT this operator's job
     assert(!pairs.exists(p => p._1 == 13L || p._1 == 15L))
-
-    // the keep-side convenience: flagged incoming doc dropped, rest kept
-    val kept = Dedup
-      .dropAgainstReference(incoming, reference, "doc_id", "text", k = 3, numHashes = 16, rowsPerBand = 2)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(13L, 15L))
   }
 
   test("duplicatedSpanStats counts cross-doc windows only") {
@@ -212,28 +206,13 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.contains((0L, 4L)))
   }
 
-  test("simhash: zero hamming for identical, small for near-dup, pairs found via chunk blocking") {
+  test("simhash: zero hamming for identical, small for near-dup") {
     val sk = docs.select(col("doc_id"), Dedup.simHash64(col("text")).as("sk"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("sk")).toMap
     assert(sk(0L) == sk(1L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sk(0L), sk(3L)) <= 16)
     assert(ham(sk(0L), sk(4L)) > 16)
-    val pairs = Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 16)
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    assert(pairs.contains((0L, 1L)))
-  }
-
-  test("dropNearDuplicates keeps each cluster's smallest id") {
-    import org.apache.spark.sql.functions._
-    val docs = Seq(
-      (0L, "alpha"), (1L, "alpha dup"), (2L, "beta"), (3L, "alpha dup dup"), (4L, "gamma")
-    ).toDF("doc_id", "text")
-    // pair graph: {0,1,3} are one cluster (0-1, 1-3), {2}, {4} singletons
-    val pairs = Seq((0L, 1L), (1L, 3L)).toDF("doc_a", "doc_b")
-    val kept = Dedup.dropNearDuplicates(docs, "doc_id", pairs)
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    assert(kept == Set(0L, 2L, 4L))
   }
 
   test("contaminationFlags counts distinct shingles shared with the eval set") {

@@ -108,7 +108,7 @@ class FunnelSpec extends SparkSpec {
       ("2024-01-02", 2L, 1L, 1L, 2L)))
   }
 
-  test("weekly cohorts: offset-0 diagonal is 1.0 and returners count once") {
+  test("weekly cohorts: first-seen week keys the cohort and returners count once") {
     // 2024-01-01 and 2024-01-08 are Mondays. u1 active weeks 0 and 1
     // (twice in week 1 — counts once); u2 week 0 only; u3 starts week 1.
     val ev = Seq(
@@ -118,16 +118,15 @@ class FunnelSpec extends SparkSpec {
       (2L, ts("2024-01-02 10:00:00")),
       (3L, ts("2024-01-10 10:00:00"))
     ).toDF("user_id", "ts")
-    val out = Retention.weeklyCohorts(ev, "user_id", "ts")
+    val out = Retention.cohortMatrix(ev, "user_id", "ts")
       .orderBy("cohort_week", "week_offset")
       .collect()
       .map(r => (r.getAs[Timestamp]("cohort_week").toString.take(10),
-        r.getAs[Long]("week_offset"), r.getAs[Long]("n_users"),
-        r.getAs[Double]("retention")))
+        r.getAs[Long]("week_offset"), r.getAs[Long]("n_users")))
     assert(out.toSeq == Seq(
-      ("2024-01-01", 0L, 2L, 1.0),
-      ("2024-01-01", 1L, 1L, 0.5),
-      ("2024-01-08", 0L, 1L, 1.0)))
+      ("2024-01-01", 0L, 2L),
+      ("2024-01-01", 1L, 1L),
+      ("2024-01-08", 0L, 1L)))
   }
 
   test("valueRuns: islands split on value change, interleaved keys stay separate") {

@@ -34,6 +34,16 @@ class FusePercentilesSpec extends SparkSpec {
     * fresh ExperimentalMethods; shares the context and temp-view-free). */
   private lazy val plain = spark.newSession()
 
+  test("Graft.prepare installs the rule once and the graft_* SQL functions") {
+    val s = spark.newSession()
+    Graft.prepare(s)
+    Graft.prepare(s)
+    // graft_cosine takes array<float>
+    val v = "CAST(array(1, 0) AS array<float>)"
+    assert(s.sql(s"SELECT graft_cosine($v, $v)").head().getDouble(0) == 1.0)
+    assert(s.experimental.extraOptimizations.count(_ eq graft.plans.FusePercentiles) == 1)
+  }
+
   test("three scalar quartiles fuse to one array-form buffer, values unchanged") {
     val agg = (d: DataFrame) =>
       d.groupBy($"g").agg(

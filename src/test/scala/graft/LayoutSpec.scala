@@ -45,40 +45,6 @@ class LayoutSpec extends SparkSpec {
     assert(got(0.5) == 32768L || got(0.5) == 32767L)
   }
 
-  test("z-clustered partitions have far tighter 2D footprints than the incoming layout") {
-    // uniform 2D points, arriving in random order (hash-partitioned by id)
-    val pts = spark.range(20000)
-      .select(
-        $"id",
-        (HashRefCol.mix64($"id") % 1024 + 1024) % 1024,
-        (HashRefCol.mix64($"id" + 7) % 1024 + 1024) % 1024)
-      .toDF("id", "x", "y")
-      .repartition(16)
-    def avgBboxArea(df: org.apache.spark.sql.DataFrame): Double =
-      df.groupBy(spark_partition_id())
-        .agg(((max($"x") - min($"x")) * (max($"y") - min($"y"))).as("a"))
-        .agg(avg($"a")).head.getDouble(0)
-    val before = avgBboxArea(pts)
-    val after = avgBboxArea(Layout.clusterByZ(pts, $"x", $"y", 16))
-    // random layout: every partition spans ~the whole 1024×1024 square;
-    // 16 z-ranges tile it, so each partition covers ~1/16 of the area
-    assert(after < before * 0.25, s"after=$after before=$before")
-  }
-
-  test("bbox predicates on z-clustered parquet keep pushed-down scan filters") {
-    val dir = java.nio.file.Files.createTempDirectory("zlay").toString
-    val pts = spark.range(5000)
-      .select($"id", ($"id" % 71).as("x"), ($"id" % 97).as("y"))
-    Layout.clusterByZ(pts, $"x", $"y", 8).write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir).filter($"x" between (10, 20)).filter($"y" between (30, 40))
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") &&
-      (plan.contains("GreaterThanOrEqual(x,10)") || plan.contains("GreaterThanOrEqual(x,10L)")),
-      s"bbox filter must reach the parquet scan:\n$plan")
-    // and the data survives the re-layout intact
-    assert(spark.read.parquet(dir).count() == 5000)
-  }
-
   test("pruningAudit counts prunable tiles and rows per probe box") {
     val tiles = Seq(
       // tile footprints: (n_rows, x_min, x_max, y_min, y_max)
@@ -132,10 +98,4 @@ class LayoutSpec extends SparkSpec {
       Layout.compactionPlan(f, "bytes", Nil, targetBytes = 10L)
     }
   }
-}
-
-/** Column-side mix64 for test fixtures (matches [[HashRef.mix64]]). */
-object HashRefCol {
-  def mix64(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.HashFunctions.mix64(c.cast("long"))
 }

@@ -5,28 +5,6 @@ import graft.multimodal.Multimodal
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  test("binary-column plumbing: batched feature extraction is deterministic and complete") {
-    val df = Seq(
-      (0L, "small payload"),
-      (1L, "a somewhat longer payload with more bytes in it"),
-      (2L, "")
-    ).toDF("doc_id", "text")
-    val records = Multimodal.fromBinaryColumn(df, "doc_id", "text", "video")
-    val feats = Multimodal.extractFeatures(records).collect().sortBy(_.media_id)
-    assert(feats.length == 3)
-    assert(feats(0).n_bytes == "small payload".getBytes("UTF-8").length)
-    // sha256 matches JVM-computed reference
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val expected = md.digest("small payload".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    assert(feats(0).sha256_hex == expected)
-    // histogram buckets sum to payload length
-    assert(feats(1).byte_histogram.sum == feats(1).n_bytes)
-    // stub decode is deterministic
-    assert(feats(0).decoded_width == 32 + feats(0).n_bytes % 480)
-    // empty payload handled
-    assert(feats(2).n_bytes == 0 && feats(2).n_frames_sampled == 0)
-  }
-
   test("ImageIoCodec: REAL PNG decode — dims, resize round-trip, dirty fallback") {
     import java.awt.image.BufferedImage
     import java.io.ByteArrayOutputStream
@@ -40,30 +18,23 @@ class MultimodalSpec extends SparkSpec {
     ImageIO.write(img, "png", bos)
     val png = bos.toByteArray
 
-    // Codec-level: real dims, not the stub's byte-length hash.
-    assert(Multimodal.ImageIoCodec.decodeDims(png).contains((2, 2)))
+    val codec = Multimodal.ImageIoCodec
+    assert(codec.looksDecodable(png))
+    assert(codec.decode(png).map(i => (i.getWidth, i.getHeight)).contains((2, 2)))
     // Corrupt tail: magic passes, decode may fail → None, never a throw.
     val corrupt = png.take(12)
-    assert(Multimodal.ImageIoCodec.decodeDims(corrupt).isEmpty)
-    assert(!Multimodal.ImageIoCodec.looksDecodable("not an image".getBytes))
+    assert(codec.looksDecodable(corrupt))
+    assert(codec.decode(corrupt).isEmpty)
+    assert(!codec.looksDecodable("not an image".getBytes))
+    assert(codec.decode("not an image".getBytes).isEmpty)
 
-    // Pipeline-level: extractFeatures reports the real decoded dims...
-    val df = Seq((7L, png), (8L, "junk bytes".getBytes)).toDF("doc_id", "payload")
-    val feats = Multimodal
-      .extractFeatures(Multimodal.fromBinaryColumn(df, "doc_id", "payload", "image"))
-      .collect().sortBy(_.media_id)
-    assert(feats(0).decoded_width == 2 && feats(0).decoded_height == 2)
-    // ...while the non-image row falls back to the stub (job never fails).
-    val junkLen = "junk bytes".getBytes.length
-    assert(feats(1).decoded_width == 32 + junkLen % 480)
-
-    // resize produces a REAL 4×4 PNG: decode it back and check.
-    val resized = Multimodal
-      .resize(Multimodal.fromBinaryColumn(df, "doc_id", "payload", "image"), 4, 4)
-      .collect().sortBy(_.media_id)
-    assert(Multimodal.ImageIoCodec.decodeDims(resized(0).payload).contains((4, 4)))
-    // Nearest-corner pixels keep their colors through the 2×2→4×4 upscale.
-    val back = ImageIO.read(new java.io.ByteArrayInputStream(resized(0).payload))
+    // Decode → 2×2→4×4 upscale → encodePng → decode: a REAL 4×4 PNG.
+    val up = new BufferedImage(4, 4, BufferedImage.TYPE_INT_RGB)
+    val g = up.createGraphics()
+    try g.drawImage(codec.decode(png).get, 0, 0, 4, 4, null) finally g.dispose()
+    val back = codec.decode(codec.encodePng(up)).get
+    assert(back.getWidth == 4 && back.getHeight == 4)
+    // Nearest-corner pixels keep their colors through the upscale.
     assert((back.getRGB(0, 0) & 0xffffff) == 0xff0000)
     assert((back.getRGB(3, 3) & 0xffffff) == 0xffffff)
   }
@@ -127,15 +98,6 @@ class MultimodalSpec extends SparkSpec {
       assert(math.abs(s8(i) - nominal) <= 256, s"i=$i got ${s8(i)} nominal $nominal")
     }
 
-    // Pipeline-level: an audio record with a real WAV payload reports PCM
-    // dims (frames, channels); a junk audio payload falls back to the stub.
-    val df = Seq((7L, wav), (8L, "junk bytes".getBytes)).toDF("doc_id", "payload")
-    val feats = Multimodal
-      .extractFeatures(Multimodal.fromBinaryColumn(df, "doc_id", "payload", "audio"))
-      .collect().sortBy(_.media_id)
-    assert(feats(0).decoded_width == samples.length && feats(0).decoded_height == 1)
-    val junkLen = "junk bytes".getBytes.length
-    assert(feats(1).decoded_width == 32 + junkLen % 480)
   }
 
   test("audioRoundTrip: decoded sample sum equals the direct mix64 sum") {
@@ -164,7 +126,6 @@ class MultimodalSpec extends SparkSpec {
     assert(GifVideoCodec.looksGif(gif))
     val Some(back) = GifVideoCodec.decodeFrames(gif)
     assert(back.length == 3)
-    assert(GifVideoCodec.decodeDims(gif).contains((4, 2, 3)))
     for ((expected, img) <- pix.zip(back)) {
       assert(img.getWidth == 4 && img.getHeight == 2)
       val got = for (y <- 0 until 2; x <- 0 until 4)
@@ -181,39 +142,6 @@ class MultimodalSpec extends SparkSpec {
     val liar = ("GIF89a" + "garbage" * 16).getBytes
     assert(GifVideoCodec.looksGif(liar))
     assert(GifVideoCodec.decodeFrames(liar).isEmpty)
-
-    // Pipeline-level: a video record with a real GIF payload reports the
-    // real frame dims and TRUE frame count (capped at 8); junk falls back
-    // to the stub.
-    val df = Seq((7L, gif), (8L, "junk bytes".getBytes)).toDF("doc_id", "payload")
-    val feats = Multimodal
-      .extractFeatures(Multimodal.fromBinaryColumn(df, "doc_id", "payload", "video"))
-      .collect().sortBy(_.media_id)
-    assert(feats(0).decoded_width == 4 && feats(0).decoded_height == 2)
-    assert(feats(0).n_frames_sampled == 3)
-    val junkLen = "junk bytes".getBytes.length
-    assert(feats(1).decoded_width == 32 + junkLen % 480)
-  }
-
-  test("sampleGifFrames: real demux → evenly-strided frames → lossless PNG re-encode") {
-    import Multimodal.GifVideoCodec
-    // Six 2×2 frames, each filled with its own index-scaled value: the
-    // stride and per-frame identity are both observable in the output.
-    val frames = (0 until 6).map(f =>
-      GifVideoCodec.grayFrame(2, 2, Array.fill(4)((f * 40).toByte)))
-    val gif = GifVideoCodec.encodeGif(frames)
-    val df = Seq((9L, gif), (10L, "not a gif".getBytes)).toDF("doc_id", "payload")
-    val out = Multimodal
-      .sampleGifFrames(Multimodal.fromBinaryColumn(df, "doc_id", "payload", "video"), maxFrames = 4)
-      .collect().sortBy(_.frame_idx)
-    // undecodable payload yields nothing; decodable one yields 4 of 6
-    assert(out.map(_.media_id).toSet == Set(9L))
-    assert(out.map(_.src_frame).toSeq == Seq(0, 1, 3, 4)) // i*6/4 stride
-    for (f <- out) {
-      assert(f.width == 2 && f.height == 2)
-      val img = Multimodal.ImageIoCodec.decode(f.frame_png).get
-      assert(((img.getRGB(1, 1) >> 16) & 255) == f.src_frame * 40)
-    }
   }
 
   test("videoRoundTrip: decoded per-frame pixel sums equal the direct mix64 sums") {
@@ -267,24 +195,5 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.frameSignatures(
         Seq(1L).map(java.lang.Long.valueOf).toDS(), 2, 4, 2, contents = 3)
     }
-  }
-
-  test("frame sampling expands videos to per-frame rows, skips other kinds") {
-    val df = Seq(
-      (0L, "0123456789abcdef0123456789abcdef"), // 32 bytes → 4 full frames at 8 bytes
-      (1L, "")
-    ).toDF("doc_id", "text")
-    val video = Multimodal.fromBinaryColumn(df, "doc_id", "text", "video")
-    val frames = Multimodal.sampleFrames(video, maxFrames = 4, frameBytes = 8)
-      .collect().sortBy(f => (f.media_id, f.frame_idx))
-    assert(frames.map(_.media_id).toSet == Set(0L)) // empty payload → no frames
-    assert(frames.length == 4)
-    assert(frames.map(_.byte_offset).toSeq == Seq(0L, 8L, 16L, 24L))
-    assert(frames.forall(_.frame_bytes.length == 8))
-    assert(new String(frames(1).frame_bytes, "UTF-8") == "89abcdef")
-
-    // non-video kinds produce no frames at all
-    val image = Multimodal.fromBinaryColumn(df, "doc_id", "text", "image")
-    assert(Multimodal.sampleFrames(image, 4, 8).count() == 0)
   }
 }

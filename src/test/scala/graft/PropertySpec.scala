@@ -69,9 +69,11 @@ class PropertySpec extends SparkSpec {
 
   test("hash samples nest: fraction f1 <= f2 implies sample(f1) subset-of sample(f2)") {
     val ids = (0L until 5000L).toDF("id")
-    val s20 = Sampling.hashSample(ids, "id", 0.2, salt = 5L)
-    val s50 = Sampling.hashSample(ids, "id", 0.5, salt = 5L)
-    val s80 = Sampling.hashSample(ids, "id", 0.8, salt = 5L)
+    def sample(fraction: Double) =
+      ids.filter(Sampling.hashBucket(col("id"), 5L) < lit(math.round(fraction * Sampling.Buckets)))
+    val s20 = sample(0.2)
+    val s50 = sample(0.5)
+    val s80 = sample(0.8)
     assert(s20.exceptAll(s50).count() == 0)
     assert(s50.exceptAll(s80).count() == 0)
     // and the rate lands near its target (hash uniformity smoke check)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{StreamingRollup, StreamingSessionize}
+import graft.streaming.{StreamingLeaders, StreamingRollup, StreamingSessionize}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -276,24 +276,6 @@ class StreamingSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("enrich joins a stream against a broadcast static dimension") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Double)]
-    val stream = input.toDF().toDF("user_id", "value")
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val enriched = graft.streaming.StreamingJoin.enrich(stream, dim, "user_id", Seq("tier"))
-    val q = enriched.writeStream
-      .format("memory").queryName("enrich_test")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData((1L, 5.0), (2L, 7.0), (9L, 1.0)) // 9 has no dim row
-      q.processAllAvailable()
-      val out = spark.table("enrich_test")
-        .collect().map(r => (r.getAs[Long]("user_id"), Option(r.getAs[String]("tier")))).toSet
-      assert(out == Set((1L, Some("gold")), (2L, Some("silver")), (9L, None)))
-    } finally q.stop()
   }
 
   test("intervalJoin matches within the band and not outside it") {
@@ -604,6 +586,30 @@ class StreamingSpec extends SparkSpec {
       val streamed = spark.table("throttle_reopen_test")
         .select("event_id").as[Long].collect().toSet
       assert(streamed == Set(1L))
+    } finally q.stop()
+  }
+
+  test("topKLeaders keeps a bounded per-group leaderboard across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Double, Long)]
+    val leaders = StreamingLeaders.topKLeaders(
+      input.toDF().toDF("g", "v", "id"), Seq("g"), $"v", $"id", k = 2)
+    val q = leaders.writeStream
+      .format("memory").queryName("leaders_test")
+      .outputMode(OutputMode.Complete())
+      .start()
+    try {
+      input.addData(("a", 1.0, 1L), ("a", 5.0, 2L), ("b", 7.0, 3L))
+      q.processAllAvailable()
+      val r1 = spark.table("leaders_test").orderBy("g", "rnk")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+      assert(r1 == Seq(("a", 1L, 5.0, 2L), ("a", 2L, 1.0, 1L), ("b", 1L, 7.0, 3L)))
+      // a later batch evicts a leader — state carried the old heap over
+      input.addData(("a", 9.0, 4L), ("a", 6.0, 5L))
+      q.processAllAvailable()
+      val r2 = spark.table("leaders_test").orderBy("g", "rnk")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+      assert(r2 == Seq(("a", 1L, 9.0, 4L), ("a", 2L, 6.0, 5L), ("b", 1L, 7.0, 3L)))
     } finally q.stop()
   }
 }

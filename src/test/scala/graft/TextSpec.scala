@@ -18,12 +18,6 @@ class TextSpec extends SparkSpec {
     assert(fp.distinct.length == 1)
   }
 
-  test("rollingHash64 is deterministic and content-sensitive") {
-    val h = Seq("a b c", "a b c", "a b d").toDF("t")
-      .select(TextFunctions.rollingHash64($"t")).as[Long].collect()
-    assert(h(0) == h(1) && h(0) != h(2))
-  }
-
   test("wordShingles produce n-k+1 shingles, empty below k") {
     val sh = Seq("a b c d", "a b").toDF("t")
       .select(TextFunctions.wordShingles($"t", 3).as("s"))

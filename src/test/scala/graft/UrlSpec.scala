@@ -68,10 +68,4 @@ class UrlSpec extends SparkSpec {
       .select(UrlFunctions.canonicalizeUrl($"u")).collect()(0)
     assert(n.isNullAt(0))
   }
-
-  test("urlHost extracts the lowercased host without port") {
-    val hosts = Seq("HTTP://WWW.Example.COM:8080/a", "https://x.Y.z/p?q=1")
-      .toDF("u").select(UrlFunctions.urlHost($"u")).collect().map(_.getString(0))
-    assert(hosts.toSeq == Seq("www.example.com", "x.y.z"))
-  }
 }
