@@ -25,6 +25,7 @@ import json
 import math
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -63,6 +64,10 @@ def values_equal(a, b, tol):
     return a == b
 
 
+def verdict(result):
+    return "PASS" if result.startswith(("OK", "ROWS_ONLY")) else "FAIL"
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     json_out = sys.argv[3] if len(sys.argv) > 3 else os.environ.get("GRAFT_VERIFY_JSON")
@@ -93,31 +98,35 @@ def main():
         d for d in os.listdir(out_dir)
         if os.path.isdir(os.path.join(out_dir, d))
     )
-    for name in names:
+    def check(name):
+        """Compares one query's dump with its oracle; returns the oracle's
+        seconds (None when it has no oracle)."""
         spark_df = pd.read_parquet(os.path.join(out_dir, name))
         if name not in oracles:
             results[name] = f"ROWS_ONLY rows={len(spark_df)}"
             record(name, spark_rows=len(spark_df), rows_match=len(spark_df) > 0)
-            continue
+            return None
+        t0 = time.monotonic()
         try:
             oracle_df = con.sql(oracles[name]).df()
         except Exception as e:
             results[name] = f"ORACLE_ERROR {str(e).splitlines()[0][:160]}"
             record(name, spark_rows=len(spark_df), err=results[name])
-            continue
+            return time.monotonic() - t0
+        oracle_s = time.monotonic() - t0
         s, o = canon(spark_df), canon(oracle_df)
         if list(s.columns) != list(o.columns):
             results[name] = f"SCHEMA_MISMATCH spark={list(s.columns)} oracle={list(o.columns)}"
             record(name, spark_rows=len(s), oracle_rows=len(o),
                    rows_match=len(s) == len(o), schema_match=False,
                    hash_match=False, err=results[name])
-            continue
+            return oracle_s
         if len(s) != len(o):
             results[name] = f"ROWCOUNT_MISMATCH spark={len(s)} oracle={len(o)}"
             record(name, spark_rows=len(s), oracle_rows=len(o),
                    rows_match=False, schema_match=True, hash_match=False,
                    err=results[name])
-            continue
+            return oracle_s
         # Dtype-strict: the driver's hash is REPRESENTATION-sensitive
         # (int64 123 != float64 123.0 != Decimal('123')). DuckDB surfaces
         # HUGEINT and DECIMAL(38,x) results as float64 while Spark parquet
@@ -134,7 +143,7 @@ def main():
             results[name] = bad
             record(name, spark_rows=len(s), oracle_rows=len(o), rows_match=True,
                    schema_match=True, hash_match=False, err=bad)
-            continue
+            return oracle_s
         for col in s.columns:
             sv, ov = s[col].tolist(), o[col].tolist()
             for i, (x, y) in enumerate(zip(sv, ov)):
@@ -148,6 +157,14 @@ def main():
         results[name] = bad or f"OK rows={len(s)}"
         record(name, spark_rows=len(s), oracle_rows=len(o), rows_match=True,
                schema_match=True, hash_match=bad is None, err=bad)
+        return oracle_s
+
+    # one line per query as it finishes, so a stalled oracle shows
+    for i, name in enumerate(names, 1):
+        oracle_s = check(name)
+        took = "no oracle" if oracle_s is None else f"oracle {oracle_s:.2f} s"
+        print(f"[{i}/{len(names)}] {verdict(results[name]):4} {name} ({took}): {results[name]}",
+              file=sys.stderr, flush=True)
 
     if not results:
         # Round-8 lesson: an empty results map is indistinguishable from a
@@ -168,9 +185,9 @@ def main():
         print(f"wrote {len(records)}-entry driver-shape record to {json_out}",
               file=sys.stderr)
 
-    n_ok = sum(1 for v in results.values() if v.startswith(("OK", "ROWS_ONLY")))
+    n_ok = sum(1 for v in results.values() if verdict(v) == "PASS")
     for name in sorted(results):
-        print(f"{'PASS' if results[name].startswith(('OK', 'ROWS_ONLY')) else 'FAIL':4} {name}: {results[name]}")
+        print(f"{verdict(results[name]):4} {name}: {results[name]}")
     print(f"\n{n_ok}/{len(results)} pass")
     sys.exit(0 if n_ok == len(results) else 1)
 

@@ -29,7 +29,7 @@ object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     Graft.prepare(spark)
-    spark.read.parquet(path(dir, name))
+    Parquet.read(spark, path(dir, name))
   }
 
   /** Hash-repartition on `key` to the session's shuffle parallelism (an

@@ -182,11 +182,13 @@ object DedupQueries extends Family {
   // Dedup clustering (ConnectedComponents.components over q43's LSH
   // candidate pairs): transitive closure turns pairs into clusters, so
   // survivor selection keeps ONE doc per group even when (a,c) never
-  // collided in any band. Large-star/small-star — O(log n) rounds of two
-  // key-partitioned shuffles, no driver collection, lineage truncated per
-  // round. The oracle replays the pair generation then takes the
-  // transitive closure with a recursive CTE (fine at oracle scale; the
-  // Spark side is the one that has to survive 100 TB).
+  // collided in any band. A pair graph that fits the driver budget is
+  // collected once and labelled with union-find; a larger one runs
+  // large-star/small-star — O(log n) rounds of two key-partitioned
+  // shuffles, no driver collection, lineage truncated per round. The
+  // oracle replays the pair generation then takes the transitive closure
+  // with a recursive CTE (fine at oracle scale; the Spark side is the one
+  // that has to survive 100 TB).
   val q58 = query("q58_dup_clusters")((s, dir) => {
     val pairs = Dedup.minHashLshPairs(
       Tables.documents(s, dir), "doc_id", "text",

@@ -1,22 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Distributed connected components over candidate-pair edges — the step
-  * that turns near-dup PAIRS (MinHash-LSH, SimHash, embedding buckets)
-  * into duplicate CLUSTERS, so survivor selection can keep exactly one
-  * document per transitive group (a←→b, b←→c ⇒ {a,b,c} is ONE cluster
-  * even though (a,c) never collided in any band).
+/** Connected components over candidate-pair edges — the step that turns
+  * near-dup PAIRS (MinHash-LSH, SimHash, embedding buckets) into duplicate
+  * CLUSTERS, so survivor selection can keep exactly one document per
+  * transitive group (a←→b, b←→c ⇒ {a,b,c} is ONE cluster even though (a,c)
+  * never collided in any band).
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14) — converges in
-  * O(log² n) rounds (O(log n) in practice), each round two key-partitioned
-  * shuffles of the CURRENT edge set. Nothing is ever collected to the
-  * driver and no step materializes a neighborhood list (per-key min +
-  * join-back instead of collect_set), so one 10⁹-node component costs the
-  * same per-round shuffle volume as a billion small ones — the skew
-  * ceiling is the hottest single key's edge count, which AQE splits.
+  * Two paths, chosen by the edge count observed while the canonical edge
+  * set is checkpointed (no separate sizing job):
+  *  - a graph whose edges fit the driver budget ([[driverEdgeBudget]]) is
+  *    collected ONCE and labelled on the driver with union-find; the labels
+  *    come back as a local DataFrame. A pair graph from near-dup candidates
+  *    is usually this small, and the distributed loop would spend its time
+  *    on per-round driver barriers, not data.
+  *  - a larger graph runs alternating large-star / small-star (Kiveris et
+  *    al., "Connected Components in MapReduce and Beyond", SoCC'14), which
+  *    converges in O(log² n) rounds (O(log n) in practice), each round two
+  *    key-partitioned shuffles of the CURRENT edge set. On this path
+  *    nothing is collected to the driver and no step materializes a
+  *    neighborhood list (per-key min + join-back instead of collect_set),
+  *    so one 10⁹-node component costs the same per-round shuffle volume as
+  *    a billion small ones — the skew ceiling is the hottest single key's
+  *    edge count, which AQE splits.
   *
   * Iteration hygiene for Spark: each round ends in `localCheckpoint`
   * (truncates the lineage — without it the plan doubles every round and
@@ -31,6 +40,14 @@ object ConnectedComponents {
   // components() many times per JVM, so loop-index names would collide.
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  private def observation(prefix: String): Observation =
+    new Observation(s"${prefix}_${obsSeq.incrementAndGet()}")
+
+  /** An observed count or max; a plan that ran over no partitions (an
+    * empty edge set) reports no metrics at all, which reads as 0. */
+  private def observed(o: Observation, name: String): Long =
+    o.get.get(name).fold(0L)(_.asInstanceOf[Long])
+
   /** Label every node of the pair graph with the smallest node id
     * reachable from it.
     *
@@ -44,7 +61,18 @@ object ConnectedComponents {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 32): DataFrame = {
+      maxIter: Int = 32): DataFrame =
+    components(pairs, aCol, bCol, maxIter, driverEdgeBudget(pairs.sparkSession))
+
+  /** [[components]] with the driver budget given in edges: a graph with
+    * more canonical edges than `driverBudget` runs the distributed loop, so
+    * a negative budget forces it (specs compare the two paths). */
+  private[graft] def components(
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      maxIter: Int,
+      driverBudget: Long): DataFrame = {
     // Integral ids only — a silent cast("long") would turn string/UUID ids
     // into null, drop every edge at the u≠v filter, and report ZERO
     // duplicate clusters. Fail loudly instead; callers with string ids
@@ -57,28 +85,98 @@ object ConnectedComponents {
     // hi → lo. Both star steps preserve this orientation (they only ever
     // point nodes at something ≤ a neighborhood minimum).
     // The checkpoint also pins the (possibly expensive) pair-generation
-    // plan: EVERYTHING downstream — iterations, convergence probes, the
-    // final node list — reads the materialized edges, so the upstream
-    // pipeline (e.g. a full MinHash-LSH pass) executes exactly once.
+    // plan: EVERYTHING downstream — the driver collect, or the iterations,
+    // convergence probes and final node list — reads the materialized
+    // edges, so the upstream pipeline (e.g. a full MinHash-LSH pass)
+    // executes exactly once. The checkpoint action also observes the edge
+    // count, which picks the path and sizes the loop: no sizing job.
+    val sized = observation("cc_edges")
     val ckInit = pairs
       .select(greatest(a, b).as("u"), least(a, b).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
+      .observe(sized, count(lit(1)).as("n"))
       .localCheckpoint()
-    // Right-size loop parallelism to the MEASURED edge count (the count
-    // reads already-materialized blocks — cheap): every star round runs
-    // 2 shuffles + 2 convergence probes, and on a small-to-medium pair
-    // graph those are 32 near-empty tasks each. One partition per ~100k
-    // edges, min 1 (the kCore rule). Applied to the INITIAL edge set
-    // only, by measurement (the kCore finding): later rounds re-shuffle
-    // to session width and AQE right-sizes their near-empty reads, while
-    // both per-round re-apply variants bench worse — pre-checkpoint
-    // serializes the round's own shuffle-read compute, post-checkpoint
-    // imbalances consumers with fat merged blocks at no wall win. Round 1
-    // is the only round whose input arrives un-shuffled, so it is where
-    // explicit sizing pays.
+    val nEdges = observed(sized, "n")
+    if (nEdges <= driverBudget) labelOnDriver(ckInit)
+    else starLoop(ckInit, nEdges, maxIter)
+  }
+
+  /** Peak driver bytes per collected edge on the driver path: the collected
+    * rows, the sorted node index and the boxed (node, cluster) result rows
+    * of up to two nodes per edge, all live at once. */
+  private val DriverBytesPerEdge = 512L
+  /** Serialized result bytes per edge that a collect returns (an UnsafeRow
+    * of two longs plus its length), counted against maxResultSize. */
+  private val CollectedBytesPerEdge = 32L
+  /** graft.Verify's default: queries that may label on the driver at once. */
+  private val ConcurrentQueries = 4L
+
+  /** Edges one query may collect and label on the driver: half of its share
+    * of the driver heap when [[ConcurrentQueries]] do so at once, capped by
+    * what `spark.driver.maxResultSize` (0 = unlimited) lets a collect
+    * return. */
+  private def driverEdgeBudget(spark: SparkSession): Long = {
+    val byHeap = Runtime.getRuntime.maxMemory / ConcurrentQueries / 2 / DriverBytesPerEdge
+    val maxResult = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (maxResult > 0) math.min(byHeap, maxResult / CollectedBytesPerEdge) else byHeap
+  }
+
+  /** Driver path: collect the canonical edges once and union them, always
+    * linking the larger root under the smaller, so every root is its
+    * component's minimum. Nodes are indexed by rank in the sorted id list,
+    * so the parent array is dense and "smaller root" is "smaller index". */
+  private def labelOnDriver(edges: DataFrame): DataFrame = {
+    val (us, vs) = {
+      val rows = edges.collect()
+      (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    }
+    val ids = {
+      val all = us ++ vs
+      java.util.Arrays.sort(all)
+      var n = 0
+      for (i <- all.indices if i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
+      java.util.Arrays.copyOf(all, n)
+    }
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (k <- us.indices) {
+      val ru = find(java.util.Arrays.binarySearch(ids, us(k)))
+      val rv = find(java.util.Arrays.binarySearch(ids, vs(k)))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    // the distributed path's schema: node and cluster both come from the
+    // canonical edge columns, nullable if either of them is
+    val nullable = edges.schema.fields.exists(_.nullable)
+    val schema = StructType(Seq(
+      StructField("node", LongType, nullable), StructField("cluster", LongType, nullable)))
+    val rows = new java.util.ArrayList[Row](ids.length)
+    for (i <- ids.indices) rows.add(Row(ids(i), ids(find(i))))
+    // one partition: the labels already sit on the driver, and a single
+    // partition satisfies any distribution a caller's aggregate or sort
+    // asks for, so those add no exchange (and no job) on top of them
+    edges.sparkSession.createDataFrame(rows, schema).coalesce(1)
+  }
+
+  /** Distributed path over the checkpointed canonical edges. */
+  private def starLoop(ckInit: DataFrame, nEdges: Long, maxIter: Int): DataFrame = {
+    // Right-size loop parallelism to the OBSERVED edge count: every star
+    // round runs 2 shuffles + 2 convergence probes, and on a
+    // small-to-medium pair graph those are 32 near-empty tasks each. One
+    // partition per ~100k edges, min 1 (the kCore rule). Applied to the
+    // INITIAL edge set only, by measurement (the kCore finding): later
+    // rounds re-shuffle to session width and AQE right-sizes their
+    // near-empty reads, while both per-round re-apply variants bench
+    // worse — pre-checkpoint serializes the round's own shuffle-read
+    // compute, post-checkpoint imbalances consumers with fat merged blocks
+    // at no wall win. Round 1 is the only round whose input arrives
+    // un-shuffled, so it is where explicit sizing pays.
     val nParts = math.max(1L, math.min(
-      ckInit.rdd.getNumPartitions.toLong, ckInit.count() / 100000L + 1L)).toInt
+      ckInit.rdd.getNumPartitions.toLong, nEdges / 100000L + 1L)).toInt
     var edges =
       if (nParts < ckInit.rdd.getNumPartitions) ckInit.coalesce(nParts)
       else ckInit
@@ -100,8 +198,7 @@ object ConnectedComponents {
     // convergence of round n's output is observed while round n+1
     // executes — one extra (cheapest, star-form) round replaces ~n probe
     // actions plus the final round's two full-scan probes.
-    def largeStarObserved(
-        e: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame = {
+    def largeStarObserved(e: DataFrame, obs: Observation): DataFrame = {
       val sym = e.select(col("u"), col("v"), lit(1L).as("__o"))
         .union(e.select(col("v").as("u"), col("u").as("v"), lit(0L).as("__o")))
       val magg = sym.groupBy("u").agg(
@@ -148,10 +245,9 @@ object ConnectedComponents {
     var converged = false
     var iter = 0
     while (!converged && iter <= maxIter) {
-      val obs = new org.apache.spark.sql.Observation(
-        s"cc_conv_${ConnectedComponents.obsSeq.incrementAndGet()}")
+      val obs = observation("cc_conv")
       val next = smallStar(largeStarObserved(edges, obs)).localCheckpoint()
-      if (obs.get("viol").asInstanceOf[Long] == 0L) converged = true
+      if (observed(obs, "viol") == 0L) converged = true
       else { edges = next; iter += 1 }
     }
     // Non-converged labels are intermediate parents, not component minima —

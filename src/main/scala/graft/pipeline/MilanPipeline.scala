@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Parquet
 import graft.operators.{Audit, Cleaning, Rollup}
 import graft.sources.MilanCsvSource
 
@@ -103,9 +104,9 @@ final class MilanPipeline(spark: SparkSession, warehouseDir: String) {
     * tables/views; supports `db.table` names). */
   def catalogTableExists(name: String): Boolean = spark.catalog.tableExists(name)
 
-  def trafficFact: DataFrame = spark.read.parquet(tablePath("fact_traffic_milan"))
+  def trafficFact: DataFrame = Parquet.read(spark, tablePath("fact_traffic_milan"))
 
-  def mobilityFact: DataFrame = spark.read.parquet(tablePath("fact_mobility_provinces"))
+  def mobilityFact: DataFrame = Parquet.read(spark, tablePath("fact_mobility_provinces"))
 
   /** v_hourly_traffic (reference src/database.py:101-112). */
   def hourlyTraffic: DataFrame = Rollup.hourlyTraffic(trafficFact)

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Harness
+import graft.{Harness, Parquet}
 
 /** Shared scaffolding for running a streaming frame through the REAL
   * Structured-Streaming engine to a terminal, value-checkable result:
@@ -28,7 +28,7 @@ private[streaming] object StreamingHarness {
     * recorded in the checkpoint); a single-file dataset streams as its
     * parent dir + a glob filter pinning the one file. */
   def fileSource(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
+    val schema = Parquet.read(spark, path).schema
     val f = new java.io.File(path)
     val reader = spark.readStream.schema(schema)
     if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
