@@ -16,9 +16,15 @@ other: the check finds dead names, not every dead overload.
 Only public members are reported (neither the member nor its owner is
 `private`/`protected`).
 
-Exit status: 0 when every unreached public member is in ALLOWLIST; 1 when
-one outside it is unreached, or an allowlisted member is reached (drop
-its entry); 2 on a usage error.
+It also checks that only the harness mains read the environment: outside
+comments, `SPARK_GRAFT_`, `sys.env`, `System.getenv` and
+`Harness.envPositiveLong` may appear only in the files of ENV_READERS.
+Operator code decides from its inputs and the session alone.
+
+Exit status: 0 when every unreached public member is in ALLOWLIST and no
+file outside ENV_READERS reads the environment; 1 when a member outside
+the allowlist is unreached, an allowlisted member is reached (drop its
+entry), or another file reads the environment; 2 on a usage error.
 """
 import glob
 import os
@@ -49,6 +55,11 @@ ALLOWLIST = {
 ENTRY_POINTS = {
     "SparkEntry.entry",  # the flagship frame a spark-shell session asks for
 }
+
+# The only `src/main` files that may read the environment: the harness
+# mains and their shared plumbing.
+ENV_READERS = {"Harness", "Bench", "Verify", "Explain", "ScaleUp", "MilanApp", "MilanE2E"}
+ENV_RE = re.compile(r"SPARK_GRAFT_|\bsys\.env\b|\bSystem\.getenv\b|\bHarness\.envPositiveLong\b")
 
 ALWAYS_LIVE = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
 
@@ -206,11 +217,16 @@ def main():
         print(f"no Scala sources under {root}/src/main", file=sys.stderr)
         return 2
 
+    env_reads = []  # (path, line, token) outside ENV_READERS
     decls = []
     uses = {}  # name -> [index of the innermost enclosing member, or None]
     for path in main_files + bench_files:
         raw = open(path, encoding="utf-8").read()
         code = strip_comments(raw)
+        stem = os.path.splitext(os.path.basename(path))[0]
+        if path in main_files and stem not in ENV_READERS:
+            env_reads += [(os.path.relpath(path, root), code.count("\n", 0, m.start()) + 1,
+                           m.group()) for m in ENV_RE.finditer(code)]
         ds = members(path, strip_comments(raw, mask_strings=True)) if path in main_files else []
         base = len(decls)
         decls += ds
@@ -252,9 +268,12 @@ def main():
         print(f"allowed    {u}  ({note})" if note else f"UNREACHED  {u}")
     for s in stale:
         print(f"STALE      {s}: reached now, drop it from ALLOWLIST")
+    for path, line, token in env_reads:
+        print(f"ENV        {path}:{line}: reads `{token}`; only {', '.join(sorted(ENV_READERS))} may")
     print(f"{len(unreached)} unreached public members, {len(bad)} outside the allowlist, "
-          f"{len(stale)} stale allowlist entries")
-    return 1 if bad or stale else 0
+          f"{len(stale)} stale allowlist entries, {len(env_reads)} environment reads "
+          f"outside the harness mains")
+    return 1 if bad or stale or env_reads else 0
 
 
 if __name__ == "__main__":

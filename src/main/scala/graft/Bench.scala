@@ -194,17 +194,14 @@ object Bench {
     Console.out.flush()
     // The full record must not depend on log-tail capture (at 90+ queries
     // the line overflows a typical tail window), so it is also written to
-    // a file. Full-path overrides (SPARK_GRAFT_BENCH_OUT /
-    // SPARK_GRAFT_METRICS_OUT) win; otherwise files land in
-    // SPARK_GRAFT_BENCH_OUT_DIR, default [[Harness.defaultOutDir]]. Subset
-    // runs (SPARK_GRAFT_BENCH_ONLY set) get a ".subset" suffix so a
-    // partial sweep can never overwrite a full one.
+    // a file beside the metrics sheet, both in SPARK_GRAFT_BENCH_OUT_DIR
+    // (default [[Harness.defaultOutDir]]). Subset runs
+    // (SPARK_GRAFT_BENCH_ONLY set) get a ".subset" suffix so a partial
+    // sweep can never overwrite a full one.
     val outDir = sys.env.get("SPARK_GRAFT_BENCH_OUT_DIR")
       .map(java.nio.file.Paths.get(_)).getOrElse(Harness.defaultOutDir)
     val subsetSuffix = if (only.isDefined) ".subset" else ""
-    val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(outDir.resolve(s"bench_out$subsetSuffix.json"))
+    val outPath = outDir.resolve(s"bench_out$subsetSuffix.json")
     // The file record also carries the run's sampling (pass count, budget,
     // width) and each catalog family's sum of winning times, so a committed
     // record describes itself. The stdout line above keeps its fields:
@@ -238,9 +235,7 @@ object Bench {
       System.err.println("[bench] metrics bus still draining at deadline — sheet may undercount tail tasks")
     // Each query's sheet = its WINNING pass's execution only (one clean
     // run, same semantics as the min-across-passes timing beside it).
-    val metricsPath = sys.env.get("SPARK_GRAFT_METRICS_OUT")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(outDir.resolve(s"bench_metrics$subsetSuffix.json"))
+    val metricsPath = outDir.resolve(s"bench_metrics$subsetSuffix.json")
     val selection = resultsWithPass.collect {
       case (n, t, p) if t >= 0 => s"bench-$n" -> s"bench-$n#p$p"
     }

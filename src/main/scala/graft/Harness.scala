@@ -36,6 +36,9 @@ object Harness {
       names
     }
 
+  /** Catalog queries graft.Verify runs at once. */
+  val VerifyParallelism = 4
+
   /** `local[N]` width of every main: `SPARK_GRAFT_CPUS`, default 32. */
   def cpus: Int = envPositiveLong("SPARK_GRAFT_CPUS").fold(32)(_.toInt)
 

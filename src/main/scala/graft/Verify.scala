@@ -70,8 +70,6 @@ object Verify {
     val only = Harness.queryFilter("SPARK_GRAFT_VERIFY_ONLY", sys.env.get("SPARK_GRAFT_VERIFY_ONLY"),
       SparkEntry.queries.keySet)
     val spark = Graft.localSession("graft-verify")
-    val parallelism =
-      Harness.envPositiveLong("SPARK_GRAFT_VERIFY_PARALLEL").fold(4)(_.toInt)
     val queryTimeoutSec =
       Harness.envPositiveLong("SPARK_GRAFT_VERIFY_QUERY_TIMEOUT_SEC").getOrElse(600L)
     val json = SparkEntry.oracleSql
@@ -82,7 +80,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val (okCount, failedCount) =
-      runAll(spark, sfDir, outDir, only, parallelism, queryTimeoutSec)
+      runAll(spark, sfDir, outDir, only, Harness.VerifyParallelism, queryTimeoutSec)
     System.err.println(
       s"[verify] done: $okCount ok, $failedCount failed, " +
         s"${SparkEntry.queries.size} in catalog")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.Harness
 
 /** Connected components over candidate-pair edges — the step that turns
   * near-dup PAIRS (MinHash-LSH, SimHash, embedding buckets) into duplicate
@@ -109,15 +110,13 @@ object ConnectedComponents {
   /** Serialized result bytes per edge that a collect returns (an UnsafeRow
     * of two longs plus its length), counted against maxResultSize. */
   private val CollectedBytesPerEdge = 32L
-  /** graft.Verify's default: queries that may label on the driver at once. */
-  private val ConcurrentQueries = 4L
 
   /** Edges one query may collect and label on the driver: half of its share
-    * of the driver heap when [[ConcurrentQueries]] do so at once, capped by
-    * what `spark.driver.maxResultSize` (0 = unlimited) lets a collect
-    * return. */
+    * of the driver heap when [[Harness.VerifyParallelism]] queries (as many
+    * as graft.Verify runs at once) do so at once, capped by what
+    * `spark.driver.maxResultSize` (0 = unlimited) lets a collect return. */
   private def driverEdgeBudget(spark: SparkSession): Long = {
-    val byHeap = Runtime.getRuntime.maxMemory / ConcurrentQueries / 2 / DriverBytesPerEdge
+    val byHeap = Runtime.getRuntime.maxMemory / Harness.VerifyParallelism / 2 / DriverBytesPerEdge
     val maxResult = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     if (maxResult > 0) math.min(byHeap, maxResult / CollectedBytesPerEdge) else byHeap
   }

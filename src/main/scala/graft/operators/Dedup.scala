@@ -2,18 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Harness
 import graft.functions.{HashFunctions, TextFunctions}
 
 /** Thrown DRIVER-SIDE, at operator-call time, when a simjoin blowup guard's
   * measured same-prefix candidate-pair mass exceeds its cap
-  * ([[Dedup.prefixFilterJaccardJoin]] `maxCandidatePairs` /
-  * `maxPairsPerEntry`). A dedicated type (still an IllegalStateException,
-  * so pre-existing broad catches keep working) lets callers distinguish
+  * ([[Dedup.prefixFilterJaccardJoin]] `maxPairsPerEntry`). A dedicated
+  * type (still an IllegalStateException, so pre-existing broad catches
+  * keep working) lets callers distinguish
   * "your corpus would go quadratic" from unrelated illegal states — the
   * failure used to surface as a Spark runtime exception at ACTION time;
   * the eager guard moved it to call time where a catch can react (raise
-  * tau, switch to shingles, set maxPrefixFreq) before any join is planned. */
+  * tau, switch to shingles) before any join is planned. */
 final class CandidateCapExceededException(message: String)
     extends IllegalStateException(message)
 
@@ -689,11 +688,7 @@ object Dedup {
     * (array_sort, no shuffle); candidate dedup + the verify join shuffle on
     * doc ids. Nothing is ever corpus × corpus: the quadratic term lives
     * only inside same-prefix-token buckets, which the rare-first order
-    * keeps small. Hot tokens that still blow past `maxPrefixFreq`
-    * (boilerplate corpora where even the "rare" prefix is shared by
-    * thousands of docs) are pruned from the INDEX with the stop-shingle
-    * recall caveat — off by default here because, unlike
-    * [[ngramJaccardPairs]], this operator's contract is exactness.
+    * keeps small.
     *
     * Set elements are distinct tokens (`shingleK = 1`) or distinct
     * `shingleK`-token word shingles (Broder 1997 w-shingling) — shingles
@@ -708,66 +703,52 @@ object Dedup {
     * with zero set elements match nothing (Jaccard with an empty set is
     * 0 < τ; τ must be > 0).
     *
-    * `maxCandidatePairs` (> 0 to enable) is the BLOWUP GUARD for the one
-    * way exact mode can still go quadratic: with `maxPrefixFreq = 0` (no
-    * index pruning — the exactness default) a boilerplate-heavy corpus
+    * `maxPairsPerEntry` (required, > 0) is the BLOWUP GUARD for the one
+    * way exact mode can still go quadratic: a boilerplate-heavy corpus
     * can share even its RAREST prefix tokens across thousands of
     * documents, and the same-prefix buckets silently explode. The guard
     * pre-computes the exact bucket-pair mass Σ_t n_t·(n_t−1)/2 over the
     * prefix index (one count aggregation, shuffle ∝ distinct prefix
     * tokens — metadata-sized next to the join it screens) EAGERLY at
-    * operator-call time and fails loudly driver-side BEFORE the candidate
-    * join is planned, naming the estimate — turning "6 hours of shuffle
-    * spill" into an immediate, actionable error (raise τ, use shingles,
-    * set `maxPrefixFreq`). "Use shingles" is now a committed measurement,
-    * not prose: `KCORE_DEMO_sf10.json` records q148's exact k-core shape
-    * run twice at sf10 (by the `graft.KCoreDemo` main, last present at
-    * commit 6325750: `git show 6325750:src/main/scala/graft/KCoreDemo.scala`)
-    * — unigram (the fixture's dense
-    * 31-token vocabulary) reproduces the committed 54 GB disk / 238 GB
-    * memory verify-sort spill at 956 s wall, while 3-shingles with every
-    * other parameter identical runs the same operator with ZERO spill at
-    * 54 s wall. The spill is the fixture's vocabulary density, not the
-    * operator's plan. The same measured mass sizes the candidate
-    * join's reducer count (pair-proportional — see the width comment in
-    * the body), so the aggregation runs once regardless of caps. The
-    * estimate is an upper bound on candidate-join output (length/position
-    * filters only shrink it), so a passing guard is a real certificate.
-    *
-    * `maxPairsPerEntry` (> 0 to enable) is the SCALE-RELATIVE form of the
-    * same guard: it caps the mass at `maxPairsPerEntry × total indexed
-    * prefix entries` instead of an absolute number. An absolute cap is a
-    * fixture-scale constant — a corpus 100× larger legitimately carries
-    * ~100× the candidate mass and would trip it while perfectly healthy
-    * (measured: the sf10 rehearsal tripped the catalog's 10M cap at a
-    * healthy 1.2 pairs/entry) — while the per-entry ratio is
-    * scale-invariant under linear growth and still explodes when a hot
-    * prefix bucket goes quadratic, which is the condition the guard
-    * exists to catch. Both caps may be active; either one firing aborts
-    * (driver-side, as [[CandidateCapExceededException]], before the
-    * candidate join is planned).
-    *
-    * Uncapped callers skip the guard job AND the measured width pins —
-    * the measured fast path for fixture-scale corpora, but it means a
-    * production-scale caller should ALWAYS set a cap (maxPairsPerEntry is
-    * the scale-invariant one): the cap is the blowup certificate, and the
-    * same measured mass buys the data-proportional exchange widths that
-    * protect the candidate and verify stages from AQE's byte-based
-    * under-provisioning (61 task-seconds squeezed into 5 tasks at sf1
-    * without them). */
+    * operator-call time and fails loudly driver-side, as
+    * [[CandidateCapExceededException]], BEFORE the candidate join is
+    * planned when the mass exceeds `maxPairsPerEntry × total indexed
+    * prefix entries` — turning "6 hours of shuffle spill" into an
+    * immediate, actionable error (raise τ, use shingles). "Use shingles"
+    * is a committed measurement, not prose: `KCORE_DEMO_sf10.json` records
+    * q148's exact k-core shape run twice at sf10 (by the `graft.KCoreDemo`
+    * main, last present at commit 6325750:
+    * `git show 6325750:src/main/scala/graft/KCoreDemo.scala`) — unigram
+    * (the fixture's dense 31-token vocabulary) reproduces the committed
+    * 54 GB disk / 238 GB memory verify-sort spill at 956 s wall, while
+    * 3-shingles with every other parameter identical runs the same
+    * operator with ZERO spill at 54 s wall. The spill is the fixture's
+    * vocabulary density, not the operator's plan. The cap is per indexed
+    * entry, not absolute: an absolute cap is a fixture-scale constant — a
+    * corpus 100× larger legitimately carries ~100× the candidate mass and
+    * would trip it while perfectly healthy (measured: the sf10 rehearsal
+    * tripped the catalog's former 10M cap at a healthy 1.2 pairs/entry) —
+    * while the per-entry ratio is scale-invariant under linear growth and
+    * still explodes when a hot prefix bucket goes quadratic. The estimate
+    * is an upper bound on candidate-join output (length/position filters
+    * only shrink it), so a passing guard is a real certificate, and the
+    * same measured mass sizes the candidate and verify exchange widths
+    * (pair-proportional — see the width comments in the body), which
+    * protect those stages from AQE's byte-based under-provisioning
+    * (61 task-seconds squeezed into 5 tasks at sf1 without them). */
   def prefixFilterJaccardJoin(
       df: DataFrame,
       idCol: String,
       textCol: String,
       tauNum: Int,
       tauDen: Int,
-      shingleK: Int = 1,
-      maxPrefixFreq: Long = 0L,
-      maxCandidatePairs: Long = 0L,
-      maxPairsPerEntry: Long = 0L): DataFrame = {
+      maxPairsPerEntry: Long,
+      shingleK: Int = 1): DataFrame = {
     require(tauNum > 0 && tauNum <= tauDen,
       s"need 0 < tau <= 1, got $tauNum/$tauDen")
     require(shingleK >= 1, s"shingleK must be >= 1, got $shingleK")
+    require(maxPairsPerEntry > 0,
+      s"maxPairsPerEntry must be > 0, got $maxPairsPerEntry")
     // Set elements arrive via POSITION-sequence explode + row-local slice,
     // with set semantics as a relational distinct — NOT by exploding an
     // array_distinct(transform(...)) array: a generate whose input embeds
@@ -814,92 +795,63 @@ object Dedup {
       .localCheckpoint()
     val prefix = ordered.select(col("__doc"), col("__sz"),
       posexplode(slice(col("__tk"), lit(1), col("__plen"))).as(Seq("__i", "__t")))
-    val pruned =
-      if (maxPrefixFreq <= 0) prefix
-      else prefix.join(
-        prefix.groupBy(col("__t")).agg(count(lit(1)).as("__pf"))
-          .filter(col("__pf") <= maxPrefixFreq).select(col("__t")),
-        Seq("__t"), "left_semi")
     // Pre-flight blowup guard (see scaladoc), evaluated EAGERLY at
-    // operator-call time when a cap is requested (the operator is already
-    // eager — `ordered` is a localCheckpoint — so this adds one
-    // index-sized aggregation job from the checkpoint, not a new
-    // eagerness class). Folding it into the checkpoint pass was considered
-    // and skipped: measured cost is
+    // operator-call time (the operator is already eager — `ordered` is a
+    // localCheckpoint — so this adds one index-sized aggregation job from
+    // the checkpoint, not a new eagerness class). Folding it into the
+    // checkpoint pass was considered and skipped: measured cost is
     // 0.47-0.5 s warm at sf0.1 (1.4 s cold), dominated by the index-sized
     // explode+shuffle that prefix counting inherently needs — the
     // checkpoint job materializes per-DOC rows, and piggybacking a
     // per-TOKEN count onto it means either checkpointing the exploded
     // table instead (re-plans the checkpoint, larger materialization) or
     // an accumulator inside mapPartitions (breaks codegen and the width
-    // pins). The guard stays a separate, correctly-sized job. One aggregation computes BOTH the pair mass
-    // Σn(n−1) and the index size Σn; the collected numbers serve two
-    // masters: the caps fire driver-side (the job dies before the
-    // candidate join is even PLANNED), and the measured mass sizes the
-    // candidate and verify widths below — an output-exploding join's
-    // right width is pair-proportional, and only the guard knows the pair
-    // mass. Uncapped callers skip the guard job AND the pins entirely and
-    // get the planner's own choices — the measured fast path for
-    // fixture-scale dense graphs (q148's 31-token-vocabulary unigram
-    // corpus: the guard job + pinned exchanges cost more than the whole
-    // uncapped query). n·(n−1) runs in decimal(38,0) (a single 10¹⁰-doc
-    // boilerplate token squares past 2^63).
-    val guarded = maxCandidatePairs > 0 || maxPairsPerEntry > 0
-    val pairMass2: BigDecimal = if (!guarded) BigDecimal(0) else {
-      val guardRow = pruned
-        .groupBy(col("__t")).agg(count(lit(1)).as("__n"))
-        .agg(
-          coalesce(
-            sum(col("__n").cast("decimal(38,0)") *
-              (col("__n") - 1).cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")).as("__p2"),
-          coalesce(sum(col("__n").cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")).as("__tot"))
-        .collect()(0)
-      val p2 = BigDecimal(guardRow.getDecimal(0)) // Σn(n−1) = 2·pairs
-      val idxEntries = BigDecimal(guardRow.getDecimal(1))
-      val absFire = maxCandidatePairs > 0 &&
-        p2 > BigDecimal(maxCandidatePairs) * 2
-      val relFire = maxPairsPerEntry > 0 &&
-        p2 > idxEntries * BigDecimal(maxPairsPerEntry) * 2
-      if (absFire || relFire)
-        throw new CandidateCapExceededException(
-          s"prefixFilterJaccardJoin: same-prefix candidate pairs " +
-            s"${(p2 / 2).toBigInt} over ${idxEntries.toBigInt} indexed " +
-            s"entries exceed the cap (maxCandidatePairs=$maxCandidatePairs, " +
-            s"maxPairsPerEntry=$maxPairsPerEntry) — raise tau, use shingles, " +
-            "or set maxPrefixFreq")
-      p2
-    }
-    val indexed = pruned
+    // pins). The guard stays a separate, correctly-sized job. One
+    // aggregation computes BOTH the pair mass Σn(n−1) and the index size
+    // Σn; the collected numbers serve two masters: the cap fires
+    // driver-side (the job dies before the candidate join is even
+    // PLANNED), and the measured mass sizes the candidate and verify
+    // widths below — an output-exploding join's right width is
+    // pair-proportional, and only the guard knows the pair mass. n·(n−1)
+    // runs in decimal(38,0) (a single 10¹⁰-doc boilerplate token squares
+    // past 2^63).
+    val guardRow = prefix
+      .groupBy(col("__t")).agg(count(lit(1)).as("__n"))
+      .agg(
+        coalesce(
+          sum(col("__n").cast("decimal(38,0)") *
+            (col("__n") - 1).cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("__p2"),
+        coalesce(sum(col("__n").cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("__tot"))
+      .collect()(0)
+    val pairMass2 = BigDecimal(guardRow.getDecimal(0)) // Σn(n−1) = 2·pairs
+    val idxEntries = BigDecimal(guardRow.getDecimal(1))
+    if (pairMass2 > idxEntries * BigDecimal(maxPairsPerEntry) * 2)
+      throw new CandidateCapExceededException(
+        s"prefixFilterJaccardJoin: same-prefix candidate pairs " +
+          s"${(pairMass2 / 2).toBigInt} over ${idxEntries.toBigInt} indexed " +
+          s"entries exceed the cap (maxPairsPerEntry=$maxPairsPerEntry) — " +
+          "raise tau or use shingles")
     // Prefix-prefix candidates with the LENGTH filter (τ|A| ≤ |B| ≤ |A|/τ)
-    // and — in exact mode only — PPJoin's POSITION filter, both as
-    // integer cross-multiplies: a token matched at 0-based positions
-    // (i, j) caps the overlap at min(|A|−i, |B|−j), and a qualifying pair
-    // needs overlap I with I·(τnum+τden) ≥ (|A|+|B|)·τnum — the EXACT
-    // integer form of Jaccard ≥ τ (J = I/(|A|+|B|−I) ≥ n/d ⟺
-    // I(d+n) ≥ n(|A|+|B|)), which is strictly tighter than the previous
-    // ⌈τ·max(|A|,|B|)⌉ requirement (for |A|=|B|=s it needs ~2τs/(1+τ)
-    // instead of τs — at τ=0.9 that admits positions ≤ ~5% of the prefix
-    // instead of ~10%; the candidate shuffle is the operator's
-    // dominant byte mover, guide §2.3). Lossless BECAUSE the pair's
-    // globally-smallest common token passes it (every common element sits
-    // at or after it in both sorted sets) — an argument that needs that
-    // token still IN the index, so when `maxPrefixFreq` pruning is on
-    // (recall already caveated) the position filter must stay OFF: a pair
-    // reachable only through a deep-prefix token would otherwise be
-    // dropped even though verify would have confirmed it.
-    val baseCond =
+    // and PPJoin's POSITION filter, both as integer cross-multiplies: a
+    // token matched at 0-based positions (i, j) caps the overlap at
+    // min(|A|−i, |B|−j), and a qualifying pair needs overlap I with
+    // I·(τnum+τden) ≥ (|A|+|B|)·τnum — the EXACT integer form of
+    // Jaccard ≥ τ (J = I/(|A|+|B|−I) ≥ n/d ⟺ I(d+n) ≥ n(|A|+|B|)), which
+    // is strictly tighter than the previous ⌈τ·max(|A|,|B|)⌉ requirement
+    // (for |A|=|B|=s it needs ~2τs/(1+τ) instead of τs — at τ=0.9 that
+    // admits positions ≤ ~5% of the prefix instead of ~10%; the candidate
+    // shuffle is the operator's dominant byte mover, guide §2.3). Lossless
+    // BECAUSE the pair's globally-smallest common token passes it (every
+    // common element sits at or after it in both sorted sets).
+    val cond =
       col("a.__t") === col("b.__t") && col("a.__doc") < col("b.__doc") &&
         col("b.__sz") * tauDen >= col("a.__sz") * tauNum &&
-        col("a.__sz") * tauDen >= col("b.__sz") * tauNum
-    val cond =
-      if (maxPrefixFreq <= 0)
-        baseCond &&
-          least(col("a.__sz") - col("a.__i"), col("b.__sz") - col("b.__i")) *
-            (tauNum + tauDen) >=
-            (col("a.__sz") + col("b.__sz")) * tauNum
-      else baseCond
+        col("a.__sz") * tauDen >= col("b.__sz") * tauNum &&
+        least(col("a.__sz") - col("a.__i"), col("b.__sz") - col("b.__i")) *
+          (tauNum + tauDen) >=
+          (col("a.__sz") + col("b.__sz")) * tauNum
     // Size the candidate join's parallelism by the MEASURED pair mass (an
     // explicit-N repartition is a strict requirement AQE will not
     // coalesce): the join's shuffle INPUT is the compact prefix index, but
@@ -923,50 +875,43 @@ object Dedup {
     // respects). The repartition IS the join's exchange (HashPartitioning
     // on the join key, computed once and reused by both self-join legs),
     // so this costs no extra shuffle — it only fixes the reducer count.
-    val pairsPerTask = BigDecimal(1L << 20)
-    // The pins engage for EVERY guarded call, with no small-mass floor —
-    // a floor was tried and measured SLOWER at fixture scale: the
-    // pin's value is not spreading the pair mass (210k pairs at sf0.1 is
-    // ~6 task-seconds) but holding the index exchange at session width so
-    // the whole candidate→verify chain inherits real parallelism.
-    // Unpinned, the small-bytes prefix index invites AQE coalescing and
-    // broadcast self-joins that collapse the downstream chain to a few
-    // tasks and serialize the CPU-dense verify work (measured in-window:
-    // q165 5.06→7.05 s, q167 2.69→4.04 s with a 2²¹-pair floor; the
-    // pinned operator also measured ~11% faster than an unpinned build
+    //
+    // The pins engage on every call, with no small-mass floor — a floor
+    // was tried and measured SLOWER at fixture scale: the pin's value is
+    // not spreading the pair mass (210k pairs at sf0.1 is ~6 task-seconds)
+    // but holding the index exchange at session width so the whole
+    // candidate→verify chain inherits real parallelism. Unpinned, the
+    // small-bytes prefix index invites AQE coalescing and broadcast
+    // self-joins that collapse the downstream chain to a few tasks and
+    // serialize the CPU-dense verify work (measured in-window: q165
+    // 5.06→7.05 s, q167 2.69→4.04 s with a 2²¹-pair floor; the pinned
+    // operator also measured ~11% faster than an unpinned build
     // method-for-method in the same window).
-    val pinned = guarded
-    val probe = if (!pinned) indexed else {
-      val nShuffle = (pairMass2 / 2 / pairsPerTask + 1)
-        .min(BigDecimal(confWidth * 16)).max(BigDecimal(confWidth)).toInt
-      indexed.repartition(nShuffle, col("__t"))
-    }
+    val pairsPerTask = BigDecimal(1L << 20)
+    val nShuffle = (pairMass2 / 2 / pairsPerTask + 1)
+      .min(BigDecimal(confWidth * 16)).max(BigDecimal(confWidth)).toInt
+    val probe = prefix.repartition(nShuffle, col("__t"))
     val rawPairs = probe.as("a")
       .join(probe.as("b"), cond)
       .select(col("a.__doc").as("doc_a"), col("b.__doc").as("doc_b"))
-    // Pair dedup (a pair re-emits once per shared prefix token). UNPINNED,
-    // `.distinct()` is right: partial agg shrinks each join partition,
-    // and the final exchange at session width handles fixture-scale
-    // masses. PINNED, the distinct's own exchange is the one exchange
-    // the width pins did NOT cover, and at real mass it is the spill
-    // bomb: its final aggregation runs at session width no matter how
-    // wide the join ran — measured at sf10 (2.64B candidate rows,
-    // q148's corpus): 32 final-agg tasks × ~82M pairs of hash-agg state
-    // each = 56 GB of spill, 11.4k task-seconds in that stage alone. So
-    // the pinned path repartitions the RAW pair stream by (doc_a, doc_b)
-    // at the mass-proportional width FIRST and dedups partition-locally
-    // (hash partitioning on exactly the grouping keys — no second
-    // exchange): the same rows shuffle once either way, but the dedup
-    // state divides across verifyWidth tasks instead of 32. Keyed on
+    // Pair dedup (a pair re-emits once per shared prefix token). A bare
+    // `.distinct()` would add an exchange the width pins do not cover,
+    // and at real mass it is the spill bomb: its final aggregation runs at
+    // session width no matter how wide the join ran — measured at sf10
+    // (2.64B candidate rows, q148's corpus): 32 final-agg tasks × ~82M
+    // pairs of hash-agg state each = 56 GB of spill, 11.4k task-seconds in
+    // that stage alone. So the RAW pair stream is repartitioned by
+    // (doc_a, doc_b) at the mass-proportional width FIRST and deduped
+    // partition-locally (hash partitioning on exactly the grouping keys —
+    // no second exchange): the same rows shuffle once either way, but the
+    // dedup state divides across verifyWidth tasks instead of 32. Keyed on
     // (doc_a, doc_b), not doc_a alone: dedup correctness needs the full
     // key, and the hub-doc caveat below applies unchanged.
     val verifyWidth = (pairMass2 / 2 / BigDecimal(1L << 17) + 1)
       .min(BigDecimal(confWidth * 16)).max(BigDecimal(confWidth)).toInt
-    val cand =
-      if (!pinned) rawPairs.distinct()
-      else rawPairs
-        .repartition(verifyWidth, col("doc_a"), col("doc_b"))
-        .dropDuplicates()
+    val cand = rawPairs
+      .repartition(verifyWidth, col("doc_a"), col("doc_b"))
+      .dropDuplicates()
     // Exact verify: both token arrays join back by doc id; intersection is
     // row-local. The candidate set is output-sized + false positives that
     // shared a rare prefix token — small by construction. The verify
@@ -998,40 +943,7 @@ object Dedup {
       array_sort(col("__tk")).as("__ta"), col("__sz").as("n_a"))
     val orderedB = ordered.select(col("__doc").as("doc_b"),
       array_sort(col("__tk")).as("__tb"), col("__sz").as("n_b"))
-    // Join STRATEGY for the verify tier is chosen from the measured pair
-    // mass (guide §3.1 — deliberately, not by the planner's size
-    // estimates). At fixture mass the doc table broadcasts and the joins
-    // run map-side on the dedup partitioning — leave the planner alone.
-    // Past `SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS` (default 2²⁸ pairs) the
-    // doc table is past broadcast range, so the planner would pick
-    // sort-merge — which SORTS the billions-row candidate stream twice
-    // (once per doc-id key), the exact stage the committed sf10 q148 row
-    // spills 54 GB disk / 238 GB memory in. A shuffled-hash join with the
-    // DOC table as build side sorts nothing: the pair stream is probed
-    // as it arrives, per-partition build = corpus/width rows of token
-    // arrays. The explicit repartitions pin the probe exchanges at the
-    // same mass-proportional width as the dedup (AQE's byte-based sizing
-    // under-provisions CPU-dense verify stages — the measured finding
-    // behind every width pin in this operator); both exchanges
-    // exist under sort-merge too, so this changes strategy and width,
-    // never adds a shuffle. Join strategy is semantics-free; the measured
-    // SHJ regression (q148 6.7 → 21.6 s) was on the CANDIDATE
-    // self-join, whose giant shared-token build buckets are the opposite
-    // shape — here the build side is the small leg by construction.
-    // env for deployments, system property as the in-JVM test hook
-    val shjMinPairs = Harness.positiveLong("SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS",
-      sys.env.get("SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS")
-        .orElse(sys.props.get("graft.simjoin.shj.min.pairs")))
-      .getOrElse(1L << 28)
-    val verified =
-      if (guarded && pairMass2 / 2 > BigDecimal(shjMinPairs))
-        cand
-          .repartition(verifyWidth, col("doc_a"))
-          .join(orderedA.hint("shuffle_hash"), Seq("doc_a"))
-          .repartition(verifyWidth, col("doc_b"))
-          .join(orderedB.hint("shuffle_hash"), Seq("doc_b"))
-      else cand.join(orderedA, Seq("doc_a")).join(orderedB, Seq("doc_b"))
-    verified
+    cand.join(orderedA, Seq("doc_a")).join(orderedB, Seq("doc_b"))
       .withColumn("n_inter",
         graft.plans.GraftFunctions.sortedIntersectCount(col("__ta"), col("__tb")))
       .withColumn("n_union", (col("n_a") + col("n_b")).cast("long") - col("n_inter"))

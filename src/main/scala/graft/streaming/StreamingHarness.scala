@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{Harness, Parquet}
+import graft.Parquet
 
 /** Shared scaffolding for running a streaming frame through the REAL
   * Structured-Streaming engine to a terminal, value-checkable result:
@@ -19,7 +19,7 @@ import graft.{Harness, Parquet}
   * materializes the result on the driver, which is fine for a correctness
   * check and wrong at 100 TB, where a stream writes to a durable sink.
   */
-private[streaming] object StreamingHarness {
+private[graft] object StreamingHarness {
 
   private val runSeq = new AtomicLong(0L)
 
@@ -45,44 +45,49 @@ private[streaming] object StreamingHarness {
     * deleted and the memory table dropped from the catalog before
     * returning (the returned DataFrame holds the already-resolved sink
     * relation, so the drop only releases the NAME — repeated bench passes
-    * don't pile up catalog entries). */
-  def runToMemorySink(spark: SparkSession, df: DataFrame, outputMode: String): DataFrame =
-    runToMemorySink(spark, df, outputMode, Nil)
-
-  /** As above, plus scale-adaptive state-partition sizing derived from the
-    * byte size of `inputPaths` (see [[adaptiveStatePartitions]]). The
-    * preferred entry point for every file-sourced gate query: AQE is
-    * disabled inside stateful micro-batches (the engine refuses it), so
-    * the ONLY way the state-store partition count tracks data volume is
-    * deriving it from the input before the stream starts — a session-wide
-    * constant (the batch default of 32/200) is wrong in both directions
-    * at once: at fixture scale each stateful operator pays 32 × stores ×
-    * batches of fixed load/commit/fsync overhead for KB of state
-    * (measured: q195's empty FINISHING batch alone costs 3.3 s of pure
-    * state-store commit at 32 partitions, and the whole query drops
-    * 7.6 → 3.0 s at 8), while at 100 TB a fixed 32 would cap state
-    * parallelism regardless of volume. Results are partition-count
-    * invariant — only the state layout changes. */
+    * don't pile up catalog entries).
+    *
+    * The state-partition count is sized from the byte size of
+    * `inputPaths` (see [[adaptiveStatePartitions]]): AQE is disabled
+    * inside stateful micro-batches (the engine refuses it), so the ONLY
+    * way the state-store partition count tracks data volume is deriving it
+    * from the input before the stream starts — a session-wide constant
+    * (the batch default of 32/200) is wrong in both directions at once: at
+    * fixture scale each stateful operator pays 32 × stores × batches of
+    * fixed load/commit/fsync overhead for KB of state (measured: q195's
+    * empty FINISHING batch alone costs 3.3 s of pure state-store commit at
+    * 32 partitions, and the whole query drops 7.6 → 3.0 s at 8), while at
+    * 100 TB a fixed 32 would cap state parallelism regardless of volume.
+    * Results are partition-count invariant — only the state layout
+    * changes.
+    *
+    * `extraConfs` are session confs overridden for the duration of the
+    * run and restored (to the prior value, or unset) afterwards — the hook
+    * the RocksDB state-store twin uses to select
+    * `spark.sql.streaming.stateStore.providerClass` per-query; the sized
+    * partition count rides the same hook, so the session's batch setting
+    * is untouched after the run. Session confs are global: the harness
+    * contract (one terminal streaming run at a time — how Verify and Bench
+    * both drive it) is what makes the set/restore race-free. */
   def runToMemorySink(
       spark: SparkSession,
       df: DataFrame,
       outputMode: String,
       extraConfs: Seq[(String, String)],
-      inputPaths: Seq[String]): DataFrame =
-    runToMemorySink(spark, df, outputMode,
-      adaptiveStatePartitions(spark, inputPaths) ++ extraConfs)
+      inputPaths: Seq[String]): DataFrame = {
+    val confs = adaptiveStatePartitions(spark, inputPaths) ++ extraConfs
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try runToMemorySinkInner(spark, df, outputMode)
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
-  /** Scale-adaptive shuffle/state partition count for a terminal streaming
-    * run: one partition per `SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES` of
-    * input, floored at 1 and capped at 16× the session width (the same
-    * work-per-slot bound every explicit width in the engine respects).
-    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides the count outright.
-    * The returned conf pair rides the set/restore hook, so the session's
-    * batch setting is untouched after the run.
-    *
-    * The 8 MiB default is the measured optimum of a U-shaped cost curve,
-    * swept at BOTH bench scales on the five real-engine rows (min-of-3
-    * per config, same host window; sf10 = the 100× rehearsal):
+  /** Input bytes per state partition: the measured optimum of a U-shaped
+    * cost curve, swept at BOTH bench scales on the five real-engine rows
+    * (min-of-3 per config, same host window; sf10 = the 100× rehearsal):
     * per-partition budget 1 MiB / 8 MiB / 64 MiB gave sf10 subset totals
     * 257.2 / 90.4 / 210.1 s (q207 stream-stream RocksDB join 111.7 /
     * 34.5 / 114.4 s; q195 heap twin 86.4 / 16.1 / 25.2 s) and
@@ -91,44 +96,23 @@ private[streaming] object StreamingHarness {
     * of stores × operators × micro-batches for MB-scale state — a
     * stream-stream join alone keeps four stores per partition); too large
     * starves state-operator parallelism (a 64 MiB budget runs the sf10
-    * join on 6 partitions). A production deployment sets the env to its
-    * own per-partition state budget (typically 64-256 MiB of STATE — note
-    * this knob meters INPUT bytes, a proxy that overweights input-heavy /
-    * state-light streams, which is why it stays env-tunable). */
+    * join on 6 partitions). It meters INPUT bytes, a proxy that
+    * overweights input-heavy / state-light streams. */
+  val StatePartitionBytes: Long = 8L << 20
+
+  /** Scale-adaptive shuffle/state partition count for a terminal streaming
+    * run: one partition per [[StatePartitionBytes]] of input, floored at 1
+    * and capped at 16× the session width (the same work-per-slot bound
+    * every explicit width in the engine respects). */
   def adaptiveStatePartitions(
       spark: SparkSession, inputPaths: Seq[String]): Seq[(String, String)] = {
-    val n = Harness.envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      val per = Harness.envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES")
-        .getOrElse(8L << 20)
-      def bytes(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
-      val total = inputPaths.map(p => bytes(new java.io.File(p))).sum
-      val cap = spark.sessionState.conf.numShufflePartitions.toLong * 16
-      math.max(1L, math.min(cap, total / per + 1)).toInt
-    }
+    def bytes(f: java.io.File): Long =
+      if (f.isFile) f.length
+      else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
+    val total = inputPaths.map(p => bytes(new java.io.File(p))).sum
+    val cap = spark.sessionState.conf.numShufflePartitions.toLong * 16
+    val n = math.max(1L, math.min(cap, total / StatePartitionBytes + 1))
     Seq("spark.sql.shuffle.partitions" -> n.toString)
-  }
-
-  /** As above, with session confs overridden for the duration of the run
-    * and restored (to the prior value, or unset) afterwards — the hook the
-    * RocksDB state-store twin uses to select
-    * `spark.sql.streaming.stateStore.providerClass` per-query. Session
-    * confs are global: the harness contract (one terminal streaming run at
-    * a time — how Verify and Bench both drive it) is what makes the
-    * set/restore race-free. */
-  def runToMemorySink(
-      spark: SparkSession,
-      df: DataFrame,
-      outputMode: String,
-      extraConfs: Seq[(String, String)]): DataFrame = {
-    val prior = extraConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    extraConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try runToMemorySinkInner(spark, df, outputMode)
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   private def runToMemorySinkInner(

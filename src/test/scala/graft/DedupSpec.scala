@@ -275,11 +275,16 @@ class DedupSpec extends SparkSpec {
     } yield (ia, ib, inter, union)).toSet
   }
 
+  /** A guard cap far above any pair mass these fixtures reach: the tests
+    * that pass it check results, not the guard. */
+  private val NoTripCap = 1L << 20
+
   private def runPrefixJoin(
       rows: Seq[(Long, String)], tauNum: Int, tauDen: Int,
       k: Int = 1): Set[(Long, Long, Long, Long)] =
     Dedup.prefixFilterJaccardJoin(
-        rows.toDF("doc_id", "text"), "doc_id", "text", tauNum, tauDen, shingleK = k)
+        rows.toDF("doc_id", "text"), "doc_id", "text", tauNum, tauDen,
+        maxPairsPerEntry = NoTripCap, shingleK = k)
       .select("doc_a", "doc_b", "n_inter", "n_union")
       .as[(Long, Long, Long, Long)].collect().toSet
 
@@ -319,54 +324,26 @@ class DedupSpec extends SparkSpec {
         s"shingle mismatch at tau=$tn/$td")
   }
 
-  test("prefixFilterJaccardJoin big-mass verify tier (shuffled-hash path) is value-identical") {
-    // Force the mass threshold to 1 pair so a fixture-sized GUARDED call
-    // takes the shuffled-hash verify branch; results must equal brute
-    // force exactly (join strategy is semantics-free) and the executed
-    // plan must actually carry ShuffledHashJoin (equal outputs alone
-    // can't prove the branch engaged).
-    val key = "graft.simjoin.shj.min.pairs"
-    val prev = sys.props.get(key)
-    sys.props(key) = "1"
-    try {
-      val rng = new scala.util.Random(7)
-      val vocab = (0 until 30).map(i => s"w$i")
-      val rows = (0L until 40L).map { id =>
-        val n = 1 + rng.nextInt(12)
-        id -> Seq.fill(n)(vocab(rng.nextInt(vocab.size))).mkString(" ")
-      }
-      val df = Dedup.prefixFilterJaccardJoin(
-        rows.toDF("doc_id", "text"), "doc_id", "text", 3, 5,
-        maxPairsPerEntry = 8192)
-      val got = df.select("doc_a", "doc_b", "n_inter", "n_union")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(got == bruteJaccard(rows, 3, 5))
-      assert(df.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"),
-        "big-mass branch should verify through shuffled-hash joins")
-    } finally {
-      prev match { case Some(v) => sys.props(key) = v; case None => sys.props -= key }
-    }
-  }
-
   test("prefixFilterJaccardJoin blowup guard: trips on boilerplate, silent in-bound") {
     // Pathological corpus: every doc is the SAME text, so with tau=1/2 the
     // rarest prefix tokens are shared by all 40 docs — same-prefix pair
-    // mass goes quadratic (the maxPrefixFreq=0 failure mode the guard
-    // exists for). 40 docs × 4-token prefix ⇒ Σ n(n−1)/2 = 4·780 = 3120.
+    // mass goes quadratic (the failure mode the guard exists for).
+    // 40 docs × 4-token prefix ⇒ Σ n(n−1)/2 = 4·780 = 3120 pairs over 160
+    // indexed entries = 19.5 pairs/entry, above a cap of 4.
     val boiler = (0L until 40L).map(id => (id, "the same boilerplate text every doc"))
     val e = intercept[Exception] {
       Dedup.prefixFilterJaccardJoin(
           boiler.toDF("doc_id", "text"), "doc_id", "text", 1, 2,
-          maxCandidatePairs = 100L)
+          maxPairsPerEntry = 4L)
         .count()
     }
-    assert(e.getMessage.contains("maxCandidatePairs=100"),
+    assert(e.getMessage.contains("maxPairsPerEntry=4"),
       s"expected the driver-side eager guard's CandidateCapExceededException, " +
         s"got: ${e.getMessage.take(200)}")
     assert(e.isInstanceOf[graft.operators.CandidateCapExceededException],
       s"expected CandidateCapExceededException, got ${e.getClass.getName}")
 
-    // Same corpus, bound above the mass → identical results to unguarded.
+    // Cap above the mass → the guard stays silent and results are exact.
     val rng = new scala.util.Random(7)
     val vocab = (0 until 30).map(i => s"w$i")
     val rows = (0L until 40L).map { id =>
@@ -374,10 +351,20 @@ class DedupSpec extends SparkSpec {
     }
     val guarded = Dedup.prefixFilterJaccardJoin(
         rows.toDF("doc_id", "text"), "doc_id", "text", 3, 5,
-        maxCandidatePairs = 10000000L)
+        maxPairsPerEntry = NoTripCap)
       .select("doc_a", "doc_b", "n_inter", "n_union")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(guarded == bruteJaccard(rows, 3, 5))
+  }
+
+  test("prefixFilterJaccardJoin rejects a non-positive maxPairsPerEntry, naming it") {
+    val docs = Seq((0L, "a b c"), (1L, "a b c")).toDF("doc_id", "text")
+    for (cap <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.prefixFilterJaccardJoin(docs, "doc_id", "text", 7, 10, maxPairsPerEntry = cap)
+      }
+      assert(e.getMessage.contains(s"maxPairsPerEntry must be > 0, got $cap"), e.getMessage)
+    }
   }
 
   test("dropDuplicatedLines: cross-doc lines drop, within-doc repeats and unique lines survive") {

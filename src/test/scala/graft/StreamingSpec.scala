@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{StreamingLeaders, StreamingRollup, StreamingSessionize}
+import graft.streaming.{StreamingHarness, StreamingLeaders, StreamingRollup, StreamingSessionize}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -611,5 +611,36 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
       assert(r2 == Seq(("a", 1L, 9.0, 4L), ("a", 2L, 6.0, 5L), ("b", 1L, 7.0, 3L)))
     } finally q.stop()
+  }
+
+  test("state partitions: one per 8 MiB of input, at least 1, at most 16x the session width") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-state-parts")
+    // Sparse files: the sizing reads lengths only, so nothing is written.
+    def sized(name: String, bytes: Long): String = {
+      val f = dir.resolve(name).toFile
+      f.getParentFile.mkdirs()
+      val raf = new java.io.RandomAccessFile(f, "rw")
+      try raf.setLength(bytes) finally raf.close()
+      f.getPath
+    }
+    def parts(paths: String*): Int =
+      StreamingHarness.adaptiveStatePartitions(spark, paths).toMap
+        .apply("spark.sql.shuffle.partitions").toInt
+    val per = StreamingHarness.StatePartitionBytes
+    assert(per == 8L << 20)
+    val width = spark.sessionState.conf.numShufflePartitions
+    try {
+      assert(parts(sized("small.parquet", 2048L)) == 1)
+      // a directory counts every file under it
+      sized("three/a.parquet", 3 * per)
+      sized("three/b.parquet", 1L)
+      assert(parts(dir.resolve("three").toString) == 4)
+      assert(parts(sized("huge.parquet", (16L * width + 5) * per)) == 16 * width)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.toSeq.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
   }
 }
