@@ -21,10 +21,17 @@ comments, `SPARK_GRAFT_`, `sys.env`, `System.getenv` and
 `Harness.envPositiveLong` may appear only in the files of ENV_READERS.
 Operator code decides from its inputs and the session alone.
 
-Exit status: 0 when every unreached public member is in ALLOWLIST and no
-file outside ENV_READERS reads the environment; 1 when a member outside
-the allowlist is unreached, an allowlisted member is reached (drop its
-entry), or another file reads the environment; 2 on a usage error.
+And it checks that each native kernel under KERNEL_DIR holds its algorithm
+once: a `doGenCode` body there may not contain a loop (`for (`,
+`while (`, `do {`, in Scala or in the generated Java text). The loop
+belongs in a companion-object method that `eval` and the generated code
+both call.
+
+Exit status: 0 when every unreached public member is in ALLOWLIST, no
+file outside ENV_READERS reads the environment and no kernel `doGenCode`
+holds a loop; 1 when a member outside the allowlist is unreached, an
+allowlisted member is reached (drop its entry), another file reads the
+environment, or a `doGenCode` holds a loop; 2 on a usage error.
 """
 import glob
 import os
@@ -60,6 +67,10 @@ ENTRY_POINTS = {
 # mains and their shared plumbing.
 ENV_READERS = {"Harness", "Bench", "Verify", "Explain", "ScaleUp", "MilanApp", "MilanE2E"}
 ENV_RE = re.compile(r"SPARK_GRAFT_|\bsys\.env\b|\bSystem\.getenv\b|\bHarness\.envPositiveLong\b")
+
+# Native kernels: their `doGenCode` emits a call, never a loop.
+KERNEL_DIR = os.path.join("src", "main", "scala", "graft", "plans")
+LOOP_RE = re.compile(r"\b(?:for|while)\s*\(|\bdo\s*\{")
 
 ALWAYS_LIVE = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
 
@@ -218,6 +229,7 @@ def main():
         return 2
 
     env_reads = []  # (path, line, token) outside ENV_READERS
+    codegen_loops = []  # (path, line) of a loop inside a kernel's doGenCode
     decls = []
     uses = {}  # name -> [index of the innermost enclosing member, or None]
     for path in main_files + bench_files:
@@ -228,6 +240,11 @@ def main():
             env_reads += [(os.path.relpath(path, root), code.count("\n", 0, m.start()) + 1,
                            m.group()) for m in ENV_RE.finditer(code)]
         ds = members(path, strip_comments(raw, mask_strings=True)) if path in main_files else []
+        if os.path.relpath(os.path.dirname(path), root) == KERNEL_DIR:
+            for d in ds:
+                if d["kind"] == "def" and d["name"] == "doGenCode":
+                    codegen_loops += [(os.path.relpath(path, root), code.count("\n", 0, m.start()) + 1)
+                                      for m in LOOP_RE.finditer(code, d["start"], d["end"])]
         base = len(decls)
         decls += ds
         # innermost member per offset: a nested member starts after, and
@@ -270,10 +287,13 @@ def main():
         print(f"STALE      {s}: reached now, drop it from ALLOWLIST")
     for path, line, token in env_reads:
         print(f"ENV        {path}:{line}: reads `{token}`; only {', '.join(sorted(ENV_READERS))} may")
+    for path, line in codegen_loops:
+        print(f"LOOP       {path}:{line}: doGenCode holds a loop; move it into a "
+              f"companion method that eval and the generated code both call")
     print(f"{len(unreached)} unreached public members, {len(bad)} outside the allowlist, "
           f"{len(stale)} stale allowlist entries, {len(env_reads)} environment reads "
-          f"outside the harness mains")
-    return 1 if bad or stale or env_reads else 0
+          f"outside the harness mains, {len(codegen_loops)} loops in kernel codegen")
+    return 1 if bad or stale or env_reads or codegen_loops else 0
 
 
 if __name__ == "__main__":

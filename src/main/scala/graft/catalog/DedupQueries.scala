@@ -203,11 +203,7 @@ object DedupQueries extends Family {
   })(
     s"""WITH RECURSIVE $lshBandedCtes,
        |$lshCandCte,
-       |edges AS (SELECT doc_a AS s, doc_b AS d FROM cand
-       |          UNION SELECT doc_b, doc_a FROM cand),
-       |reach AS (SELECT s, d FROM edges
-       |          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-       |lbl AS (SELECT s AS node, least(min(d), s) AS cluster FROM reach GROUP BY s),
+       |${closureCtes("cand", "doc_a", "doc_b")},
        |sz AS (SELECT cluster, count(*) AS n_members FROM lbl GROUP BY cluster)
        |SELECT node, cluster, n_members FROM lbl JOIN sz USING (cluster)
        |ORDER BY node""".stripMargin)
@@ -236,11 +232,7 @@ object DedupQueries extends Family {
   })(
     s"""WITH RECURSIVE $lshBandedCtes,
        |$lshCandCte,
-       |edges AS (SELECT doc_a AS s, doc_b AS d FROM cand
-       |          UNION SELECT doc_b, doc_a FROM cand),
-       |reach AS (SELECT s, d FROM edges
-       |          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-       |lbl AS (SELECT s AS node, least(min(d), s) AS cluster FROM reach GROUP BY s),
+       |${closureCtes("cand", "doc_a", "doc_b")},
        |keep AS (SELECT doc_id, lang, source,
        |  CASE WHEN length(trim(text)) = 0 THEN 0
        |       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
@@ -496,11 +488,7 @@ object DedupQueries extends Family {
   })(
     s"""WITH RECURSIVE $lshBandedCtes,
        |$lshCandCte,
-       |edges AS (SELECT doc_a AS s, doc_b AS d FROM cand
-       |          UNION SELECT doc_b, doc_a FROM cand),
-       |reach AS (SELECT s, d FROM edges
-       |          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-       |lbl AS (SELECT s AS node, least(min(d), s) AS cluster FROM reach GROUP BY s),
+       |${closureCtes("cand", "doc_a", "doc_b")},
        |sc AS (SELECT doc_id, $duckQualityScore AS q FROM documents),
        |best AS (SELECT doc_id FROM (
        |    SELECT l.cluster, s.doc_id,
@@ -779,7 +767,7 @@ object DedupQueries extends Family {
       .select(col("cluster"), col("n_members"))
       .orderBy("cluster")
   })(
-    """WITH RECURSIVE base AS (SELECT c_custkey AS id, c_name AS s FROM customer),
+    s"""WITH RECURSIVE base AS (SELECT c_custkey AS id, c_name AS s FROM customer),
       |keys AS (SELECT id, s, i,
       |  CASE WHEN i = 0 THEN s ELSE substr(s, 1, i-1) || substr(s, i+1) END AS k
       |  FROM base, unnest(range(0, length(s)+1)) AS t(i)),
@@ -799,11 +787,7 @@ object DedupQueries extends Family {
       |      + (CASE WHEN x.seg = y.seg THEN 600 ELSE -400 END)
       |      + (CASE WHEN abs(x.bal - y.bal) <= 10000 THEN 500 ELSE -300 END)
       |      >= 3800),
-      |edges AS (SELECT id_a AS s, id_b AS d FROM m
-      |          UNION SELECT id_b, id_a FROM m),
-      |reach AS (SELECT s, d FROM edges
-      |          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      |lbl AS (SELECT s AS node, least(min(d), s) AS cluster FROM reach GROUP BY s)
+      |${closureCtes("m", "id_a", "id_b")}
       |SELECT cluster, count(*) AS n_members FROM lbl GROUP BY 1
       |ORDER BY cluster""".stripMargin)
 

@@ -323,11 +323,7 @@ object SamplingQueries extends Family {
     val dbucket = s"(((${signed(du)}) % 1000000 + 1000000) % 1000000)"
     s"""WITH RECURSIVE $lshBandedCtes,
        |$lshCandCte,
-       |edges AS (SELECT doc_a AS s, doc_b AS d FROM cand
-       |          UNION SELECT doc_b, doc_a FROM cand),
-       |reach AS (SELECT s, d FROM edges
-       |          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-       |lbl AS (SELECT s AS node, least(min(d), s) AS cluster FROM reach GROUP BY s),
+       |${closureCtes("cand", "doc_a", "doc_b")},
        |un AS (SELECT d.doc_id, coalesce(l.cluster, d.doc_id) AS unit,
        |    CAST($duckNTokens AS BIGINT) AS nt
        |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node),

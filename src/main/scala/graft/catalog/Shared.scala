@@ -110,6 +110,17 @@ private[catalog] object Shared {
       |  FROM banded a JOIN banded b
       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)""".stripMargin
 
+  /** DuckDB transitive closure of an undirected pair table, the oracle
+    * side of [[graft.operators.ConnectedComponents.components]]: `edges`
+    * (both directions), the recursive `reach`, and `lbl` (each node → the
+    * least id in its component). Needs `WITH RECURSIVE`. */
+  def closureCtes(pairs: String, a: String, b: String) =
+    s"""edges AS (SELECT $a AS s, $b AS d FROM $pairs
+       |          UNION SELECT $b, $a FROM $pairs),
+       |reach AS (SELECT s, d FROM edges
+       |          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
+       |lbl AS (SELECT s AS node, least(min(d), s) AS cluster FROM reach GROUP BY s)""".stripMargin
+
   // DuckDB tokenizer CTE body mirroring TextFunctions.tokens exactly
   // (empty trimmed text → empty list, else split on whitespace runs).
   // Parameterized over the carried key column so every oracle shares ONE

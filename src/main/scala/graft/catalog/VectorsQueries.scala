@@ -20,7 +20,7 @@ object VectorsQueries extends Family {
   val q28 = query("q28_knn_exact")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     Similarity
-      .knnExact(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, exact = true)
+      .knnExact(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rnk"), col("cosine"))
       .orderBy("query_id", "rnk")
   })(
@@ -40,13 +40,12 @@ object VectorsQueries extends Family {
       |ORDER BY query_id, rnk""".stripMargin)
 
   // ---------------------------------------------------------------- q29
-  // Embedding-cosine near-dup pairs above a threshold. `allPairs = true`
-  // (explicit, exact-recall quadratic form) on a blocked 200-vector subset —
-  // the DEFAULT nearDupPairs path is LSH-blocked and is what runs at scale.
+  // Embedding-cosine near-dup pairs above a threshold: nearDupPairs'
+  // exact-recall quadratic comparison on a blocked 200-vector subset.
   val q29 = query("q29_embedding_near_dup")((s, dir) => {
     val e = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
     Similarity
-      .nearDupPairs(e, "vec_id", "embedding", threshold = 0.25, exact = true, allPairs = true)
+      .nearDupPairs(e, "vec_id", "embedding", threshold = 0.25)
       .orderBy("id_a", "id_b")
   })(
     """WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
@@ -72,7 +71,7 @@ object VectorsQueries extends Family {
   val q30 = query("q30_ann_lsh")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     Similarity
-      .knnLsh(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, exact = true)
+      .knnLsh(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rnk"), col("cosine"))
       .orderBy("query_id", "rnk")
   })({
@@ -168,7 +167,7 @@ object VectorsQueries extends Family {
     val e = Tables.embeddings(s, dir)
     Similarity
       .knnIvf(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 5, kClusters = 8, nProbe = 2, iters = 1, exact = true)
+        k = 5, kClusters = 8, nProbe = 2, iters = 1)
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rnk"), col("cosine"))
       .orderBy("query_id", "rnk")
   })({
@@ -353,11 +352,11 @@ object VectorsQueries extends Family {
     val e = Tables.embeddings(s, dir)
     val qs = e.filter(col("vec_id") < 10)
     val exact = Similarity
-      .knnExact(e, qs, "vec_id", "embedding", k = 5, exact = true)
+      .knnExact(e, qs, "vec_id", "embedding", k = 5)
       .select(col("query_id"), col("neighbor_id"))
     val approx = Similarity
       .knnIvf(e, qs, "vec_id", "embedding",
-        k = 5, kClusters = 8, nProbe = 2, iters = 1, exact = true)
+        k = 5, kClusters = 8, nProbe = 2, iters = 1)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
     exact
       .join(approx, Seq("query_id", "neighbor_id"), "left")
@@ -799,7 +798,7 @@ object VectorsQueries extends Family {
     val Seq(ivf, pq, ivfpq) = graft.operators.Concurrency.inParallel(Seq(
       () => Similarity
         .knnIvf(e, qs, "vec_id", "embedding",
-          k = 5, kClusters = 8, nProbe = 2, iters = 1, exact = true,
+          k = 5, kClusters = 8, nProbe = 2, iters = 1,
           pretrained = Some(cents))
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("__ivf")),
       () => Similarity

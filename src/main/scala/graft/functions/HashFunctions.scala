@@ -12,19 +12,23 @@ import org.apache.spark.sql.functions._
   */
 object HashFunctions {
 
+  /** SplitMix64's increment, 0x9E3779B97F4A7C15 as a signed long. */
+  final val Golden = -7046029254386353131L
+
   /** SplitMix64 finalizer (public-domain mixing constants). */
   def mix64(x: Column): Column = {
-    val z0 = x + lit(-7046029254386353131L) // 0x9E3779B97F4A7C15
+    val z0 = x + lit(Golden)
     val z1 = (z0.bitwiseXOR(shiftrightunsigned(z0, 30))) * lit(-4658895280553007687L) // 0xBF58476D1CE4E5B9
     val z2 = (z1.bitwiseXOR(shiftrightunsigned(z1, 27))) * lit(-7723592293110705685L) // 0x94D049BB133111EB
     z2.bitwiseXOR(shiftrightunsigned(z2, 31))
   }
 
-  /** JVM twin of [[mix64]] for row-local kernels (mapPartitions codecs,
-    * test goldens) — same SplitMix64 finalizer on a plain Long, so
-    * Column-side, JVM-side, and the DuckDB oracle's replay all agree. */
+  /** JVM twin of [[mix64]] for row-local code (mapPartitions codecs, the
+    * MinHash kernel, streaming state updates, test goldens) — same
+    * SplitMix64 finalizer on a plain Long, so Column-side, JVM-side, and
+    * the DuckDB oracle's replay all agree. */
   def mix64Long(x: Long): Long = {
-    val z0 = x + -7046029254386353131L
+    val z0 = x + Golden
     val z1 = (z0 ^ (z0 >>> 30)) * -4658895280553007687L
     val z2 = (z1 ^ (z1 >>> 27)) * -7723592293110705685L
     z2 ^ (z2 >>> 31)
@@ -33,7 +37,7 @@ object HashFunctions {
   /** Seeded re-hash of a base 64-bit hash: family member `seed` of a hash
     * family, h_seed(x) = mix64(x + seed * GOLDEN). */
   def seeded(base: Column, seed: Column): Column =
-    mix64(base + seed.cast("long") * lit(-7046029254386353131L))
+    mix64(base + seed.cast("long") * lit(Golden))
 
   /** 64-bit hash of a string token (xxhash64 — codegen'd Spark built-in). */
   def tokenHash(token: Column): Column = xxhash64(token)

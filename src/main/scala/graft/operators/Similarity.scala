@@ -16,38 +16,26 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
-  /** Exact brute-force cosine top-k.
-    * @param exact use order-independent decimal accumulation
-    *              (bit-reproducible, ~2x cost) instead of a double fold.
+  /** Exact brute-force cosine top-k, scored with order-independent decimal
+    * accumulation (bit-reproducible across engines and partitionings — the
+    * tier the DuckDB oracle checks).
     */
   def knnExact(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      exact: Boolean = false
+      k: Int
   ): DataFrame = {
-    // Exact tier: norms are per-VECTOR, computed once on each side before
-    // the pair join (computing them per pair triples the decimal work —
-    // measured 2.5x). Fast tier: the fused codegen kernel
-    // (graft.plans.CosineSimilarity) does dot+norms in one allocation-free
-    // pass — 26x faster than the higher-order-function composition, so no
-    // precompute needed.
+    // Norms are per-VECTOR, computed once on each side before the pair
+    // join (computing them per pair triples the decimal work — measured
+    // 2.5x).
     val q = broadcast(
-      if (exact)
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-          VectorFunctions.norm2Exact(col(vecCol)).as("qn"))
-      else queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    )
-    val c =
-      if (exact)
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          VectorFunctions.norm2Exact(col(vecCol)).as("cn"))
-      else corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val cos =
-      if (exact) VectorFunctions.dotExact(col("qv"), col("cv")) / sqrt(col("qn") * col("cn"))
-      else graft.plans.GraftFunctions.cosineFast(col("qv"), col("cv"))
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+        VectorFunctions.norm2Exact(col(vecCol)).as("qn")))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      VectorFunctions.norm2Exact(col(vecCol)).as("cn"))
+    val cos = VectorFunctions.dotExact(col("qv"), col("cv")) / sqrt(col("qn") * col("cn"))
     val scored = c
       .join(q, col("query_id") =!= col("neighbor_id")) // broadcast NL join, map-only
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
@@ -90,92 +78,36 @@ object Similarity {
         col("__l2dec").cast("double").as("l2_sq"))
   }
 
-  /** Near-duplicate pairs with cosine above `threshold` within the corpus.
-    *
-    * DEFAULT path is LSH-blocked: candidate pairs come from
-    * random-hyperplane bucket collisions (union over `seeds` signature
-    * tables), then only candidates are exactly re-scored — shuffle volume is
-    * ∝ corpus × seeds plus the (sparse) candidate set, never corpus². This
-    * is the only shape that survives a 100 TB corpus. Recall is < 1 and
-    * rises with `seeds.size` / falls with `numPlanes`; at the defaults,
-    * pairs at near-dup-grade cosine (≥ ~0.9) are found with ≥ 0.99
-    * probability while the bucket join stays selective.
-    *
-    * `allPairs = true` requests the exact quadratic comparison (recall = 1)
-    * — viable only on small or pre-blocked subsets, so it is opt-in rather
-    * than the default.
-    *
-    * @param exact use order-independent decimal scoring (bit-reproducible
-    *              across engines/partitionings) instead of the fused double
-    *              kernel.
+  /** Near-duplicate pairs with cosine above `threshold` within the corpus:
+    * the exact quadratic comparison over every `id_a < id_b` pair (recall
+    * = 1), scored with order-independent decimal accumulation
+    * (bit-reproducible across engines and partitionings). Viable only on
+    * small or pre-blocked subsets; at corpus scale, block first (as
+    * [[semDedup]] does with its clusters).
     */
   def nearDupPairs(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      threshold: Double,
-      exact: Boolean = false,
-      allPairs: Boolean = false,
-      numPlanes: Int = 4,
-      seeds: Seq[Int] = Seq(17, 41, 97, 131, 197, 241)
+      threshold: Double
   ): DataFrame = {
-    // Norms are per-VECTOR, computed once per side before any pair join
+    // Norms are per-VECTOR, computed once per side before the pair join
     // (computing them per pair triples the decimal work — measured 2.5x).
-    def withNorm(df: DataFrame, v: String, n: String): DataFrame =
-      if (exact) df.withColumn(n, VectorFunctions.norm2Exact(col(v))) else df
-    val pairs: DataFrame =
-      if (allPairs) {
-        val a = withNorm(corpus.select(col(idCol).as("id_a"), col(vecCol).as("va")), "va", "na")
-        val b = withNorm(corpus.select(col(idCol).as("id_b"), col(vecCol).as("vb")), "vb", "nb")
-        a.join(b, col("id_a") < col("id_b"))
-      } else {
-        // Candidate generation: equi-join on (table, bucket); vectors (and
-        // norms) ride along so re-scoring needs no second corpus join. All
-        // seed signatures come from ONE projection + posexplode — a union
-        // over seeds would re-scan (and re-compute norms) once per seed.
-        val base = withNorm(corpus.select(col(idCol).as("id"), col(vecCol).as("v")), "v", "n")
-        val bucketed = base.select(
-          Seq(col("id"), col("v")) ++ (if (exact) Seq(col("n")) else Nil) :+
-            explode(array(seeds.map(s =>
-              struct(
-                lit(s).as("tbl"),
-                VectorFunctions
-                  .packBits(VectorFunctions.hyperplaneSignBits(col("v"), numPlanes, s))
-                  .as("bucket"))): _*)).as("tb"): _*
-        ).select(
-          Seq(col("id"), col("v")) ++ (if (exact) Seq(col("n")) else Nil) :+
-            col("tb.tbl").as("tbl") :+ col("tb.bucket").as("bucket"): _*
-        )
-        val aCols = Seq(col("a.id").as("id_a"), col("a.v").as("va")) ++
-          (if (exact) Seq(col("a.n").as("na")) else Nil)
-        val bCols = Seq(col("b.id").as("id_b"), col("b.v").as("vb")) ++
-          (if (exact) Seq(col("b.n").as("nb")) else Nil)
-        bucketed.as("a")
-          .join(
-            bucketed.as("b"),
-            col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-              col("a.id") < col("b.id")
-          )
-          .select(aCols ++ bCols: _*)
-          .distinct() // a pair may collide in several signature tables
-      }
-    if (exact) {
-      // Two-phase scoring: the fused double kernel prefilters at a safety
-      // margin (fast vs exact agree to ~1e-6 on unit-scale embeddings, the
-      // margin is 100x that), then ONLY survivors pay the ~20x-cost exact
-      // decimal re-score whose value the threshold decision and output use.
-      // Result is identical to exact-scoring every pair.
-      val margin = 1e-4
-      pairs
-        .filter(graft.plans.GraftFunctions.cosineFast(col("va"), col("vb")) > threshold - margin)
-        .select(col("id_a"), col("id_b"),
-          (VectorFunctions.dotExact(col("va"), col("vb")) / sqrt(col("na") * col("nb"))).as("cosine"))
-        .filter(col("cosine") > threshold)
-    } else
-      pairs
-        .select(col("id_a"), col("id_b"),
-          graft.plans.GraftFunctions.cosineFast(col("va"), col("vb")).as("cosine"))
-        .filter(col("cosine") > threshold)
+    val a = corpus.select(col(idCol).as("id_a"), col(vecCol).as("va"))
+      .withColumn("na", VectorFunctions.norm2Exact(col("va")))
+    val b = corpus.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
+      .withColumn("nb", VectorFunctions.norm2Exact(col("vb")))
+    // Two-phase scoring: the fused double kernel prefilters at a safety
+    // margin (double vs exact agree to ~1e-6 on unit-scale embeddings, the
+    // margin is 100x that), then ONLY survivors pay the ~20x-cost exact
+    // decimal re-score whose value the threshold decision and output use.
+    // Result is identical to exact-scoring every pair.
+    val margin = 1e-4
+    a.join(b, col("id_a") < col("id_b"))
+      .filter(graft.plans.GraftFunctions.cosineFast(col("va"), col("vb")) > threshold - margin)
+      .select(col("id_a"), col("id_b"),
+        (VectorFunctions.dotExact(col("va"), col("vb")) / sqrt(col("na") * col("nb"))).as("cosine"))
+      .filter(col("cosine") > threshold)
   }
 
   /** Per-group embedding centroids with EXACT (order-independent decimal)
@@ -259,9 +191,8 @@ object Similarity {
     * selection is a map-only broadcast join on `cluster` — the corpus never
     * shuffles, and the scored pair count drops by ~(k/nProbe)x vs
     * brute-force. Recall < 1 (a true neighbor may live in an unprobed
-    * cluster); raise `nProbe` to trade cost for recall.
-    *
-    * @param exact decimal-exact scoring (bit-reproducible, oracle tier). */
+    * cluster); raise `nProbe` to trade cost for recall. Candidates are
+    * scored with decimal-exact cosine (bit-reproducible, oracle tier). */
   def knnIvf(
       corpus: DataFrame,
       queries: DataFrame,
@@ -271,7 +202,6 @@ object Similarity {
       kClusters: Int = 8,
       nProbe: Int = 2,
       iters: Int = 1,
-      exact: Boolean = false,
       pretrained: Option[Array[(Long, Seq[Double])]] = None): DataFrame = {
     // `pretrained` lets a caller that ALREADY trained this exact quantizer
     // (same corpus/k/iters — training is fully deterministic, so the arrays
@@ -283,9 +213,7 @@ object Similarity {
     val probes = broadcast(
       probeExploded(queries, idCol, vecCol, cents, nProbe)
         .select(col("query_id"), col("qv"), col("cluster")))
-    val cos =
-      if (exact) VectorFunctions.cosineExact(col("qv"), col("cv"))
-      else graft.plans.GraftFunctions.cosineFast(col("qv"), col("cv"))
+    val cos = VectorFunctions.cosineExact(col("qv"), col("cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     assigned
       .join(probes, Seq("cluster"))
@@ -379,7 +307,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("nprobe"), col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
-    val truth = knnExact(corpus, queries, idCol, vecCol, k, exact = true)
+    val truth = knnExact(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
     truth
       .join(np, lit(true))
@@ -657,11 +585,8 @@ object Similarity {
   /** Random-hyperplane LSH ANN: bucket corpus and queries on `numPlanes`
     * sign bits, score only within matching buckets, then per-query top-k.
     * Recall < 1; raise recall by probing multiple signature tables (seeds).
-    *
-    * @param exact score candidates with order-independent decimal
-    *              accumulation (bit-reproducible across engines — the tier
-    *              the DuckDB oracle checks) instead of the fused double
-    *              kernel.
+    * Candidates are scored with order-independent decimal accumulation
+    * (bit-reproducible across engines — the tier the DuckDB oracle checks).
     */
   def knnLsh(
       corpus: DataFrame,
@@ -670,19 +595,15 @@ object Similarity {
       vecCol: String,
       k: Int,
       numPlanes: Int = 8,
-      seeds: Seq[Int] = Seq(17, 41, 97),
-      exact: Boolean = false
+      seeds: Seq[Int] = Seq(17, 41, 97)
   ): DataFrame = {
     // One projection computes every seed's signature, then posexplode —
-    // a union over seeds would re-scan the frame once per seed. Norms (for
-    // the exact tier) are computed once per vector, before bucketing.
+    // a union over seeds would re-scan the frame once per seed. Norms are
+    // computed once per vector, before bucketing.
     def bucketed(df: DataFrame, id: String): DataFrame = {
-      val base =
-        if (exact)
-          df.select(col(idCol).as(id), col(vecCol).as(s"${id}_v"),
-            VectorFunctions.norm2Exact(col(vecCol)).as(s"${id}_n"))
-        else df.select(col(idCol).as(id), col(vecCol).as(s"${id}_v"))
-      val keep = Seq(col(id), col(s"${id}_v")) ++ (if (exact) Seq(col(s"${id}_n")) else Nil)
+      val base = df.select(col(idCol).as(id), col(vecCol).as(s"${id}_v"),
+        VectorFunctions.norm2Exact(col(vecCol)).as(s"${id}_n"))
+      val keep = Seq(col(id), col(s"${id}_v"), col(s"${id}_n"))
       base.select(
         keep :+ explode(array(seeds.map(s =>
           struct(
@@ -695,14 +616,8 @@ object Similarity {
 
     val cb = bucketed(corpus, "neighbor_id")
     val qb = broadcast(bucketed(queries, "query_id"))
-    val cos =
-      if (exact)
-        VectorFunctions.dotExact(col("query_id_v"), col("neighbor_id_v")) /
-          sqrt(col("query_id_n") * col("neighbor_id_n"))
-      else
-        // fused codegen kernel (graft.plans.CosineSimilarity) — the ANN
-        // candidate-scoring loop is the compute-bound inner kernel
-        graft.plans.GraftFunctions.cosineFast(col("query_id_v"), col("neighbor_id_v"))
+    val cos = VectorFunctions.dotExact(col("query_id_v"), col("neighbor_id_v")) /
+      sqrt(col("query_id_n") * col("neighbor_id_n"))
     val candidates = cb
       .join(qb, Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -54,13 +54,15 @@ final class MilanPipeline(spark: SparkSession, warehouseDir: String) {
   /** Idempotent fact write: partition by (event_date, src_file) and
     * dynamically overwrite — only the partitions present in this batch are
     * replaced, so re-running the same source file converges instead of
-    * duplicating (see class doc). `src_file` doubles as lineage. */
+    * duplicating (see class doc). `src_file` doubles as lineage. Dynamic
+    * mode is an option of this one write; the session's own
+    * `spark.sql.sources.partitionOverwriteMode` is left as it is. */
   private def writeFacts(cleaned: DataFrame, table: String): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     cleaned
       .withColumn("event_date", to_date(col("datetime")))
       .withColumn("src_file", element_at(split(col("source_file"), "/"), -1))
       .write
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("event_date", "src_file")
       .mode(SaveMode.Overwrite)
       .parquet(tablePath(table))

@@ -55,20 +55,44 @@ case class BpeMergeFold(child: Expression, merges: Seq[(String, String)])
   @transient private lazy val outArr: Array[UTF8String] =
     merges.map(m => UTF8String.fromString(m._1 + m._2)).toArray
 
-  /** The shared kernel: in-place greedy fold of every merge over a working
-    * buffer (output never outgrows input, so write ptr ≤ read ptr). */
-  private def fold(
-      buf: Array[UTF8String],
-      n0: Int,
+  override def nullSafeEval(input: Any): Any =
+    BpeMergeFold.fold(input.asInstanceOf[ArrayData], lhsArr, rhsArr, outArr)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val u = "org.apache.spark.unsafe.types.UTF8String[]"
+    val ls = ctx.addReferenceObj("bpeLhs", lhsArr, u)
+    val rs = ctx.addReferenceObj("bpeRhs", rhsArr, u)
+    val os = ctx.addReferenceObj("bpeOut", outArr, u)
+    defineCodeGen(ctx, ev, a => s"graft.plans.BpeMergeFold.fold($a, $ls, $rs, $os)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BpeMergeFold =
+    copy(child = newChild)
+}
+
+object BpeMergeFold {
+
+  /** Shared by interpreted eval and generated code: copy the symbols into
+    * a working buffer, fold every merge over it in place (output never
+    * outgrows input, so write ptr ≤ read ptr), return the folded prefix. */
+  def fold(
+      a: ArrayData,
       ls: Array[UTF8String],
       rs: Array[UTF8String],
-      os: Array[UTF8String]): Int = {
+      os: Array[UTF8String]): ArrayData = {
+    val n0 = a.numElements()
+    val buf = new Array[UTF8String](n0)
+    var i = 0
+    while (i < n0) {
+      buf(i) = if (a.isNullAt(i)) null else a.getUTF8String(i)
+      i += 1
+    }
     var len = n0
     var m = 0
     while (m < ls.length) {
       val lh = ls(m); val rh = rs(m); val mg = os(m)
       var w = 0
-      var i = 0
+      i = 0
       while (i < len) {
         if (i + 1 < len && buf(i) != null && buf(i + 1) != null &&
             buf(i).equals(lh) && buf(i + 1).equals(rh)) {
@@ -80,63 +104,6 @@ case class BpeMergeFold(child: Expression, merges: Seq[(String, String)])
       len = w
       m += 1
     }
-    len
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val buf = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) {
-      buf(i) = if (a.isNullAt(i)) null else a.getUTF8String(i)
-      i += 1
-    }
-    val len = fold(buf, n, lhsArr, rhsArr, outArr)
     new GenericArrayData(java.util.Arrays.copyOf(buf, len).asInstanceOf[Array[Any]])
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val u = "org.apache.spark.unsafe.types.UTF8String"
-    val ls = ctx.addReferenceObj("bpeLhs", lhsArr, s"$u[]")
-    val rs = ctx.addReferenceObj("bpeRhs", rhsArr, s"$u[]")
-    val os = ctx.addReferenceObj("bpeOut", outArr, s"$u[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val buf = ctx.freshName("buf")
-      val len = ctx.freshName("len")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val w = ctx.freshName("w")
-      val lh = ctx.freshName("lh")
-      val rh = ctx.freshName("rh")
-      val mg = ctx.freshName("mg")
-      s"""
-         |int $n = $a.numElements();
-         |$u[] $buf = new $u[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $buf[$i] = $a.isNullAt($i) ? null : $a.getUTF8String($i);
-         |}
-         |int $len = $n;
-         |for (int $m = 0; $m < $ls.length; $m++) {
-         |  $u $lh = $ls[$m]; $u $rh = $rs[$m]; $u $mg = $os[$m];
-         |  int $w = 0;
-         |  for (int $i = 0; $i < $len; ) {
-         |    if ($i + 1 < $len && $buf[$i] != null && $buf[$i + 1] != null &&
-         |        $buf[$i].equals($lh) && $buf[$i + 1].equals($rh)) {
-         |      $buf[$w++] = $mg; $i += 2;
-         |    } else {
-         |      $buf[$w++] = $buf[$i]; $i += 1;
-         |    }
-         |  }
-         |  $len = $w;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  (Object[]) java.util.Arrays.copyOf($buf, $len));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMergeFold =
-    copy(child = newChild)
 }

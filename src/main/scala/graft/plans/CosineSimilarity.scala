@@ -12,15 +12,16 @@ import org.apache.spark.sql.types._
   * Why a custom Expression (SURVEY.md §7 preference ladder, tier b): the
   * built-in composition — `aggregate(zip_with(...))` ×3 for dot and both
   * norms — allocates an intermediate array per pair and walks the vectors
-  * three times through boxed lambda calls. ANN scoring is the one genuinely
-  * compute-bound per-row kernel in this engine (corpus × queries pairs ×
-  * dimensions multiply-adds), so it earns a fused single-pass loop over the
-  * raw column floats: no allocation, no virtual calls, stays inside the
-  * surrounding WholeStageCodegen stage.
+  * three times through boxed lambda calls. Pair scoring is compute-bound
+  * (pairs × dimensions multiply-adds), so it earns a fused single-pass loop
+  * over the raw column floats: no allocation, no virtual calls, stays
+  * inside the surrounding WholeStageCodegen stage.
   *
-  * Numerics: plain double accumulation in index order — the fast ranking
-  * tier (same contract as [[graft.functions.VectorFunctions.cosine]]);
-  * oracle-exact paths keep using the decimal-accumulation expressions.
+  * Numerics: plain double accumulation in index order (same contract as
+  * [[graft.functions.VectorFunctions.cosine]]). It decides no result: it
+  * is the cheap prefilter of the two-phase scoring in
+  * [[graft.operators.Similarity.nearDupPairs]] and `semDedup`, whose
+  * survivors are re-scored with the decimal-accumulation expressions.
   * Null elements count as 0; zero-norm inputs yield NaN (double division
   * semantics).
   */
@@ -40,9 +41,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.CosineSimilarity.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** Shared by interpreted eval and generated code: dot and both norms in
+    * one pass over the shorter length. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -54,29 +68,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / math.sqrt(nx * ny)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.isNullAt($i) ? 0.0 : (double) $a.getFloat($i);
-         |  double $y = $b.isNullAt($i) ? 0.0 : (double) $b.getFloat($i);
-         |  $dot += $x * $y; $nx += $x * $x; $ny += $y * $y;
-         |}
-         |${ev.value} = $dot / java.lang.Math.sqrt($nx * $ny);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
 }

@@ -39,9 +39,9 @@ case class EnrichedTokenCount(child: Expression, bits: IndexedSeq[Long])
 
   // IndexedSeq in the case-class signature gives structural equality (an
   // Array field compares by reference, defeating semanticEquals /
-  // subexpression elimination); the hot loop runs over the primitive copy
+  // subexpression elimination); the hot loop runs over the primitive copy,
+  // shipped once per task as a reference object in generated code
   @transient private lazy val bitsArr: Array[Long] = bits.toArray
-  private val mask: Long = bits.length.toLong * 64L - 1L
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -55,49 +55,37 @@ case class EnrichedTokenCount(child: Expression, bits: IndexedSeq[Long])
 
   override def prettyName: String = "graft_enriched_count"
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    EnrichedTokenCount.count(input.asInstanceOf[ArrayData], bitsArr)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bitsRef = ctx.addReferenceObj("enrichedBits", bitsArr, "long[]")
+    defineCodeGen(ctx, ev, a => s"graft.plans.EnrichedTokenCount.count($a, $bitsRef)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): EnrichedTokenCount =
+    copy(child = newChild)
+}
+
+object EnrichedTokenCount {
+
+  /** Shared by interpreted eval and generated code: the packed
+    * `(n_tokens << 32) | n_enriched` of one token array against the bucket
+    * bitmap `bits` (its length a power of two). */
+  def count(toks: ArrayData, bits: Array[Long]): Long = {
+    val mask = bits.length.toLong * 64L - 1L
     val n = toks.numElements()
     var tokens = 0L
     var enriched = 0L
     var j = 0
     while (j < n) {
       if (!toks.isNullAt(j)) {
-        val t = toks.getUTF8String(j)
         tokens += 1L
-        val b = (XXH64.hashUTF8String(t, 42L) & mask).toInt
-        if ((bitsArr(b >>> 6) & (1L << (b & 63))) != 0L) enriched += 1L
+        val b = (XXH64.hashUTF8String(toks.getUTF8String(j), 42L) & mask).toInt
+        if ((bits(b >>> 6) & (1L << (b & 63))) != 0L) enriched += 1L
       }
       j += 1
     }
     (tokens << 32) | enriched
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val bitsRef = ctx.addReferenceObj("enrichedBits", bitsArr, "long[]")
-      val n = ctx.freshName("n")
-      val j = ctx.freshName("j")
-      val t = ctx.freshName("t")
-      val b = ctx.freshName("b")
-      val tokens = ctx.freshName("tokens")
-      val enriched = ctx.freshName("enriched")
-      s"""
-         |int $n = $a.numElements();
-         |long $tokens = 0L;
-         |long $enriched = 0L;
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($a.isNullAt($j)) continue;
-         |  org.apache.spark.unsafe.types.UTF8String $t = $a.getUTF8String($j);
-         |  $tokens++;
-         |  int $b = (int) (org.apache.spark.sql.catalyst.expressions.XXH64
-         |    .hashUTF8String($t, 42L) & ${mask}L);
-         |  if (($bitsRef[$b >>> 6] & (1L << ($b & 63))) != 0L) $enriched++;
-         |}
-         |${ev.value} = ($tokens << 32) | $enriched;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): EnrichedTokenCount =
-    copy(child = newChild)
 }

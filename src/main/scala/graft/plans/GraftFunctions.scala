@@ -15,7 +15,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   */
 object GraftFunctions {
 
-  /** Fused codegen cosine (fast ranking tier — see [[CosineSimilarity]]). */
+  /** Fused codegen double cosine — the prefilter of two-phase exact
+    * scoring (see [[CosineSimilarity]]). */
   def cosineFast(a: Column, b: Column): Column =
     ColumnBridge.column(
       CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))

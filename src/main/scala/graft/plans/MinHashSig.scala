@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+import graft.functions.HashFunctions
+
 /** MinHash signature kernel: given a document's (distinct) shingle hashes
   * as `array<bigint>`, the element-wise minimum of `numHashes` seeded
   * splitmix64 re-hashes — sig[i] = min over shingles h of
@@ -19,7 +21,9 @@ import org.apache.spark.sql.types._
   * boxed lambda calls; sketching is per-row compute over shingles ×
   * numHashes mixes, the dominant cost of the MinHash/LSH dedup tier. This
   * kernel runs the whole fold in one primitive long[] with no per-element
-  * allocation, inside whole-stage codegen.
+  * allocation, inside whole-stage codegen. The fold is
+  * [[MinHashSig.signature]], which eval and the generated code both call;
+  * its mix is [[graft.functions.HashFunctions.mix64Long]].
   *
   * Null shingle-hash elements are skipped (the `least(m, null) = m`
   * behavior of the composition); an empty array yields all Long.MaxValue;
@@ -42,14 +46,23 @@ case class MinHashSig(child: Expression, numHashes: Int)
 
   override def prettyName: String = "graft_minhash"
 
-  // splitmix64 constants — match HashFunctions.mix64/seeded bit-for-bit
-  private final val Golden = -7046029254386353131L // 0x9E3779B97F4A7C15
-  private final val Mix1 = -4658895280553007687L // 0xBF58476D1CE4E5B9
-  private final val Mix2 = -7723592293110705685L // 0x94D049BB133111EB
+  override def nullSafeEval(input: Any): Any =
+    MinHashSig.signature(input.asInstanceOf[ArrayData], numHashes)
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val m = Array.fill(numHashes)(Long.MaxValue)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.plans.MinHashSig.signature($a, $numHashes)")
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
+}
+
+object MinHashSig {
+
+  /** Shared by interpreted eval and generated code: sig[i] = min over the
+    * non-null hashes h of `seeded(h, i + 1)`. */
+  def signature(hs: ArrayData, numHashes: Int): ArrayData = {
+    val m = new Array[Long](numHashes)
+    java.util.Arrays.fill(m, Long.MaxValue)
     val n = hs.numElements()
     var j = 0
     while (j < n) {
@@ -57,11 +70,8 @@ case class MinHashSig(child: Expression, numHashes: Int)
         val h = hs.getLong(j)
         var i = 0
         while (i < numHashes) {
-          // seeded(h, i) = mix64(h + i*GOLDEN); mix64 adds one more GOLDEN
-          val z0 = h + (i + 1).toLong * Golden
-          val z1 = (z0 ^ (z0 >>> 30)) * Mix1
-          val z2 = (z1 ^ (z1 >>> 27)) * Mix2
-          val v = z2 ^ (z2 >>> 31)
+          // seeded(h, i + 1) = mix64(h + (i + 1)·GOLDEN); mix64Long adds one GOLDEN itself
+          val v = HashFunctions.mix64Long(h + i.toLong * HashFunctions.Golden)
           if (v < m(i)) m(i) = v
           i += 1
         }
@@ -70,37 +80,4 @@ case class MinHashSig(child: Expression, numHashes: Int)
     }
     UnsafeArrayData.fromPrimitiveArray(m)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val m = ctx.freshName("mins")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val z0 = ctx.freshName("z0")
-      val z1 = ctx.freshName("z1")
-      val z2 = ctx.freshName("z2")
-      val v = ctx.freshName("v")
-      s"""
-         |long[] $m = new long[$numHashes];
-         |java.util.Arrays.fill($m, Long.MAX_VALUE);
-         |int $n = $a.numElements();
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($a.isNullAt($j)) continue;
-         |  long $h = $a.getLong($j);
-         |  for (int $i = 0; $i < $numHashes; $i++) {
-         |    long $z0 = $h + ((long) ($i + 1)) * ${Golden}L;
-         |    long $z1 = ($z0 ^ ($z0 >>> 30)) * ${Mix1}L;
-         |    long $z2 = ($z1 ^ ($z1 >>> 27)) * ${Mix2}L;
-         |    long $v = $z2 ^ ($z2 >>> 31);
-         |    if ($v < $m[$i]) $m[$i] = $v;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($m);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
 }

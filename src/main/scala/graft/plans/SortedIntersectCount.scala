@@ -45,9 +45,22 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.SortedIntersectCount.count($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+
+  /** Shared by interpreted eval and generated code: the two-pointer merge
+    * walk, stopping at the first null on either side. */
+  def count(x: ArrayData, y: ArrayData): Long = {
     val nx = x.numElements()
     val ny = y.numElements()
     var i = 0
@@ -61,30 +74,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     cnt
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val cnt = ctx.freshName("cnt")
-      val c = ctx.freshName("c")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $i = 0, $j = 0;
-         |long $cnt = 0L;
-         |while ($i < $nx && $j < $ny && !$a.isNullAt($i) && !$b.isNullAt($j)) {
-         |  int $c = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-         |  if ($c == 0) { $cnt++; $i++; $j++; }
-         |  else if ($c < 0) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
 }

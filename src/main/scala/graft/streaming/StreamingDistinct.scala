@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.HashFunctions
 import graft.operators.Sketches
 
 /** Streaming approximate distinct counting — the continuous twin of the
@@ -41,21 +42,10 @@ object StreamingDistinct {
 
   private[streaming] final case class HllState(regs: Array[Byte], n: Long)
 
-  /** SplitMix64 finalizer — same constants as
-    * [[graft.functions.HashFunctions.mix64]] (column form) and the q75
-    * oracle replay; duplicated here only because state updates run on the
-    * driver-side row values, not Columns. */
-  private def mix64(z: Long): Long = {
-    var x = z + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
-  }
-
   /** Fold one key into the register array (p fixed at 8: m=256 registers,
     * one byte each — rho <= 57 fits comfortably). */
   private[streaming] def update(regs: Array[Byte], key: Long): Unit = {
-    val h = mix64(key)
+    val h = HashFunctions.mix64Long(key)
     val b = (h & 255L).toInt
     val w = h >>> 8
     val rho = if (w == 0L) 57 else 57 - (64 - java.lang.Long.numberOfLeadingZeros(w))

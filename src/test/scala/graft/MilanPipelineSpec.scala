@@ -72,6 +72,51 @@ class MilanPipelineSpec extends SparkSpec {
     assert(!pipe.catalogTableExists("no_such_view"))
   }
 
+  private val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
+
+  /** Run `body` with the session's partition-overwrite mode pinned to
+    * static, the Spark default, then restore what was there. */
+  private def underStaticOverwrite(body: => Unit): Unit = {
+    val saved = spark.conf.getOption(overwriteModeKey)
+    spark.conf.set(overwriteModeKey, "static")
+    try body
+    finally saved.fold(spark.conf.unset(overwriteModeKey))(spark.conf.set(overwriteModeKey, _))
+  }
+
+  test("loadTraffic leaves the session's partition-overwrite mode unchanged") {
+    underStaticOverwrite {
+      val dataDir = Files.createTempDirectory("milan-data")
+      writeFixtures(dataDir)
+      val pipe = new MilanPipeline(spark, Files.createTempDirectory("milan-wh").toString)
+      assert(pipe.loadTraffic(dataDir.toString) == 1)
+      assert(spark.conf.get(overwriteModeKey) == "static")
+    }
+  }
+
+  test("re-ingesting one file after a lost ledger replaces only that file's partitions") {
+    underStaticOverwrite {
+      val dataDir = Files.createTempDirectory("milan-data")
+      writeFixtures(dataDir)
+      val second = "sms-call-internet-mi-2013-11-02.csv"
+      Files.writeString(dataDir.resolve(second),
+        """datetime,CellID,countrycode,smsin,smsout,callin,callout,internet
+          |2013-11-02 00:00:00,5,39,1.0,,,,
+          |2013-11-02 03:00:00,6,39,2.0,,,,
+          |""".stripMargin)
+      val whDir = Files.createTempDirectory("milan-wh")
+      val pipe = new MilanPipeline(spark, whDir.toString)
+      assert(pipe.loadTraffic(dataDir.toString) == 2)
+      val before = pipe.trafficFact.count()
+      assert(before == 6)
+      // the crash window of the class doc: data committed, ledger lost
+      Files.delete(whDir.resolve("_ingest_ledger"))
+      assert(pipe.loadTraffic(dataDir.toString, pattern = "sms-call-internet-mi-2013-11-01.csv") == 1)
+      val facts = pipe.trafficFact
+      assert(facts.count() == before)
+      assert(facts.filter($"src_file" === second).count() == 2)
+    }
+  }
+
   test("K5 backfillColumn fills only NULLs via crash-safe snapshot swap") {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_backfill")

@@ -68,26 +68,6 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs == Set((0L, 1L)))
   }
 
-  test("LSH-blocked nearDupPairs default ≡ exact all-pairs on a near-dup corpus") {
-    // 30 clusters of two near-identical vectors (cosine ≈ 0.9999) plus the
-    // cross-cluster background; at near-dup-grade similarity the default
-    // blocked path must recover exactly the all-pairs result.
-    val dim = 16
-    def vec(i: Int, eps: Double): Array[Float] =
-      Array.tabulate(dim)(d => (math.sin(i * 31 + d * 7) + eps * math.cos(d * 13 + i)).toFloat)
-    val rows = (0 until 30).flatMap(i => Seq((i * 2L, vec(i, 0.0)), (i * 2 + 1L, vec(i, 0.001))))
-    val df = rows.toDF("vec_id", "embedding")
-    def pairSet(allPairs: Boolean) =
-      Similarity
-        .nearDupPairs(df, "vec_id", "embedding", threshold = 0.99, exact = true, allPairs = allPairs)
-        .select("id_a", "id_b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exactPairs = pairSet(allPairs = true)
-    val blockedPairs = pairSet(allPairs = false)
-    assert(exactPairs.size >= 30, s"fixture should plant ≥30 near-dup pairs, got ${exactPairs.size}")
-    assert(blockedPairs == exactPairs)
-  }
-
   test("ivfTrain converges to the planted cluster structure and assignment is total") {
     // 4 well-separated clusters of 25 vectors each around axis-aligned means
     val dim = 8
@@ -399,20 +379,60 @@ class SimilaritySpec extends SparkSpec {
     // graft_ivf_argmin expressions fused into the same whole-stage-codegen
     // function declared the variable twice — a Janino compile failure and a
     // silent interpreted fallback. GenerateUnsafeProjection compiles the
-    // two expressions directly (no fallback layer), so a duplicate local
-    // fails THIS test rather than silently de-optimizing production plans.
+    // expressions directly (no fallback layer), so a duplicate local fails
+    // THIS test rather than silently de-optimizing production plans. Every
+    // row kernel under graft.plans is one more input: two instances of each
+    // compile into the same projection, and each output must equal the
+    // kernel's own interpreted eval on the same row — plain inputs, null
+    // elements, and null inputs.
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.plans.IvfArgminL2
-    val (l1, c1) = IvfArgminL2.quantize(Array((1L, Seq(0.0, 0.0)), (2L, Seq(1.0, 1.0))))
-    val (l2, c2) = IvfArgminL2.quantize(Array((7L, Seq(0.9, 0.9)), (9L, Seq(-1.0, -1.0))))
-    val in = BoundReference(0, ArrayType(DoubleType), nullable = true)
-    val proj = GenerateUnsafeProjection.generate(
-      Seq(IvfArgminL2(in, l1, c1), IvfArgminL2(in, l2, c2)))
-    val out = proj(InternalRow(ArrayData.toArrayData(Array(0.8, 0.8))))
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans._
+    val (l1, c1) = IvfArgminL2.quantize(Array((1L, Seq(0.0, 0.0, 0.0)), (2L, Seq(1.0, 1.0, 1.0))))
+    val (l2, c2) = IvfArgminL2.quantize(Array((7L, Seq(0.9, 0.9, 0.9)), (9L, Seq(-1.0, -1.0, -1.0))))
+    def ref(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
+    val dv = ref(0, ArrayType(DoubleType))
+    val (fa, fb) = (ref(1, ArrayType(FloatType)), ref(2, ArrayType(FloatType)))
+    val (sx, sy) = (ref(3, ArrayType(StringType)), ref(4, ArrayType(StringType)))
+    val hs = ref(5, ArrayType(LongType))
+    val str = ref(6, StringType)
+    val kernels: Seq[Expression] = Seq(
+      IvfArgminL2(dv, l1, c1), IvfArgminL2(dv, l2, c2),
+      ExactVecScaled(fa, fb, dot = true), ExactVecScaled(dv, fa, dot = false),
+      CosineSimilarity(fa, fb), CosineSimilarity(fb, fa),
+      SortedIntersectCount(sx, sy), SortedIntersectCount(sy, sx),
+      BpeMergeFold(sx, Seq(("a", "b"), ("ab", "c"))), BpeMergeFold(sy, Seq(("b", "c"))),
+      EnrichedTokenCount(sx, Vector(0x5555555555555555L)), EnrichedTokenCount(sy, Vector(-1L, 0L)),
+      MinHashSig(hs, 4), MinHashSig(hs, 8),
+      NfcNormalize(str), NfcNormalize(str),
+      HtmlEntityDecode(str), HtmlEntityDecode(str),
+      PreWhitespaceSentinels(str), PreWhitespaceSentinels(str))
+    val proj = GenerateUnsafeProjection.generate(kernels)
+    def arr(xs: Any*) = new GenericArrayData(xs.toArray)
+    def strs(xs: String*) = arr(xs.map(x => if (x == null) null else UTF8String.fromString(x)): _*)
+    val rows = Seq(
+      InternalRow(arr(0.8, 0.8, 0.8), arr(1.0f, 2.0f, 3.0f), arr(0.5f, -1.0f, 2.0f),
+        strs("a", "b", "c", "d"), strs("b", "c", "e"), arr(1L, 2L, 3L),
+        UTF8String.fromString("cafe\u0301 &amp; <pre>a b\tc</pre> d  e")),
+      InternalRow(arr(0.8, null, 0.8), arr(1.0f, null, 3.0f), arr(0.5f, -1.0f, null),
+        strs("a", null, "c"), strs("a", "c", null), arr(1L, null, 3L), null),
+      InternalRow(null, null, null, null, null, null, null))
+    def plain(v: Any, t: DataType): Any = (v, t) match {
+      case (a: ArrayData, ArrayType(et, _)) => a.toObjectArray(et).toSeq
+      case _ => v
+    }
+    rows.foreach { row =>
+      val out = proj(row)
+      kernels.zipWithIndex.foreach { case (e, i) =>
+        val got = if (out.isNullAt(i)) null else plain(out.get(i, e.dataType), e.dataType)
+        assert(got == plain(e.eval(row), e.dataType), s"${e.prettyName} (output $i) on $row")
+      }
+    }
+    val out = proj(rows.head)
     assert(out.getLong(0) == 2L && out.getLong(1) == 7L)
   }
 
