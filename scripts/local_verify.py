@@ -14,7 +14,11 @@ handshake flake (CORRECTNESS_r{8,10}.json arrived as `{}` while the engine was
 203/203 green):
 
     {query: {rows_match, schema_match, hash_match,
-             spark_rows, oracle_rows, err}}
+             spark_rows, oracle_rows, err, oracle_s}}
+
+oracle_s is the seconds the query's DuckDB oracle took (null without an
+oracle), so a newly slow oracle shows up in a diff of two records; it
+decides nothing.
 
 hash_match here is the full bit-exact value compare (strictly stronger than a
 hash). Rows-only queries (no oracle SQL) report oracle_rows/schema_match/
@@ -162,6 +166,7 @@ def main():
     # one line per query as it finishes, so a stalled oracle shows
     for i, name in enumerate(names, 1):
         oracle_s = check(name)
+        records[name]["oracle_s"] = None if oracle_s is None else round(oracle_s, 3)
         took = "no oracle" if oracle_s is None else f"oracle {oracle_s:.2f} s"
         print(f"[{i}/{len(names)}] {verdict(results[name]):4} {name} ({took}): {results[name]}",
               file=sys.stderr, flush=True)

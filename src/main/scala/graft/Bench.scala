@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main: executes every catalog query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
   *
@@ -31,17 +33,26 @@ object Bench {
     // warm-up, every pass and cancelled attempts.
     val queryTimeoutSec =
       Harness.envPositiveLong("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_SEC").getOrElse(600L)
-    def run(name: String, group: String): Double =
-      Watchdog.run(spark, group, queryTimeoutSec) {
+    // Queries run one at a time, so the change in Spark's JVM-wide compile
+    // counter across a run is that run's count of newly compiled generated
+    // classes (0 when every class is still in the codegen cache).
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(name: String, group: String): Double = {
+      val compiled0 = compiles
+      val outcome = Watchdog.run(spark, group, queryTimeoutSec) {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-      } match {
+      }
+      val compiled = compiles - compiled0
+      metrics.recordCompiles(group, compiled)
+      outcome match {
         case Watchdog.Ok(t) =>
-          System.err.println(f"[bench] $name $t%.2fs"); t
+          System.err.println(f"[bench] $name $t%.2fs $compiled compiles"); t
         case Watchdog.Failed(e) =>
           System.err.println(s"[bench] $name failed: $e"); -1.0
         case Watchdog.TimedOut => -1.0
       }
+    }
 
     // Host-calibration probe: a FIXED, Spark-free
     // micro-benchmark run at every pass boundary and recorded into the

@@ -83,14 +83,15 @@ object VectorsQueries extends Family {
     // ~500x fewer splitmix64 evaluations, 94s -> 1s oracle runtime.
     val mixed = DuckHash.signed(
       DuckHash.mix64Inline("CAST(p*1000003 + dd + tbl*2654435761 AS UBIGINT)"))
+    val seeds = Similarity.LshSeeds.mkString("[", ", ", "]")
     s"""WITH dims AS (SELECT len(embedding) AS dim FROM embeddings LIMIT 1),
        |wl AS (SELECT tbl, p, list(wv ORDER BY dd) AS w
        |  FROM (SELECT tbl, p, dd, ($mixed / 9.223372036854776e18) AS wv
-       |        FROM (SELECT unnest([17, 41, 97]) AS tbl),
-       |             (SELECT unnest(range(0, 8)) AS p),
+       |        FROM (SELECT unnest($seeds) AS tbl),
+       |             (SELECT unnest(range(0, ${Similarity.LshPlanes})) AS p),
        |             (SELECT unnest(range(0, (SELECT dim FROM dims))) AS dd))
        |  GROUP BY tbl, p),
-       |b0 AS (SELECT vec_id, embedding, unnest([17, 41, 97]) AS tbl FROM embeddings),
+       |b0 AS (SELECT vec_id, embedding, unnest($seeds) AS tbl FROM embeddings),
        |pr AS (SELECT b0.vec_id, b0.tbl, wl.p,
        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
        |          list_transform(range(0, len(embedding)), dd ->

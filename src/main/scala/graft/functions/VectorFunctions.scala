@@ -11,12 +11,11 @@ import org.apache.spark.sql.types.DecimalType
   * brute-force similarity scan stays inside whole-stage codegen and scales
   * linearly with executors.
   *
-  * Two precision tiers:
-  *  - `dot`/`cosine`: plain double fold — fastest, order-fixed within a row
-  *    (a sequential left fold), suitable for ranking at scale.
-  *  - `dotExact`/`cosineExact`: DECIMAL(38,14) accumulation — exact, hence
-  *    order-independent and bit-identical across engines; used where results
-  *    must hash-match the DuckDB oracle.
+  * Dot products and cosines accumulate in decimal (`dotExact`/
+  * `cosineExact`): exact, hence order-independent and bit-identical across
+  * engines, as results that must hash-match the DuckDB oracle need. The
+  * double-accumulating cosine is the [[graft.plans.CosineSimilarity]]
+  * kernel (`GraftFunctions.cosineFast`).
   */
 object VectorFunctions {
 
@@ -71,19 +70,6 @@ object VectorFunctions {
   /** Bit-deterministic cosine similarity. */
   def cosineExact(a: Column, b: Column): Column =
     dotExact(a, b) / sqrt(norm2Exact(a) * norm2Exact(b))
-
-  /** Fast double-fold dot product (sequential per-row fold). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x
-    )
-
-  def norm2(a: Column): Column = dot(a, a)
-
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(norm2(a) * norm2(b))
 
   /** Sign bits of `numPlanes` pseudo-random hyperplane projections — the
     * random-hyperplane LSH family for cosine similarity (Charikar 2002).

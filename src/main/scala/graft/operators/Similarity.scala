@@ -582,9 +582,15 @@ object Similarity {
     adcRank(enc.join(probes, Seq("cluster")), k)
   }
 
-  /** Random-hyperplane LSH ANN: bucket corpus and queries on `numPlanes`
+  /** Sign bits per [[knnLsh]] signature (8 bits: 256 buckets per table). */
+  val LshPlanes = 8
+  /** One signature table per seed; a pair is a candidate when it shares a
+    * bucket in any table, so each extra table raises recall. */
+  val LshSeeds: Seq[Int] = Seq(17, 41, 97)
+
+  /** Random-hyperplane LSH ANN: bucket corpus and queries on [[LshPlanes]]
     * sign bits, score only within matching buckets, then per-query top-k.
-    * Recall < 1; raise recall by probing multiple signature tables (seeds).
+    * Recall < 1; the [[LshSeeds]] signature tables are probed together.
     * Candidates are scored with order-independent decimal accumulation
     * (bit-reproducible across engines — the tier the DuckDB oracle checks).
     */
@@ -593,9 +599,7 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      numPlanes: Int = 8,
-      seeds: Seq[Int] = Seq(17, 41, 97)
+      k: Int
   ): DataFrame = {
     // One projection computes every seed's signature, then posexplode —
     // a union over seeds would re-scan the frame once per seed. Norms are
@@ -605,11 +609,11 @@ object Similarity {
         VectorFunctions.norm2Exact(col(vecCol)).as(s"${id}_n"))
       val keep = Seq(col(id), col(s"${id}_v"), col(s"${id}_n"))
       base.select(
-        keep :+ explode(array(seeds.map(s =>
+        keep :+ explode(array(LshSeeds.map(s =>
           struct(
             lit(s).as("tbl"),
             VectorFunctions
-              .packBits(VectorFunctions.hyperplaneSignBits(col(s"${id}_v"), numPlanes, s))
+              .packBits(VectorFunctions.hyperplaneSignBits(col(s"${id}_v"), LshPlanes, s))
               .as("bucket"))): _*)).as("tb"): _*
       ).select(keep :+ col("tb.tbl").as("tbl") :+ col("tb.bucket").as("bucket"): _*)
     }

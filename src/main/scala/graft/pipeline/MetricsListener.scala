@@ -52,6 +52,10 @@ final class MetricsListener extends SparkListener {
     var memorySpillBytes: Long = 0L
     var diskSpillBytes: Long = 0L
     var failedTasks: Long = 0L
+    // Generated classes compiled during the group's run (see
+    // [[recordCompiles]]); absent unless a caller that runs one query at a
+    // time recorded it.
+    var nCompiles: Option[Long] = None
     // per-stage (n, totalMs, maxMs) — feeds hot_stage_skew
     val stageTasks = scala.collection.mutable.Map[Int, (Long, Long, Long)]()
 
@@ -90,6 +94,7 @@ final class MetricsListener extends SparkListener {
 
     def json: String =
       s"""{"n_jobs":$nJobs,"n_tasks":$nTasks,"failed_tasks":$failedTasks,""" +
+        nCompiles.fold("")(n => s""""n_compiles":$n,""") +
         s""""total_task_ms":$totalTaskMs,"max_task_ms":$maxTaskMs,""" +
         s""""task_skew":${Json.fixed(skew, 3)},""" +
         s""""hot_stage_skew":${Json.fixed(hotStageSkew, 3)},""" +
@@ -135,6 +140,14 @@ final class MetricsListener extends SparkListener {
         g.diskSpillBytes += m.diskBytesSpilled
       }
     }
+  }
+
+  /** Records that `group`'s run compiled `n` generated classes. Spark's
+    * compile counter is JVM-wide, so only a caller that runs one query at
+    * a time (Bench) can attribute its change to a group. */
+  def recordCompiles(group: String, n: Long): Unit = {
+    val g = byGroup.computeIfAbsent(group, _ => new GroupMetrics)
+    g.synchronized { g.nCompiles = Some(n) }
   }
 
   /** Tasks observed so far for `group` (spec/polling hook: the listener

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * inside the surrounding WholeStageCodegen stage.
   *
   * Numerics: plain double accumulation in index order (same contract as
-  * [[graft.functions.VectorFunctions.cosine]]). It decides no result: it
+  * the `aggregate(zip_with(...))` fold the specs keep as its reference,
+  * `VectorRef.cosine`). It decides no result: it
   * is the cheap prefilter of the two-phase scoring in
   * [[graft.operators.Similarity.nearDupPairs]] and `semDedup`, whose
   * survivors are re-scored with the decimal-accumulation expressions.

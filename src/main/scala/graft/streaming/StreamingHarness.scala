@@ -66,9 +66,11 @@ private[graft] object StreamingHarness {
     * the RocksDB state-store twin uses to select
     * `spark.sql.streaming.stateStore.providerClass` per-query; the sized
     * partition count rides the same hook, so the session's batch setting
-    * is untouched after the run. Session confs are global: the harness
-    * contract (one terminal streaming run at a time — how Verify and Bench
-    * both drive it) is what makes the set/restore race-free. */
+    * is untouched after the run. Session confs are global, so the
+    * set/restore is race-free only while one terminal streaming run is
+    * active at a time. Bench runs one query at a time; Verify runs 4 at
+    * once, so two streaming runs can overlap there and one can restore a
+    * value the other set. */
   def runToMemorySink(
       spark: SparkSession,
       df: DataFrame,

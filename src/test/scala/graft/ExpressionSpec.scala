@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
 import graft.plans.GraftFunctions
 
 class ExpressionSpec extends SparkSpec {
@@ -16,7 +15,7 @@ class ExpressionSpec extends SparkSpec {
   test("CosineSimilarity matches the higher-order-function cosine") {
     val rows = vecs.select(
       GraftFunctions.cosineFast($"a", $"b").as("fast"),
-      VectorFunctions.cosine($"a", $"b").as("hof")
+      VectorRef.cosine($"a", $"b").as("hof")
     ).collect()
     rows.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))
   }

@@ -14,7 +14,7 @@ class SimilaritySpec extends SparkSpec {
       (Array(1.0f, 0.0f), Array(1.0f, 1.0f), 1.0 / math.sqrt(2))
     ).toDF("a", "b", "expected")
     df.select(
-      VectorFunctions.cosine($"a", $"b").as("c"),
+      VectorRef.cosine($"a", $"b").as("c"),
       VectorFunctions.cosineExact($"a", $"b").as("ce"),
       $"expected"
     ).collect().foreach { r =>
