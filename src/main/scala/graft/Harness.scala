@@ -39,8 +39,10 @@ object Harness {
   /** Catalog queries graft.Verify runs at once. */
   val VerifyParallelism = 4
 
-  /** `local[N]` width of every main: `SPARK_GRAFT_CPUS`, default 32. */
-  def cpus: Int = envPositiveLong("SPARK_GRAFT_CPUS").fold(32)(_.toInt)
+  /** `local[N]` width of every main: `SPARK_GRAFT_CPUS`, default the
+    * host's processor count. */
+  def cpus: Int =
+    envPositiveLong("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** Default directory for run records: the working directory, except at a
     * repo root (a `.git` directory is present), where ad-hoc runs would

@@ -1,13 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, sum, xxhash64}
+import org.apache.spark.sql.types.DecimalType
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * result_digest.json, each dumped table's [[digest]]. */
 object Verify {
+
+  /** An order-insensitive fingerprint of a table: its row count, and the
+    * sum (mod 2^64) and the xor of each row's `xxhash64` over all columns
+    * in name order. Equal tables give equal digests whatever their
+    * partitioning, row order or column order, so two dumps compare as
+    * JSON although their parquet bytes differ. It fingerprints Spark
+    * output for Spark-to-Spark comparison only. */
+  def digest(df: DataFrame): (Long, Long, Long) = {
+    val h = xxhash64(df.columns.sorted.map(c => col(s"`$c`")).toIndexedSeq: _*)
+    val r = df.agg(count(lit(1)), sum(h.cast(DecimalType(38, 0))), bit_xor(h)).head()
+    val total = if (r.isNullAt(1)) BigInt(0) else BigInt(r.getDecimal(1).toBigInteger)
+    (r.getLong(0), total.longValue, if (r.isNullAt(2)) 0L else r.getLong(2))
+  }
 
   /** Dump every catalog query (optionally filtered to `only`) under
     * `outDir/<name>/`, `parallelism` at a time, each under a
-    * `queryTimeoutSec` [[Watchdog]]; returns (okCount, failedCount).
+    * `queryTimeoutSec` [[Watchdog]], and write the dumps' digests to
+    * `outDir/result_digest.json`; returns (okCount, failedCount).
     * Factored out of [[main]] so the empty-output tripwire below is
     * spec-testable. */
   def runAll(
@@ -20,6 +37,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val ok = new java.util.concurrent.atomic.AtomicInteger(0)
     val failed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val digests = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
     // Queries overlap (Spark's scheduler is thread-safe and each query
     // writes its own directory): at sf0.01 most queries are
     // scheduler-bound, not core-bound, so overlapping them cuts wall-clock
@@ -33,6 +51,7 @@ object Verify {
           def run(): Unit =
             Watchdog.run(spark, s"verify-$name", queryTimeoutSec) {
               fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+              digests.put(name, digest(spark.read.parquet(s"$outDir/$name")))
             } match {
               case Watchdog.Ok(_) =>
                 ok.incrementAndGet()
@@ -50,6 +69,12 @@ object Verify {
     // the JVM alive after main.
     try tasks.foreach(_.get())
     finally pool.shutdownNow()
+    import scala.jdk.CollectionConverters._
+    val entries = digests.asScala.toSeq.sortBy(_._1).map { case (name, (rows, total, xor)) =>
+      Json.str(name) + ": {\"rows\": " + rows + ", \"sum\": " + Json.str(f"$total%016x") +
+        ", \"xor\": " + Json.str(f"$xor%016x") + "}"
+    }
+    Files.writeString(Paths.get(s"$outDir/result_digest.json"), entries.mkString("{\n", ",\n", "\n}\n"))
     (ok.get(), failed.get())
   }
 

@@ -155,13 +155,13 @@ object GeoQueries extends Family {
 
   /** CTE chain replaying `GeoFunctions.wgs84ToUtm32n` in DuckDB SQL over
     * an input CTE exposing `lon`/`lat` degrees (every other column flows
-    * through `SELECT *`): appends `<p>0..<p>5` and `<p>xy`, the last
+    * through `SELECT *`): appends `utm0..utm5` and `utmxy`, the last
     * adding `x` (easting m) and `y` (northing m). Constants are the
     * projection's exact doubles as shortest-repr literals and the
     * operation tree matches the Scala kernel exactly (explicit power
     * products, no libm pow) — see q173's comment. Shared by q173 (point
     * grid) and q178 (GeoJSON polygon vertices). */
-  private def utmSeriesCtes(src: String, p: String = "utm"): String = {
+  private def utmSeriesCtes(src: String): String = {
     // Shortest-repr double literals round-trip to identical bits in DuckDB.
     def d(v: Double) = v.toString
     val pi = d(math.Pi)
@@ -170,27 +170,27 @@ object GeoQueries extends Family {
       d(GeoFunctions.FalseEasting))
     val (m0, m2, m4, m6) = (d(GeoFunctions.M0), d(GeoFunctions.M2),
       d(GeoFunctions.M4), d(GeoFunctions.M6))
-    s"""${p}0 AS (SELECT *, lat / 180.0 * $pi AS phi, lon / 180.0 * $pi AS lam FROM $src),
-       |${p}1 AS (SELECT *, sin(phi) AS sphi, cos(phi) AS cphi, tan(phi) AS tphi FROM ${p}0),
-       |${p}2 AS (SELECT *,
+    s"""utm0 AS (SELECT *, lat / 180.0 * $pi AS phi, lon / 180.0 * $pi AS lam FROM $src),
+       |utm1 AS (SELECT *, sin(phi) AS sphi, cos(phi) AS cphi, tan(phi) AS tphi FROM utm0),
+       |utm2 AS (SELECT *,
        |    $aa / sqrt(1.0 - $e2 * sphi * sphi) AS nn,
        |    tphi * tphi AS tt,
        |    $ep2 * cphi * cphi AS cc,
-       |    cphi * (lam - $lon0) AS a0 FROM ${p}1),
-       |${p}3 AS (SELECT *, a0 * a0 AS a2 FROM ${p}2),
-       |${p}4 AS (SELECT *, a2 * a0 AS a3, a2 * a2 AS a4 FROM ${p}3),
-       |${p}5 AS (SELECT *, a4 * a0 AS a5, a4 * a2 AS a6,
+       |    cphi * (lam - $lon0) AS a0 FROM utm1),
+       |utm3 AS (SELECT *, a0 * a0 AS a2 FROM utm2),
+       |utm4 AS (SELECT *, a2 * a0 AS a3, a2 * a2 AS a4 FROM utm3),
+       |utm5 AS (SELECT *, a4 * a0 AS a5, a4 * a2 AS a6,
        |    $aa * ($m0 * phi - $m2 * sin(2.0 * phi)
        |      + $m4 * sin(4.0 * phi) - $m6 * sin(6.0 * phi)) AS mm
-       |  FROM ${p}4),
-       |${p}xy AS (SELECT *,
+       |  FROM utm4),
+       |utmxy AS (SELECT *,
        |    $k0 * nn * (a0 + (1.0 - tt + cc) * a3 / 6.0
        |      + (5.0 - 18.0 * tt + tt * tt + 72.0 * cc - 58.0 * $ep2) * a5 / 120.0)
        |      + $fe AS x,
        |    $k0 * (mm + nn * tphi * (a2 / 2.0
        |      + (5.0 - tt + 9.0 * cc + 4.0 * cc * cc) * a4 / 24.0
        |      + (61.0 - 58.0 * tt + tt * tt + 600.0 * cc - 330.0 * $ep2) * a6 / 720.0)) AS y
-       |  FROM ${p}5)""".stripMargin
+       |  FROM utm5)""".stripMargin
   }
 
   val q173 = query("q173_utm_reproject")((s, dir) =>

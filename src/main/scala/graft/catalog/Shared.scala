@@ -26,7 +26,8 @@ private[catalog] object Shared {
     * the same magnitude-tiered truncation (HUGEINT floor-div ≡ Spark's
     * remainder-subtract on non-negatives; small sums convert exactly) and
     * the same clamped fixed-order closed form. */
-  def dStd(e: String, scale: Int = 4) = {
+  def dStd(e: String) = {
+    val scale = 4
     val unit = math.pow(10, scale).toLong
     val u = s"CAST(CAST(CAST($e AS DECIMAL(18,$scale)) * $unit AS DECIMAL(18,0)) AS HUGEINT)"
     val ssu = s"sum($u * $u)"
@@ -197,14 +198,10 @@ private[catalog] object Shared {
       |  CASE WHEN w = 0 THEN 57 ELSE 57 - CAST(bit_count(s6) AS BIGINT) END AS r
       |  FROM sm6)""".stripMargin
 
-  def hllEstCte(
-      regsCte: String, groupCol: String, outCte: String, estName: String,
-      p: Int = 8): String = {
-    // The 255/256/57 literals below (and hllSmearRhoCtes' maxRho) are the
-    // p=8 instantiation; a caller at another precision would silently get a
-    // wrong estimate, so fail the build instead.
-    require(p == 8, s"hllEstCte is hardcoded for p=8 (m=256, maxRho=57); got p=$p")
-    val numer = graft.operators.Sketches.hllNumerator(p)
+  def hllEstCte(regsCte: String, groupCol: String, outCte: String, estName: String): String = {
+    // The 256/57 literals below (and hllSmearRhoCtes' maxRho) are the p=8
+    // instantiation: m=256 registers, maxRho=57.
+    val numer = graft.operators.Sketches.hllNumerator(8)
     s"""$outCte AS (SELECT $groupCol,
        |  $numer / CAST(CAST(sum(CAST(1 AS HUGEINT) << CAST(57 - reg AS INTEGER)) AS HUGEINT)
        |    + (256 - count(*)) * (CAST(1 AS HUGEINT) << 57) AS DOUBLE) AS $estName

@@ -729,10 +729,6 @@ object TextQueries extends Family {
   // Each round = one pair-count shuffle + a bounded argmax pull + a
   // codegen'd fold re-encode; statistics are vocab-sized, so the corpus
   // is read exactly once — the shape that trains a tokenizer on 100 TB.
-  // This row runs batchSize=1 (exact per-merge counts and masses, the
-  // replayable contract); production 50k-merge training uses the
-  // trainer's top-B symbol-disjoint batching (rounds ∝ nMerges/B —
-  // BpeSpec pins B=1 ≡ unbatched and the disjointness rule).
   // Output = the merge table: winning pair per rank, its frequency-
   // weighted count, and the post-merge symbol mass (whose drop is the
   // compression the merge bought — it also proves the APPLY step, since

@@ -52,7 +52,7 @@ object AggFunctions {
     * bit-stable (unlike `stddev_samp`, which merges partial moments in
     * shuffle order).
     *
-    * The squared sum runs in INTEGER UNITS: quantized values ×10^scale are
+    * The squared sum runs in INTEGER UNITS: quantized values ×10^4 are
     * exactly integral (no rounding — Spark's decimal downcast rounds
     * HALF_UP while DuckDB's truncates, so any mid-pipeline re-quantization
     * diverges cross-engine), their squares sum exactly in DECIMAL(38,0),
@@ -61,11 +61,11 @@ object AggFunctions {
     * double's 53-bit exact range by sf0.1 and the engines' DECIMAL→DOUBLE
     * conversions round it differently (observed 1-ulp std drift); the
     * truncated integer part stays exactly representable to Σc² < 2^53. */
-  def stddevExact(c: Column, scale: Int = 4): Column = {
-    // scale ≤ 6: keeps values to ~10^(18-2·scale) inside the DECIMAL(18)
-    // quantization (larger would silently null out of the squared sum) and
-    // 10^(2·scale) inside Long.
-    require(scale >= 1 && scale <= 6, s"stddevExact scale must be in [1,6], got $scale")
+  def stddevExact(c: Column): Column = {
+    // 4 decimal places: keeps values to ~10^(18-2·scale) inside the
+    // DECIMAL(18) quantization (larger would silently null out of the
+    // squared sum) and 10^(2·scale) inside Long.
+    val scale = 4
     val n = count(c).cast("double")
     val s = sumExact(c, scale)
     val unit = math.pow(10, scale).toLong

@@ -121,10 +121,10 @@ object Multimodal {
         payload(0) == 'R' && payload(1) == 'I' && payload(2) == 'F' && payload(3) == 'F' &&
         payload(8) == 'W' && payload(9) == 'A' && payload(10) == 'V' && payload(11) == 'E'
 
-    /** Encode signed 16-bit little-endian PCM mono samples as a WAV
-      * container via the JDK writer (header laid down by the codec, not by
-      * hand — the decode leg then proves the round trip). */
-    def encodeWav(samples: Array[Short], sampleRate: Float = 16000f): Array[Byte] = {
+    /** Encode signed 16-bit little-endian PCM mono samples at 16 kHz as a
+      * WAV container via the JDK writer (header laid down by the codec, not
+      * by hand — the decode leg then proves the round trip). */
+    def encodeWav(samples: Array[Short]): Array[Byte] = {
       val bytes = new Array[Byte](samples.length * 2)
       var i = 0
       while (i < samples.length) {
@@ -132,7 +132,7 @@ object Multimodal {
         bytes(2 * i + 1) = ((samples(i) >> 8) & 0xff).toByte
         i += 1
       }
-      val fmt = new AudioFormat(sampleRate, 16, 1, true, false) // PCM signed, LE
+      val fmt = new AudioFormat(16000f, 16, 1, true, false) // PCM signed, LE
       val ais = new AudioInputStream(new ByteArrayInputStream(bytes), fmt, samples.length.toLong)
       val bos = new ByteArrayOutputStream()
       try wavWriter.write(ais, AudioFileFormat.Type.WAVE, bos)

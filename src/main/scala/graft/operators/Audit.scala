@@ -148,12 +148,12 @@ object Audit {
     * FK orphan audits: for every parent row, the exact difference
     * between its claimed total and the sum of its child rows' amounts
     * (invoice header vs lines, order total vs items, ledger vs
-    * postings). Everything stays in INTEGER UNITS of `10^-scale`
-    * (`DECIMAL(38, scale) · 10^scale` — exactly integral): no double
+    * postings). Everything stays in INTEGER UNITS of `10^-4`
+    * (`DECIMAL(38, 4) · 10^4` — exactly integral): no double
     * appears anywhere, so sums of deltas are order-independent and
     * bit-identical cross-engine even past double's 53-bit range (the
     * round-5 DECIMAL→DOUBLE lesson). That guarantee assumes the money
-    * discipline: input values carry AT MOST `scale` fractional decimal
+    * discipline: input values carry AT MOST 4 fractional decimal
     * digits, so the double→decimal cast is exact — a value with more
     * digits rounds differently across engines (Spark HALF_UP on the
     * shortest representation, DuckDB on the binary value), the exact
@@ -174,15 +174,10 @@ object Audit {
       child: DataFrame,
       keys: Seq[String],
       parentValCol: String,
-      childValCol: String,
-      scale: Int = 4): DataFrame = {
+      childValCol: String): DataFrame = {
     require(keys.nonEmpty, "need at least one key column")
-    // the AggFunctions convention: a silent pow-overflow past long range
-    // (scale >= 19) would null every unit column under non-ANSI casts
-    require(scale >= 0 && scale <= 6, s"scale must be in [0, 6], got $scale")
-    val unit = math.pow(10, scale).toLong
     def units(c: Column): Column =
-      (c.cast(org.apache.spark.sql.types.DecimalType(38, scale)) * unit)
+      (c.cast(org.apache.spark.sql.types.DecimalType(38, 4)) * 10000L)
         .cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val childSums = child
       .groupBy(keys.map(col): _*)

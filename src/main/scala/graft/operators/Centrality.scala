@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * the template sources worth a human look.
   *
   * PageRank in pure INTEGER arithmetic: ranks carry in fixed-point units
-  * of `1/scale` (default 1e-12) and each out-contribution is the integral
-  * division `(rank · dampPct) div (100 · degree)` — floor division of
+  * of 1e-12 and each out-contribution is the integral division
+  * `(rank · 85) div (100 · degree)` (damping 0.85) — floor division of
   * non-negative longs, associative sums, so the result is bit-identical
   * across partitionings, retries, and engines, where the textbook
   * double-arithmetic PageRank depends on partition merge order. Mass is
@@ -28,11 +28,9 @@ import org.apache.spark.sql.functions._
   * Lineage hygiene differs from [[ConnectedComponents]]: a FIXED
   * iteration count means the plan depth is statically bounded (linear in
   * iterations, no self-referential growth), so the rank chain executes
-  * as one lazy pipeline by default — each eager `localCheckpoint` costs
-  * a full materialization, pure overhead at small iteration counts
-  * (measured ~2x on the 5-round catalog query). `checkpointEvery` rounds
-  * (default 10) still truncates long chains; on a cluster use reliable
-  * checkpointing instead.
+  * as one lazy pipeline — each eager `localCheckpoint` costs a full
+  * materialization, pure overhead at small iteration counts (measured ~2x
+  * on the 5-round catalog query).
   */
 object Centrality {
 
@@ -47,19 +45,14 @@ object Centrality {
     * pairs (each pair listed once, e.g. `doc_a < doc_b`; the mirror
     * direction is added internally). Every node of the graph appears in
     * the output with its fixed-point rank (`rank` ≈ stationary share ×
-    * scale × nodes). Overflow bound: a node's rank stays below
-    * Long.Max/dampPct as long as total graph mass (nodes × scale) does —
-    * at 1e9+ nodes lower `scale` accordingly. */
+    * 10¹² × nodes). Overflow bound: a node's rank stays below Long.Max/85
+    * as long as total graph mass (nodes × 10¹²) does. */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iterations: Int = 5,
-      dampPct: Int = 85,
-      scale: Long = 1000000000000L,
-      checkpointEvery: Int = 10): DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
-    require(dampPct >= 0 && dampPct <= 100, s"dampPct must be 0..100, got $dampPct")
     // materialize the INPUT edge list before fanning it out: the mirror
     // union + degree join + adjacency reference it 4 times, and an
     // unmaterialized edge pipeline (e.g. the LSH candidate build) would
@@ -69,17 +62,15 @@ object Centrality {
     val und = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
     val adj = und.join(deg, Seq("src")).localCheckpoint()
-    val base = scale / 100L * (100L - dampPct)
+    val scale = 1000000000000L
+    val base = scale / 100L * 15L // the (1 − 0.85) teleport share of a unit rank
     var r = deg.select(col("src").as("node"), lit(scale).as("rank"))
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       r = adj.join(r, adj("src") === r("node"))
-        .select(col("dst"),
-          expr(s"(rank * $dampPct) div (100 * __deg)").as("__c"))
+        .select(col("dst"), expr("(rank * 85) div (100 * __deg)").as("__c"))
         .groupBy(col("dst"))
         .agg(sum(col("__c")).as("__s"))
         .select(col("dst").as("node"), (lit(base) + col("__s")).as("rank"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iterations)
-        r = r.localCheckpoint()
     }
     r
   }
@@ -169,7 +160,7 @@ object Centrality {
     * and `localCheckpoint` truncates lineage per round (the
     * [[ConnectedComponents]] hygiene rule — each round already runs an
     * action for the convergence count, so the checkpoint costs no extra
-    * job). Exceeding `maxIter` throws loudly rather than returning a
+    * job). Exceeding 30 peel rounds throws loudly rather than returning a
     * not-yet-fixpoint subgraph as if it were the core.
     *
     * Output: `(node, degree)` for every core member, with its degree
@@ -179,10 +170,8 @@ object Centrality {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxIter: Int = 30,
       inputCanonical: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     requireIntegralNodes(edges, Seq(srcCol, dstCol), "kCore")
     // Loop state is the CANONICAL a<b list, materialized once per round
     // (the expensive edge pipeline — q148 feeds the exact similarity join
@@ -242,10 +231,10 @@ object Centrality {
     var iter = 0
     while (true) {
       iter += 1
-      if (iter > maxIter + 1)
+      if (iter > 31)
         throw new IllegalStateException(
-          s"k-core did not reach its fixpoint in $maxIter peel rounds; " +
-            "raise maxIter (rounds needed = the graph's peel depth)")
+          "k-core did not reach its fixpoint in 30 peel rounds " +
+            "(rounds needed = the graph's peel depth)")
       val obs = new org.apache.spark.sql.Observation(
         s"kcore_conv_${obsSeq.incrementAndGet()}")
       val deg = degrees(e)

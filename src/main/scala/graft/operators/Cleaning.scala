@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
 object Cleaning {
 
   /** C1 — datetime coerce-or-null (pandas `to_datetime(errors='coerce')`,
-    * reference src/etl.py:134). Non-ANSI `to_timestamp` nulls on failure. */
-  def coerceTimestamp(c: Column, fmt: String = "yyyy-MM-dd HH:mm:ss"): Column =
-    to_timestamp(c, fmt)
+    * reference src/etl.py:134) in the reference's one format,
+    * `yyyy-MM-dd HH:mm:ss`. Non-ANSI `to_timestamp` nulls on failure. */
+  def coerceTimestamp(c: Column): Column =
+    to_timestamp(c, "yyyy-MM-dd HH:mm:ss")
 
   /** C2 — numeric coerce-then-fill-0 (pandas `to_numeric(errors='coerce')
     * .fillna(0)`, reference src/etl.py:151). This is the load-time NaN→0
@@ -37,8 +38,8 @@ object Cleaning {
 
   /** F2 — keep rows with cell_id in [0, 9999]
     * (reference src/etl.py:155-156; DDL CHECK src/database.py:69). */
-  def cellIdInRange(df: DataFrame, col: String = "cell_id", lo: Int = 0, hi: Int = 9999): DataFrame =
-    df.filter(df(col).between(lo, hi))
+  def cellIdInRange(df: DataFrame): DataFrame =
+    df.filter(df("cell_id").between(0, 9999))
 
   val TrafficMetricCols: Seq[String] =
     Seq("smsin", "smsout", "callin", "callout", "internet")

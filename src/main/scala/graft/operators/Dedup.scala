@@ -474,10 +474,10 @@ object Dedup {
     * sized, not document sized — and the self-join shuffles on the key
     * string (short; hashing it buys nothing here, unlike document
     * shingles). Hot keys (short strings, heavy shared prefixes) blow the
-    * join up quadratically per bucket, so keys occurring more often than
-    * `maxKeyFreq` are dropped first — the stop-shingle prune of
+    * join up quadratically per bucket, so keys occurring more than 1000
+    * times are dropped first — the stop-shingle prune of
     * [[ngramJaccardPairs]], with the same recall caveat (a pair ONLY
-    * reachable through a pruned key is lost; `maxKeyFreq <= 0` disables).
+    * reachable through a pruned key is lost).
     * Key frequency counts row-occurrences, not distinct ids ("aa" emits
     * key "a" twice and both count) — the oracle replays the same rule.
     *
@@ -487,15 +487,14 @@ object Dedup {
     * where AQE's skew split cannot help (measured 15× max/mean task skew
     * on the q159 ER capstone — at 100× the hot key IS the wall-clock).
     * So the join is TWO-TIER, split by the same frequency table the
-    * prune already builds: keys at freq ≤ `hotKeyFreq` equi-join on the
-    * key as usual, hotter keys join on (key, salt) — the probe side
-    * bucketed by `mix64(id) mod hotSalts` ([[SkewJoin.saltedJoin]]'s
-    * deterministic spread), the build side replicated over all salts —
-    * which divides each hot key's f² bucket across `hotSalts` reducers
-    * for the cost of replicating only the hot rows. LOSSLESS: every pair
-    * still meets on exactly one (key, salt) cell (the probe row's single
-    * bucket), so the output is bit-identical to the unsalted join —
-    * DedupSpec pins it. `hotKeyFreq <= 0` or `hotSalts <= 1` disables.
+    * prune already builds: keys at freq ≤ 64 equi-join on the key as
+    * usual, hotter keys join on (key, salt) — the probe side bucketed by
+    * `mix64(id) mod 8` ([[SkewJoin.saltedJoin]]'s deterministic spread),
+    * the build side replicated over all 8 salts — which divides each hot
+    * key's f² bucket across 8 reducers for the cost of replicating only
+    * the hot rows. LOSSLESS: every pair still meets on exactly one (key,
+    * salt) cell (the probe row's single bucket), so the output is
+    * bit-identical to the unsalted join — DedupSpec pins it.
     *
     * Output: (id_a, id_b, str_a, str_b, dist) with id_a < id_b, dist ∈
     * {0, 1} — distance-0 pairs are distinct ids carrying identical
@@ -504,10 +503,7 @@ object Dedup {
   def editOnePairs(
       df: DataFrame,
       idCol: String,
-      strCol: String,
-      maxKeyFreq: Long = 1000L,
-      hotKeyFreq: Long = 64L,
-      hotSalts: Int = 8): DataFrame = {
+      strCol: String): DataFrame = {
     // Spread the (id, str) projection before the ×(len+1) key explosion:
     // the natural input here is a DIMENSION (names, SKUs — often a
     // single-rowgroup scan, Spark's atomic split), and without this the
@@ -565,36 +561,24 @@ object Dedup {
             col("__s").substr(col("__i") + 1, length(col("__s")))))
           .as("__k"))
       .repartition(para, col("__k"))
-    val saltOn = hotKeyFreq > 0 && hotSalts > 1
     // One frequency pass serves both the prune and the hot-tier split.
     val freq = keys.groupBy(col("__k")).agg(count(lit(1)).as("__kf"))
-    val pruned =
-      if (maxKeyFreq <= 0 && !saltOn) keys.withColumn("__kf", lit(1L))
-      else keys.join(
-        if (maxKeyFreq <= 0) freq else freq.filter(col("__kf") <= maxKeyFreq),
-        Seq("__k"))
+    val pruned = keys.join(freq.filter(col("__kf") <= 1000L), Seq("__k"))
     def sideCols(tag: String)(d: DataFrame) = d.select(
       col("__k") +: d.columns.filter(_ == "__g").map(col).toSeq ++: Seq(
         col("__i").as(s"__i$tag"), col("__id").as(s"id_$tag"),
         col("__s").as(s"str_$tag")): _*)
-    val candidates =
-      if (!saltOn) sideCols("a")(pruned).join(sideCols("b")(pruned), Seq("__k"))
-      else {
-        val light = pruned.filter(col("__kf") <= hotKeyFreq)
-        val hot = pruned.filter(col("__kf") > hotKeyFreq)
-        // Build side replicated over every salt; probe side lands in its
-        // one deterministic bucket — each pair meets exactly once.
-        val hotA = hot.withColumn("__g",
-          explode(sequence(lit(0), lit(hotSalts - 1))))
-        val hotB = hot.withColumn("__g",
-          pmod(graft.functions.HashFunctions.mix64(col("__id")),
-            lit(hotSalts.toLong)).cast("int"))
-        sideCols("a")(light).join(sideCols("b")(light), Seq("__k"))
-          .unionByName(
-            sideCols("a")(hotA).join(sideCols("b")(hotB), Seq("__k", "__g"))
-              .drop("__g"))
-      }
-    candidates
+    val light = pruned.filter(col("__kf") <= 64L)
+    val hot = pruned.filter(col("__kf") > 64L)
+    // Build side replicated over every salt; probe side lands in its one
+    // deterministic bucket — each pair meets exactly once.
+    val hotA = hot.withColumn("__g", explode(sequence(lit(0), lit(7))))
+    val hotB = hot.withColumn("__g",
+      pmod(graft.functions.HashFunctions.mix64(col("__id")), lit(8L)).cast("int"))
+    sideCols("a")(light).join(sideCols("b")(light), Seq("__k"))
+      .unionByName(
+        sideCols("a")(hotA).join(sideCols("b")(hotB), Seq("__k", "__g"))
+          .drop("__g"))
       .filter(col("id_a") < col("id_b") &&
         (col("__ia") === col("__ib") || col("__ia") === 0 || col("__ib") === 0))
       // same pair can qualify through several keys (an equal-string pair

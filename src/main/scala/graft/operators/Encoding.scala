@@ -13,7 +13,7 @@ object Encoding {
   /** Leave-one-out target encoding: each row's category is replaced by
     * the mean target of the OTHER rows in its category —
     * `enc = (Σ_cat − v_row) div (n_cat − 1)` in integer units of
-    * `1/scale` — the standard leakage guard (a row never sees its own
+    * 10⁻⁶ — the standard leakage guard (a row never sees its own
     * target; naive mean encoding leaks the label and inflates CV scores).
     * Singleton categories encode NULL (no "others" to average; impute
     * downstream). Targets quantize by `floor`, and the formula requires
@@ -28,12 +28,11 @@ object Encoding {
   def looTargetEncode(
       df: DataFrame,
       catCol: String,
-      targetCol: String,
-      scale: Long = 1000000L): DataFrame = {
+      targetCol: String): DataFrame = {
     val q = df.withColumn("__v",
       expr(s"""CAST(floor(CASE WHEN $targetCol < 0
               |  THEN raise_error('looTargetEncode: negative target — truncating vs flooring division diverge')
-              |  ELSE $targetCol END * $scale) AS BIGINT)""".stripMargin))
+              |  ELSE $targetCol END * 1000000) AS BIGINT)""".stripMargin))
     val stats = q.groupBy(col(catCol))
       .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
     q.join(broadcast(stats), Seq(catCol))
@@ -121,18 +120,14 @@ object Encoding {
   def percentRankPpmByValue(
       df: DataFrame,
       groupCols: Seq[String],
-      valueCol: String,
-      dropNulls: Boolean = false): DataFrame = {
+      valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
-    val guarded =
-      if (dropNulls) df.filter(col(valueCol).isNotNull)
-      else df.withColumn(valueCol,
-        when(col(valueCol).isNull,
-          raise_error(lit(s"percentRankPpmByValue: null $valueCol — engines " +
-            "disagree on null rank placement; filter nulls first or pass " +
-            "dropNulls = true")).cast(df.schema(valueCol).dataType))
-          .otherwise(col(valueCol)))
+    val guarded = df.withColumn(valueCol,
+      when(col(valueCol).isNull,
+        raise_error(lit(s"percentRankPpmByValue: null $valueCol — engines " +
+          "disagree on null rank placement; filter nulls first")).cast(df.schema(valueCol).dataType))
+        .otherwise(col(valueCol)))
     val w = Window.partitionBy(g: _*).orderBy(col(valueCol))
     val wg = Window.partitionBy(g: _*)
     guarded

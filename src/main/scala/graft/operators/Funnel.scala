@@ -49,34 +49,6 @@ object Funnel {
     }
   }
 
-  /** The funnel report: one row per step with the user count that reached
-    * it and the conversion share relative to step 1. */
-  def report(
-      events: DataFrame,
-      userCol: String,
-      typeCol: String,
-      tsCol: String,
-      steps: Seq[String]): DataFrame = {
-    val per = userSteps(events, userCol, typeCol, tsCol, steps)
-    // One global count row (n1..nN), then N tiny struct rows exploded out
-    // of it — conversion shares divide inside the single row, no window.
-    val counts = per.agg(
-      count(col("t1")).as("n1"),
-      steps.indices.drop(1).map(i => count(col(s"t${i + 1}")).as(s"n${i + 1}")): _*)
-    val stepRows = steps.zipWithIndex.map { case (step, i) =>
-      struct(
-        lit(i + 1).cast("long").as("step"),
-        lit(step).as("step_name"),
-        col(s"n${i + 1}").as("n_users"),
-        when(col("n1") === 0L, lit(0.0))
-          .otherwise(col(s"n${i + 1}").cast("double") / col("n1").cast("double"))
-          .as("conversion"))
-    }
-    counts
-      .select(explode(array(stepRows: _*)).as("r"))
-      .select(col("r.step"), col("r.step_name"), col("r.n_users"), col("r.conversion"))
-  }
-
   /** Event-transition matrix ("top paths"): for each adjacent pair of
     * events per user in time order, count (from_type → to_type) and its
     * share of all transitions leaving `from_type` — the Markov-chain view

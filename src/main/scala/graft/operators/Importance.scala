@@ -29,14 +29,18 @@ import graft.functions.TextFunctions
   *
   * Scale shape (the part that must survive 100 TB): the token stream never
   * crosses the wire raw — per-bucket counts are map-side-combined to
-  * ≤ numBuckets rows per side; the bucket verdict table (numBuckets rows,
-  * one boolean) broadcasts back onto the corpus token scan; per-document
+  * ≤ 1024 rows per side; the bucket verdict table (1024 rows, one
+  * boolean) broadcasts back onto the corpus token scan; per-document
   * scoring is one idCol-keyed partial aggregation (a document's exploded
   * tokens stay in its scan partition, so the shuffle carries one row per
   * document). Two corpus scans total — the DSIR minimum (one to learn the
   * bucket distributions, one to score).
   */
 object Importance {
+
+  /** Hashed-unigram buckets, a power of two: the paper's hashed feature
+    * space (collisions are part of the method, not a bug). */
+  private val NumBuckets = 1024
 
   /** Per-document enrichment score against a target corpus.
     *
@@ -46,31 +50,21 @@ object Importance {
     * is their fraction (0.0 for empty documents). Tokens are
     * [[TextFunctions.tokens]] (whitespace on trimmed text — the corpus
     * tokenizer shared with TF-IDF/vocabulary), buckets are
-    * `xxhash64(token) & (numBuckets-1)`.
-    *
-    * @param numBuckets power of two; the paper's hashed feature space
-    *                   (collisions are part of the method, not a bug).
+    * `xxhash64(token) & 1023`.
     */
   def enrichmentScores(
       corpus: DataFrame,
       target: DataFrame,
       idCol: String,
-      textCol: String,
-      numBuckets: Int = 1024): DataFrame =
-    applyVerdicts(corpus,
-      bucketVerdicts(corpus, target, idCol, textCol, numBuckets),
-      idCol, textCol, numBuckets)
+      textCol: String): DataFrame =
+    applyVerdicts(corpus, bucketVerdicts(corpus, target, idCol, textCol), idCol, textCol)
 
-  private def bucketed(
-      df: DataFrame, idCol: String, textCol: String, numBuckets: Int): DataFrame = {
-    require(numBuckets > 0 && (numBuckets & (numBuckets - 1)) == 0,
-      s"numBuckets must be a power of two, got $numBuckets")
+  private def bucketed(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("__tok"))
-      .withColumn("bucket", xxhash64(col("__tok")).bitwiseAND(lit((numBuckets - 1).toLong)))
+      .withColumn("bucket", xxhash64(col("__tok")).bitwiseAND(lit((NumBuckets - 1).toLong)))
       .drop("__tok")
-  }
 
-  /** The learned artifact: `(bucket, enriched)` — ≤ numBuckets rows,
+  /** The learned artifact: `(bucket, enriched)` — ≤ 1024 rows,
     * persistable and reusable, so a NEW crawl batch can be scored by
     * [[applyVerdicts]] without rescanning the corpus that trained it (the
     * incremental pattern the cross-corpus dedup band table uses). */
@@ -78,11 +72,10 @@ object Importance {
       corpus: DataFrame,
       target: DataFrame,
       idCol: String,
-      textCol: String,
-      numBuckets: Int = 1024): DataFrame = {
-    val cntR = bucketed(corpus, idCol, textCol, numBuckets)
+      textCol: String): DataFrame = {
+    val cntR = bucketed(corpus, idCol, textCol)
       .groupBy(col("bucket")).agg(count(lit(1)).as("__cr"))
-    val cntT = bucketed(target, idCol, textCol, numBuckets)
+    val cntT = bucketed(target, idCol, textCol)
       .groupBy(col("bucket")).agg(count(lit(1)).as("__ct"))
     // Token-mass totals: two 1-row frames, broadcast as a scalar join. The
     // empty-target coalesce makes "no target" degrade to "nothing
@@ -114,9 +107,8 @@ object Importance {
       docs: DataFrame,
       verdicts: DataFrame,
       idCol: String,
-      textCol: String,
-      numBuckets: Int = 1024): DataFrame = {
-    val perDoc = bucketed(docs, idCol, textCol, numBuckets)
+      textCol: String): DataFrame = {
+    val perDoc = bucketed(docs, idCol, textCol)
       .join(broadcast(verdicts), Seq("bucket"), "left")
       .groupBy(col(idCol))
       .agg(
@@ -137,12 +129,10 @@ object Importance {
   }
 
   /** Collect a [[bucketVerdicts]] table into the bitmap
-    * [[applyVerdictsFused]] wants: numBuckets/64 longs (16 at the default
-    * 1024) — the same justified driver pull as an IVF centroid table. */
-  def verdictBits(verdicts: DataFrame, numBuckets: Int = 1024): Array[Long] = {
-    require(numBuckets >= 64 && (numBuckets & (numBuckets - 1)) == 0,
-      s"numBuckets must be a power of two >= 64, got $numBuckets")
-    val bits = new Array[Long](numBuckets / 64)
+    * [[applyVerdictsFused]] wants: 1024/64 = 16 longs — the same justified
+    * driver pull as an IVF centroid table. */
+  def verdictBits(verdicts: DataFrame): Array[Long] = {
+    val bits = new Array[Long](NumBuckets / 64)
     verdicts.filter(col("enriched")).select(col("bucket")).collect().foreach { r =>
       val b = r.getLong(0).toInt
       bits(b >>> 6) |= 1L << (b & 63)

@@ -48,16 +48,6 @@ object Layout {
   def zOrder2(x: Column, y: Column): Column =
     spread16(x.cast("long")).bitwiseOR(shiftleft(spread16(y.cast("long")), 1))
 
-  /** Quantize a double coordinate in [lo, hi] onto the [0, 2^ZBits) grid —
-    * the float→int step before [[zOrder2]] for lon/lat-like columns.
-    * Out-of-range values clamp to the edge cells. */
-  def quantize(c: Column, lo: Double, hi: Double): Column = {
-    require(hi > lo, s"empty quantize range [$lo, $hi]")
-    val cells = (1L << ZBits) - 1
-    least(lit(cells), greatest(lit(0L),
-      floor((c - lit(lo)) / lit(hi - lo) * lit(cells.toDouble + 1)).cast("long")))
-  }
-
   /** File-skipping audit: quantify what a z-clustered layout would prune
     * for a set of bbox probes, from footprint statistics alone — the
     * decision artifact for "is re-clustering this 100 TB table worth it",

@@ -150,17 +150,13 @@ object Merge {
 
   /** Mergeable per-key summary: count / exact-decimal sum / min / max of
     * `valueCol` — the incremental-view-maintenance building block. The
-    * sum stays DECIMAL(38, scale) (not double) so merging partials is
-    * EXACT and order-independent; cast at presentation time. */
-  def summarize(
-      df: DataFrame,
-      keys: Seq[String],
-      valueCol: String,
-      scale: Int = 4): DataFrame =
+    * sum stays DECIMAL(38, 4) (not double) so merging partials is EXACT
+    * and order-independent; cast at presentation time. */
+  def summarize(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(
         count(lit(1)).as("n_rows"),
-        sum(col(valueCol).cast(org.apache.spark.sql.types.DecimalType(38, scale)))
+        sum(col(valueCol).cast(org.apache.spark.sql.types.DecimalType(38, 4)))
           .as("sum_v"),
         min(col(valueCol)).as("min_v"),
         max(col(valueCol)).as("max_v"))

@@ -20,7 +20,8 @@ object Rollup {
     * datetime), cell_id, SUM(each metric), SUM(total)` — reference
     * v_hourly_traffic. Exact (order-independent) sums so re-runs at any
     * partitioning produce identical doubles. */
-  def hourlyTraffic(fact: DataFrame, metrics: Seq[String] = Cleaning.TrafficMetricCols): DataFrame = {
+  def hourlyTraffic(fact: DataFrame): DataFrame = {
+    val metrics = Cleaning.TrafficMetricCols
     val totalExpr = metrics.map(col).reduce(_ + _)
     val aggs =
       metrics.map(m => sumExact(col(m)).as(s"total_$m")) :+
@@ -131,8 +132,7 @@ object Rollup {
     *
     * The reference time is `max(date(tsCol))` over the input — derived from
     * the data, so the score is a pure function of the table (re-runnable,
-    * cacheable); pass a wall-clock literal instead via `refDate` for
-    * production freshness.
+    * cacheable).
     *
     * Plan shape: one scalar max (broadcast back as a 1-row cross join) +
     * one map-side-combined aggregation — two scans, no row shuffle beyond
@@ -142,18 +142,13 @@ object Rollup {
       groupCols: Seq[String],
       tsCol: Column,
       stepDays: Int = 7,
-      maxSteps: Int = 12,
-      refDate: Option[Column] = None): DataFrame = {
+      maxSteps: Int = 12): DataFrame = {
     require(stepDays > 0, "stepDays must be positive")
     require(maxSteps >= 1 && maxSteps <= 62, s"maxSteps must be in [1,62], got $maxSteps")
     val g = groupCols.map(col)
-    val withRef = refDate match {
-      case Some(r) => df.withColumn("__ref", r)
-      case None => df.crossJoin(broadcast(df.agg(max(to_date(tsCol)).as("__ref"))))
-    }
-    // ages are small integers: the double division inside floor is exact.
-    // Clamp below at 0 so rows NEWER than an explicit refDate weigh like
-    // "now" instead of overflowing the shift.
+    val withRef = df.crossJoin(broadcast(df.agg(max(to_date(tsCol)).as("__ref"))))
+    // ages are small integers: the double division inside floor is exact;
+    // steps are clamped into [0, maxSteps].
     val steps = greatest(
       lit(0),
       least(

@@ -37,7 +37,7 @@ object Sampling {
     * scale tier for "drop each language's bottom quartile by quality":
     * exact per-group percentiles sort the whole group (billion-row buffer
     * cliffs), sketches are engine-specific; a SplitMix64 id-sample (low 10
-    * bits < `sampleBits`/1024) cuts the sorted buffer while both engines
+    * bits < 256: a quarter of the ids) cuts the sorted buffer while both engines
     * select the IDENTICAL rows, so the quantile — exact on the sample — is
     * bit-reproducible. The sample predicate rides the scan; the output is
     * group-count-sized, broadcast it into the gating filter.
@@ -54,14 +54,12 @@ object Sampling {
       groupCol: String,
       valueCol: String,
       q: Double,
-      salt: Long,
-      sampleBits: Long = 256L): DataFrame = {
+      salt: Long): DataFrame = {
     require(q > 0 && q < 1, s"quantile must be in (0,1), got $q")
-    require(sampleBits > 0 && sampleBits <= 1024, "sampleBits is out of 1024")
     requireIntegralId(df, idCol, "quantileThresholds")
     df.filter(
         HashFunctions.seeded(col(idCol).cast("long"), lit(salt))
-          .bitwiseAND(lit(1023L)) < lit(sampleBits))
+          .bitwiseAND(lit(1023L)) < lit(256L))
       .groupBy(col(groupCol))
       .agg(
         percentile(col(valueCol), lit(q)).as("threshold"),

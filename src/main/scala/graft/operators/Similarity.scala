@@ -454,7 +454,7 @@ object Similarity {
     cents.map(_.map(_._2))
   }
 
-  /** Encode each vector as `m` dense codes — the 0-based index of the
+  /** Encode each vector as `m` dense codes in column `codes` — the 0-based index of the
     * nearest sub-centroid per subspace (exact-decimal L2, ties to the
     * smaller code). Map-only: codebooks arrive as literals, one projection,
     * no shuffle — the 100 TB encode pass is embarrassingly parallel and
@@ -462,8 +462,7 @@ object Similarity {
   def pqEncode(
       corpus: DataFrame,
       vecCol: String,
-      books: Array[Array[Seq[Double]]],
-      codesCol: String = "codes"): DataFrame = {
+      books: Array[Array[Seq[Double]]]): DataFrame = {
     val sub = books(0)(0).size
     // Each subspace's code IS a nearest-centroid assignment over the
     // codebook — exactly the IvfArgminL2 kernel with labels 0..k'−1 (same
@@ -480,7 +479,7 @@ object Similarity {
       graft.plans.GraftFunctions.ivfArgmin(
         slice(col(vecCol), s * sub + 1, sub), labels, rows).cast("int")
     }
-    corpus.withColumn(codesCol, array(codeExprs.toSeq: _*))
+    corpus.withColumn("codes", array(codeExprs.toSeq: _*))
   }
 
   /** PQ ANN search via asymmetric distance computation (ADC, Jégou et al.

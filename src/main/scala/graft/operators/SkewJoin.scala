@@ -32,7 +32,7 @@ import graft.functions.HashFunctions
   */
 object SkewJoin {
 
-  /** Inner/left equi-join of `big` (skewed fact) with `dim` on `key`,
+  /** Inner equi-join of `big` (skewed fact) with `dim` on `key`,
     * shuffle-partitioned on `(key, salt)`.
     *
     * @param bigRowKey any per-row column of `big` with high cardinality
@@ -47,11 +47,8 @@ object SkewJoin {
       dim: DataFrame,
       key: String,
       bigRowKey: org.apache.spark.sql.Column,
-      salts: Int,
-      joinType: String = "inner"): DataFrame = {
+      salts: Int): DataFrame = {
     require(salts > 0, "salts must be positive")
-    require(joinType == "inner" || joinType == "left",
-      s"saltedJoin supports inner/left (dim side is replicated), got $joinType")
     val salted = big.withColumn(
       "__salt", pmod(HashFunctions.mix64(bigRowKey), lit(salts.toLong)).cast("int"))
     // sequence+explode replicates each dim row once per salt; the
@@ -61,6 +58,6 @@ object SkewJoin {
     val replicated = dim
       .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
       .hint("shuffle_hash")
-    salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
+    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
-import graft.{Harness, Json}
+import graft.Json
 
 /** Per-query execution metrics via `SparkListener` — the engine's parity
   * artifact for the reference's Prometheus/Grafana stack (reference
@@ -171,14 +171,6 @@ final class MetricsListener extends SparkListener {
     if (g == null) None else Some(g.synchronized(g.json))
   }
 
-  /** One JSON object `{group: datasheet}`, groups sorted. */
-  def snapshotJson(): String = {
-    import scala.jdk.CollectionConverters._
-    byGroup.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => Json.str(k) + ":" + v.synchronized(v.json) }
-      .mkString("{", ",", "}")
-  }
-
   /** Datasheet restricted to `selection` (output name → recorded group):
     * Bench maps each query to the job group of its WINNING (min-time)
     * pass, so the emitted numbers describe one clean execution — not a
@@ -201,7 +193,4 @@ final class MetricsListener extends SparkListener {
         }
     members.mkString("{", ",", "}")
   }
-
-  /** Write the datasheet file (parent dirs created). */
-  def write(path: java.nio.file.Path): Unit = Harness.writeFile(path, snapshotJson())
 }

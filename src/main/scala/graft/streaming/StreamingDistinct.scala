@@ -29,8 +29,7 @@ import graft.operators.Sketches
   * Scale shape: state shuffles once on the group key; each state record is
   * `m` bytes (256 for p=8) however many distinct keys the group has seen —
   * the property that lets a 100 TB event feed keep per-entity cardinality
-  * live without per-key state. Idle groups are evicted by processing-time
-  * timeout after `idleEvict`.
+  * live without per-key state.
   */
 object StreamingDistinct {
 
@@ -61,43 +60,23 @@ object StreamingDistinct {
     Sketches.hllNumerator(8) / s.toDouble
   }
 
-  /** Per-group running distinct estimate over a streaming feed.
-    *
-    * @param idleEvict optional processing-time timeout after which an idle
-    *                  group's registers are dropped (its next event starts
-    *                  fresh — the bounded-state trade for an indefinite
-    *                  run). Default None: registers live forever, and —
-    *                  important operationally — the engine does NOT have to
-    *                  run continuous empty micro-batches just to poll
-    *                  timeouts, which a registered processing-time timeout
-    *                  forces on a default (as-fast-as-possible) trigger.
-    */
-  def runningDistinct(
-      events: Dataset[KeyedValue],
-      idleEvict: Option[String] = None): Dataset[DistinctEstimate] = {
+  /** Per-group running distinct estimate over a streaming feed. A
+    * group's registers live as long as the query: no state timeout is
+    * registered, so the engine never has to run empty micro-batches just
+    * to poll timeouts. */
+  def runningDistinct(events: Dataset[KeyedValue]): Dataset[DistinctEstimate] = {
     implicit val stateEnc = Encoders.product[HllState]
     implicit val outEnc = Encoders.product[DistinctEstimate]
-    val timeoutConf = if (idleEvict.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events
       .groupByKey(_.group)(Encoders.STRING)
-      .mapGroupsWithState(timeoutConf)(
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
         (group: String, batch: Iterator[KeyedValue], state: GroupState[HllState]) => {
-          if (batch.isEmpty && state.hasTimedOut) {
-            val out = state.getOption
-              .map(s => DistinctEstimate(group, estimate(s.regs), s.n))
-              .getOrElse(DistinctEstimate(group, 0.0, 0L))
-            state.remove()
-            out
-          } else {
-            val s = state.getOption.getOrElse(HllState(new Array[Byte](256), 0L))
-            var n = s.n
-            batch.foreach { e => update(s.regs, e.key); n += 1 }
-            val next = HllState(s.regs, n)
-            state.update(next)
-            idleEvict.foreach(state.setTimeoutDuration)
-            DistinctEstimate(group, estimate(next.regs), n)
-          }
+          val s = state.getOption.getOrElse(HllState(new Array[Byte](256), 0L))
+          var n = s.n
+          batch.foreach { e => update(s.regs, e.key); n += 1 }
+          val next = HllState(s.regs, n)
+          state.update(next)
+          DistinctEstimate(group, estimate(next.regs), n)
         })
   }
 

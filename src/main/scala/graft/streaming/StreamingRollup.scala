@@ -17,23 +17,19 @@ import graft.functions.AggFunctions
   */
 object StreamingRollup {
 
-  /** Tumbling 1-hour event-time rollup with late-data watermark.
-    *
-    * @param df        streaming frame with `tsCol` event time
-    * @param watermark e.g. "2 hours" — late rows beyond this are dropped
-    *                  (the batch reference has no late-data policy; it
-    *                  re-reads whole files, so batch remains the
-    *                  correctness source of truth)
+  /** Tumbling 1-hour event-time rollup of a streaming frame with `tsCol`
+    * event time, under a 2-hour late-data watermark: later rows are
+    * dropped (the batch reference has no late-data policy; it re-reads
+    * whole files, so batch remains the correctness source of truth).
     */
   def hourlyWindow(
       df: DataFrame,
       tsCol: String,
       keys: Seq[String],
-      valueCol: String,
-      watermark: String = "2 hours"
+      valueCol: String
   ): DataFrame = {
     val groupCols = window(col(tsCol), "1 hour") +: keys.map(col)
-    df.withWatermark(tsCol, watermark)
+    df.withWatermark(tsCol, "2 hours")
       .groupBy(groupCols: _*)
       .agg(
         count(lit(1)).as("n_events"),
@@ -44,7 +40,8 @@ object StreamingRollup {
       )
   }
 
-  /** [[hourlyWindow]] driven through the REAL Structured-Streaming engine:
+  /** [[hourlyWindow]] of the events table (`value` summed per hour and
+    * `event_type`) driven through the REAL Structured-Streaming engine:
     * `readStream` file source over the events parquet → watermarked
     * tumbling-window aggregation → checkpointed sink, run to completion
     * with `Trigger.AvailableNow()`. This is the reference's actual
@@ -66,21 +63,15 @@ object StreamingRollup {
     * call time (a terminal streaming result has no lazy form), so even a
     * schema-only caller pays one full execution.
     */
-  def hourlyWindowFileStream(
-      spark: SparkSession,
-      eventsPath: String,
-      tsCol: String = "ts",
-      keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "value"
-  ): DataFrame = {
+  def hourlyWindowFileStream(spark: SparkSession, eventsPath: String): DataFrame = {
     val raw = StreamingHarness.fileSource(spark, eventsPath)
     // Watermarks require an instant type; apply Tables.instantTs — the
     // SHARED vintage dispatch (TIMESTAMP(NANOS)-as-LongType needs
     // timestamp_micros(ts DIV 1000); a bare cast would read the long as
     // SECONDS since epoch and produce garbage windows). One helper, not a
     // copy: the two sites drifting is exactly how that bug shipped once.
-    val stream = raw.withColumn(tsCol, graft.Tables.instantTs(raw.schema, tsCol))
-    val rolled = hourlyWindow(stream, tsCol, keys, valueCol)
+    val stream = raw.withColumn("ts", graft.Tables.instantTs(raw.schema, "ts"))
+    val rolled = hourlyWindow(stream, "ts", Seq("event_type"), "value")
     StreamingHarness.runToMemorySink(spark, rolled, "complete", Nil, Seq(eventsPath))
   }
 
@@ -90,22 +81,22 @@ object StreamingRollup {
     * when per-session logic is a plain aggregation (state handled entirely
     * by the engine: a session closes once the watermark passes its end);
     * use the custom-state form when the session needs bespoke
-    * accumulators or emission timing. Works identically on batch frames
-    * (no watermark state — pure event-time grouping).
+    * accumulators or emission timing. The watermark is 2 hours, as in
+    * [[hourlyWindow]]. Works identically on batch frames (no watermark
+    * state — pure event-time grouping).
     */
   def sessionWindow(
       df: DataFrame,
       tsCol: String,
       keys: Seq[String],
-      gap: String,
-      watermark: String = "2 hours"
+      gap: String
   ): DataFrame = {
     // Spark rejects GLOBAL session-window aggregation on streams at
     // runtime; require the key up front so the failure is immediate.
     require(keys.nonEmpty,
       "session_window streaming aggregation needs at least one grouping key")
     val groupCols = session_window(col(tsCol), gap) +: keys.map(col)
-    df.withWatermark(tsCol, watermark)
+    df.withWatermark(tsCol, "2 hours")
       .groupBy(groupCols: _*)
       .agg(count(lit(1)).as("n_events"))
       .select(

@@ -88,71 +88,4 @@ class BpeSpec extends SparkSpec {
     val b = BpeTrainer.train(vocab.repartition(13), nMerges = 3)._1
     assert(a == b)
   }
-
-  test("batchSize=1 is byte-identical to unbatched training (the q188 contract)") {
-    val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
-      .toDF("word", "freq")
-    val (m1, s1) = BpeTrainer.train(vocab, nMerges = 4, trackSymbolMass = true)
-    val (mb, sb) = BpeTrainer.train(vocab, nMerges = 4, trackSymbolMass = true, batchSize = 1)
-    assert(m1 == mb)
-    assert(finalSyms(s1) == finalSyms(sb))
-  }
-
-  test("batched rounds pick symbol-disjoint merges and skip conflicts in rank order") {
-    // round-start pair counts: (e,s)=9, (es,t) doesn't exist yet,
-    // (s,t)=9, (l,o)=7, (o,w)=7, (w,e)=8, ... — under B=3 the picks must
-    // be (e,s)=9 first, then (s,t)=9 SKIPPED (shares s), (w,e)=8 SKIPPED
-    // (shares e), then (l,o)=7, then (o,w) SKIPPED (shares o) → next
-    // non-conflicting pair.
-    val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
-      .toDF("word", "freq")
-    val (merges, _) = BpeTrainer.train(vocab, nMerges = 3, batchSize = 3)
-    assert(merges.size == 3)
-    // first pick is always the global argmax — identical to B=1 round 0
-    assert((merges(0).lhs, merges(0).rhs, merges(0).pairFreq) == ("e", "s", 9L))
-    // all three picks are symbol-disjoint, including created symbols
-    val touched = merges.flatMap(m => Seq(m.lhs, m.rhs))
-    assert(touched.distinct.size == touched.size, s"non-disjoint batch: $merges")
-    val created = merges.map(m => m.lhs + m.rhs).toSet
-    assert(touched.forall(sym => !created.contains(sym)))
-    // ranks are sequential across the batch
-    assert(merges.map(_.rank) == Seq(0, 1, 2))
-  }
-
-  test("batched training converges to the same encoding as sequential on disjoint tails") {
-    // A vocab whose top pairs never conflict: batched and sequential
-    // training must produce the SAME merge set (possibly different rank
-    // interleaving) and the same final encoding when each pair's count is
-    // untouched by the others.
-    val vocab = Seq(("ab", 9L), ("cd", 7L), ("ef", 5L), ("gh", 3L))
-      .toDF("word", "freq")
-    val seq = BpeTrainer.train(vocab, nMerges = 4)
-    val bat = BpeTrainer.train(vocab, nMerges = 4, batchSize = 4)
-    assert(seq._1.map(m => (m.lhs, m.rhs, m.pairFreq)) ==
-      bat._1.map(m => (m.lhs, m.rhs, m.pairFreq)))
-    assert(finalSyms(seq._2) == finalSyms(bat._2))
-    // and the batched run did it in ONE round's worth of merges
-    assert(bat._1.map(_.rank) == Seq(0, 1, 2, 3))
-  }
-
-  test("encodeVocab reproduces batched training's final state too") {
-    val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
-      .toDF("word", "freq")
-    val (merges, trained) = BpeTrainer.train(vocab, nMerges = 4, batchSize = 2)
-    val encoded = BpeTrainer.encodeVocab(vocab, merges)
-    assert(finalSyms(encoded) == finalSyms(trained))
-  }
-
-  test("trainRounds reports the executed round count and matches train verbatim") {
-    val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
-      .toDF("word", "freq")
-    val (m1, s1) = BpeTrainer.train(vocab, nMerges = 4, batchSize = 2)
-    val (m2, s2, rounds) = BpeTrainer.trainRounds(vocab, nMerges = 4, batchSize = 2)
-    assert(m1 == m2)
-    assert(finalSyms(s1) == finalSyms(s2))
-    // rounds is bounded below by the batching floor and above by the
-    // sequential count (conflict skips can only stretch, never compress)
-    assert(rounds >= (m2.size + 1) / 2 && rounds <= m2.size,
-      s"rounds=$rounds for ${m2.size} merges at B=2")
-  }
 }

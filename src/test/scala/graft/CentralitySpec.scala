@@ -43,13 +43,10 @@ class CentralitySpec extends SparkSpec {
     assert(one(2L) > one(3L) && one(3L) > one(4L))
   }
 
-  test("iteration count and damping validation") {
+  test("iteration count validation") {
     val e = Seq((0L, 1L)).toDF("a", "b")
     intercept[IllegalArgumentException] {
       Centrality.pageRank(e, "a", "b", iterations = 0)
-    }
-    intercept[IllegalArgumentException] {
-      Centrality.pageRank(e, "a", "b", dampPct = 120)
     }
   }
 
@@ -79,8 +76,8 @@ class CentralitySpec extends SparkSpec {
     assert(triangles(tail) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
-  private def kcore(pairs: Seq[(Long, Long)], k: Int, maxIter: Int = 30): Map[Long, Long] =
-    Centrality.kCore(pairs.toDF("a", "b"), "a", "b", k, maxIter)
+  private def kcore(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] =
+    Centrality.kCore(pairs.toDF("a", "b"), "a", "b", k)
       .as[(Long, Long)].collect().toMap
 
   /** Driver-side peel replay to the fixpoint. */
@@ -112,9 +109,10 @@ class CentralitySpec extends SparkSpec {
     val pairs = (1 to 150).map(_ => (rng.nextInt(25).toLong, rng.nextInt(25).toLong))
     for (k <- Seq(2, 4, 6))
       assert(kcore(pairs, k) == bruteKCore(pairs, k), s"mismatch at k=$k")
-    // the 8-path needs ~4 peel rounds; maxIter=1 must throw, not return
-    val path = (1L to 8L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val e = intercept[IllegalStateException] { kcore(path, 2, maxIter = 1) }
+    // a 66-node path peels one node off each end per round: 33 rounds
+    // exceed the 30-round budget, which must throw, not return
+    val path = (1L to 66L).sliding(2).map(s => (s(0), s(1))).toSeq
+    val e = intercept[IllegalStateException] { kcore(path, 2) }
     assert(e.getMessage.contains("fixpoint"))
   }
 

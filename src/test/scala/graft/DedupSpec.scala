@@ -55,25 +55,29 @@ class DedupSpec extends SparkSpec {
     assert(!got.contains((1L, 2L, 1)) && !got.contains((1L, 2L, 2)))
   }
 
-  test("editOnePairs position trick agrees with true Levenshtein on random strings") {
-    // independent DP edit distance, driver-side
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
-    val rnd = new scala.util.Random(42)
-    val strs = (0L until 80L).map(i =>
-      (i, (0 until rnd.nextInt(5)).map(_ => ('a' + rnd.nextInt(2)).toChar).mkString))
-    val expected = (for {
+  /** Independent DP edit distance, driver-side. */
+  private def lev(a: String, b: String): Int = {
+    val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
+    for (i <- 1 to a.length; j <- 1 to b.length)
+      d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
+        d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+    d(a.length)(b.length)
+  }
+
+  /** Every (id_a, id_b, dist) with id_a < id_b and dist ≤ 1, by brute force. */
+  private def editOneReplay(strs: Seq[(Long, String)]): Set[(Long, Long, Int)] =
+    (for {
       (ia, sa) <- strs; (ib, sb) <- strs
       if ia < ib && lev(sa, sb) <= 1
     } yield (ia, ib, lev(sa, sb))).toSet
-    val got = Dedup.editOnePairs(strs.toDF("id", "name"), "id", "name", maxKeyFreq = 0L)
+
+  test("editOnePairs position trick agrees with true Levenshtein on random strings") {
+    val rnd = new scala.util.Random(42)
+    val strs = (0L until 80L).map(i =>
+      (i, (0 until rnd.nextInt(5)).map(_ => ('a' + rnd.nextInt(2)).toChar).mkString))
+    val got = Dedup.editOnePairs(strs.toDF("id", "name"), "id", "name")
       .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSet
-    assert(got == expected)
+    assert(got == editOneReplay(strs))
   }
 
   test("prefixFilterJaccardJoin scale-relative guard: silent on healthy ratio, fires on a hot bucket") {
@@ -94,32 +98,31 @@ class DedupSpec extends SparkSpec {
   }
 
   test("editOnePairs hot-key prune drops pairs only reachable through pruned keys") {
-    val rows = (0L to 9L).map(i => (i, s"x$i")).toDF("id", "name")
-    // every "x<d>" emits deletion key "x": freq 10 → pruned at maxKeyFreq=5,
-    // and the single-char key "<d>" survives but matches nothing
-    val pruned = Dedup.editOnePairs(rows, "id", "name", maxKeyFreq = 5L).count()
-    assert(pruned == 0L)
-    val unpruned = Dedup.editOnePairs(rows, "id", "name", maxKeyFreq = 0L).count()
-    assert(unpruned == 45L) // all C(10,2) pairs are substitutions at pos 2
+    // every "x<c>" (c one of n distinct chars) emits deletion key "x" n
+    // times, and the single-char key "<c>" survives but matches nothing;
+    // all C(n,2) pairs are substitutions at position 2, reachable only
+    // through "x"
+    def rows(n: Int) = (0 until n).map(i => (i.toLong, "x" + (0x4E00 + i).toChar))
+      .toDF("id", "name")
+    assert(Dedup.editOnePairs(rows(1001), "id", "name").count() == 0L) // freq 1001: pruned
+    assert(Dedup.editOnePairs(rows(1000), "id", "name").count() == 499500L) // freq 1000 kept
   }
 
   test("editOnePairs hot-key salting is lossless: salted == unsalted, pair-for-pair") {
     // Adversarial fixture: one scorching key family (every "k<d><d>" shares
-    // deletion keys at freq ≫ hotKeyFreq) plus a cold tail — pairs must
-    // be identical whether the hot tier joins on (key, salt) or the plain
-    // key, including each pair's min-dist label.
+    // deletion keys "k<d>" at freq ≫ 64, the hot-tier threshold) plus a
+    // cold tail — the hot tier joins on (key, salt), and its pairs must
+    // equal the unsalted brute-force replay, including each pair's
+    // min-dist label.
     val rnd = new scala.util.Random(7)
-    val rows = (0L until 120L).map(i =>
-      (i, if (i < 60) f"k${rnd.nextInt(30)}%02d" else s"cold-$i-${rnd.nextInt(4)}"))
-      .toDF("id", "name")
-    def run(salts: Int, hotAt: Long) =
-      Dedup.editOnePairs(rows, "id", "name", maxKeyFreq = 0L,
-          hotKeyFreq = hotAt, hotSalts = salts)
-        .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSet
-    val unsalted = run(salts = 1, hotAt = 0L)
-    assert(run(salts = 8, hotAt = 4L) == unsalted)   // nearly everything hot
-    assert(run(salts = 3, hotAt = 64L) == unsalted)  // default-ish split
-    assert(unsalted.nonEmpty)
+    val strs = (0L until 400L).map(i =>
+      (i, if (i < 300) f"k${rnd.nextInt(30)}%02d" else s"cold-$i-${rnd.nextInt(4)}"))
+    val hotKeys = strs.flatMap { case (_, s) => (1 to s.length).map(i => s.patch(i - 1, "", 1)) }
+      .groupBy(identity).count(_._2.size > 64)
+    assert(hotKeys > 0) // the salted tier really runs
+    val got = Dedup.editOnePairs(strs.toDF("id", "name"), "id", "name")
+      .select("id_a", "id_b", "dist").as[(Long, Long, Int)].collect().toSet
+    assert(got.nonEmpty && got == editOneReplay(strs))
   }
 
   test("minhash signatures are identical for identical texts, close for near-dups") {

@@ -110,16 +110,12 @@ class EncodingSpec extends SparkSpec {
     assert(byValue == perRow)
   }
 
-  test("percentRankPpmByValue: loud on nulls by default, drops on opt-in") {
+  test("percentRankPpmByValue: loud on nulls") {
     val df = Seq(("g", Some(10.0)), ("g", None), ("g", Some(30.0)))
       .toDF("grp", "v")
     val e = intercept[Exception] {
       Encoding.percentRankPpmByValue(df, Seq("grp"), "v").collect()
     }
     assert(e.getMessage.contains("percentRankPpmByValue"))
-    val got = Encoding.percentRankPpmByValue(df, Seq("grp"), "v", dropNulls = true)
-      .select("v", "pr_ppm", "n_rows").as[(Option[Double], Long, Long)]
-      .collect().toSet
-    assert(got == Set((Some(10.0), 0L, 1L), (Some(30.0), 1000000L, 1L)))
   }
 }

@@ -37,14 +37,6 @@ class LayoutSpec extends SparkSpec {
     assert(df.select(Layout.zOrder2($"x", $"y")).distinct().count() == n.toLong * n)
   }
 
-  test("quantize maps the range onto [0, 2^16) and clamps outliers") {
-    val df = Seq(-1.0, 0.0, 0.5, 1.0, 2.0).toDF("v")
-      .select($"v", Layout.quantize($"v", 0.0, 1.0).as("q"))
-    val got = df.collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    assert(got(-1.0) == 0L && got(0.0) == 0L && got(2.0) == 65535L && got(1.0) == 65535L)
-    assert(got(0.5) == 32768L || got(0.5) == 32767L)
-  }
-
   test("pruningAudit counts prunable tiles and rows per probe box") {
     val tiles = Seq(
       // tile footprints: (n_rows, x_min, x_max, y_min, y_max)

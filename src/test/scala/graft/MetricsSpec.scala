@@ -29,9 +29,7 @@ class MetricsSpec extends SparkSpec {
       spark.sparkContext.clearJobGroup()
       awaitTasks(m, "mtest-shuffle", parts.toLong)
 
-      val json = m.snapshotJson()
-      assert(json.contains("\"mtest-shuffle\":"), json.take(500))
-      val ds = json.split("\"mtest-shuffle\":", 2)(1)
+      val ds = m.groupJson("mtest-shuffle").get
       assert("\"shuffle_write_bytes\":(\\d+)".r.findFirstMatchIn(ds)
         .exists(_.group(1).toLong > 0), ds.take(300))
       assert("\"shuffle_read_bytes\":(\\d+)".r.findFirstMatchIn(ds)
@@ -60,16 +58,16 @@ class MetricsSpec extends SparkSpec {
       awaitTasks(m, "mtest-a", 1)
       awaitTasks(m, "mtest-b", 1)
 
-      // deleteOnExit keeps repeated test runs from accumulating tmp dirs
+      // the sheet Bench writes: one selection per group, through Harness
       val dir = java.nio.file.Files.createTempDirectory("graft-metrics")
       val path = dir.resolve("datasheet.json")
-      m.write(path)
+      Harness.writeFile(path, m.selectedJson(Seq("mtest-a" -> "mtest-a", "mtest-b" -> "mtest-b")))
       val txt = java.nio.file.Files.readString(path)
       java.nio.file.Files.deleteIfExists(path)
       java.nio.file.Files.deleteIfExists(dir)
       assert(txt.contains("\"mtest-a\":") && txt.contains("\"mtest-b\":"), txt.take(500))
-      // groups sorted, object well-formed enough for the driver's json.load
-      assert(txt.indexOf("mtest-a") < txt.indexOf("mtest-b"))
+      assert(m.groupJson("mtest-a") != m.groupJson("mtest-b"))
+      // object well-formed enough for the driver's json.load
       assert(txt.trim.startsWith("{") && txt.trim.endsWith("}"))
     } finally spark.sparkContext.removeSparkListener(m)
   }

@@ -66,7 +66,7 @@ class MultimodalSpec extends SparkSpec {
     // Codec-level: 16-bit PCM round-trips bit-exactly, including the
     // endianness-sensitive extremes.
     val samples = Array[Short](0, 1, -1, 1000, -1000, Short.MaxValue, Short.MinValue, 258)
-    val wav = Multimodal.WavCodec.encodeWav(samples, 16000f)
+    val wav = Multimodal.WavCodec.encodeWav(samples)
     assert(Multimodal.WavCodec.looksWav(wav))
     val Some((rate, channels, back)) = Multimodal.WavCodec.decodeWav(wav)
     assert(rate == 16000f && channels == 1)

@@ -61,17 +61,15 @@ class RollupSpec extends SparkSpec {
     assert(out.toSeq == Seq(("a", 3L, 1.75), ("b", 1L, 1.0)))
   }
 
-  test("decayedCounts clamps ages beyond maxSteps and below an explicit refDate") {
+  test("decayedCounts clamps ages beyond maxSteps") {
     val ev = Seq(
-      (ts("2024-03-01 00:00:00"), "g"), // NEWER than refDate → clamped to step 0
+      (ts("2024-02-01 00:00:00"), "g"), // the newest date: step 0
       (ts("2024-01-01 00:00:00"), "g"), // 31 days old at stepDays=1 → clamped to maxSteps
       (ts("2024-01-31 12:00:00"), "g") // 1 day old → step 1
     ).toDF("when", "grp")
-    val out = Rollup.decayedCounts(
-        ev, Seq("grp"), col("when"), stepDays = 1, maxSteps = 2,
-        refDate = Some(lit("2024-02-01").cast("date")))
+    val out = Rollup.decayedCounts(ev, Seq("grp"), col("when"), stepDays = 1, maxSteps = 2)
       .as[(String, Long, Double)].head()
-    // weights: 4 (clamped new), 1 (clamped old), 2 → 7/4
+    // weights: 4 (newest), 1 (clamped old), 2 → 7/4
     assert(out == (("g", 3L, 1.75)))
   }
 

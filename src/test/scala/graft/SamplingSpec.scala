@@ -160,10 +160,15 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("quantileThresholds at full sample is the exact group percentile") {
-    val df = ((1L to 5L).map(i => (i, "a", i.toDouble)) ++
-      (6L to 7L).map(i => (i, "b", i.toDouble))).toDF("id", "grp", "v")
-    val thr = Sampling.quantileThresholds(df, "id", "grp", "v",
-        q = 0.25, salt = 1L, sampleBits = 1024L)
+    // seven ids that all fall in the 1-in-4 hash sample at salt 1
+    val ids = spark.range(1L, 400L)
+      .filter(graft.functions.HashFunctions.seeded($"id", lit(1L)).bitwiseAND(lit(1023L)) < 256L)
+      .as[Long].collect().take(7)
+    assert(ids.length == 7)
+    val df = ids.zipWithIndex.map { case (id, i) =>
+      (id, if (i < 5) "a" else "b", (i + 1).toDouble)
+    }.toSeq.toDF("id", "grp", "v")
+    val thr = Sampling.quantileThresholds(df, "id", "grp", "v", q = 0.25, salt = 1L)
       .orderBy("grp")
       .collect()
       .map(r => (r.getAs[String]("grp"), r.getAs[Double]("threshold"), r.getAs[Long]("n_sample")))

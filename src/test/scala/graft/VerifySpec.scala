@@ -4,6 +4,21 @@ package graft
   * directories must fail loudly — an empty gate artifact reads like a green
   * engine and must never be producible silently. */
 class VerifySpec extends SparkSpec {
+  import spark.implicits._
+  import org.apache.spark.sql.functions._
+
+  test("digest ignores partitioning, row and column order, and sees one changed value") {
+    val df = spark.range(200).select($"id", ($"id" % 7).as("k"), concat(lit("s"), $"id").as("s"),
+      ($"id" / 3.0).as("d"))
+    val d = Verify.digest(df)
+    assert(d._1 == 200L)
+    assert(Verify.digest(df.repartition(7)) == d)
+    assert(Verify.digest(df.orderBy($"id".desc)) == d)
+    assert(Verify.digest(df.select("d", "s", "k", "id")) == d)
+    val changed = Verify.digest(df.withColumn("k", when($"id" === 42, $"k" + 1).otherwise($"k")))
+    assert(changed._1 == d._1 && changed._2 != d._2 && changed._3 != d._3)
+    assert(Verify.digest(df.filter($"id" < 0)) == ((0L, 0L, 0L)))
+  }
 
   test("runAll with a filter matching nothing dumps zero queries") {
     val out = java.nio.file.Files.createTempDirectory("graft-verify-spec").toString
