@@ -24,11 +24,16 @@ accessors are live code, never reported.
 Two reports:
   UNREACHED  Owner.member: a public method of `src/main` no root reaches
              (its static forwarder and its overloads count as one).
-  ONE-VALUE  Owner.member(param): a defaulted parameter that every program
-             call leaves at its default (each call of `member` also calls
-             `member$default$N`), so it is a constant, not an option. Calls
-             from the method's own static forwarder do not count; tests
-             are not compiled here, so they never count.
+  ONE-VALUE  Owner.member(param): a parameter every program call gives one
+             value, so it is a constant, not an option. Each call's
+             arguments are read from the bytecode before it (read_args): a
+             primitive parameter is reported when every call passes the
+             same known value, a parameter of any type when every call
+             leaves it at its default (`member$default$N`). Calls resolve
+             to the overload whose descriptor they name. Calls from the
+             method's own static forwarder do not count; tests are not
+             compiled here, so they never count. A method named in a
+             string of reached code (generated Java calls it) is skipped.
 
 It also checks that only the harness mains read the environment: outside
 comments, `SPARK_GRAFT_`, `sys.env`, `System.getenv` and
@@ -40,6 +45,9 @@ once: a `doGenCode` body there may not contain a loop (`for (`,
 `while (`, `do {`, in Scala or in the generated Java text). The loop
 belongs in a companion-object method that `eval` and the generated code
 both call.
+
+The last line counts the findings, and the `src/main` files and their
+non-blank lines outside comments (after strip_comments).
 
 Exit status: 0 when every finding is in ALLOWLIST, no file outside
 ENV_READERS reads the environment and no kernel `doGenCode` holds a loop;
@@ -106,13 +114,36 @@ NO_PARAM_CHECK = {"copy", "apply", "<init>"}
 
 CLASS_RE = re.compile(r"^(?:[a-z]+ )*(class|interface) ([\w.$]+)(?: extends ([^{]*?))?"
                       r"(?: implements ([^{]*))? \{$")
-INVOKE_RE = re.compile(r"invoke\w+\s+#\d+(?:,\s+\d+)?\s+// (?:Interface)?Method "
-                       r"(?:([\w/$]+)\.)?(\"<init>\"|[\w$]+):(\S+)")
 FIELD_RE = re.compile(r"(?:get|put)(?:static|field)\s+#\d+\s+// Field (?:([\w/$]+)\.)?")
 STRING_RE = re.compile(r"\bldc(?:_w)?\s+#\d+\s+// String (.*)$")
 QUALIFIED_RE = re.compile(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*\(")
 DESC_RE = re.compile(r"\[*(?:[BCDFIJSZ]|L[^;]+;)")
 PLAIN_NAME = re.compile(r"^[A-Za-z_]\w*$")
+INSN_RE = re.compile(r"^(\d+): (\w+)\s*(.*)$")
+CASE_RE = re.compile(r"^(?:-?\d+|default): (\d+)$")
+METHOD_REF = re.compile(r"// (?:Interface)?Method (?:([\w/$]+)\.)?(\"<init>\"|[\w$]+):(\S+)")
+DESC_TAIL = re.compile(r":(\([^)]*\)\S*)\s*$")
+LDC_RE = re.compile(r"// (int|long|float|double|String) (.*)$")
+LOAD_RE = re.compile(r"^[ilfda]load(?:_(\d))?$")
+STORE_RE = re.compile(r"^[ilfda]store(?:_(\d))?$")
+PRIMITIVE = set("IJDFZSBC")
+CONST_OPS = {"iconst_m1": "-1", "lconst_0": "0", "lconst_1": "1", "fconst_0": "0.0",
+             "fconst_1": "1.0", "fconst_2": "2.0", "dconst_0": "0.0", "dconst_1": "1.0",
+             **{f"iconst_{k}": str(k) for k in range(6)}}
+# Stack effect, in values, of the instructions other than invokes.
+STACK_EFFECTS = [(re.compile(p), e) for p, e in [
+    (r"^(?:[ilfda]load(?:_\d)?|[ilfd]const_m?\d|aconst_null|[bs]ipush|ldc(?:_w|2_w)?"
+     r"|getstatic|new|dup)$", (0, 1)),
+    (r"^(?:[ilfda]store(?:_\d)?|pop|if(?:eq|ne|lt|ge|gt|le|null|nonnull)|tableswitch"
+     r"|lookupswitch|putstatic|monitorenter|monitorexit|[ilfda]return|athrow)$", (1, 0)),
+    (r"^(?:if_[ia]cmp\w+|putfield)$", (2, 0)),
+    (r"^[ilfdabcs]astore$", (3, 0)),
+    (r"^(?:[ilfd](?:add|sub|mul|div|rem|and|or|xor|shl|shr|ushr)|lcmp|[fd]cmp[lg]"
+     r"|[ilfdabcs]aload)$", (2, 1)),
+    (r"^(?:[ilfd]neg|[ilfd]2[ilfdbcs]|getfield|checkcast|instanceof|arraylength|newarray"
+     r"|anewarray)$", (1, 1)),
+    (r"^(?:goto(?:_w)?|iinc|nop|return)$", (0, 0)),
+]]
 
 
 def strip_comments(src):
@@ -185,8 +216,11 @@ def strip_generics(s):
 def parse_javap(text):
     """Classes of a `javap -c -p -l -s` listing: internal name ->
     {"supers": [...], "methods": {(name, desc): method}}; each method
-    records its flags, calls, strings and parameter names."""
-    classes, cls, meth, in_lvt = {}, None, None, False
+    records its flags, strings, parameter names, instructions (`code`:
+    (opcode, operand text), at `offsets`), its calls (`calls`: index in
+    `code` -> (owner, name, descriptor)) and the offsets a jump or an
+    exception handler enters (`targets`)."""
+    classes, cls, meth, mode = {}, None, None, None
     for line in text.split("\n"):
         if not line.startswith(" "):
             m = CLASS_RE.match(strip_generics(line))
@@ -195,13 +229,14 @@ def parse_javap(text):
                 supers = [s.strip().replace(".", "/") for part in (m.group(3), m.group(4))
                           if part for s in part.split(",")]
                 cls = classes[name] = {"supers": supers, "methods": {}, "fields": set()}
+                owner = name
                 meth = None
             continue
         if cls is None:
             continue
         if line.startswith("  ") and not line.startswith("   "):
             head = strip_generics(line.strip())
-            meth, in_lvt = None, False
+            meth, mode = None, None
             if head.endswith("static {};"):
                 meth = {"name": "<clinit>", "static": True}
             elif "(" in head and head.endswith(";"):
@@ -212,7 +247,8 @@ def parse_javap(text):
             elif head.endswith(";"):
                 cls["fields"].add(head[:-1].split()[-1])
             if meth is not None:
-                meth.update(calls=[], fields=[], strings=[], lvt={}, desc=None, ops=0)
+                meth.update(owner=owner, calls={}, fields=[], strings=[], lvt={}, desc=None,
+                            ops=0, code=[], offsets=[], targets=set())
             continue
         if meth is None:
             continue
@@ -220,17 +256,37 @@ def parse_javap(text):
         if meth["desc"] is None and s.startswith("descriptor: "):
             meth["desc"] = s[len("descriptor: "):]
             cls["methods"][(meth["name"], meth["desc"])] = meth
-        elif s == "LocalVariableTable:":
-            in_lvt = True
-        elif in_lvt:
+        elif s in ("LocalVariableTable:", "Exception table:", "LineNumberTable:"):
+            mode = s
+        elif mode == "LocalVariableTable:":
             f = s.split()
             if len(f) == 5 and f[0] == "0" and f[2].isdigit():
                 meth["lvt"][int(f[2])] = f[3]
-        else:
-            meth["ops"] += bool(re.match(r"\d+: ", s))
-            m = INVOKE_RE.search(s)
+        elif mode == "Exception table:":
+            f = s.split()
+            if len(f) >= 4 and f[2].isdigit():
+                meth["targets"].add(int(f[2]))
+        elif mode == "switch":
+            m = CASE_RE.match(s)
             if m:
-                meth["calls"].append((m.group(1), m.group(2).strip('"'), m.group(3)))
+                meth["targets"].add(int(m.group(1)))
+            elif s == "}":
+                mode = None
+        elif mode is None:
+            insn = INSN_RE.match(s)
+            if not insn:
+                continue
+            op, arg = insn.group(2), insn.group(3)
+            meth["ops"] += 1
+            meth["offsets"].append(int(insn.group(1)))
+            meth["code"].append((op, arg))
+            if op in ("tableswitch", "lookupswitch"):
+                mode = "switch"
+            elif op.startswith(("if", "goto", "jsr")) and arg.isdigit():
+                meth["targets"].add(int(arg))
+            m = METHOD_REF.search(arg) if op.startswith("invoke") else None
+            if m:
+                meth["calls"][len(meth["code"]) - 1] = (m.group(1), m.group(2).strip('"'), m.group(3))
                 continue
             m = FIELD_RE.search(s)
             if m:
@@ -292,8 +348,88 @@ def load(root):
     return parse_javap(out), None
 
 
+def constant(op, arg):
+    """The value a constant push puts on the stack, as text, or None."""
+    if op in CONST_OPS:
+        return CONST_OPS[op]
+    if op in ("bipush", "sipush"):
+        return arg.strip()
+    m = LDC_RE.search(arg) if op.startswith("ldc") else None
+    if not m:
+        return None
+    return m.group(2)[:-1] if m.group(1) in ("long", "float", "double") else m.group(2)
+
+
+def effect(op, arg):
+    """(values popped, values pushed) of one instruction, or None for one
+    the reader does not model. A `dup` counts as pushing a new value."""
+    if op.startswith("invoke"):
+        d = DESC_TAIL.search(arg)
+        if not d:
+            return None
+        own = op not in ("invokestatic", "invokedynamic")
+        return len(param_types(d.group(1))) + own, int(not d.group(1).endswith(")V"))
+    for pattern, e in STACK_EFFECTS:
+        if pattern.match(op):
+            return e
+    return None
+
+
+def read_args(classes, meth, i, n, resolve):
+    """The arguments of the call `meth["code"][i]` that takes n values:
+    each a (value text, passed by its default accessor) pair, or None when
+    it is not read exactly. The walk goes back from the call over
+    straight-line code; the producer of an argument is the last
+    instruction that wrote its stack slot. Known producers: a constant
+    push, a load of a local that a constant was stored into on the same
+    straight line, and a call of a `m$default$N` accessor."""
+    code, offsets = meth["code"], meth["offsets"]
+    targets = meth["targets"]
+
+    def straight(a, b):
+        """No jump or handler enters an instruction in (a, b]."""
+        return not any(offsets[k] in targets for k in range(a + 1, b + 1))
+
+    def value(j, depth=0):
+        op, arg = code[j]
+        c = constant(op, arg)
+        if c is not None:
+            return c, False
+        load = LOAD_RE.match(op)
+        if load and depth == 0:
+            slot = load.group(1) or arg.strip()
+            for k in range(j - 1, 0, -1):
+                sop, sarg = code[k]
+                store = STORE_RE.match(sop)
+                if store and (store.group(1) or sarg.strip()) == slot:
+                    return value(k - 1, 1) if straight(k - 1, j) else None
+                if sop == "iinc" and sarg.split(",")[0] == slot:
+                    return None
+            return None
+        owner, name, desc = meth["calls"].get(j, (None, "", ""))
+        if re.search(r"\$default\$\d+$", name) and desc.startswith("()"):
+            hits = resolve(owner or meth["owner"], name, desc)
+            body = classes[hits[0][0]]["methods"][hits[0][1:]]["code"] if hits else []
+            c = constant(*body[0]) if len(body) == 2 else None
+            return (c if c is not None else f"{name}()"), True
+        return None
+
+    args, want, h, j = [None] * n, {-k: n - 1 - k for k in range(n)}, 0, i
+    while want and j > 0 and offsets[j] not in targets:
+        j -= 1
+        e = effect(*code[j])
+        if e is None:
+            break
+        for level in range(h - e[1] + 1, h + 1):
+            if level in want:
+                args[want.pop(level)] = value(j)
+        h += e[0] - e[1]
+    return args
+
+
 def analyse(classes, spark_jars):
-    """(unreached labels, {one-valued "Owner.m(param)"}) of the program."""
+    """(unreached labels, {one-valued "Owner.m(param)": (calls, (value,
+    by default))}) of the program."""
     subs = {}
     for c, info in classes.items():
         for s in info["supers"]:
@@ -336,15 +472,16 @@ def analyse(classes, spark_jars):
     for c, info in classes.items():
         by_label.setdefault(owner_label(c), []).append(c)
 
-    roots = []
+    roots, overrides = [], set()
     for c, info in classes.items():
         bench = c.startswith(BENCH_PACKAGES)
         case_class = ("productArity", "()I") in info["methods"]
         ext = any(s not in classes for s in supertypes(c))
         for (name, desc), m in info["methods"].items():
-            if (bench or case_class or name in ALWAYS_LIVE
-                    or f"{owner_label(c)}.{name}" in ENTRY_POINTS
-                    or (ext and not m["static"] and (name, len(param_types(desc))) in overridable)):
+            if ext and not m["static"] and (name, len(param_types(desc))) in overridable:
+                overrides.add((c, name, desc))
+            if (bench or case_class or name in ALWAYS_LIVE or (c, name, desc) in overrides
+                    or f"{owner_label(c)}.{name}" in ENTRY_POINTS):
                 roots.append((c, name, desc))
 
     reached, todo = set(), list(roots)
@@ -362,7 +499,7 @@ def analyse(classes, spark_jars):
         nxt += [k for k in info["methods"]
                 if k[0].startswith("$anonfun$") and k[0][9:].split("$", 1)[0] in made]
         todo += [(c,) + k for k in nxt]
-        for owner, callee, cdesc in m["calls"]:
+        for owner, callee, cdesc in m["calls"].values():
             todo += resolve(owner or c, callee, cdesc)
         for owner in m["fields"]:  # touching a class runs its initializer
             if ("<clinit>", "()V") in classes.get(owner or c, {}).get("methods", {}):
@@ -392,39 +529,42 @@ def analyse(classes, spark_jars):
                 labels[key] = labels.get(key, False) or (c, name, desc) in reached
     unreached = sorted(k for k, hit in labels.items() if not hit)
 
-    # Defaulted parameters: a reached caller that calls m more often than
-    # m$default$N passes parameter N itself at least once.
-    sites = {}  # (owner, name) -> {caller: [descriptor of each call]}
+    # Argument values: every call of a program method from reached code,
+    # except a static forwarder's call of its module method, with the
+    # values it passes. A method that generated Java names in a string
+    # gets arguments this pass cannot read, so it is never reported.
+    calls_at, named = {}, set()
     for caller in reached:
-        for o, nm, d in classes[caller[0]]["methods"][caller[1:]]["calls"]:
-            sites.setdefault((o or caller[0], nm), {}).setdefault(caller, []).append(d)
+        m = classes[caller[0]]["methods"][caller[1:]]
+        for s in m["strings"]:
+            named.update(QUALIFIED_RE.findall(s))
+        for i, (owner, callee, cdesc) in m["calls"].items():
+            owner = owner or caller[0]
+            if m["static"] and owner == caller[0] + "$" and callee == caller[1]:
+                continue
+            hits = resolve(owner, callee, cdesc)
+            if hits:
+                args = read_args(classes, m, i, len(param_types(cdesc)), resolve)
+                for h in hits:
+                    calls_at.setdefault(h, []).append(args)
+
+    # A primitive parameter that every call passes one known value, or a
+    # parameter of any type that every call leaves at its default.
     one_valued = {}
-    for c, info in classes.items():
-        owners = {c, c.rstrip("$")} | subtypes(c)
-
-        def calls_of(nm):
-            out = {}
-            for o in owners:
-                for caller, ds in sites.get((o, nm), {}).items():
-                    if caller[0] + "$" != c or caller[1] != nm:  # not its static forwarder
-                        out.setdefault(caller, []).extend(ds)
-            return out
-
-        for (name, desc), m in info["methods"].items():
-            g = re.match(r"^(.*)\$default\$(\d+)$", name)
-            if not g or g.group(1) in NO_PARAM_CHECK:
+    for (c, name, desc), calls in calls_at.items():
+        label = owner_label(c)
+        if (not PLAIN_NAME.match(name) or name in NO_PARAM_CHECK or (label, name) in named
+                or (c, name, desc) in overrides or c.startswith(BENCH_PACKAGES)):
+            continue
+        names = param_names(classes[c]["methods"][(name, desc)])
+        for k, t in enumerate(param_types(desc)):
+            vals = [a[k] for a in calls]
+            if None in vals or len({v for v, _ in vals}) != 1:
                 continue
-            target, n = g.group(1), int(g.group(2))
-            alts = [(d, mm) for (nm, d), mm in info["methods"].items()
-                    if nm == target and len(param_types(d)) >= n
-                    and param_types(d)[n - 1] == desc[desc.index(")") + 1:]]
-            if len(alts) != 1:
-                continue
-            tdesc, tm = alts[0]
-            calls = {k: ds.count(tdesc) for k, ds in calls_of(target).items()}
-            defaults = {k: len(ds) for k, ds in calls_of(name).items()}
-            if sum(calls.values()) and all(defaults.get(k, 0) >= v for k, v in calls.items()):
-                one_valued[f"{owner_label(c)}.{target}({param_names(tm)[n - 1]})"] = sum(calls.values())
+            if t in PRIMITIVE or all(d for _, d in vals):
+                v, by_default = vals[0]
+                v = {"0": "false", "1": "true"}.get(v, v) if t == "Z" else v
+                one_valued[f"{label}.{name}({names[k]})"] = (len(vals), (v, by_default))
     return unreached, one_valued
 
 
@@ -446,10 +586,12 @@ def main():
         print(err, file=sys.stderr)
         return 2
 
+    lines = 0  # non-blank, non-comment lines of src/main
     env_reads = []  # (path, line, token) outside ENV_READERS
     codegen_loops = []  # (path, line) of a loop inside a kernel's doGenCode
     for path in main_files:
         code = strip_comments(open(path, encoding="utf-8").read())
+        lines += sum(1 for ln in code.split("\n") if ln.strip())
         rel = os.path.relpath(path, root)
         if os.path.splitext(os.path.basename(path))[0] not in ENV_READERS:
             env_reads += [(rel, code.count("\n", 0, m.start()) + 1, m.group())
@@ -466,8 +608,9 @@ def main():
         if note:
             print(f"allowed    {f}  ({note})")
         elif f in one_valued:
-            print(f"ONE-VALUE  {f}: all {one_valued[f]} program calls leave it at its default; "
-                  f"make it a constant")
+            n, (v, by_default) = one_valued[f]
+            how = f"leave it at its default {v}" if by_default else f"pass {v}"
+            print(f"ONE-VALUE  {f}: all {n} program calls {how}; make it a constant")
         else:
             print(f"UNREACHED  {f}")
     for s in stale:
@@ -480,7 +623,8 @@ def main():
     print(f"{len(unreached)} unreached public members, {len(one_valued)} one-valued parameters, "
           f"{len(bad)} outside the allowlist, {len(stale)} stale allowlist entries, "
           f"{len(env_reads)} environment reads outside the harness mains, "
-          f"{len(codegen_loops)} loops in kernel codegen")
+          f"{len(codegen_loops)} loops in kernel codegen; src/main: {len(main_files)} files, "
+          f"{lines} non-blank non-comment lines")
     return 1 if bad or stale or env_reads or codegen_loops else 0
 
 

@@ -37,7 +37,7 @@ object Harness {
     }
 
   /** Catalog queries graft.Verify runs at once. */
-  val VerifyParallelism = 4
+  final val VerifyParallelism = 4
 
   /** `local[N]` width of every main: `SPARK_GRAFT_CPUS`, default the
     * host's processor count. */

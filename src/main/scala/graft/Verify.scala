@@ -22,7 +22,7 @@ object Verify {
   }
 
   /** Dump every catalog query (optionally filtered to `only`) under
-    * `outDir/<name>/`, `parallelism` at a time, each under a
+    * `outDir/<name>/`, [[Harness.VerifyParallelism]] at a time, each under a
     * `queryTimeoutSec` [[Watchdog]], and write the dumps' digests to
     * `outDir/result_digest.json`; returns (okCount, failedCount).
     * Factored out of [[main]] so the empty-output tripwire below is
@@ -32,7 +32,6 @@ object Verify {
       sfDir: String,
       outDir: String,
       only: Option[Set[String]],
-      parallelism: Int,
       queryTimeoutSec: Long): (Int, Int) = {
     new java.io.File(outDir).mkdirs()
     val ok = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -43,7 +42,7 @@ object Verify {
     // scheduler-bound, not core-bound, so overlapping them cuts wall-clock
     // about 3x. The watchdog makes one hung query cost one row, not the
     // whole dump.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Harness.VerifyParallelism)
     val tasks = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -105,7 +104,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val (okCount, failedCount) =
-      runAll(spark, sfDir, outDir, only, Harness.VerifyParallelism, queryTimeoutSec)
+      runAll(spark, sfDir, outDir, only, queryTimeoutSec)
     System.err.println(
       s"[verify] done: $okCount ok, $failedCount failed, " +
         s"${SparkEntry.queries.size} in catalog")

@@ -114,7 +114,7 @@ object AnalyticsQueries extends Family {
   // instead of O(pairs).
   val q49 = query("q49_range_agg")((s, dir) =>
     Rollup
-      .forwardRangeAgg(Tables.events(s, dir), "user_id", "ts", "value", horizonSec = 3600L)
+      .forwardRangeAgg(Tables.events(s, dir), "user_id", "ts", "value")
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"), col("n_next"), col("sum_next"))
       .orderBy("event_id"))(
@@ -135,7 +135,7 @@ object AnalyticsQueries extends Family {
   // decimal sums are associative), only the shuffle layout.
   val q57 = query("q57_salted_rollup")((s, dir) =>
     Rollup
-      .saltedSumCount(Tables.events(s, dir), Seq("event_type"), "value", nSalts = 32)
+      .saltedSumCount(Tables.events(s, dir), Seq("event_type"), "value")
       .orderBy("event_type"))(
     s"""SELECT event_type, count(*) AS n_rows, ${dSum("\"value\"")} AS total_value
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
@@ -201,8 +201,7 @@ object AnalyticsQueries extends Family {
   // scalar max broadcast back + one map-side-combined aggregation.
   val q101 = query("q101_decayed_counts")((s, dir) =>
     Rollup.decayedCounts(
-        Tables.events(s, dir), Seq("event_type"), col("ts"),
-        stepDays = 3, maxSteps = 9)
+        Tables.events(s, dir), Seq("event_type"), col("ts"))
       .orderBy("event_type"))(
     """WITH r AS (SELECT max(CAST(ts AS DATE)) AS ref FROM events),
       |w AS (SELECT event_type,
@@ -244,7 +243,7 @@ object AnalyticsQueries extends Family {
   // per-session fold; the rollup is path-cardinality-sized.
   val q132 = query("q132_session_paths")((s, dir) =>
     Funnel.sessionPaths(Tables.events(s, dir),
-      "user_id", "event_type", "ts", "event_id", gapMinutes = 30, maxSteps = 5)
+      "user_id", "event_type", "ts", "event_id")
       .orderBy(col("n_sessions").desc, col("path"))
       .limit(20))(
     """WITH t AS (

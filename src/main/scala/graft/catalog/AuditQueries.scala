@@ -182,7 +182,7 @@ object AuditQueries extends Family {
     graft.operators.Diagnostics.joinSkewProbe(
       ev.filter(col("event_type") === "purchase"),
       ev.filter(col("event_type") =!= "purchase"),
-      "user_id", topN = 20)
+      "user_id")
   })(
     """WITH l AS (SELECT user_id, count(*) AS n_left FROM events
       |  WHERE event_type = 'purchase' GROUP BY user_id),
@@ -206,7 +206,7 @@ object AuditQueries extends Family {
     val split = lit("2024-01-16 00:00:00").cast("timestamp")
     graft.operators.Diagnostics.ksDrift(
         ev.filter(col("ts") < split), ev.filter(col("ts") >= split),
-        Seq("event_type"), col("value"), bins = 64, lo = 0.0, hi = 512.0)
+        Seq("event_type"), col("value"))
       .select(col("event_type"), col("n_a"), col("n_b"),
         col("ks_num").cast("long").as("ks_num"), col("ks_stat"))
       .orderBy("event_type")
@@ -247,7 +247,7 @@ object AuditQueries extends Family {
   // bounded by types × hours; the per-type stats table broadcasts back.
   val q117 = query("q117_count_anomalies")((s, dir) =>
     Diagnostics.countAnomalies(Tables.events(s, dir), Seq("event_type"),
-        date_trunc("hour", col("ts")), z = 2)
+        date_trunc("hour", col("ts")))
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n_hours"),
@@ -301,7 +301,7 @@ object AuditQueries extends Family {
   // aggregation; the pair table expands row-locally from it.
   private val q133Cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
   val q133 = query("q133_corr_matrix")((s, dir) =>
-    Diagnostics.correlationMatrix(Tables.lineitem(s, dir), q133Cols, scale = 100L)
+    Diagnostics.correlationMatrix(Tables.lineitem(s, dir), q133Cols)
       .orderBy("col_a", "col_b"))({
     val qsel = q133Cols.map(c => s"CAST(round($c * 100) AS HUGEINT) AS $c").mkString(", ")
     val moments = (Seq("CAST(count(*) AS HUGEINT) AS n") ++
@@ -412,7 +412,7 @@ object AuditQueries extends Family {
   // window pass over the (types × days)-sized table.
   val q142 = query("q142_sliding_anomaly")((s, dir) =>
     Diagnostics.slidingAnomalies(Tables.events(s, dir), Seq("event_type"),
-        date_trunc("day", col("ts")), window = 7, z = 2)
+        date_trunc("day", col("ts")))
       .orderBy("event_type", "bucket"))(
     """WITH c AS (SELECT event_type,
       |    CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket,
@@ -477,7 +477,7 @@ object AuditQueries extends Family {
               graft.functions.HashFunctions.mix64(col("event_id"))
                 .bitwiseAND(lit(4294967295L))),
         "user_id", "ts", Seq(col("__arr"), col("event_id")),
-        Seq("event_type"), lateThresholdUs = 1800000000L)
+        Seq("event_type"))
       .orderBy("event_type"))({
     val arr = s"epoch_us(ts) + CAST((${DuckHash.mix64Inline("CAST(event_id AS UBIGINT)")}) & 4294967295 AS BIGINT)"
     s"""WITH a AS (SELECT event_type, user_id, event_id, epoch_us(ts) AS us,
@@ -506,7 +506,7 @@ object AuditQueries extends Family {
   // group-table rollup to a single row; integer ppm.
   val q150 = query("q150_k_anonymity")((s, dir) =>
     Audit.kAnonymity(Tables.customer(s, dir),
-      Seq("c_nationkey", "c_mktsegment"), k = 10))(
+      Seq("c_nationkey", "c_mktsegment")))(
     """WITH g AS (SELECT c_nationkey, c_mktsegment, count(*) AS n
       |  FROM customer GROUP BY 1, 2)
       |SELECT CAST(sum(n) AS BIGINT) AS n_rows, count(*) AS n_groups,
@@ -530,7 +530,7 @@ object AuditQueries extends Family {
         // TopKAgg's election skips null ids while SQL row_number ranks the
         // null contributor by its count — both engines exclude nulls
         Tables.events(s, dir).filter(col("user_id").isNotNull),
-        Seq("event_type"), "user_id", k = 10)
+        Seq("event_type"), "user_id")
       .orderBy("event_type"))(
     """WITH c AS (SELECT event_type, user_id, count(*) AS c
       |  FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
@@ -555,7 +555,7 @@ object AuditQueries extends Family {
     Audit.lDiversity(
       Tables.customer(s, dir)
         .withColumn("bal_sign", signum(col("c_acctbal")).cast("int")),
-      Seq("c_nationkey", "c_mktsegment"), "bal_sign", l = 2))(
+      Seq("c_nationkey", "c_mktsegment"), "bal_sign"))(
     """WITH p AS (SELECT c_nationkey, c_mktsegment,
       |    CAST(sign(c_acctbal) AS INTEGER) AS s, count(*) AS n
       |  FROM customer GROUP BY 1, 2, 3),

@@ -39,7 +39,7 @@ object DedupQueries extends Family {
   private val q25MaxShingleFreq = 200L
 
   val q25 = query("q25_ngram_jaccard")((s, dir) =>
-    Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text", k = 5, minShared = 2,
+    Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
         maxShingleFreq = q25MaxShingleFreq)
       .select("doc_a", "doc_b", "n_shared", "jaccard")
       .orderBy("doc_a", "doc_b"))(
@@ -68,7 +68,7 @@ object DedupQueries extends Family {
   // sketch VALUES bit-for-bit, not just row counts.
   val q26 = query("q26_minhash_sig")((s, dir) => {
     val d = Tables.documents(s, dir)
-    Dedup.minHashSignatures(d, "doc_id", "text", k = 3, numHashes = 32)
+    Dedup.minHashSignatures(d, "doc_id", "text", numHashes = 32)
       .select(
         col("doc").as("doc_id"),
         element_at(col("sig"), 1).as("sig_0"),
@@ -138,8 +138,7 @@ object DedupQueries extends Family {
   // band-bucket fold (same wrap-around mix), and the bucket self-join.
   val q43 = query("q43_minhash_lsh")((s, dir) =>
     Dedup
-      .minHashLshPairs(Tables.documents(s, dir), "doc_id", "text",
-        k = 3, numHashes = 16, rowsPerBand = 2)
+      .minHashLshPairs(Tables.documents(s, dir), "doc_id", "text")
       .orderBy("doc_a", "doc_b"))(
     s"""WITH $lshBandedCtes,
        |$lshCandCte
@@ -156,7 +155,7 @@ object DedupQueries extends Family {
     Dedup
       .contaminationFlags(
         d.filter(col("doc_id") >= 10), d.filter(col("doc_id") < 10),
-        "doc_id", "text", k = 5, minShared = 1)
+        "doc_id", "text")
       .orderBy("doc_id")
   })(
     """WITH tk AS (SELECT doc_id,
@@ -191,8 +190,7 @@ object DedupQueries extends Family {
   // that has to survive 100 TB).
   val q58 = query("q58_dup_clusters")((s, dir) => {
     val pairs = Dedup.minHashLshPairs(
-      Tables.documents(s, dir), "doc_id", "text",
-      k = 3, numHashes = 16, rowsPerBand = 2)
+      Tables.documents(s, dir), "doc_id", "text")
     val labels = ConnectedComponents.components(pairs, "doc_a", "doc_b")
     labels
       .join(
@@ -218,8 +216,7 @@ object DedupQueries extends Family {
   // cluster-count-sized (broadcastable at any realistic dup rate).
   val q61 = query("q61_dedup_cleaned")((s, dir) => {
     val d = Tables.documents(s, dir)
-    val pairs = Dedup.minHashLshPairs(d, "doc_id", "text",
-      k = 3, numHashes = 16, rowsPerBand = 2)
+    val pairs = Dedup.minHashLshPairs(d, "doc_id", "text")
     val losers = ConnectedComponents.components(pairs, "doc_a", "doc_b")
       .filter(col("node") =!= col("cluster"))
       .select(col("node").as("doc_id"))
@@ -349,7 +346,7 @@ object DedupQueries extends Family {
       .minHashLshPairsAgainst(
         d.filter(pmod(col("doc_id"), lit(2)) === 1),
         d.filter(pmod(col("doc_id"), lit(2)) === 0),
-        "doc_id", "text", k = 3, numHashes = 16, rowsPerBand = 2)
+        "doc_id", "text")
       .orderBy("new_doc", "ref_doc")
   })(
     s"""WITH $lshBandedCtes,
@@ -379,10 +376,10 @@ object DedupQueries extends Family {
     val evalBits = graft.operators.BloomPrefilter.buildTable(
       shingleHashes(d.filter(col("doc_id") < 10))
         .filter(col("shingle").isNotNull).select(col("shingle")).distinct(),
-      col("shingle"), mBits = 65536, seeds = 2)
+      col("shingle"), mBits = 65536)
     val corpus = shingleHashes(d.filter(col("doc_id") >= 10))
     graft.operators.BloomPrefilter
-      .prefilter(corpus, col("shingle"), evalBits, mBits = 65536, seeds = 2)
+      .prefilter(corpus, col("shingle"), evalBits, mBits = 65536)
       .groupBy(col("doc_id"))
       .agg(
         max(col("n_sh")).cast("long").as("n_shingles"),
@@ -474,8 +471,7 @@ object DedupQueries extends Family {
   // are cluster-count-sized and broadcast into the anti-joins.
   val q107 = query("q107_best_survivor_dedup")((s, dir) => {
     val d = Tables.documents(s, dir)
-    val pairs = Dedup.minHashLshPairs(d, "doc_id", "text",
-      k = 3, numHashes = 16, rowsPerBand = 2)
+    val pairs = Dedup.minHashLshPairs(d, "doc_id", "text")
     val comp = ConnectedComponents.components(pairs, "doc_a", "doc_b")
     val scored = d.select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("__q"))
     val losers = Dedup.bestSurvivorLosers(comp, scored, "doc_id", "__q")
@@ -515,7 +511,7 @@ object DedupQueries extends Family {
     val d = Tables.documents(s, dir)
     val src = d.select(col("doc_id"), col("source"))
     Dedup
-      .minHashLshPairs(d, "doc_id", "text", k = 3, numHashes = 16, rowsPerBand = 2)
+      .minHashLshPairs(d, "doc_id", "text")
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("__sa")), Seq("doc_a"))
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("__sb")), Seq("doc_b"))
       .groupBy(
@@ -547,10 +543,10 @@ object DedupQueries extends Family {
     val sigs = d
       .filter(size(TextFunctions.tokens(col("text"))) >= 3)
       .select(col("doc_id"),
-        Dedup.minHashSignature(col("text"), 3, 16).as("__sig"),
-        TextFunctions.distinctShingles(col("text"), 3).as("__sh"))
+        Dedup.minHashSignature(col("text")).as("__sig"),
+        TextFunctions.distinctShingles(col("text")).as("__sh"))
     Dedup
-      .minHashLshPairs(d, "doc_id", "text", k = 3, numHashes = 16, rowsPerBand = 2)
+      .minHashLshPairs(d, "doc_id", "text")
       .join(sigs.select(col("doc_id").as("doc_a"),
         col("__sig").as("__siga"), col("__sh").as("__sha")), Seq("doc_a"))
       .join(sigs.select(col("doc_id").as("doc_b"),
@@ -706,7 +702,7 @@ object DedupQueries extends Family {
   val q141 = query("q141_simjoin_prefix")((s, dir) =>
     graft.operators.Dedup.prefixFilterJaccardJoin(
         Tables.documents(s, dir), "doc_id", "text",
-        tauNum = 7, tauDen = 10, shingleK = 5,
+        tauNum = 7, shingleK = 5,
         maxPairsPerEntry = 32L)
       .orderBy("doc_a", "doc_b"))(
     """WITH tk AS (SELECT doc_id,
@@ -808,11 +804,11 @@ object DedupQueries extends Family {
   val q165 = query("q165_lsh_recall_audit")((s, dir) => {
     val docs = Tables.documents(s, dir)
     val truth = Dedup
-      .prefixFilterJaccardJoin(docs, "doc_id", "text", 7, 10, shingleK = 3,
+      .prefixFilterJaccardJoin(docs, "doc_id", "text", 7, shingleK = 3,
         maxPairsPerEntry = 32L) // q141's always-on scale-relative guard
       .select(col("doc_a"), col("doc_b"), lit(1L).as("__true"))
     val cand = Dedup
-      .minHashLshPairs(docs, "doc_id", "text", k = 3, numHashes = 16, rowsPerBand = 2)
+      .minHashLshPairs(docs, "doc_id", "text")
       .withColumn("__cand", lit(1L))
     truth.join(cand, Seq("doc_a", "doc_b"), "full_outer")
       .agg(
@@ -867,7 +863,7 @@ object DedupQueries extends Family {
     val docs = Tables.documents(s, dir)
     def side(tag: String) = docs.select(
       col("doc_id").as(s"doc_$tag"), col("source").as(s"__src_$tag"))
-    Dedup.prefixFilterJaccardJoin(docs, "doc_id", "text", 7, 10, shingleK = 3,
+    Dedup.prefixFilterJaccardJoin(docs, "doc_id", "text", 7, shingleK = 3,
         maxPairsPerEntry = 32L) // q141's always-on scale-relative guard
       .join(side("a"), Seq("doc_a"))
       .join(side("b"), Seq("doc_b"))
@@ -987,7 +983,7 @@ object DedupQueries extends Family {
     val l4 = format_string("promo code %d", mh.bitwiseAND(lit(3L)))
     val pages = Tables.documents(s, dir)
       .select(k.as("doc_id"), concat_ws("\n", l1, l2, l3, l4).as("page"))
-    Dedup.dropDuplicatedLines(pages, "doc_id", "page", minDocs = 5L)
+    Dedup.dropDuplicatedLines(pages, "doc_id", "page")
       .orderBy("doc_id")
   })({
     val mh = DuckHash.mix64Inline("CAST(k AS UBIGINT)")
@@ -1051,7 +1047,7 @@ object DedupQueries extends Family {
       lit(" network</footer></body></html>"))
     val pages = docs.select(k.as("doc_id"),
       TextFunctions.htmlToText(page).as("page"))
-    val scrubbed = Dedup.dropDuplicatedLines(pages, "doc_id", "page", minDocs = 5L)
+    val scrubbed = Dedup.dropDuplicatedLines(pages, "doc_id", "page")
       .withColumn("__kept", (col("n_lines") - col("n_removed")) >= 2)
       .withColumn("__toks", when(col("__kept"),
         TextFunctions.tokenCount(col("cleaned_text")).cast("long")).otherwise(0L))

@@ -123,7 +123,7 @@ object GeoQueries extends Family {
     val tiles = SyntheticGeo.tilePolygons(Tables.nation(s, dir), "n_nationkey")
     val pts = SyntheticGeo.hashPoints(Tables.orders(s, dir), "o_orderkey")
     val contained = Spatial
-      .bucketedContainsJoin(pts, tiles, "x", "y", "coords", cellSize = 8.0)
+      .bucketedContainsJoin(pts, tiles, "x", "y", "coords")
       .groupBy(col("tile_id"))
       .agg(count(lit(1)).as("n_pts"), sum(col("point_id")).as("sum_pt_ids"))
     tiles.select(col("tile_id"))

@@ -23,9 +23,8 @@ object GraphQueries extends Family {
   // once and checkpointed.
   val q129 = query("q129_pagerank_hubs")((s, dir) =>
     Centrality.pageRank(
-      Dedup.minHashLshPairs(Tables.documents(s, dir), "doc_id", "text",
-        k = 3, numHashes = 16, rowsPerBand = 2),
-      "doc_a", "doc_b", iterations = 5)
+      Dedup.minHashLshPairs(Tables.documents(s, dir), "doc_id", "text"),
+      "doc_a", "doc_b")
       .select(col("node").as("doc_id"), col("rank").as("rank_e12"))
       .orderBy(col("rank_e12").desc, col("doc_id")))({
     val base = 150000000000L // 1e12/100 × 15, the operator's exact base term
@@ -57,8 +56,7 @@ object GraphQueries extends Family {
   // validates the wedge algorithm, not a replay of it.
   val q147 = query("q147_triangle_counts")((s, dir) =>
     Centrality.triangleCounts(
-        Dedup.minHashLshPairs(Tables.documents(s, dir), "doc_id", "text",
-          k = 3, numHashes = 16, rowsPerBand = 2),
+        Dedup.minHashLshPairs(Tables.documents(s, dir), "doc_id", "text"),
         "doc_a", "doc_b")
       .orderBy("node"))(
     s"""WITH $lshBandedCtes,
@@ -96,12 +94,9 @@ object GraphQueries extends Family {
         // 5× above the measured scale-invariant ratio — real quadratic
         // hot buckets still trip.
         graft.operators.Dedup.prefixFilterJaccardJoin(
-          Tables.documents(s, dir), "doc_id", "text", tauNum = 9, tauDen = 10,
+          Tables.documents(s, dir), "doc_id", "text", tauNum = 9,
           maxPairsPerEntry = 8192L),
-        "doc_a", "doc_b", k = 30,
-        // simjoin output is distinct a<b by contract — skip the
-        // re-canonicalize shuffle
-        inputCanonical = true)
+        "doc_a", "doc_b")
       .orderBy("node"))({
     // MATERIALIZED: each round references the previous twice (degree pass
     // + survivor filter) — inlined CTEs would expand the chain 3^8-fold

@@ -42,7 +42,7 @@ object MultimodalQueries extends Family {
   val q168 = query("q168_codec_roundtrip")((s, dir) => {
     import s.implicits._
     graft.multimodal.Multimodal.codecRoundTrip(
-        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long], 8, 8)
+        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long])
       .toDF()
       .orderBy("doc_id")
   })({
@@ -66,7 +66,7 @@ object MultimodalQueries extends Family {
   val q175 = query("q175_audio_roundtrip")((s, dir) => {
     import s.implicits._
     graft.multimodal.Multimodal.audioRoundTrip(
-        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long], 256)
+        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long])
       .toDF()
       .orderBy("doc_id")
   })({
@@ -94,8 +94,7 @@ object MultimodalQueries extends Family {
   val q181 = query("q181_video_roundtrip")((s, dir) => {
     import s.implicits._
     graft.multimodal.Multimodal.videoRoundTrip(
-        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long],
-        nFrames = 6, w = 16, h = 8, maxFrames = 4)
+        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long])
       .toDF()
       .orderBy("doc_id", "frame_idx")
   })({
@@ -130,8 +129,7 @@ object MultimodalQueries extends Family {
   val q182 = query("q182_frame_dedup")((s, dir) => {
     import s.implicits._
     graft.multimodal.Multimodal.frameSignatures(
-        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long],
-        nFrames = 6, w = 16, h = 8, contents = 64)
+        Tables.documents(s, dir).select(col("doc_id")).as[java.lang.Long])
       .toDF()
       .groupBy(col("pixel_sum"), col("pixel_possum"))
       .agg(

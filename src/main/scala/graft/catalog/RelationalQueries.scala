@@ -516,7 +516,7 @@ object RelationalQueries extends Family {
       .select(col("o_orderkey"), col("o_custkey").as("custkey"), col("o_totalprice"))
     val c = Tables.customer(s, dir)
       .select(col("c_custkey").as("custkey"), col("c_nationkey"))
-    SkewJoin.saltedJoin(o, c, "custkey", col("o_orderkey"), salts = 8)
+    SkewJoin.saltedJoin(o, c, "custkey", col("o_orderkey"))
       .groupBy(col("c_nationkey"))
       .agg(
         count(lit(1)).as("n_orders"),

@@ -23,7 +23,7 @@ object SamplingQueries extends Family {
     Sampling
       .stratifiedHashSample(
         Tables.documents(s, dir), "doc_id", "lang",
-        fractions = Map("en" -> 0.2), default = 0.6, salt = 7L)
+        fractions = Map("en" -> 0.2))
       .select("doc_id", "lang", "source")
       .orderBy("doc_id"))({
     import DuckHash._
@@ -171,7 +171,7 @@ object SamplingQueries extends Family {
 
   val q102 = query("q102_cap_per_group")((s, dir) =>
     Sampling.capPerGroup(
-        Tables.documents(s, dir), "lang", "doc_id", k = 20, salt = q102Salt)
+        Tables.documents(s, dir), "lang", "doc_id", salt = q102Salt)
       .orderBy("lang", "rnk"))({
     import DuckHash._
     val saltG = (BigInt(q102Salt) * Golden).mod(BigInt(1) << 64).toString
@@ -200,7 +200,7 @@ object SamplingQueries extends Family {
   val q103 = query("q103_budget_per_group")((s, dir) =>
     Sampling.budgetPerGroup(
         Tables.documents(s, dir).select("doc_id", "source", "n_chars"),
-        "source", "doc_id", col("n_chars"), budget = 4000L, salt = q103Salt)
+        "source", "doc_id", col("n_chars"), salt = q103Salt)
       .orderBy("doc_id"))({
     import DuckHash._
     val saltG = (BigInt(q103Salt) * Golden).mod(BigInt(1) << 64).toString
@@ -237,7 +237,7 @@ object SamplingQueries extends Family {
     val bits = Importance.verdictBits(
       Importance.bucketVerdicts(d, d.filter(col("lang") === "en"), "doc_id", "text"))
     Importance.applyVerdictsFused(d, bits, "doc_id", "text", Seq("lang", "source"))
-      .withColumn("__sel", Importance.selected(1L, 2L))
+      .withColumn("__sel", Importance.selected)
       .groupBy(col("lang"), col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -291,12 +291,10 @@ object SamplingQueries extends Family {
     // the straddle audit below — materialize the candidate set once
     // instead of re-running the LSH banding per consumer (at scale this is
     // the persisted candidate-pair table)
-    val pairs = Dedup.minHashLshPairs(d, "doc_id", "text",
-      k = 3, numHashes = 16, rowsPerBand = 2).localCheckpoint()
+    val pairs = Dedup.minHashLshPairs(d, "doc_id", "text").localCheckpoint()
     val comp = ConnectedComponents.components(pairs, "doc_a", "doc_b")
     val db = Sampling.hashBucket(col("doc_id"), q109Salt)
-    val sp = Sampling.leakageSafeSplit(d, "doc_id", comp, q109Salt,
-        trainFrac = 0.8, valFrac = 0.1)
+    val sp = Sampling.leakageSafeSplit(d, "doc_id", comp, q109Salt)
       .withColumn("__dsplit",
         when(db < 800000L, "train").when(db < 900000L, "val").otherwise("test"))
       .select(col("doc_id"), col("split"), col("__dsplit"),
@@ -360,8 +358,7 @@ object SamplingQueries extends Family {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         TextFunctions.qualityScore(col("text")).as("q"))
-    val thr = Sampling.quantileThresholds(d, "doc_id", "lang", "q",
-      q = 0.25, salt = q114Salt)
+    val thr = Sampling.quantileThresholds(d, "doc_id", "lang", "q", salt = q114Salt)
     // LEFT join + ungated fallback: a language whose ids all hash outside
     // the sample has no threshold row — it must stay in the report (and
     // pass the gate) rather than vanish through an inner join
@@ -452,8 +449,7 @@ object SamplingQueries extends Family {
   val q194 = query("q194_epoch_mix_plan")((s, dir) => {
     val d = Tables.documents(s, dir)
     Sampling.epochMixPlan(d, "lang",
-        Map("en" -> 1L, "zh" -> 3L, "es" -> 2L, "de" -> 2L, "fr" -> 3L),
-        budgetRows = 1000L)
+        Map("en" -> 1L, "zh" -> 3L, "es" -> 2L, "de" -> 2L, "fr" -> 3L))
       .orderBy("lang")
   })(
     s"""WITH w AS (SELECT * FROM (VALUES

@@ -201,7 +201,7 @@ private[catalog] object Shared {
   def hllEstCte(regsCte: String, groupCol: String, outCte: String, estName: String): String = {
     // The 256/57 literals below (and hllSmearRhoCtes' maxRho) are the p=8
     // instantiation: m=256 registers, maxRho=57.
-    val numer = graft.operators.Sketches.hllNumerator(8)
+    val numer = graft.operators.Sketches.HllNumerator
     s"""$outCte AS (SELECT $groupCol,
        |  $numer / CAST(CAST(sum(CAST(1 AS HUGEINT) << CAST(57 - reg AS INTEGER)) AS HUGEINT)
        |    + (256 - count(*)) * (CAST(1 AS HUGEINT) << 57) AS DOUBLE) AS $estName

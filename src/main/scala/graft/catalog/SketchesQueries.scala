@@ -17,7 +17,7 @@ object SketchesQueries extends Family {
   // ---------------------------------------------------------------- q41
   // q37's SCALE tier: approximate per-group percentiles certified by an
   // EXACT RANK CHECK. The brackets come from approx_percentile (GK
-  // sketch, accuracy=100 — see AggFunctions.percentileApprox) over the
+  // sketch, accuracy=100 — see AggFunctions.medianApprox) over the
   // q76 DETERMINISTIC ~10% hash sample — one bounded aggregation whose
   // result is ONE ROW PER RETURN FLAG, pulled to the driver and inlined
   // as literals — and the single remaining full pass counts
@@ -53,7 +53,7 @@ object SketchesQueries extends Family {
       .filter(graft.functions.HashFunctions.mix64(key).bitwiseAND(lit(1023L)) < lit(102L))
       .groupBy(col("l_returnflag"))
       .agg(
-        AggFunctions.percentileApprox(col("l_quantity"), 0.5, 100).as("__m"),
+        AggFunctions.medianApprox(col("l_quantity")).as("__m"),
         // ARRAY-form: one digest per COLUMN, not per quantile.
         approx_percentile(col("l_extendedprice"),
           array(lit(0.25), lit(0.75)), lit(100)).as("__pp"),
@@ -134,7 +134,7 @@ object SketchesQueries extends Family {
   // 256 register rows however large the input.
   val q75 = query("q75_hll_distinct")((s, dir) => {
     val ev = Tables.events(s, dir)
-    val est = Sketches.hllDistinct(ev, Seq("event_type"), col("user_id"), p = 8)
+    val est = Sketches.hllDistinct(ev, Seq("event_type"), col("user_id"))
     val exact = ev.groupBy(col("event_type"))
       .agg(count_distinct(col("user_id")).as("n_exact"))
     est.join(exact, "event_type").orderBy("event_type")
@@ -197,8 +197,7 @@ object SketchesQueries extends Family {
   // at 100 TB.
   val q79 = query("q79_cms_heavy_hitters")((s, dir) =>
     Sketches
-      .cmsTopK(Tables.events(s, dir), Seq("event_type"), col("user_id"),
-        k = 5, depth = 4, width = 1024)
+      .cmsTopK(Tables.events(s, dir), Seq("event_type"), col("user_id"))
       .orderBy(col("event_type"), col("est_count").desc, col("key")))({
     import DuckHash._
     s"""WITH b AS (SELECT event_type, user_id, CAST(user_id AS UBIGINT) AS u FROM events),
@@ -234,10 +233,10 @@ object SketchesQueries extends Family {
       .filter(col("o_totalprice") > 450000.0)
       .select(col("o_orderkey")).distinct()
     val table = graft.operators.BloomPrefilter
-      .buildTable(expensive, col("o_orderkey"), mBits = 262144, seeds = 2)
+      .buildTable(expensive, col("o_orderkey"), mBits = 262144)
     val flagged = graft.operators.BloomPrefilter
       .prefilter(Tables.lineitem(s, dir), col("l_orderkey"), table,
-        mBits = 262144, seeds = 2)
+        mBits = 262144)
     flagged
       .join(broadcast(expensive.withColumn("__true", lit(1))),
         col("l_orderkey") === col("o_orderkey"), "left")
@@ -296,12 +295,12 @@ object SketchesQueries extends Family {
     val ev = Tables.events(s, dir)
     val regsByPart = Sketches.hllRegisters(
       ev.withColumn("__part", pmod(col("event_id"), lit(2))),
-      Seq("event_type", "__part"), col("user_id"), p = 8)
+      Seq("event_type", "__part"), col("user_id"))
     val merged = Sketches.hllMerge(regsByPart.drop("__part"), Seq("event_type"))
     val estMerged = Sketches
-      .hllEstimateFromRegisters(merged, Seq("event_type"), p = 8)
+      .hllEstimateFromRegisters(merged, Seq("event_type"))
       .withColumnRenamed("est_distinct", "est_merged")
-    val estFull = Sketches.hllDistinct(ev, Seq("event_type"), col("user_id"), p = 8)
+    val estFull = Sketches.hllDistinct(ev, Seq("event_type"), col("user_id"))
       .withColumnRenamed("est_distinct", "est_full")
     estMerged.join(estFull, "event_type").orderBy("event_type")
   })({
@@ -333,10 +332,10 @@ object SketchesQueries extends Family {
   val q85 = query("q85_hll_overlap")((s, dir) => {
     val ev = Tables.events(s, dir)
     def users(t: String) = ev.filter(col("event_type") === t)
-    val regsA = Sketches.hllRegisters(users("purchase"), Seq(), col("user_id"), p = 8)
-    val regsB = Sketches.hllRegisters(users("click"), Seq(), col("user_id"), p = 8)
+    val regsA = Sketches.hllRegisters(users("purchase"), Seq(), col("user_id"))
+    val regsB = Sketches.hllRegisters(users("click"), Seq(), col("user_id"))
     def est(regs: DataFrame, name: String) =
-      Sketches.hllEstimateFromRegisters(regs, Seq(), p = 8)
+      Sketches.hllEstimateFromRegisters(regs, Seq())
         .withColumnRenamed("est_distinct", name)
     val merged = Sketches.hllMerge(regsA.unionByName(regsB), Seq())
     val exact = users("purchase").select(col("user_id")).distinct()
@@ -465,7 +464,7 @@ object SketchesQueries extends Family {
         lit("l_orderkey"), col("l_orderkey"),
         lit("l_partkey"), col("l_partkey"),
         lit("l_suppkey"), col("l_suppkey"))).as(Seq("column_name", "v")))
-    val est = Sketches.hllDistinct(melted, Seq("column_name"), col("v"), p = 8)
+    val est = Sketches.hllDistinct(melted, Seq("column_name"), col("v"))
       .withColumnRenamed("est_distinct", "ndv_est")
     val exact = melted.groupBy(col("column_name"))
       .agg(
@@ -518,14 +517,14 @@ object SketchesQueries extends Family {
     // register row fans to the 7 windows it serves, then joins on the
     // exact target day — hash-partitionable at any scale where a
     // day-range BroadcastNestedLoop would not be.
-    val windowRegs = Sketches.hllRegisters(ev, Seq("day"), col("user_id"), p = 8)
+    val windowRegs = Sketches.hllRegisters(ev, Seq("day"), col("user_id"))
       .withColumn("__off", explode(sequence(lit(0), lit(6))))
       .withColumn("target_day", col("day") + expr("make_interval(0, 0, 0, __off)"))
       .join(days, "target_day")
       .drop("day", "__off")
       .withColumnRenamed("target_day", "day")
     Sketches.hllEstimateFromRegisters(
-        Sketches.hllMerge(windowRegs, Seq("day")), Seq("day"), p = 8)
+        Sketches.hllMerge(windowRegs, Seq("day")), Seq("day"))
       .withColumnRenamed("est_distinct", "est_users_7d")
       .orderBy("day")
   })({
@@ -560,8 +559,8 @@ object SketchesQueries extends Family {
     val li = Tables.lineitem(s, dir)
     val id = (col("l_orderkey") * lit(8L) + col("l_linenumber")).cast("long")
     val shardRegs = Sketches.kmvRegisters(
-      li, Seq("l_returnflag", "l_linestatus"), id, col("l_extendedprice"), k = 256)
-    val merged = Sketches.kmvMerge(shardRegs, Seq("l_returnflag"), k = 256)
+      li, Seq("l_returnflag", "l_linestatus"), id, col("l_extendedprice"))
+    val merged = Sketches.kmvMerge(shardRegs, Seq("l_returnflag"))
     Sketches.kmvQuantiles(
         merged, Seq("l_returnflag"),
         Seq(0.25, 0.5, 0.75), Seq("p25_price", "median_price", "p75_price"))
@@ -594,7 +593,7 @@ object SketchesQueries extends Family {
   // values fit a long exactly.
   val q104 = query("q104_join_size_estimate")((s, dir) => {
     val ev = Tables.events(s, dir)
-    Sketches.cmsJoinSize(ev, ev, col("user_id"), col("user_id"), depth = 4, width = 1024)
+    Sketches.cmsJoinSize(ev, ev, col("user_id"), col("user_id"))
       .select(
         col("est_pairs").cast("long").as("est_pairs"),
         col("exact_pairs").cast("long").as("exact_pairs"),
@@ -628,7 +627,7 @@ object SketchesQueries extends Family {
   // no sketch error, bit-exact on both engines (63-bit words: DuckDB
   // checks shift overflow at bit 63, so masks stay sign-free).
   val q137 = query("q137_bitmap_distinct")((s, dir) =>
-    Sketches.bitmapSlidingDistinct(Tables.events(s, dir), "ts", "user_id", 7)
+    Sketches.bitmapSlidingDistinct(Tables.events(s, dir), "ts", "user_id")
       .withColumn("day", col("day").cast("string"))
       .orderBy("day"))(
     """WITH m AS (SELECT CAST(ts AS DATE) AS day, user_id // 63 AS w,

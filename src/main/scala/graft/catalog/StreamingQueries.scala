@@ -138,7 +138,7 @@ object StreamingQueries extends Family {
   // row_number window is the one genuinely ordered per-key pass.
   val q131 = query("q131_throttle_audit")((s, dir) => {
     val ev = Tables.events(s, dir)
-    val kept = graft.streaming.StreamingThrottle.throttleBatch(ev, 20)
+    val kept = graft.streaming.StreamingThrottle.throttleBatch(ev)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_kept"), max(col("ts")).as("ts_cutoff"))
     ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_seen"))
@@ -166,7 +166,7 @@ object StreamingQueries extends Family {
   val q162 = query("q162_stream_leaders")((s, dir) =>
     graft.streaming.StreamingLeaders.topKLeaders(
         Tables.events(s, dir).filter(col("value").isNotNull),
-        Seq("event_type"), col("value"), col("event_id"), k = 3)
+        Seq("event_type"), col("value"), col("event_id"))
       .orderBy("event_type", "rnk"))(
     """WITH r AS (SELECT event_type, value, event_id,
       |    row_number() OVER (PARTITION BY event_type
@@ -329,7 +329,7 @@ object StreamingQueries extends Family {
   // min(limit, count) identity computed directly.
   val q201 = query("q201_stream_real_throttle")((s, dir) =>
     graft.streaming.StreamingThrottle
-      .throttledFileStream(s, s"$dir/events.parquet", limit = 5)
+      .throttledFileStream(s, s"$dir/events.parquet")
       .orderBy("user_id"))(
     """SELECT user_id, LEAST(5, count(*)) AS n_admitted
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)
@@ -393,7 +393,7 @@ object StreamingQueries extends Family {
   // under ANY file batching. Oracle: q162's row_number replay verbatim.
   val q204 = query("q204_stream_real_leaders")((s, dir) =>
     graft.streaming.StreamingLeaders
-      .topKLeadersFileStream(s, s"$dir/events.parquet", k = 3)
+      .topKLeadersFileStream(s, s"$dir/events.parquet")
       .orderBy("event_type", "rnk"))(q162.oracle)
 
   // ---------------------------------------------------------------- q206

@@ -249,7 +249,7 @@ object TablesQueries extends Family {
         date_trunc("month", col("o_orderdate")).as("month"))
       .agg((count(lit(1)) * 128L).as("bytes"))
     graft.operators.Layout.compactionPlan(files, "bytes", Seq("month"),
-        targetBytes = 256L * 1024, partitionCols = Seq("o_orderstatus"))
+        partitionCols = Seq("o_orderstatus"))
       .orderBy("o_orderstatus", "month")
   })(
     """WITH files AS (SELECT o_orderstatus,

@@ -159,7 +159,7 @@ object TextQueries extends Family {
       size(array_distinct(col("toks"))).cast("long").as("n_distinct"),
       TextFunctions.dupTokenFraction(col("toks")).as("dup_frac"),
       TextFunctions.topTokenFraction(col("toks")).as("top_frac"),
-      TextFunctions.dupShingleFraction(col("toks"), 2).as("dup_bigram_frac")
+      TextFunctions.dupShingleFraction(col("toks")).as("dup_bigram_frac")
     ).orderBy("doc_id")
   })(
     """WITH toks AS (SELECT doc_id,
@@ -250,8 +250,7 @@ object TextQueries extends Family {
     Packing
       .packOffsets(
         Tables.documents(s, dir), "doc_id",
-        TextFunctions.tokenCount(col("text")),
-        capacity = 2048, nShards = 4)
+        TextFunctions.tokenCount(col("text")))
       .select("shard", "doc_id", "n_tokens", "start_tok",
         "first_window", "last_window", "spans_boundary")
       .orderBy("doc_id"))({
@@ -282,7 +281,7 @@ object TextQueries extends Family {
   // value-checked via md5 of the space-joined window.
   val q54 = query("q54_chunk_windows")((s, dir) =>
     Chunking
-      .chunkWindows(Tables.documents(s, dir), "doc_id", "text", window = 32, stride = 24)
+      .chunkWindows(Tables.documents(s, dir), "doc_id", "text")
       .orderBy("doc_id", "chunk_idx"))(
     s"""WITH $duckToksCte,
        |c AS (SELECT doc_id, t, len(t) AS n,
@@ -304,7 +303,7 @@ object TextQueries extends Family {
   // join — see TfIdf's scaladoc for the 100 TB shape. tf/df is an exact
   // int/int double division, so scores hash-match cross-engine.
   val q55 = query("q55_tfidf_terms")((s, dir) =>
-    TfIdf.topTerms(Tables.documents(s, dir), "doc_id", "text", k = 3)
+    TfIdf.topTerms(Tables.documents(s, dir), "doc_id", "text")
       .orderBy("doc_id", "rnk"))(
     s"""WITH $duckToksCte,
        |ex AS (SELECT doc_id, unnest(t) AS term FROM tk),
@@ -365,7 +364,7 @@ object TextQueries extends Family {
   // TakeOrdered (per-partition heaps), never a full sort.
   val q59 = query("q59_vocab_topk")((s, dir) =>
     TfIdf
-      .vocabulary(Tables.documents(s, dir), "doc_id", "text", minDf = 2L, topK = 100)
+      .vocabulary(Tables.documents(s, dir), "doc_id", "text")
       .orderBy("vocab_id"))(
     s"""WITH $duckToksCte,
        |ex AS (SELECT doc_id, unnest(t) AS term FROM tk),
@@ -478,7 +477,7 @@ object TextQueries extends Family {
   // the exchange caps the shuffle at groups × k per map partition
   // (PlanSpec-pinned). Term-text tie-break keeps ranks deterministic.
   val q115 = query("q115_grouped_vocab")((s, dir) =>
-    TfIdf.groupedVocabulary(Tables.documents(s, dir), "lang", "text", topK = 5)
+    TfIdf.groupedVocabulary(Tables.documents(s, dir), "lang", "text")
       .orderBy("lang", "rank"))(
     s"""WITH ${duckToksCteFor("lang")},
       |ex AS (SELECT lang, unnest(t) AS term FROM tk),
@@ -498,8 +497,7 @@ object TextQueries extends Family {
   // map-side combine; the vocab-sized unigram table joins back twice
   // (AQE-broadcast); top-k is TakeOrdered, never a global sort.
   val q118 = query("q118_bigram_pmi")((s, dir) =>
-    TfIdf.bigramAssociations(Tables.documents(s, dir), "text",
-      minCount = 5, topK = 20))(
+    TfIdf.bigramAssociations(Tables.documents(s, dir), "text"))(
     s"""WITH $duckToksCte,
       |bg0 AS (SELECT list_transform(range(1, len(t)), i -> [t[i], t[i+1]]) AS bl
       |  FROM tk WHERE len(t) >= 2),
@@ -569,7 +567,7 @@ object TextQueries extends Family {
     val d = Tables.documents(s, dir)
     Packing
       .paddingWaste(d, "source",
-        size(TextFunctions.tokens(col("text"))), seqLen = 512)
+        size(TextFunctions.tokens(col("text"))))
       .orderBy("source")
   })(
     s"""WITH ${duckToksCteFor("source")},
@@ -658,7 +656,7 @@ object TextQueries extends Family {
   // (df≈25) dominating "vector"/"stream" (df≈390) is the idf story.
   private val q128Terms = Seq("dup", "vector", "stream")
   val q128 = query("q128_keyword_search")((s, dir) =>
-    TfIdf.keywordSearch(Tables.documents(s, dir), "doc_id", "text", q128Terms, 10))(
+    TfIdf.keywordSearch(Tables.documents(s, dir), "doc_id", "text", q128Terms))(
     s"""WITH $duckToksCte,
        |ex AS (SELECT doc_id, unnest(t) AS term FROM tk),
        |m AS (SELECT doc_id, term, count(*) AS tf FROM ex
@@ -742,7 +740,8 @@ object TextQueries extends Family {
   // MATERIALIZED (the q129 iteration convention — without it the st-chain
   // re-expands 2^n times). bb{t} holds round t's winning pair. ONE copy
   // serves both BPE oracles (q188 train, q189 encode).
-  private def duckBpeCtes(n: Int): String = {
+  private def duckBpeCtes: String = {
+    val n = BpeTrainer.NumMerges
     def iter(t: Int) =
       s"""ex$t AS MATERIALIZED (SELECT word, freq, unnest(range(1, len(syms)+1)) AS i, syms FROM st$t),
          |pp$t AS (SELECT word, freq, i, syms[i] AS l, syms[i+1] AS r FROM ex$t WHERE i < len(syms)),
@@ -772,7 +771,7 @@ object TextQueries extends Family {
   val q188 = query("q188_bpe_train")((s, dir) => {
     import s.implicits._
     val vocab = BpeTrainer.wordVocab(Tables.documents(s, dir), "text")
-    val (merges, _) = BpeTrainer.train(vocab, nMerges = 6, trackSymbolMass = true)
+    val (merges, _) = BpeTrainer.train(vocab, trackSymbolMass = true)
     merges.map(m => (m.rank.toLong, m.lhs, m.rhs, m.pairFreq, m.nSymsAfter))
       .toDF("merge_rank", "lhs", "rhs", "pair_freq", "n_syms_after")
       .orderBy("merge_rank")
@@ -782,7 +781,7 @@ object TextQueries extends Family {
         s"CAST(cnt AS BIGINT) AS pair_freq, " +
         s"(SELECT CAST(sum(len(syms) * freq) AS BIGINT) FROM st${t + 1}) AS n_syms_after FROM bb$t"
     }.mkString(" UNION ALL ")
-    s"""WITH ${duckBpeCtes(6)}
+    s"""WITH $duckBpeCtes
        |SELECT * FROM ($rows) ORDER BY merge_rank""".stripMargin
   })
 
@@ -800,7 +799,7 @@ object TextQueries extends Family {
   // (bounded), not the corpus.
   val q189 = query("q189_bpe_encode")((s, dir) => {
     val vocab = BpeTrainer.wordVocab(Tables.documents(s, dir), "text")
-    val (merges, _) = BpeTrainer.train(vocab, nMerges = 6)
+    val (merges, _) = BpeTrainer.train(vocab)
     BpeTrainer.encodeVocab(vocab, merges)
       .select(col("freq"), explode(col("syms")).as("symbol"))
       .groupBy(col("symbol"))
@@ -810,7 +809,7 @@ object TextQueries extends Family {
       .filter(col("rnk") <= 20)
       .orderBy("rnk")
   })(
-    s"""WITH ${duckBpeCtes(6)},
+    s"""WITH $duckBpeCtes,
        |sy AS (SELECT sym AS symbol, CAST(sum(freq) AS BIGINT) AS n_occurrences
        |  FROM (SELECT freq, unnest(syms) AS sym FROM st6) GROUP BY sym),
        |rk AS (SELECT symbol, n_occurrences,
@@ -833,7 +832,7 @@ object TextQueries extends Family {
   val q197 = query("q197_tokenizer_fertility")((s, dir) => {
     val docs = Tables.documents(s, dir)
     val vocab = BpeTrainer.wordVocab(docs, "text")
-    val (merges, _) = BpeTrainer.train(vocab, nMerges = 6)
+    val (merges, _) = BpeTrainer.train(vocab)
     val pieces = BpeTrainer.encodeVocab(vocab, merges)
       .select(col("word"), size(col("syms")).cast("long").as("__np"))
     val docWords = docs
@@ -851,7 +850,7 @@ object TextQueries extends Family {
           .as("fertility"))
       .orderBy("lang")
   })(
-    s"""WITH ${duckBpeCtes(6)},
+    s"""WITH $duckBpeCtes,
        |pieces AS (SELECT word, CAST(len(syms) AS BIGINT) AS np FROM st6),
        |dw AS (SELECT lang, unnest(
        |    CASE WHEN length(trim(lower(text))) = 0 THEN []

@@ -20,7 +20,7 @@ object VectorsQueries extends Family {
   val q28 = query("q28_knn_exact")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     Similarity
-      .knnExact(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
+      .knnExact(e, e.filter(col("vec_id") < 10), "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rnk"), col("cosine"))
       .orderBy("query_id", "rnk")
   })(
@@ -45,7 +45,7 @@ object VectorsQueries extends Family {
   val q29 = query("q29_embedding_near_dup")((s, dir) => {
     val e = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
     Similarity
-      .nearDupPairs(e, "vec_id", "embedding", threshold = 0.25)
+      .nearDupPairs(e, "vec_id", "embedding")
       .orderBy("id_a", "id_b")
   })(
     """WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
@@ -71,7 +71,7 @@ object VectorsQueries extends Family {
   val q30 = query("q30_ann_lsh")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     Similarity
-      .knnLsh(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
+      .knnLsh(e, e.filter(col("vec_id") < 10), "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rnk"), col("cosine"))
       .orderBy("query_id", "rnk")
   })({
@@ -139,7 +139,7 @@ object VectorsQueries extends Family {
   private def duckDsq(a: String, b: String) =
     s"sum(CAST(CAST(${duckQz(a)} - ${duckQz(b)} AS DECIMAL(18,6)) * CAST(${duckQz(a)} - ${duckQz(b)} AS DECIMAL(18,6)) AS DECIMAL(36,12)))"
 
-  // Shared replay of Similarity.ivfTrain(k=8, iters=1) + ivfAssign over
+  // Shared replay of Similarity.ivfTrain (8 cells, one Lloyd step) + ivfAssign over
   // `embeddings`: CTE chain ending at `a1(vec_id, cluster)` — the final
   // assignment. ONE copy serves every IVF-based oracle (q48 ANN, q116
   // SemDeDup); a second hand copy could silently drift from the Spark side.
@@ -167,8 +167,7 @@ object VectorsQueries extends Family {
   val q48 = query("q48_ivf_ann")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     Similarity
-      .knnIvf(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 5, kClusters = 8, nProbe = 2, iters = 1)
+      .knnIvf(e, e.filter(col("vec_id") < 5), "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rnk"), col("cosine"))
       .orderBy("query_id", "rnk")
   })({
@@ -292,9 +291,7 @@ object VectorsQueries extends Family {
   // k ∝ N fix instead of burning the cluster. A production caller
   // scales k and keeps the same cap.
   val q116 = query("q116_semdedup")((s, dir) =>
-    Similarity.semDedup(Tables.embeddings(s, dir), "vec_id", "embedding",
-        threshold = 0.35, kClusters = 8, iters = 1,
-        maxPairsPerVector = 4096L)
+    Similarity.semDedup(Tables.embeddings(s, dir), "vec_id", "embedding")
       .groupBy(col("cluster"))
       .agg(
         count(lit(1)).as("n_vectors"),
@@ -353,11 +350,10 @@ object VectorsQueries extends Family {
     val e = Tables.embeddings(s, dir)
     val qs = e.filter(col("vec_id") < 10)
     val exact = Similarity
-      .knnExact(e, qs, "vec_id", "embedding", k = 5)
+      .knnExact(e, qs, "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"))
     val approx = Similarity
-      .knnIvf(e, qs, "vec_id", "embedding",
-        k = 5, kClusters = 8, nProbe = 2, iters = 1)
+      .knnIvf(e, qs, "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
     exact
       .join(approx, Seq("query_id", "neighbor_id"), "left")
@@ -418,7 +414,7 @@ object VectorsQueries extends Family {
   // u64 mod (true unsigned %, the cross-engine trap pmod fails), the
   // skip-self map, the exact cosine, and the argmax.
   val q169 = query("q169_hard_negatives")((s, dir) =>
-    Similarity.hardNegatives(Tables.embeddings(s, dir), "vec_id", "embedding", k = 4)
+    Similarity.hardNegatives(Tables.embeddings(s, dir), "vec_id", "embedding")
       .orderBy("vec_id"))({
     val mh = DuckHash.mix64Inline("CAST(vec_id * 4 + j AS UBIGINT)")
     s"""WITH nn AS (SELECT count(*) AS n FROM embeddings),
@@ -509,8 +505,7 @@ object VectorsQueries extends Family {
 
   val q185 = query("q185_pq_ann")((s, dir) => {
     val e = Tables.embeddings(s, dir)
-    Similarity.knnPq(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 5, m = 4, kCodes = 8, iters = 1)
+    Similarity.knnPq(e, e.filter(col("vec_id") < 5), "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("long").as("rnk"), col("adc_dist"))
       .orderBy("query_id", "rnk")
@@ -587,8 +582,7 @@ object VectorsQueries extends Family {
 
   val q187 = query("q187_ivfpq_ann")((s, dir) => {
     val e = Tables.embeddings(s, dir)
-    Similarity.knnIvfPq(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 5, kClusters = 8, nProbe = 2, m = 4, kCodes = 8, iters = 1)
+    Similarity.knnIvfPq(e, e.filter(col("vec_id") < 5), "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("long").as("rnk"), col("adc_dist"))
       .orderBy("query_id", "rnk")
@@ -617,18 +611,17 @@ object VectorsQueries extends Family {
   val q190 = query("q190_pq_recall")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     val qs = e.filter(col("vec_id") < 5)
-    val truth = Similarity.knnExactL2(e, qs, "vec_id", "embedding", k = 5)
+    val truth = Similarity.knnExactL2(e, qs, "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"))
     // The PQ and IVFPQ legs each run an eager training chain (collects) at
     // CONSTRUCTION time; they share no state, so build them concurrently —
     // the certificate costs max(leg) instead of sum(legs).
     val Seq(pq, ivfpq) = graft.operators.Concurrency.inParallel(Seq(
       () => Similarity
-        .knnPq(e, qs, "vec_id", "embedding", dim = 64, k = 5, m = 4, kCodes = 8, iters = 1)
+        .knnPq(e, qs, "vec_id", "embedding")
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("__pq")),
       () => Similarity
-        .knnIvfPq(e, qs, "vec_id", "embedding",
-          dim = 64, k = 5, kClusters = 8, nProbe = 2, m = 4, kCodes = 8, iters = 1)
+        .knnIvfPq(e, qs, "vec_id", "embedding")
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("__ivfpq"))))
     truth
       // top-k legs are output-sized (|queries|*k rows) — broadcast them
@@ -688,7 +681,7 @@ object VectorsQueries extends Family {
   val q192 = query("q192_nprobe_sweep")((s, dir) => {
     val e = Tables.embeddings(s, dir)
     Similarity.ivfRecallSweep(e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 5, kClusters = 8, nProbes = Seq(1, 2, 4, 8), iters = 1)
+        "vec_id", "embedding", nProbes = Seq(1, 2, 4, 8))
       .orderBy("nprobe", "query_id")
   })({
     def qz(x: String) = duckQz(x)
@@ -788,26 +781,24 @@ object VectorsQueries extends Family {
       .select(id.as("vec_id"), emb.as("embedding"))
       .localCheckpoint()
     val qs = e.filter(col("vec_id") < 5)
-    val truth = Similarity.knnExactL2(e, qs, "vec_id", "embedding", k = 5)
+    val truth = Similarity.knnExactL2(e, qs, "vec_id", "embedding")
       .select(col("query_id"), col("neighbor_id"))
     // The IVF and IVFPQ legs need the SAME deterministic coarse quantizer
-    // (same corpus, kClusters=8, iters=1 — bit-identical retrain): train it
+    // (same corpus — a bit-identical retrain): train it
     // once and hand it to both instead of paying two ivfTrain collect
     // chains. The remaining eager chains (PQ codebooks ×2) still share no
     // state — build concurrently (q190's move).
-    val cents = Similarity.ivfTrain(e, "vec_id", "embedding", k = 8, iters = 1)
+    val cents = Similarity.ivfTrain(e, "vec_id", "embedding")
     val Seq(ivf, pq, ivfpq) = graft.operators.Concurrency.inParallel(Seq(
       () => Similarity
         .knnIvf(e, qs, "vec_id", "embedding",
-          k = 5, kClusters = 8, nProbe = 2, iters = 1,
           pretrained = Some(cents))
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("__ivf")),
       () => Similarity
-        .knnPq(e, qs, "vec_id", "embedding", dim = 64, k = 5, m = 4, kCodes = 8, iters = 1)
+        .knnPq(e, qs, "vec_id", "embedding")
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("__pq")),
       () => Similarity
         .knnIvfPq(e, qs, "vec_id", "embedding",
-          dim = 64, k = 5, kClusters = 8, nProbe = 2, m = 4, kCodes = 8, iters = 1,
           pretrained = Some(cents))
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("__ivfpq"))))
     def recallCols(hits: Column, tag: String) = Seq(

@@ -34,7 +34,10 @@ object AggFunctions {
   def avgExact(c: Column, scale: Int = 4): Column =
     sumExact(c, scale) / count(c)
 
-  /** SCALE-TIER percentile: `approx_percentile` (GK sketch). The exact
+  /** Accuracy of [[medianApprox]]'s sketch: rank error ≤ groupSize/100. */
+  final val ApproxAccuracy = 100
+
+  /** SCALE-TIER median: `approx_percentile` (GK sketch). The exact
     * `percentile` aggregate materializes every group's values in its
     * aggregation buffer — at 100 TB with billions of rows per group that is
     * an executor-memory cliff — while the sketch is O(1/accuracy) memory
@@ -43,8 +46,8 @@ object AggFunctions {
     * groupSize/accuracy. Keep the exact form where oracle bit-parity is
     * required (catalog q37); use this tier for production-scale rollups
     * (catalog q41). */
-  def percentileApprox(c: Column, p: Double, accuracy: Int = 10000): Column =
-    approx_percentile(c, lit(p), lit(accuracy))
+  def medianApprox(c: Column): Column =
+    approx_percentile(c, lit(0.5), lit(ApproxAccuracy))
 
   /** Deterministic sample standard deviation via the sum-of-squares
     * identity, with both sums accumulated exactly. The closed-form double

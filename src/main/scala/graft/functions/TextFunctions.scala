@@ -59,15 +59,16 @@ object TextFunctions {
         )
       )
 
-  /** Word k-shingles as space-joined strings; documents shorter than k
-    * tokens yield no shingles. Single-expression form — see
-    * [[shinglesOfTokens]] for the staged form used on hot paths. */
-  def wordShingles(text: Column, k: Int): Column =
-    shinglesOfTokens(tokens(text), k)
+  /** Word shingles of the MinHash width [[graft.operators.Dedup.MinHashK]]
+    * as space-joined strings; documents shorter than that many tokens
+    * yield no shingles. Single-expression form — see [[shinglesOfTokens]]
+    * for the staged form used on hot paths. */
+  def wordShingles(text: Column): Column =
+    shinglesOfTokens(tokens(text), graft.operators.Dedup.MinHashK)
 
-  /** Distinct word k-shingles (set semantics, for Jaccard). */
-  def distinctShingles(text: Column, k: Int): Column =
-    array_distinct(wordShingles(text, k))
+  /** Distinct [[wordShingles]] (set semantics, for Jaccard). */
+  def distinctShingles(text: Column): Column =
+    array_distinct(wordShingles(text))
 
   // --- Quality scoring (length / punctuation / stopword heuristics) -------
 
@@ -134,10 +135,10 @@ object TextFunctions {
     when(size(toks) === 0, lit(0.0))
       .otherwise(topTokenCount(toks).cast("double") / size(toks).cast("double"))
 
-  /** Fraction of k-gram occurrences that are repeats (the "duplicate
-    * n-gram fraction" filter); 0 when the doc has < k tokens. */
-  def dupShingleFraction(toks: Column, k: Int): Column = {
-    val sh = shinglesOfTokens(toks, k)
+  /** Fraction of token-bigram occurrences that are repeats (the
+    * "duplicate n-gram fraction" filter); 0 when the doc has < 2 tokens. */
+  def dupShingleFraction(toks: Column): Column = {
+    val sh = shinglesOfTokens(toks, 2)
     when(size(sh) === 0, lit(0.0)).otherwise(
       (size(sh) - size(array_distinct(sh))).cast("double") / size(sh).cast("double"))
   }

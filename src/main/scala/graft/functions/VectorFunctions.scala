@@ -71,16 +71,17 @@ object VectorFunctions {
   def cosineExact(a: Column, b: Column): Column =
     dotExact(a, b) / sqrt(norm2Exact(a) * norm2Exact(b))
 
-  /** Sign bits of `numPlanes` pseudo-random hyperplane projections — the
+  /** Sign bits of [[graft.operators.Similarity.LshPlanes]] pseudo-random
+    * hyperplane projections — the
     * random-hyperplane LSH family for cosine similarity (Charikar 2002).
     * The "hyperplanes" are derived deterministically per (plane, dimension)
     * from a seeded integer hash, so signatures are reproducible across runs
     * and cluster layouts without shipping a plane matrix. Returns an
     * Array[Int] of 0/1 bits.
     */
-  def hyperplaneSignBits(vec: Column, numPlanes: Int, seed: Int): Column =
+  def hyperplaneSignBits(vec: Column, seed: Int): Column =
     transform(
-      sequence(lit(0), lit(numPlanes - 1)),
+      sequence(lit(0), lit(graft.operators.Similarity.LshPlanes - 1)),
       p => {
         // projection_p = sum_d vec[d] * w(p, d), w in [-1, 1) derived from
         // a 64-bit integer mix of (seed, p, d).

@@ -16,6 +16,19 @@ import java.security.MessageDigest
   */
 object Multimodal {
 
+  /** Side of [[codecRoundTrip]]'s square RGB image. */
+  final val CodecSide = 8
+  /** Samples of [[audioRoundTrip]]'s mono clip. */
+  final val AudioSamples = 256
+  /** Frames per synthetic video, their gray raster, the frames
+    * [[videoRoundTrip]] samples, and the shared content pool of
+    * [[frameSignatures]] (a power of two: mask arithmetic). */
+  final val VideoFrames = 6
+  final val FrameW = 16
+  final val FrameH = 8
+  final val SampledFrames = 4
+  final val FrameContents = 64
+
   /** REAL image codec over JDK `javax.imageio` — no native deps, ships in
     * every JRE. Handles the formats the JDK decodes out of the box (PNG,
     * BMP, GIF, JPEG, WBMP, TIFF on JDK 9+); anything else — or a payload
@@ -302,9 +315,8 @@ object Multimodal {
     * buffering O(1 image).
     */
   def codecRoundTrip(
-      ids: org.apache.spark.sql.Dataset[java.lang.Long],
-      w: Int,
-      h: Int): org.apache.spark.sql.Dataset[CodecRoundTrip] = {
+      ids: org.apache.spark.sql.Dataset[java.lang.Long]): org.apache.spark.sql.Dataset[CodecRoundTrip] = {
+    val (w, h) = (CodecSide, CodecSide)
     import java.awt.image.BufferedImage
     import graft.functions.HashFunctions.mix64Long
     import ids.sparkSession.implicits._
@@ -366,8 +378,8 @@ object Multimodal {
     * same reason as [[codecRoundTrip]] (no per-batch codec context in
     * javax.sound — `AudioSystem` resolves its provider per call). */
   def audioRoundTrip(
-      ids: org.apache.spark.sql.Dataset[java.lang.Long],
-      nSamples: Int): org.apache.spark.sql.Dataset[AudioRoundTrip] = {
+      ids: org.apache.spark.sql.Dataset[java.lang.Long]): org.apache.spark.sql.Dataset[AudioRoundTrip] = {
+    val nSamples = AudioSamples
     import graft.functions.HashFunctions.mix64Long
     import ids.sparkSession.implicits._
     ids.mapPartitions { iter =>
@@ -445,11 +457,8 @@ object Multimodal {
     * Row-local partition transform, no shuffle; record-at-a-time (no
     * per-batch codec context in ImageIO — see [[codecRoundTrip]]). */
   def videoRoundTrip(
-      ids: org.apache.spark.sql.Dataset[java.lang.Long],
-      nFrames: Int,
-      w: Int,
-      h: Int,
-      maxFrames: Int): org.apache.spark.sql.Dataset[VideoRoundTrip] = {
+      ids: org.apache.spark.sql.Dataset[java.lang.Long]): org.apache.spark.sql.Dataset[VideoRoundTrip] = {
+    val (nFrames, w, h, maxFrames) = (VideoFrames, FrameW, FrameH, SampledFrames)
     import graft.functions.HashFunctions.mix64Long
     import ids.sparkSession.implicits._
     val fpix = w * h
@@ -506,18 +515,12 @@ object Multimodal {
     * whose CONTENT is `mix64(id·nFrames + f) & (contents−1)` — a shared
     * pool, so cross-video duplicates exist by construction): each id
     * round-trips a real GIF, and signatures come from the decoded frames.
-    * Row-local partition transform, no shuffle; `contents` must be a
-    * power of two (mask arithmetic — cross-engine-safe residues). */
+    * Row-local partition transform, no shuffle. */
   def frameSignatures(
-      ids: org.apache.spark.sql.Dataset[java.lang.Long],
-      nFrames: Int,
-      w: Int,
-      h: Int,
-      contents: Int): org.apache.spark.sql.Dataset[FrameSig] = {
+      ids: org.apache.spark.sql.Dataset[java.lang.Long]): org.apache.spark.sql.Dataset[FrameSig] = {
     import graft.functions.HashFunctions.mix64Long
     import ids.sparkSession.implicits._
-    require(contents > 0 && (contents & (contents - 1)) == 0,
-      s"contents must be a power of two, got $contents")
+    val (nFrames, w, h, contents) = (VideoFrames, FrameW, FrameH, FrameContents)
     val fpix = w * h
     ids.mapPartitions { iter =>
       val md = MessageDigest.getInstance("SHA-256")

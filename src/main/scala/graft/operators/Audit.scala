@@ -16,6 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object Audit {
 
+  /** Group size below which [[kAnonymity]] flags a quasi-identifier group,
+    * and the distinct sensitive values [[lDiversity]] asks of each group. */
+  final val AnonymityK = 10
+  final val DiversityL = 2
+
   /** One declared invariant: violations = COUNT(*) WHERE NOT cond. */
   final case class Constraint(name: String, table: String, cond: Column)
 
@@ -129,8 +134,8 @@ object Audit {
     * shuffles once, bounded by |QI value combinations|. Integer ppm, no
     * doubles. Emits `(n_rows, n_groups, k_anonymity, n_violating_groups,
     * n_rows_at_risk, risk_ppm)`. */
-  def kAnonymity(df: DataFrame, qiCols: Seq[String], k: Int): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
+  def kAnonymity(df: DataFrame, qiCols: Seq[String]): DataFrame = {
+    val k = AnonymityK
     require(qiCols.nonEmpty, "need at least one quasi-identifier column")
     df.groupBy(qiCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
@@ -210,9 +215,8 @@ object Audit {
   def lDiversity(
       df: DataFrame,
       qiCols: Seq[String],
-      sensitiveCol: String,
-      l: Int): DataFrame = {
-    require(l >= 2, s"l must be >= 2, got $l")
+      sensitiveCol: String): DataFrame = {
+    val l = DiversityL
     require(qiCols.nonEmpty, "need at least one quasi-identifier column")
     require(!qiCols.contains(sensitiveCol),
       s"sensitive column $sensitiveCol cannot also be a quasi-identifier")

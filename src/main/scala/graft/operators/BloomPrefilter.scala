@@ -23,28 +23,28 @@ import graft.functions.HashFunctions
   *
   * Scale shape: the word table is `mBits/64` rows (1024 for the default
   * 64 Ki bits) built with one map-side-combined `bit_or` aggregation over
-  * the key side, then BROADCAST; probing is `seeds` broadcast hash joins on
+  * the key side, then BROADCAST; probing is [[BloomPrefilter.Seeds]] broadcast hash joins on
   * the word index — map-only over the fact table, no shuffle of fact rows.
   */
 object BloomPrefilter {
+
+  /** Hash functions (probe positions) per key. */
+  final val Seeds = 2
 
   /** Build the word table `(word: long, bits: long)` from `keys`' `keyCol`.
     * Absent words mean all-zero bits (the probe treats no-match as 0).
     *
     * @param mBits filter size in bits; power of 2, multiple of 64
-    * @param seeds number of probe positions per key
     */
   def buildTable(
       keys: DataFrame,
       keyCol: Column,
-      mBits: Int = 65536,
-      seeds: Int = 2): DataFrame = {
+      mBits: Int = 65536): DataFrame = {
     require(mBits >= 64 && (mBits & (mBits - 1)) == 0,
       s"mBits must be a power of 2 >= 64, got $mBits")
-    require(seeds >= 1 && seeds <= 8, s"seeds must be in [1,8], got $seeds")
     keys
       .select(keyCol.cast("long").as("__bf_key"))
-      .withColumn("__bf_seed", explode(array((0 until seeds).map(lit): _*)))
+      .withColumn("__bf_seed", explode(array((0 until Seeds).map(lit): _*)))
       .withColumn("__bf_pos",
         HashFunctions.seeded(col("__bf_key"), col("__bf_seed"))
           .bitwiseAND(lit((mBits - 1).toLong)))
@@ -57,16 +57,15 @@ object BloomPrefilter {
 
   /** Append a `bloom_pass` boolean to `df`: true iff every seeded probe of
     * `keyCol` hits a set bit — i.e. the row MAY match the key side (false
-    * positives possible at the standard `(1-e^(-seeds*n/mBits))^seeds`
+    * positives possible at the standard `(1-e^(-Seeds*n/mBits))^Seeds`
     * rate), false means it provably cannot. `table` must come from
-    * [[buildTable]] with the same `mBits`/`seeds`. */
+    * [[buildTable]] with the same `mBits`. */
   def prefilter(
       df: DataFrame,
       keyCol: Column,
       table: DataFrame,
-      mBits: Int = 65536,
-      seeds: Int = 2): DataFrame = {
-    val withFlags = (0 until seeds).foldLeft(
+      mBits: Int = 65536): DataFrame = {
+    val withFlags = (0 until Seeds).foldLeft(
       df.withColumn("__bf_key", keyCol.cast("long"))) { (acc, s) =>
       val pos = HashFunctions.seeded(col("__bf_key"), lit(s))
         .bitwiseAND(lit((mBits - 1).toLong))
@@ -87,9 +86,9 @@ object BloomPrefilter {
             lit(false)))
         .drop(s"__bf_word_$s", s"__bf_bit_$s", s"__bf_tw_$s", s"__bf_bits_$s")
     }
-    val pass = (0 until seeds).map(s => col(s"__bf_hit_$s")).reduce(_ && _)
+    val pass = (0 until Seeds).map(s => col(s"__bf_hit_$s")).reduce(_ && _)
     withFlags
       .withColumn("bloom_pass", pass)
-      .drop("__bf_key" +: (0 until seeds).map(s => s"__bf_hit_$s"): _*)
+      .drop("__bf_key" +: (0 until Seeds).map(s => s"__bf_hit_$s"): _*)
   }
 }

@@ -29,6 +29,9 @@ import graft.functions.TextFunctions
   */
 object BpeTrainer {
 
+  /** Merge rounds [[train]] runs. */
+  final val NumMerges = 6
+
   /** One training round's outcome. */
   final case class Merge(rank: Int, lhs: String, rhs: String, pairFreq: Long, nSymsAfter: Long)
 
@@ -73,7 +76,7 @@ object BpeTrainer {
       col("word"), col("freq").cast("long").as("freq"), syms.as("syms"))
   }
 
-  /** Train `nMerges` rounds over a (word, freq) vocabulary, one merge per
+  /** Train [[NumMerges]] rounds over a (word, freq) vocabulary, one merge per
     * round: the argmax pair. Returns the merge table (ranked, with each
     * merge's frequency-weighted pair count and — when `trackSymbolMass` —
     * the post-merge frequency-weighted symbol count, the quantity whose
@@ -82,7 +85,6 @@ object BpeTrainer {
     * symbol. */
   def train(
       vocab: DataFrame,
-      nMerges: Int,
       trackSymbolMass: Boolean = false): (Seq[Merge], DataFrame) = {
     var state = vocab
       .select(col("word"), col("freq").cast("long").as("freq"),
@@ -91,7 +93,7 @@ object BpeTrainer {
     val merges = Seq.newBuilder[Merge]
     var rank = 0
     var exhausted = false
-    while (rank < nMerges && !exhausted) {
+    while (rank < NumMerges && !exhausted) {
       val top = state
         .select(col("freq"), explode(adjacentPairs(col("syms"))).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))

@@ -41,18 +41,16 @@ object Centrality {
   private def requireIntegralNodes(df: DataFrame, cols: Seq[String], op: String): Unit =
     Guards.requireIntegralColumns(df, cols, op)
 
+  /** Power-iteration rounds of [[pageRank]]. */
+  final val PageRankIterations = 5
+
   /** PageRank over an UNDIRECTED graph given as distinct (srcCol, dstCol)
     * pairs (each pair listed once, e.g. `doc_a < doc_b`; the mirror
     * direction is added internally). Every node of the graph appears in
     * the output with its fixed-point rank (`rank` ≈ stationary share ×
     * 10¹² × nodes). Overflow bound: a node's rank stays below Long.Max/85
     * as long as total graph mass (nodes × 10¹²) does. */
-  def pageRank(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iterations: Int = 5): DataFrame = {
-    require(iterations >= 1, "pageRank needs at least one iteration")
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // materialize the INPUT edge list before fanning it out: the mirror
     // union + degree join + adjacency reference it 4 times, and an
     // unmaterialized edge pipeline (e.g. the LSH candidate build) would
@@ -65,7 +63,7 @@ object Centrality {
     val scale = 1000000000000L
     val base = scale / 100L * 15L // the (1 − 0.85) teleport share of a unit rank
     var r = deg.select(col("src").as("node"), lit(scale).as("rank"))
-    for (_ <- 1 to iterations) {
+    for (_ <- 1 to PageRankIterations) {
       r = adj.join(r, adj("src") === r("node"))
         .select(col("dst"), expr("(rank * 85) div (100 * __deg)").as("__c"))
         .groupBy(col("dst"))
@@ -143,7 +141,12 @@ object Centrality {
       .agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** k-core decomposition: the maximal subgraph in which EVERY node keeps
+  /** Degree every node of [[kCore]]'s core keeps. */
+  final val CoreK = 30
+
+  /** [[CoreK]]-core decomposition over distinct canonical (a < b) edges,
+    * the output contract of the similarity joins that feed it: the
+    * maximal subgraph in which EVERY node keeps
     * degree ≥ k, by iterated peeling (Seidman 1983; the distributed
     * formulation is the standard degree-filter fixpoint). On a near-dup
     * candidate graph the k-core is the "hard kernel" of mutual
@@ -165,30 +168,17 @@ object Centrality {
     *
     * Output: `(node, degree)` for every core member, with its degree
     * INSIDE the core. Empty when no k-core exists. */
-  def kCore(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      k: Int,
-      inputCanonical: Boolean = false): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
+  def kCore(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val k = CoreK
     requireIntegralNodes(edges, Seq(srcCol, dstCol), "kCore")
-    // Loop state is the CANONICAL a<b list, materialized once per round
-    // (the expensive edge pipeline — q148 feeds the exact similarity join
-    // here — runs exactly once, inside the first checkpoint). Carrying
-    // half the rows through the per-round semi-joins and checkpoint
-    // writes measured ~25% off the q148 peel. `inputCanonical` skips the
-    // canonicalize+distinct shuffle for producers whose OUTPUT CONTRACT
-    // is already distinct a<b pairs (prefixFilterJaccardJoin, lshPairs)
-    // — re-deduplicating a deduplicated edge list is one full shuffle
-    // of the edge set for nothing.
-    val base = edges.select(
-      col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-    var e = (if (inputCanonical) base
-             else base
-               .filter(col("a") =!= col("b"))
-               .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-               .distinct())
+    // Loop state is the canonical a<b list the input already is,
+    // materialized once per round (the expensive edge pipeline — q148
+    // feeds the exact similarity join here — runs exactly once, inside
+    // the first checkpoint). Carrying half the rows through the
+    // per-round semi-joins and checkpoint writes measured ~25% off the
+    // q148 peel.
+    var e = edges.select(
+        col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .localCheckpoint()
     // Per-node degree in ONE read of the checkpointed canonical list
     // (explode both endpoints) — the mirror union read it twice.

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
 /** Document chunking: cut each document's token sequence into fixed-size
-  * overlapping windows (`window` tokens, advancing by `stride`) — the
+  * overlapping windows ([[Chunking.ChunkTokens]] tokens, advancing by
+  * [[Chunking.ChunkStride]]) — the
   * context-window / RAG-passage shape.
   *
   * Per-row generate-and-explode, no shuffle: the chunk count and every
@@ -18,14 +19,12 @@ import graft.functions.TextFunctions
   */
 object Chunking {
 
-  def chunkWindows(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      window: Int,
-      stride: Int): DataFrame = {
-    require(window > 0 && stride > 0 && stride <= window,
-      "need 0 < stride <= window")
+  /** Tokens per chunk, and the tokens each chunk advances by. */
+  final val ChunkTokens = 32
+  final val ChunkStride = 24
+
+  def chunkWindows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (window, stride) = (ChunkTokens, ChunkStride)
     docs
       .withColumn("__toks", TextFunctions.tokens(col(textCol)))
       .withColumn("__n", size(col("__toks")).cast("long"))

@@ -37,6 +37,10 @@ import graft.Harness
   */
 object ConnectedComponents {
 
+  /** Star-contraction rounds the distributed loop may run before it
+    * fails: component diameter grows ~2^rounds. */
+  final val MaxIter = 32
+
   // Observation names must be unique per registration; Bench re-runs
   // components() many times per JVM, so loop-index names would collide.
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -61,9 +65,8 @@ object ConnectedComponents {
   def components(
       pairs: DataFrame,
       aCol: String,
-      bCol: String,
-      maxIter: Int = 32): DataFrame =
-    components(pairs, aCol, bCol, maxIter, driverEdgeBudget(pairs.sparkSession))
+      bCol: String): DataFrame =
+    components(pairs, aCol, bCol, driverEdgeBudget(pairs.sparkSession))
 
   /** [[components]] with the driver budget given in edges: a graph with
     * more canonical edges than `driverBudget` runs the distributed loop, so
@@ -72,7 +75,6 @@ object ConnectedComponents {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int,
       driverBudget: Long): DataFrame = {
     // Integral ids only — a silent cast("long") would turn string/UUID ids
     // into null, drop every edge at the u≠v filter, and report ZERO
@@ -100,16 +102,16 @@ object ConnectedComponents {
       .localCheckpoint()
     val nEdges = observed(sized, "n")
     if (nEdges <= driverBudget) labelOnDriver(ckInit)
-    else starLoop(ckInit, nEdges, maxIter)
+    else starLoop(ckInit, nEdges)
   }
 
   /** Peak driver bytes per collected edge on the driver path: the collected
     * rows, the sorted node index and the boxed (node, cluster) result rows
     * of up to two nodes per edge, all live at once. */
-  private val DriverBytesPerEdge = 512L
+  private final val DriverBytesPerEdge = 512L
   /** Serialized result bytes per edge that a collect returns (an UnsafeRow
     * of two longs plus its length), counted against maxResultSize. */
-  private val CollectedBytesPerEdge = 32L
+  private final val CollectedBytesPerEdge = 32L
 
   /** Edges one query may collect and label on the driver: half of its share
     * of the driver heap when [[Harness.VerifyParallelism]] queries (as many
@@ -162,7 +164,7 @@ object ConnectedComponents {
   }
 
   /** Distributed path over the checkpointed canonical edges. */
-  private def starLoop(ckInit: DataFrame, nEdges: Long, maxIter: Int): DataFrame = {
+  private def starLoop(ckInit: DataFrame, nEdges: Long): DataFrame = {
     // Right-size loop parallelism to the OBSERVED edge count: every star
     // round runs 2 shuffles + 2 convergence probes, and on a
     // small-to-medium pair graph those are 32 near-empty tasks each. One
@@ -239,11 +241,11 @@ object ConnectedComponents {
     // was already star-form — that round's output IS its input, the
     // cheapest edge set of the whole loop — in exchange for deleting every
     // separate probe action (the old isStarForm: one aggregate + one
-    // semi-join job per round). The loop allows maxIter+1 iterations so
-    // that convergence AT round maxIter is still observable.
+    // semi-join job per round). The loop allows MaxIter+1 iterations so
+    // that convergence AT round MaxIter is still observable.
     var converged = false
     var iter = 0
-    while (!converged && iter <= maxIter) {
+    while (!converged && iter <= MaxIter) {
       val obs = observation("cc_conv")
       val next = smallStar(largeStarObserved(edges, obs)).localCheckpoint()
       if (observed(obs, "viol") == 0L) converged = true
@@ -251,12 +253,12 @@ object ConnectedComponents {
     }
     // Non-converged labels are intermediate parents, not component minima —
     // survivor selection on them silently under-deduplicates. Fail loudly:
-    // component diameter grows ~2^rounds, so a legitimate maxIter bump is
+    // component diameter grows ~2^rounds, so a legitimate MaxIter bump is
     // tiny, while hitting the default 32 means something is wrong.
     if (!converged)
       throw new IllegalStateException(
-        s"connected components did not converge in $maxIter rounds; " +
-          "raise maxIter (rounds needed ≈ log2 of the largest component's diameter)")
+        s"connected components did not converge in $MaxIter rounds; " +
+          "raise MaxIter (rounds needed ≈ log2 of the largest component's diameter)")
 
     // At convergence the edge set is a union of stars (child → root).
     // Roots have no outgoing edge — they label themselves. Nodes come from

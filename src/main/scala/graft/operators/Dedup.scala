@@ -31,6 +31,24 @@ final class CandidateCapExceededException(message: String)
   */
 object Dedup {
 
+  /** Word-shingle width of the MinHash family ([[minHashSignature]],
+    * [[minHashSignatures]], the LSH pairs). */
+  final val MinHashK = 3
+  /** MinHash signature length, and signature rows per LSH band, of
+    * [[bandedBuckets]]: 8 bands. */
+  final val NumHashes = 16
+  final val RowsPerBand = 2
+  /** Shingle width and minimum shared shingles of [[ngramJaccardPairs]],
+    * and the shingle width of [[contaminationFlags]] (one shared shingle
+    * flags a document). */
+  final val NgramK = 5
+  final val NgramMinShared = 2
+  /** Denominator of [[prefixFilterJaccardJoin]]'s threshold: τ = tauNum / 10. */
+  final val TauDen = 10
+  /** Distinct documents a line must occur in for [[dropDuplicatedLines]]
+    * to call it boilerplate. */
+  final val BoilerplateMinDocs = 5L
+
   /** Exact dedup: one row per distinct (normalized) content hash with group
     * size and the minimum id as the canonical survivor. */
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -46,8 +64,8 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** N-gram candidate pairs: documents sharing ≥ minShared distinct word
-    * k-shingles, with exact Jaccard over the shingle sets. Self-join on the
+  /** N-gram candidate pairs: documents sharing ≥ [[NgramMinShared]]
+    * distinct word [[NgramK]]-shingles, with exact Jaccard over the shingle sets. Self-join on the
     * shingle key; at scale, cap the explosion by dropping ultra-frequent
     * shingles (stop-shingles) before the join — `maxShingleFreq <= 0`
     * disables the prune (it costs an extra pass over the shingle pipeline,
@@ -56,8 +74,6 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int = 3,
-      minShared: Int = 2,
       maxShingleFreq: Long = 1000L
   ): DataFrame = {
     // Shingles join on their 64-bit hash, not the string: same pair counts
@@ -68,7 +84,7 @@ object Dedup {
     val shingled = df
       .select(col(idCol).as("doc"), TextFunctions.tokens(col(textCol)).as("toks"))
       .select(col("doc"),
-        array_distinct(TextFunctions.shinglesOfTokens(col("toks"), k)).as("sh"))
+        array_distinct(TextFunctions.shinglesOfTokens(col("toks"), NgramK)).as("sh"))
       .select(col("doc"), size(col("sh")).as("n_sh"),
         explode(transform(col("sh"), s => xxhash64(s))).as("shingle"))
     // Drop shingles shared by too many docs: they generate quadratic pair
@@ -86,7 +102,7 @@ object Dedup {
       .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
         col("a.n_sh").as("n_a"), col("b.n_sh").as("n_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= NgramMinShared)
     pairs.select(
       col("doc_a"), col("doc_b"), col("n_shared"),
       (col("n_shared").cast("double") /
@@ -94,24 +110,24 @@ object Dedup {
     )
   }
 
-  /** MinHash signature column: for each of numHashes seeded hash-family
-    * members, the minimum over the document's distinct shingle hashes.
+  /** MinHash signature column: for each of [[NumHashes]] seeded hash-family
+    * members, the minimum over the document's distinct [[MinHashK]]-shingle hashes.
     * Entirely per-row — no shuffle.
     *
     * The text is tokenized/shingled/hashed ONCE per row (the naive
     * per-seed-aggregate form re-evaluates the whole shingle pipeline once
     * per hash — 32x the string work; measured 200s vs ~7s on 5k docs), and
     * the seeded-min fold itself runs in the native codegen'd
-    * [[graft.plans.MinHashSig]] kernel — one primitive long[numHashes],
+    * [[graft.plans.MinHashSig]] kernel — one primitive long[NumHashes],
     * no per-shingle array allocation (the previous
     * `aggregate(..., zip_with(least(...)))` composition allocated a fresh
     * accumulator array per shingle; values are identical). */
-  def minHashSignature(textCol: Column, k: Int = 3, numHashes: Int = 64): Column = {
+  def minHashSignature(textCol: Column): Column = {
     val shingleHashes = transform(
-      TextFunctions.distinctShingles(textCol, k),
+      TextFunctions.distinctShingles(textCol),
       s => HashFunctions.tokenHash(s)
     )
-    graft.plans.GraftFunctions.minHashSig(shingleHashes, numHashes)
+    graft.plans.GraftFunctions.minHashSig(shingleHashes)
   }
 
   /** MinHash signatures as a DataFrame: explode shingle hashes and take the
@@ -126,9 +142,9 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int = 3,
-      numHashes: Int = 64
+      numHashes: Int
   ): DataFrame = {
+    val k = MinHashK
     // Position-explode, hash per row: exploding a transform(...) array
     // (higher-order function → CodegenFallback) would drop the generate
     // stage out of whole-stage codegen. The per-doc shingle DISTINCT was
@@ -157,7 +173,7 @@ object Dedup {
   }
 
   /** (doc, band, bucket) LSH banding of MinHash signatures: split the
-    * signature into bands of `rowsPerBand`, hash each band; docs colliding
+    * [[NumHashes]]-long signature into bands of [[RowsPerBand]], hash each band; docs colliding
     * on any (band, bucket) are candidate pairs. Shuffle key is the band
     * bucket — cardinality ~ docs × bands / collision-rate, never docs².
     * The shared candidate-generation table behind self-dedup
@@ -165,24 +181,17 @@ object Dedup {
     * ([[minHashLshPairsAgainst]]). In a production ingest the REFERENCE
     * side of this table is persisted once and only the incoming batch
     * recomputes. */
-  def bandedBuckets(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      numHashes: Int = 64,
-      rowsPerBand: Int = 4
-  ): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    // Documents shorter than k tokens have NO shingles and would all carry
+  def bandedBuckets(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val numBands = NumHashes / RowsPerBand
+    // Documents shorter than MinHashK tokens have NO shingles and would all carry
     // the identical all-MaxValue signature — which collides in every band,
     // pairing every short doc with every other short doc (and, for the
     // cross-corpus form, silently dropping short incoming docs whenever
     // the reference contains any short doc). No shingles = no similarity
     // signal: exclude them from candidate generation entirely.
     val sig = minHashSignatures(
-      df.filter(size(TextFunctions.tokens(col(textCol))) >= k),
-      idCol, textCol, k, numHashes)
+      df.filter(size(TextFunctions.tokens(col(textCol))) >= MinHashK),
+      idCol, textCol, NumHashes)
     sig.select(
       col("doc"),
       posexplode(
@@ -190,7 +199,7 @@ object Dedup {
           sequence(lit(0), lit(numBands - 1)),
           b =>
             aggregate(
-              slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
+              slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)),
               lit(1125899906842597L),
               (acc, h) => HashFunctions.mix64(acc * lit(31L) + h)
             )
@@ -199,14 +208,7 @@ object Dedup {
     )
   }
 
-  def minHashLshPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      numHashes: Int = 64,
-      rowsPerBand: Int = 4
-  ): DataFrame = {
+  def minHashLshPairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // Repartition the banded table by the join key BEFORE the self-join:
     // without an exchange directly above it, the expensive signature
     // pipeline (tokenize → shingle explode → numHashes seeded mins → band
@@ -220,7 +222,7 @@ object Dedup {
     // keyed the same way share one exchange). The extra shuffle carries
     // (doc, band, bucket) — docs × bands rows of ~24 bytes, orders of
     // magnitude lighter than recomputing the signature pass at any scale.
-    val banded = bandedBuckets(df, idCol, textCol, k, numHashes, rowsPerBand)
+    val banded = bandedBuckets(df, idCol, textCol)
       .repartition(col("band"), col("bucket"))
     banded.as("a")
       .join(
@@ -245,13 +247,10 @@ object Dedup {
       incoming: DataFrame,
       reference: DataFrame,
       idCol: String,
-      textCol: String,
-      k: Int = 3,
-      numHashes: Int = 64,
-      rowsPerBand: Int = 4
+      textCol: String
   ): DataFrame = {
-    val a = bandedBuckets(incoming, idCol, textCol, k, numHashes, rowsPerBand)
-    val b = bandedBuckets(reference, idCol, textCol, k, numHashes, rowsPerBand)
+    val a = bandedBuckets(incoming, idCol, textCol)
+    val b = bandedBuckets(reference, idCol, textCol)
     a.as("a")
       .join(b.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
@@ -288,8 +287,8 @@ object Dedup {
   }
 
   /** Benchmark decontamination: for each corpus document, the number of its
-    * distinct word k-shingles that also appear in ANY eval-set document,
-    * plus a `contaminated` flag at `minShared` — the train/eval overlap scan
+    * distinct word [[NgramK]]-shingles that also appear in ANY eval-set document,
+    * plus a `contaminated` flag when it shares one — the train/eval overlap scan
     * every serious training-data pipeline runs before shipping a corpus.
     *
     * Scale shape: the eval set is small by construction, so its distinct
@@ -303,10 +302,9 @@ object Dedup {
       corpus: DataFrame,
       evalSet: DataFrame,
       idCol: String,
-      textCol: String,
-      k: Int = 5,
-      minShared: Int = 1
+      textCol: String
   ): DataFrame = {
+    val k = NgramK
     // Shingles are 64-BIT HASHES of the k-token windows (xxhash64 over the
     // sliced token array — the window strings are never materialized), and
     // the explode runs over the cheap POSITION sequence with the hash
@@ -338,7 +336,7 @@ object Dedup {
       .select(
         col("doc").as(idCol),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-      .withColumn("contaminated", col("n_overlap") >= minShared)
+      .withColumn("contaminated", col("n_overlap") >= 1)
   }
 
   /** Duplicated-span statistics: for every document, how many of its
@@ -725,9 +723,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       tauNum: Int,
-      tauDen: Int,
       maxPairsPerEntry: Long,
       shingleK: Int = 1): DataFrame = {
+    val tauDen = TauDen
     require(tauNum > 0 && tauNum <= tauDen,
       s"need 0 < tau <= 1, got $tauNum/$tauDen")
     require(shingleK >= 1, s"shingleK must be >= 1, got $shingleK")
@@ -939,7 +937,7 @@ object Dedup {
   /** Corpus-wide duplicated-LINE removal — the boilerplate scrub every
     * web-corpus pipeline runs before model training (RefinedWeb §"line-wise
     * corrections", FineWeb, Dolma's paragraph dedup): a line occurring in
-    * ≥ `minDocs` DISTINCT documents is boilerplate (nav menus, cookie
+    * ≥ [[BoilerplateMinDocs]] DISTINCT documents is boilerplate (nav menus, cookie
     * banners, subscribe prompts) and is dropped from every document it
     * appears in; document text is reassembled from the surviving lines in
     * original order.
@@ -953,7 +951,7 @@ object Dedup {
     * the per-line-hash distinct-doc count is a map-side-combined
     * aggregation whose key space is the distinct-line vocabulary (zipfian
     * — boilerplate concentrates, the long tail is unique lines); the
-    * boilerplate set (lines with ≥ minDocs docs — tiny by zipf) comes back
+    * boilerplate set (lines with ≥ BoilerplateMinDocs docs — tiny by zipf) comes back
     * as a broadcast-able semi/anti probe; reassembly is one doc-keyed
     * aggregation. Nothing is ever doc × doc, and the only corpus-sized
     * shuffle is the reassembly.
@@ -969,21 +967,19 @@ object Dedup {
   def dropDuplicatedLines(
       df: DataFrame,
       idCol: String,
-      textCol: String,
-      minDocs: Long): DataFrame = {
-    require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
+      textCol: String): DataFrame = {
     val lines = df
       .select(col(idCol).as("__doc"),
         posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
       .filter(length(trim(col("__line"))) > 0)
-    // boilerplate = lines in >= minDocs distinct docs, keyed by line text
+    // boilerplate = lines in >= BoilerplateMinDocs distinct docs, keyed by line text
     // (exact match — the production rule; fuzzy line matching would be
     // MinHash territory). countDistinct, not count: a line repeated WITHIN
     // one doc is repetition (q46's metric), not cross-doc boilerplate.
     val boiler = lines
       .groupBy(col("__line"))
       .agg(countDistinct(col("__doc")).as("__nd"))
-      .filter(col("__nd") >= minDocs)
+      .filter(col("__nd") >= BoilerplateMinDocs)
       .select(col("__line"))
     val kept = lines.join(boiler, Seq("__line"), "left_anti")
     val reassembled = kept

@@ -13,9 +13,28 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Diagnostics {
 
+  /** Keys [[joinSkewProbe]] reports. */
+  final val SkewTopN = 20
+  /** Standard deviations past which [[countAnomalies]] and
+    * [[slidingAnomalies]] flag a bucket, and the trailing buckets the
+    * latter's baseline spans. */
+  final val AnomalyZ = 2
+  final val BaselineWindow = 7
+  /** Lateness past which [[latenessAudit]] counts an event beyond the
+    * watermark: 30 minutes. */
+  final val LateThresholdUs = 1800000000L
+  /** Contributors [[topContributorShare]] elects per group. */
+  final val TopContributors = 10
+  /** [[ksDrift]]'s histogram: equal-width bins over [KsLo, KsHi). */
+  final val KsBins = 64
+  final val KsLo = 0.0
+  final val KsHi = 512.0
+  /** Fixed-point scale [[correlationMatrix]] quantizes each value with. */
+  final val CorrelationScale = 100L
+
   /** Join-skew probe: per-key row counts on both sides of a prospective
     * equi-join and the key's output contribution `n_left * n_right`,
-    * top-`topN` keys by contribution.
+    * top-[[SkewTopN]] keys by contribution.
     *
     * The contribution sum IS the exact inner-join output size, computed
     * without running the join: two map-side-combined aggregations (shuffle =
@@ -27,14 +46,13 @@ object Diagnostics {
   def joinSkewProbe(
       left: DataFrame,
       right: DataFrame,
-      key: String,
-      topN: Int = 20): DataFrame = {
+      key: String): DataFrame = {
     val l = left.groupBy(col(key)).agg(count(lit(1)).as("n_left"))
     val r = right.groupBy(col(key)).agg(count(lit(1)).as("n_right"))
     l.join(r, Seq(key))
       .withColumn("est_pairs", col("n_left") * col("n_right"))
       .orderBy(col("est_pairs").desc, col(key))
-      .limit(topN)
+      .limit(SkewTopN)
   }
 
   /** Distribution drift between two snapshots — the "did this month's crawl
@@ -79,9 +97,8 @@ object Diagnostics {
   def countAnomalies(
       df: DataFrame,
       groupCols: Seq[String],
-      bucket: Column,
-      z: Int): DataFrame = {
-    require(z > 0, s"z threshold must be positive, got $z")
+      bucket: Column): DataFrame = {
+    val z = AnomalyZ
     val g = groupCols.map(col)
     val counts = df
       .groupBy(g :+ bucket.as("bucket"): _*)
@@ -104,7 +121,7 @@ object Diagnostics {
 
   /** Trailing-baseline volume anomalies — [[countAnomalies]] with the
     * baseline LOCALIZED: each `(group, bucket)` count is tested against
-    * the mean/stddev of its own trailing `window` buckets (previous rows,
+    * the mean/stddev of its own trailing [[BaselineWindow]] buckets (previous rows,
     * current excluded), so a level shift three months ago stops poisoning
     * today's verdict and a slow ramp is never flagged the way a global-μ
     * test flags its whole tail. This is the dashboard "spike vs recent
@@ -125,11 +142,8 @@ object Diagnostics {
   def slidingAnomalies(
       df: DataFrame,
       groupCols: Seq[String],
-      bucket: Column,
-      window: Int,
-      z: Int): DataFrame = {
-    require(window >= 2, s"baseline window must be >= 2, got $window")
-    require(z > 0, s"z threshold must be positive, got $z")
+      bucket: Column): DataFrame = {
+    val (window, z) = (BaselineWindow, AnomalyZ)
     import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
     val counts = df
@@ -213,7 +227,7 @@ object Diagnostics {
     * Scale shape: one window pass partitioned by key in arrival order
     * (the same single-shuffle shape as [[interArrivalSpectrum]]), then a
     * map-combined rollup to `groupCols`. Emits per group: event count,
-    * out-of-order count, count beyond `lateThresholdUs` (the events a
+    * out-of-order count, count beyond [[LateThresholdUs]] (the events a
     * watermark of that delay would DROP), and the max/total lateness.
     *
     * `arrivalCols` must be a TOTAL order within each key (append a unique
@@ -224,9 +238,7 @@ object Diagnostics {
       keyCol: String,
       tsCol: String,
       arrivalCols: Seq[Column],
-      groupCols: Seq[String],
-      lateThresholdUs: Long): DataFrame = {
-    require(lateThresholdUs >= 0, s"threshold must be >= 0, got $lateThresholdUs")
+      groupCols: Seq[String]): DataFrame = {
     require(arrivalCols.nonEmpty, "need at least one arrival-order column")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(keyCol)).orderBy(arrivalCols: _*)
@@ -240,7 +252,7 @@ object Diagnostics {
       .agg(
         count(lit(1)).as("n_events"),
         sum(when(col("__late") > 0L, 1L).otherwise(0L)).as("n_out_of_order"),
-        sum(when(col("__late") > lateThresholdUs, 1L).otherwise(0L)).as("n_beyond_watermark"),
+        sum(when(col("__late") > LateThresholdUs, 1L).otherwise(0L)).as("n_beyond_watermark"),
         max(col("__late")).as("max_late_us"),
         sum(col("__late")).as("total_late_us"))
   }
@@ -267,9 +279,7 @@ object Diagnostics {
   def topContributorShare(
       df: DataFrame,
       groupCols: Seq[String],
-      contributorCol: String,
-      k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
+      contributorCol: String): DataFrame = {
     Guards.requireIntegralColumns(df, Seq(contributorCol), "topContributorShare")
     val g = groupCols.map(col)
     df
@@ -280,7 +290,7 @@ object Diagnostics {
         sum(col("__c")).as("n_rows"),
         count(lit(1)).as("n_contributors"),
         graft.plans.GraftFunctions.topK(
-          col("__c").cast("double"), col("__id").cast("long"), k).as("__t"))
+          col("__c").cast("double"), col("__id").cast("long"), TopContributors).as("__t"))
       .withColumn("topk_rows",
         aggregate(col("__t"), lit(0L), (acc, x) => acc + x.getField("ord").cast("long")))
       .withColumn("topk_share_ppm", expr("(topk_rows * 1000000) div n_rows"))
@@ -355,12 +365,8 @@ object Diagnostics {
       dfA: DataFrame,
       dfB: DataFrame,
       groupCols: Seq[String],
-      valueCol: Column,
-      bins: Int,
-      lo: Double,
-      hi: Double): DataFrame = {
-    require(bins >= 2, s"need at least 2 bins, got $bins")
-    require(hi > lo, s"empty value range [$lo, $hi]")
+      valueCol: Column): DataFrame = {
+    val (bins, lo, hi) = (KsBins, KsLo, KsHi)
     val g = groupCols.map(col)
     def side(df: DataFrame, tag: Int): DataFrame =
       df.select(g :+ valueCol.cast("double").as("__v"): _*).withColumn("__side", lit(tag))
@@ -417,8 +423,8 @@ object Diagnostics {
     * floating-point disease. */
   def correlationMatrix(
       df: DataFrame,
-      cols: Seq[String],
-      scale: Long = 100L): DataFrame = {
+      cols: Seq[String]): DataFrame = {
+    val scale = CorrelationScale
     require(cols.size >= 2, "correlationMatrix needs at least two columns")
     val dec = DecimalType(19, 0)
     // listwise-complete: a row with ANY null column leaves every moment,

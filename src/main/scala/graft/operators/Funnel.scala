@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object Funnel {
 
+  /** Inactivity that splits [[sessionPaths]]' sessions, and the event
+    * types its path keeps per session. */
+  final val SessionGapMinutes = 30
+  final val PathSteps = 5
+
   /** Per-user earliest qualifying time of each reached step: one row per
     * user who completed step 1, with `t1..tN` (later steps null once the
     * user drops out). `steps` are matched against `typeCol` in order. */
@@ -87,16 +92,17 @@ object Funnel {
   }
 
   /** Frequent session journeys: sessionize each user's events on an
-    * inactivity gap, render each session's first `maxSteps` event types as
+    * inactivity gap, render each session's first [[PathSteps]] event types as
     * a `a>b>c` path string, and count sessions per path — the "what are
     * the top user journeys" report behind every path-analysis view, and
     * the empirical sequence distribution [[transitions]]' first-order
     * matrix approximates.
     *
     * Determinism: events order by (ts, tieCol) — a total order — and the
-    * head truncation at `maxSteps` bounds both the path string and the
-    * distinct-path cardinality (≤ |types|^maxSteps), which is what keeps
+    * head truncation at [[PathSteps]] bounds both the path string and the
+    * distinct-path cardinality (≤ |types|^PathSteps), which is what keeps
     * the final rollup broadcast-sized regardless of corpus size.
+    * Sessions split at gaps over [[SessionGapMinutes]].
     *
     * Scale shape: ONE user-keyed shuffle+sort serves the gap detection,
     * the running session id, and (because hash(user) still clusters
@@ -107,11 +113,9 @@ object Funnel {
       userCol: String,
       typeCol: String,
       tsCol: String,
-      tieCol: String,
-      gapMinutes: Int = 30,
-      maxSteps: Int = 5): DataFrame = {
+      tieCol: String): DataFrame = {
     val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tieCol))
-    val gapUs = gapMinutes.toLong * 60000000L
+    val gapUs = SessionGapMinutes.toLong * 60000000L
     events
       .select(col(userCol), col(typeCol), col(tsCol), col(tieCol))
       .withColumn("__new",
@@ -126,7 +130,7 @@ object Funnel {
           transform(
             array_sort(collect_list(struct(col(tsCol), col(tieCol), col(typeCol)))),
             e => e.getField(typeCol)),
-          1, maxSteps)).as("path"))
+          1, PathSteps)).as("path"))
       .groupBy(col("path"))
       .agg(count(lit(1)).as("n_sessions"))
   }

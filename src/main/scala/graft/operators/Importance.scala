@@ -40,7 +40,7 @@ object Importance {
 
   /** Hashed-unigram buckets, a power of two: the paper's hashed feature
     * space (collisions are part of the method, not a bug). */
-  private val NumBuckets = 1024
+  private final val NumBuckets = 1024
 
   /** Per-document enrichment score against a target corpus.
     *
@@ -167,12 +167,12 @@ object Importance {
           .otherwise(col("n_enriched").cast("double") / col("n_tokens").cast("double")))
   }
 
-  /** The keep/drop rule on [[enrichmentScores]] output: at least
-    * `num/den` of the document's tokens in enriched buckets, evaluated as
-    * the exact integer inequality `n_enriched · den ≥ n_tokens · num`
-    * (empty documents never selected). */
-  def selected(num: Long, den: Long): org.apache.spark.sql.Column = {
-    require(den > 0 && num >= 0, "threshold must be a non-negative rational")
+  /** The keep/drop rule on [[enrichmentScores]] output: at least half of
+    * the document's tokens in enriched buckets, evaluated as the exact
+    * integer inequality `n_enriched · den ≥ n_tokens · num` with
+    * num/den = 1/2 (empty documents never selected). */
+  def selected: org.apache.spark.sql.Column = {
+    val (num, den) = (1L, 2L)
     col("n_tokens") > 0L &&
       col("n_enriched") * lit(den) >= col("n_tokens") * lit(num)
   }

@@ -26,10 +26,13 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
+  /** Bytes per compacted file [[compactionPlan]] aims for: 256 KiB. */
+  final val CompactionTargetBytes = 256L * 1024
+
   /** Bits kept per dimension (16 → a 65 536 × 65 536 grid, z fits in 32
     * bits). Enough that file-footprint granularity, not key resolution,
     * bounds pruning quality. */
-  val ZBits = 16
+  final val ZBits = 16
 
   /** Spread the low 16 bits of non-negative `v` to even bit positions:
     * 0b1111 → 0b01010101. Pure shift/mask composition — stays in codegen. */
@@ -85,10 +88,10 @@ object Layout {
     * order (keep it the table's natural clustering so compaction
     * preserves data locality / sort order); a file opens a new group
     * exactly when the bytes before it fill the current group:
-    * `group = cum_bytes_before div targetBytes` — the greedy
+    * `group = cum_bytes_before div CompactionTargetBytes` — the greedy
     * first-fit-in-order plan, deterministic and purely integer.
     *
-    * A single file larger than `targetBytes` gets a group of its own and
+    * A single file larger than [[CompactionTargetBytes]] gets a group of its own and
     * pushes the boundary forward (its group is still shared with files
     * that started before it filled — div-packing never splits a file).
     *
@@ -108,9 +111,7 @@ object Layout {
       files: DataFrame,
       sizeCol: String,
       orderCols: Seq[String],
-      targetBytes: Long,
       partitionCols: Seq[String] = Nil): DataFrame = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     require(orderCols.nonEmpty, "need at least one ordering column")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(partitionCols.map(col): _*)
@@ -119,7 +120,7 @@ object Layout {
       .withColumn("__cum_before",
         coalesce(sum(col(sizeCol)).over(w.rowsBetween(Window.unboundedPreceding, -1L)),
           lit(0L)))
-      .withColumn("compaction_group", expr(s"__cum_before div $targetBytes"))
+      .withColumn("compaction_group", expr(s"__cum_before div $CompactionTargetBytes"))
       .withColumn("group_seq",
         row_number().over(
           Window.partitionBy((partitionCols.map(col) :+ col("compaction_group")): _*)

@@ -15,12 +15,19 @@ import graft.functions.HashFunctions
   * id — shards are the unit of parallelism, so the only per-shard
   * sequential step (the running token offset) is a window cumulative sum
   * partitioned by shard: one shuffle, no driver state, reproducible across
-  * re-runs and cluster sizes. At 100 TB you raise `nShards` until each
+  * re-runs and cluster sizes. At 100 TB you raise [[Packing.PackShards]] until each
   * shard's token stream fits a writer task; the layout of any one document
   * depends only on (its shard, the doc ids before it in that shard), never
   * on partition boundaries.
   */
 object Packing {
+
+  /** Context-window size in tokens, and the shards [[packOffsets]] lays
+    * documents into. */
+  final val PackCapacity = 2048
+  final val PackShards = 4
+  /** Sequence length [[paddingWaste]] pads each document up to. */
+  final val PadSeqLen = 512
 
   /** Deterministic shard id in [0, nShards): splitmix64 over the document
     * id. Hash-based (not range-based) so shard weights stay balanced under
@@ -30,7 +37,7 @@ object Packing {
 
   /** Pack-offset table: for each document, its shard, its starting token
     * offset in the shard's concatenated stream (docs ordered by id), and
-    * the first/last context-window index of `capacity` tokens it lands in.
+    * the first/last context-window index of [[PackCapacity]] tokens it lands in.
     * `spans_boundary` marks documents split across windows — the fraction
     * of such docs is the usual packing-quality metric.
     *
@@ -40,13 +47,11 @@ object Packing {
   def packOffsets(
       docs: DataFrame,
       idCol: String,
-      nTokens: org.apache.spark.sql.Column,
-      capacity: Int,
-      nShards: Int): DataFrame = {
-    require(capacity > 0, "capacity must be positive")
+      nTokens: org.apache.spark.sql.Column): DataFrame = {
+    val capacity = PackCapacity
     val w = Window.partitionBy("shard").orderBy(idCol)
       .rowsBetween(Window.unboundedPreceding, -1)
-    withShard(docs, idCol, nShards)
+    withShard(docs, idCol, PackShards)
       .withColumn("n_tokens", nTokens.cast("long"))
       .withColumn("start_tok", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       // integer division (div) — floor(double /) would round above 2^53
@@ -59,7 +64,7 @@ object Packing {
 
   /** Padding-waste audit: per group, the token cost of the NAIVE
     * one-document-per-window layout ([[packOffsets]]'s alternative) —
-    * each document padded up to the next multiple of `seqLen` — versus the
+    * each document padded up to the next multiple of [[PadSeqLen]] — versus the
     * real token count. `waste_frac = (padded − total) / padded` is the
     * fraction of compute a pad-to-length loader burns on padding, the
     * number that justifies packing per source. All counts are exact
@@ -73,9 +78,8 @@ object Packing {
   def paddingWaste(
       docs: DataFrame,
       groupCol: String,
-      nTokens: org.apache.spark.sql.Column,
-      seqLen: Int): DataFrame = {
-    require(seqLen > 0, "seqLen must be positive")
+      nTokens: org.apache.spark.sql.Column): DataFrame = {
+    val seqLen = PadSeqLen
     docs
       .select(col(groupCol), nTokens.cast("long").as("__n"))
       .withColumn("__padded", expr(s"((__n + ${seqLen - 1}L) div ${seqLen}L) * ${seqLen}L"))

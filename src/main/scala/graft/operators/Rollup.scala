@@ -16,6 +16,15 @@ import graft.functions.AggFunctions.{avgExact, sumExact}
   */
 object Rollup {
 
+  /** [[forwardRangeAgg]]'s look-ahead: one hour. */
+  final val HorizonSec = 3600L
+  /** Salts [[saltedSumCount]] splits each key over. */
+  final val NumSalts = 32
+  /** [[decayedCounts]]' staircase: weight halves every 3 days, ages clamp
+    * at 9 steps. */
+  final val DecayStepDays = 3
+  final val DecayMaxSteps = 9
+
   /** Tumbling 1-hour rollup of the traffic fact: `DATE_TRUNC('hour',
     * datetime), cell_id, SUM(each metric), SUM(total)` — reference
     * v_hourly_traffic. Exact (order-independent) sums so re-runs at any
@@ -52,7 +61,7 @@ object Rollup {
 
   /** Forward-looking temporal RANGE aggregation: for every row, the count
     * and exact sum of `valueCol` over same-key rows with timestamp in
-    * `(t, t + horizonSec]` — the window-frame form of a temporal range
+    * `(t, t + HorizonSec]` — the window-frame form of a temporal range
     * self-join ("activity in the hour after each event").
     *
     * The join encoding (`b.ts > a.ts AND b.ts <= a.ts + H` — what the
@@ -66,12 +75,12 @@ object Rollup {
     * window, matching the join semantics exactly.
     */
   def forwardRangeAgg(
-      df: DataFrame, key: String, tsCol: String, valueCol: String, horizonSec: Long): DataFrame = {
+      df: DataFrame, key: String, tsCol: String, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window
       .partitionBy(col(key))
       .orderBy(unix_micros(col(tsCol)))
-      .rangeBetween(1L, horizonSec * 1000000L)
+      .rangeBetween(1L, HorizonSec * 1000000L)
     // sumExact's decimal accumulation, applied windowed (`.over` must wrap
     // the raw aggregate, so the decimal cast chain is inlined here). Both
     // aggregates are emitted in ONE projection: chained withColumn would
@@ -86,11 +95,11 @@ object Rollup {
 
   /** Two-stage SALTED aggregation for skewed grouping keys: stage 1
     * aggregates on (keys..., salt) — splitting each hot key's rows across
-    * `nSalts` reducers — stage 2 merges the per-salt partials on the keys
+    * [[NumSalts]] reducers — stage 2 merges the per-salt partials on the keys
     * alone. The 100 TB failure mode this kills: a low-cardinality or
     * power-law key (here: 5 event types over the whole fact) funnels one
     * reducer a whole key's rows; with the salt, no reducer sees more than
-    * ~1/nSalts of any key.
+    * ~1/NumSalts of any key.
     *
     * The result is EXACTLY the plain `groupBy(keys).agg(count, sumExact)`
     * — counts and decimal sums are associative, so the two-stage merge is
@@ -100,11 +109,10 @@ object Rollup {
     * SAME value still spreads evenly.
     */
   def saltedSumCount(
-      df: DataFrame, keys: Seq[String], valueCol: String, nSalts: Int): DataFrame = {
-    require(nSalts > 0, "nSalts must be positive")
+      df: DataFrame, keys: Seq[String], valueCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 4)
     val partial = df
-      .withColumn("__salt", pmod(monotonically_increasing_id(), lit(nSalts.toLong)))
+      .withColumn("__salt", pmod(monotonically_increasing_id(), lit(NumSalts.toLong)))
       .groupBy((keys.map(col) :+ col("__salt")): _*)
       .agg(
         count(lit(1)).as("__n"),
@@ -121,14 +129,14 @@ object Rollup {
     * (`sum(exp(-age/tau))`) is a sum of irrational doubles: its value
     * depends on partition merge order, so two runs of the same job — let
     * alone two engines — disagree in the low bits. Here the decay is a
-    * STAIRCASE: weight halves every `stepDays` (age bucket `s` in
-    * `[0, maxSteps]` gets weight `2^(maxSteps-s)`, an exact integer), the
+    * STAIRCASE: weight halves every [[DecayStepDays]] (age bucket `s` in
+    * `[0, maxSteps]`, maxSteps = [[DecayMaxSteps]], gets weight `2^(maxSteps-s)`, an exact integer), the
     * weights are summed as decimal(38,0) (associative, order-independent),
     * and one final division by `2^maxSteps` rescales — so the score is
     * bit-identical across partitionings, retries, and engines whenever the
-    * integer sum stays below 2^53 (at the default maxSteps=12 that is
-    * ~2.2e12 fully-weighted rows PER GROUP; beyond that the cast rounds but
-    * stays order-independent).
+    * integer sum stays below 2^53 (at maxSteps=9 that is ~1.8e13
+    * fully-weighted rows PER GROUP; beyond that the cast rounds but stays
+    * order-independent).
     *
     * The reference time is `max(date(tsCol))` over the input — derived from
     * the data, so the score is a pure function of the table (re-runnable,
@@ -140,11 +148,8 @@ object Rollup {
   def decayedCounts(
       df: DataFrame,
       groupCols: Seq[String],
-      tsCol: Column,
-      stepDays: Int = 7,
-      maxSteps: Int = 12): DataFrame = {
-    require(stepDays > 0, "stepDays must be positive")
-    require(maxSteps >= 1 && maxSteps <= 62, s"maxSteps must be in [1,62], got $maxSteps")
+      tsCol: Column): DataFrame = {
+    val (stepDays, maxSteps) = (DecayStepDays, DecayMaxSteps)
     val g = groupCols.map(col)
     val withRef = df.crossJoin(broadcast(df.agg(max(to_date(tsCol)).as("__ref"))))
     // ages are small integers: the double division inside floor is exact;

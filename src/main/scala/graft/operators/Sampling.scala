@@ -17,8 +17,24 @@ import graft.functions.HashFunctions
   */
 object Sampling {
 
+  /** Quantile [[quantileThresholds]] gates at. */
+  final val GateQuantile = 0.25
+  /** [[leakageSafeSplit]]'s train and validation shares; test is the rest. */
+  final val TrainFrac = 0.8
+  final val ValFrac = 0.1
+  /** Rate of the strata [[stratifiedHashSample]]'s map leaves out, and its
+    * hash salt. */
+  final val StratumDefault = 0.6
+  final val StratumSalt = 7L
+  /** Rows per group [[capPerGroup]] keeps. */
+  final val GroupCap = 20
+  /** Running cost per group [[budgetPerGroup]] keeps within. */
+  final val GroupBudget = 4000L
+  /** Total rows [[epochMixPlan]] plans for. */
+  final val MixBudgetRows = 1000L
+
   /** Keep/drop granularity: 1e6 buckets → rates are exact to 1e-6. */
-  val Buckets = 1000000L
+  final val Buckets = 1000000L
 
   /** Uniform bucket in [0, Buckets) from the salted splitmix64 of `id`.
     * Salting decorrelates independent samples drawn from the same ids
@@ -53,16 +69,14 @@ object Sampling {
       idCol: String,
       groupCol: String,
       valueCol: String,
-      q: Double,
       salt: Long): DataFrame = {
-    require(q > 0 && q < 1, s"quantile must be in (0,1), got $q")
     requireIntegralId(df, idCol, "quantileThresholds")
     df.filter(
         HashFunctions.seeded(col(idCol).cast("long"), lit(salt))
           .bitwiseAND(lit(1023L)) < lit(256L))
       .groupBy(col(groupCol))
       .agg(
-        percentile(col(valueCol), lit(q)).as("threshold"),
+        percentile(col(valueCol), lit(GateQuantile)).as("threshold"),
         count(lit(1)).as("n_sample"))
   }
 
@@ -76,7 +90,7 @@ object Sampling {
     *
     * `components` is [[ConnectedComponents.components]] output
     * `(node, cluster)`. Adds a `split` column ("train"/"val"/"test" at
-    * `trainFrac`/`valFrac`/remainder). The left join is id-keyed and
+    * [[TrainFrac]]/[[ValFrac]]/remainder). The left join is id-keyed and
     * hash-partitionable; the cluster table is dup-count-sized, so AQE
     * broadcasts it whenever the dup rate lets it fit.
     */
@@ -84,11 +98,8 @@ object Sampling {
       df: DataFrame,
       idCol: String,
       components: DataFrame,
-      salt: Long,
-      trainFrac: Double,
-      valFrac: Double): DataFrame = {
-    require(trainFrac > 0 && valFrac >= 0 && trainFrac + valFrac < 1.0,
-      "fractions must leave room for a test split")
+      salt: Long): DataFrame = {
+    val (trainFrac, valFrac) = (TrainFrac, ValFrac)
     requireIntegralId(df, idCol, "leakageSafeSplit")
     val b = hashBucket(col("__unit"), salt)
     // components' columns land under reserved names so a `cluster` column
@@ -105,7 +116,7 @@ object Sampling {
   }
 
   /** Stratified sample: per-stratum rates from `fractions` (strata absent
-    * from the map fall back to `default`). The standard corpus-rebalancing
+    * from the map fall back to [[StratumDefault]]), hashed at [[StratumSalt]]. The standard corpus-rebalancing
     * shape — e.g. downsample an over-represented language while keeping the
     * tail at full rate. Still map-only: the stratum rate is a row-local
     * CASE, not a join. */
@@ -113,14 +124,12 @@ object Sampling {
       df: DataFrame,
       idCol: String,
       strataCol: String,
-      fractions: Map[String, Double],
-      default: Double,
-      salt: Long = 0L): DataFrame = {
-    val threshold = fractions.toSeq.sortBy(_._1).foldLeft(lit(math.round(default * Buckets))) {
+      fractions: Map[String, Double]): DataFrame = {
+    val threshold = fractions.toSeq.sortBy(_._1).foldLeft(lit(math.round(StratumDefault * Buckets))) {
       case (acc, (stratum, f)) =>
         when(col(strataCol) === stratum, lit(math.round(f * Buckets))).otherwise(acc)
     }
-    df.filter(hashBucket(col(idCol), salt) < threshold)
+    df.filter(hashBucket(col(idCol), StratumSalt) < threshold)
   }
 
   /** Rebalance to the smallest group: downsample every `groupCol` group to
@@ -257,9 +266,7 @@ object Sampling {
   def epochMixPlan(
       df: DataFrame,
       groupCol: String,
-      weights: Map[String, Long],
-      budgetRows: Long): DataFrame = {
-    require(budgetRows > 0, s"budgetRows must be > 0, got $budgetRows")
+      weights: Map[String, Long]): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ > 0),
       "weights must be non-empty and positive")
     val spark = df.sparkSession
@@ -270,7 +277,7 @@ object Sampling {
     // explicit floor()s: a bare cast back to scale-0 decimal rounds
     // HALF_UP and would overshoot the budget
     val target = floor(
-      lit(budgetRows).cast(dec) * col("__w").cast(dec) / lit(sumW).cast(dec))
+      lit(MixBudgetRows).cast(dec) * col("__w").cast(dec) / lit(sumW).cast(dec))
     df.join(broadcast(wdf), Seq(groupCol))
       .groupBy(col(groupCol), col("__w"))
       .agg(count(lit(1)).as("n_rows"))
@@ -291,7 +298,7 @@ object Sampling {
   private[graft] def hashRank52(id: Column, salt: Long): Column =
     pmod(HashFunctions.seeded(id.cast("long"), lit(salt)), lit(1L << 52))
 
-  /** Per-group frequency cap: keep at most `k` rows per group, chosen
+  /** Per-group frequency cap: keep at most [[GroupCap]] rows per group, chosen
     * deterministically by salted-hash order (tie id ASC) — the web-curation
     * "at most N documents per domain" pass, without `rand()`'s
     * irreproducibility.
@@ -306,14 +313,12 @@ object Sampling {
       df: DataFrame,
       groupCol: String,
       idCol: String,
-      k: Int,
       salt: Long = 0L): DataFrame = {
-    require(k > 0, "k must be positive")
     // TopKAgg ranks (ord DESC, id ASC); negate the rank so the SMALLEST
     // hash wins — ascending-hash selection like every sampler here.
     val ord = -hashRank52(col(idCol), salt).cast("double")
     df.groupBy(col(groupCol))
-      .agg(graft.plans.GraftFunctions.topK(ord, col(idCol).cast("long"), k).as("__keep"))
+      .agg(graft.plans.GraftFunctions.topK(ord, col(idCol).cast("long"), GroupCap).as("__keep"))
       .select(col(groupCol), posexplode(col("__keep")))
       .select(
         col(groupCol),
@@ -322,7 +327,7 @@ object Sampling {
   }
 
   /** Per-group BUDGET cap: walk each group in salted-hash order and keep
-    * rows while the running `costCol` total stays within `budget` — "at
+    * rows while the running `costCol` total stays within [[GroupBudget]] — "at
     * most B tokens per source", the volume-based sibling of
     * [[capPerGroup]]'s count cap. Deterministic: the kept set is a pure
     * function of (ids, costs, salt), and is PREFIX-CLOSED in hash order, so
@@ -339,15 +344,13 @@ object Sampling {
       groupCol: String,
       idCol: String,
       costCol: Column,
-      budget: Long,
       salt: Long = 0L): DataFrame = {
-    require(budget > 0, "budget must be positive")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol))
       .orderBy(hashRank52(col(idCol), salt), col(idCol))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
     df.withColumn("cum_cost", sum(costCol.cast("long")).over(w))
-      .filter(col("cum_cost") <= budget)
+      .filter(col("cum_cost") <= GroupBudget)
   }
 }

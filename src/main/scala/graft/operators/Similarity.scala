@@ -16,6 +16,18 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
+  /** Neighbours every approximate search and the exact L2 tier return
+    * per query. */
+  final val Neighbors = 5
+  /** IVF coarse-quantizer cells, and the nearest cells each query probes. */
+  final val IvfCells = 8
+  final val IvfProbes = 2
+  /** Embedding width the PQ searches index, its contiguous subspaces, and
+    * the codes of each subspace's codebook. */
+  final val PqDim = 64
+  final val PqSubspaces = 4
+  final val PqCodes = 8
+
   /** Exact brute-force cosine top-k, scored with order-independent decimal
     * accumulation (bit-reproducible across engines and partitionings — the
     * tier the DuckDB oracle checks).
@@ -24,8 +36,7 @@ object Similarity {
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
-      vecCol: String,
-      k: Int
+      vecCol: String
   ): DataFrame = {
     // Norms are per-VECTOR, computed once on each side before the pair
     // join (computing them per pair triples the decimal work — measured
@@ -42,7 +53,7 @@ object Similarity {
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= Neighbors)
   }
 
   /** Exact brute-force squared-L2 top-k — the GROUND-TRUTH tier for the PQ
@@ -62,8 +73,7 @@ object Similarity {
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
-      vecCol: String,
-      k: Int): DataFrame = {
+      vecCol: String): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
     val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .join(q, col("query_id") =!= col("neighbor_id")) // broadcast NL join, map-only
@@ -73,24 +83,23 @@ object Similarity {
       .orderBy(col("__l2dec").asc, col("neighbor_id").asc)
     scored
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= Neighbors)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         col("__l2dec").cast("double").as("l2_sq"))
   }
 
-  /** Near-duplicate pairs with cosine above `threshold` within the corpus:
+  /** Cosine above which [[nearDupPairs]] reports a pair. */
+  final val NearDupThreshold = 0.25
+
+  /** Near-duplicate pairs with cosine above [[NearDupThreshold]] within the corpus:
     * the exact quadratic comparison over every `id_a < id_b` pair (recall
     * = 1), scored with order-independent decimal accumulation
     * (bit-reproducible across engines and partitionings). Viable only on
     * small or pre-blocked subsets; at corpus scale, block first (as
     * [[semDedup]] does with its clusters).
     */
-  def nearDupPairs(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double
-  ): DataFrame = {
+  def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val threshold = NearDupThreshold
     // Norms are per-VECTOR, computed once per side before the pair join
     // (computing them per pair triples the decimal work — measured 2.5x).
     val a = corpus.select(col(idCol).as("id_a"), col(vecCol).as("va"))
@@ -127,9 +136,9 @@ object Similarity {
 
   // --- IVF (inverted-file) ANN --------------------------------------------
 
-  /** Train an IVF coarse quantizer: deterministic seeding (the `k` vectors
-    * with smallest ids become the initial centroids, labeled by seed id)
-    * followed by `iters` Lloyd iterations — assignment by exact decimal
+  /** Train an IVF coarse quantizer: deterministic seeding (the
+    * [[IvfCells]] vectors with smallest ids become the initial centroids,
+    * labeled by seed id) followed by one Lloyd step — assignment by exact decimal
     * squared-L2 ([[VectorFunctions.l2SqExact]], ties to the smaller cluster
     * label), means by exact decimal accumulation ([[centroids]]). Fully
     * deterministic: the same corpus yields the same quantizer on any
@@ -138,29 +147,21 @@ object Similarity {
     * Scale shape: centroids are collected to the driver (k × dim doubles —
     * the standard k-means broadcast), so ASSIGNMENT IS MAP-SIDE: every row
     * computes its k distances in one projection, no shuffle. The only
-    * shuffle per iteration is the (cluster, dim) mean aggregation.
-    * Returns (cluster: Long, centroid: Seq[Double]) — k rows.
+    * shuffle is the (cluster, dim) mean aggregation.
+    * Returns (cluster: Long, centroid: Seq[Double]) — [[IvfCells]] rows.
     */
-  def ivfTrain(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      iters: Int = 1): Array[(Long, Seq[Double])] = {
+  def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String): Array[(Long, Seq[Double])] = {
     val seeds: Array[(Long, Seq[Double])] = corpus
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .orderBy(col(idCol))
-      .limit(k)
+      .limit(IvfCells)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val assigned = ivfAssign(corpus, vecCol, cents)
-      centroids(assigned, "cluster", vecCol)
-        .select(col("cluster").cast("long"), col("centroid"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1)
-    }
+    centroids(ivfAssign(corpus, vecCol, seeds), "cluster", vecCol)
+      .select(col("cluster").cast("long"), col("centroid"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .sortBy(_._1)
   }
 
   /** Add a `cluster` column: the label of the nearest centroid (exact
@@ -183,35 +184,31 @@ object Similarity {
   }
 
   /** IVF-Flat ANN search: train (or accept) a coarse quantizer, probe each
-    * query's `nProbe` nearest clusters, exact-cosine-score only the
-    * vectors in probed clusters, per-query top-k.
+    * query's [[IvfProbes]] nearest clusters, exact-cosine-score only the
+    * vectors in probed clusters, per-query top-[[Neighbors]].
     *
     * Scale shape: corpus assignment is map-side (see [[ivfTrain]]); the
     * exploded (query × probe) table is tiny and broadcast, so candidate
     * selection is a map-only broadcast join on `cluster` — the corpus never
     * shuffles, and the scored pair count drops by ~(k/nProbe)x vs
     * brute-force. Recall < 1 (a true neighbor may live in an unprobed
-    * cluster); raise `nProbe` to trade cost for recall. Candidates are
+    * cluster); more probes trade cost for recall. Candidates are
     * scored with decimal-exact cosine (bit-reproducible, oracle tier). */
   def knnIvf(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      kClusters: Int = 8,
-      nProbe: Int = 2,
-      iters: Int = 1,
       pretrained: Option[Array[(Long, Seq[Double])]] = None): DataFrame = {
-    // `pretrained` lets a caller that ALREADY trained this exact quantizer
-    // (same corpus/k/iters — training is fully deterministic, so the arrays
-    // are bit-identical) share it instead of paying the ivfTrain collect
+    // `pretrained` lets a caller that ALREADY trained this quantizer on the
+    // same corpus (training is fully deterministic, so the arrays are
+    // bit-identical) share it instead of paying the ivfTrain collect
     // chain again (q205 runs knnIvf and knnIvfPq over one corpus).
-    val cents = pretrained.getOrElse(ivfTrain(corpus, idCol, vecCol, kClusters, iters))
+    val cents = pretrained.getOrElse(ivfTrain(corpus, idCol, vecCol))
     val assigned = ivfAssign(corpus, vecCol, cents)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("cluster"))
     val probes = broadcast(
-      probeExploded(queries, idCol, vecCol, cents, nProbe)
+      probeExploded(queries, idCol, vecCol, cents)
         .select(col("query_id"), col("qv"), col("cluster")))
     val cos = VectorFunctions.cosineExact(col("qv"), col("cv"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -220,11 +217,11 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= Neighbors)
   }
 
   /** Per-query coarse-probe expansion shared by the IVF-family searches:
-    * one row per (query, probed cell) — the query's `nProbe` nearest
+    * one row per (query, probed cell) — the query's [[IvfProbes]] nearest
     * centroids by exact-decimal L2, ties to the smaller label (sorting the
     * (dist, label) structs). Returns (query_id, qv, cluster), NOT yet
     * broadcast — callers project what they need first. */
@@ -232,8 +229,7 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      cents: Array[(Long, Seq[Double])],
-      nProbe: Int): DataFrame = {
+      cents: Array[(Long, Seq[Double])]): DataFrame = {
     val dcArr = array(cents.map { case (label, cv) =>
       struct(
         VectorFunctions.l2SqExact(col(vecCol), typedLit(cv)).as("d"),
@@ -241,7 +237,7 @@ object Similarity {
     }.toSeq: _*)
     queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        slice(array_sort(dcArr), 1, nProbe).as("pr"))
+        slice(array_sort(dcArr), 1, IvfProbes).as("pr"))
       .select(col("query_id"), col("qv"), explode(col("pr")).as("p"))
       .select(col("query_id"), col("qv"), col("p.c").as("cluster"))
   }
@@ -253,7 +249,7 @@ object Similarity {
     * carrying `cell_rank` = the position of the vector's cell in that
     * query's probe order; recall at nProbe=p is then derived by ranking
     * the subset with cell_rank ≤ p — no re-scoring per sweep point. At
-    * nProbe=kClusters the candidate set is the whole corpus under the
+    * nProbe = [[IvfCells]] the candidate set is the whole corpus under the
     * truth metric, so that row's recall is 1.0 BY CONSTRUCTION — a
     * built-in self-check (SimilaritySpec also pins monotonicity in p).
     *
@@ -267,15 +263,12 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      kClusters: Int,
-      nProbes: Seq[Int],
-      iters: Int = 1): DataFrame = {
-    require(nProbes.nonEmpty && nProbes.forall(p => p >= 1 && p <= kClusters),
-      s"nProbes must be within [1, kClusters=$kClusters], got $nProbes")
+      nProbes: Seq[Int]): DataFrame = {
+    require(nProbes.nonEmpty && nProbes.forall(p => p >= 1 && p <= IvfCells),
+      s"nProbes must be within [1, $IvfCells], got $nProbes")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cents = ivfTrain(corpus, idCol, vecCol, kClusters, iters)
+    val cents = ivfTrain(corpus, idCol, vecCol)
     val dcArr = array(cents.map { case (label, cv) =>
       struct(
         VectorFunctions.l2SqExact(col(vecCol), typedLit(cv)).as("d"),
@@ -305,9 +298,9 @@ object Similarity {
     val ranked = scored
       .join(np, col("cell_rank") <= col("nprobe"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= Neighbors)
       .select(col("nprobe"), col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
-    val truth = knnExact(corpus, queries, idCol, vecCol, k)
+    val truth = knnExact(corpus, queries, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"))
     truth
       .join(np, lit(true))
@@ -331,8 +324,8 @@ object Similarity {
     * candidates at the top of an ADC result. One min/max aggregate over
     * the input (training corpora are sample-sized at scale, query sets are
     * broadcast-sized by construction — the action is cheap on both). */
-  private def requireVectorWidth(
-      df: DataFrame, vecCol: String, dim: Int, ctx: String): Unit = {
+  private def requireVectorWidth(df: DataFrame, vecCol: String, ctx: String): Unit = {
+    val dim = PqDim
     val w = df.agg(
       min(size(col(vecCol))).as("lo"), max(size(col(vecCol))).as("hi")).collect()(0)
     require(!w.isNullAt(0) && w.getInt(0) == dim && w.getInt(1) == dim,
@@ -345,8 +338,9 @@ object Similarity {
     * squared L2 from the vector's subspace-s slice to codebook entry c.
     * Shared by [[knnPq]] (raw vectors) and [[knnIvfPq]] (cell residuals) —
     * the element_at(+1) indexing convention in [[adcRank]] is its dual. */
-  private def pqLut(books: Array[Array[Seq[Double]]], sub: Int)(vec: Column): Column =
+  private def pqLut(books: Array[Array[Seq[Double]]])(vec: Column): Column =
     array(books.zipWithIndex.map { case (book, s) =>
+      val sub = PqDim / PqSubspaces
       val sv = slice(vec, s * sub + 1, sub)
       array(book.map(cv => VectorFunctions.l2SqExactDec(sv, typedLit(cv))).toSeq: _*)
     }.toSeq: _*)
@@ -356,7 +350,7 @@ object Similarity {
     * (order-independent, bit-reproducible), ranked (adc asc, neighbor
     * asc), decimal→double only at presentation. Both PQ searches end
     * here — a tie-break or indexing change lands in one place. */
-  private def adcRank(pairs: DataFrame, k: Int): DataFrame = {
+  private def adcRank(pairs: DataFrame): DataFrame = {
     val adc = VectorFunctions.sumExactDec(
       zip_with(col("codes"), col("luts"),
         (c, lutRow) => element_at(lutRow, c.cast("int") + 1)))
@@ -366,16 +360,16 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), adc.as("adc"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= Neighbors)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         col("adc").cast("double").as("adc_dist"))
   }
 
-  /** Train PQ codebooks: the vector is split into `m` contiguous subspaces
-    * of `dim / m` dimensions, and each subspace gets its own `k`-centroid
-    * quantizer via the SAME deterministic Lloyd k-means as [[ivfTrain]]
-    * (seeds = the k smallest ids' sub-vectors, exact-decimal assignment and
-    * means, ties to the smaller label). Returns, per subspace, the codebook
+  /** Train PQ codebooks: the [[PqDim]]-wide vector is split into
+    * [[PqSubspaces]] contiguous subspaces, and each subspace gets its own
+    * [[PqCodes]]-centroid quantizer via the SAME deterministic Lloyd step as
+    * [[ivfTrain]] (seeds = the PqCodes smallest ids' sub-vectors, exact-decimal
+    * assignment and means, ties to the smaller label). Returns, per subspace, the codebook
     * as sub-centroids indexed by dense CODE 0..k'-1 in ascending label
     * order (k' < k only if a Lloyd round empties a cluster), so encode and
     * LUT lookups index the same array even across holes.
@@ -386,25 +380,17 @@ object Similarity {
     * fixture trains on the whole table because the table IS sample-sized).
     * Encoding and search never shuffle the corpus (see [[knnPq]]).
     */
-  def pqTrain(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      m: Int,
-      k: Int,
-      iters: Int = 1): Array[Array[Seq[Double]]] = {
-    require(m > 0 && dim % m == 0, s"pqTrain: dim=$dim not divisible into m=$m subspaces")
-    val sub = dim / m
+  def pqTrain(corpus: DataFrame, idCol: String, vecCol: String): Array[Array[Seq[Double]]] = {
+    val (m, sub) = (PqSubspaces, PqDim / PqSubspaces)
     // Subspace quantizers are INDEPENDENT (each sees only its own slice) but
     // share the SAME input rows, so the m per-subspace Lloyd chains fuse into
     // one driver loop over shared jobs: ONE TakeOrdered collect seeds all m
     // codebooks (slice the k smallest-id full vectors driver-side — the same
     // values the per-subspace seed collects returned), and each Lloyd round
     // is ONE aggregation keyed (subspace, cluster, dimInSub) instead of m
-    // independent (cluster, dim) jobs. m·(iters+1)(+1 width) driver-
-    // synchronous jobs collapse to iters+2, and each corpus pass is read
-    // ONCE per round instead of m times. Arithmetic is unchanged group for
+    // independent (cluster, dim) jobs. 2m(+1 width) driver-synchronous
+    // jobs collapse to 3, and the corpus pass is read ONCE instead of m
+    // times. Arithmetic is unchanged group for
     // group — assignment by the same IvfArgminL2 kernel over the same slice
     // expression, means by the same DECIMAL(38,6)-sum/count — so codebooks
     // are bit-identical to the per-subspace chains (oracle replays agree).
@@ -413,45 +399,42 @@ object Similarity {
     // both must complete before any result is used).
     @volatile var seeds: Array[(Long, Seq[Double])] = null
     Concurrency.inParallel(Seq[() => Unit](
-      () => requireVectorWidth(corpus, vecCol, dim, "pqTrain"),
+      () => requireVectorWidth(corpus, vecCol, "pqTrain"),
       () => seeds = corpus
         .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
         .orderBy(col(idCol))
-        .limit(k)
+        .limit(PqCodes)
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))))
-    var cents: Array[Array[(Long, Seq[Double])]] = Array.tabulate(m)(s =>
-      seeds.map { case (id, v) => (id, v.slice(s * sub, (s + 1) * sub)) })
-    for (_ <- 1 to iters) {
-      val clusterCols = (0 until m).map { s =>
-        val (labels, rows) = graft.plans.IvfArgminL2.quantize(cents(s))
-        graft.plans.GraftFunctions.ivfArgmin(
-          slice(col(vecCol), s * sub + 1, sub), labels, rows)
-      }
-      val means = corpus
-        .select(array(clusterCols: _*).as("__cl"), posexplode(col(vecCol)).as(Seq("dim", "x")))
-        .select(
-          (col("dim") / lit(sub)).cast("int").as("s"),
-          element_at(col("__cl"), (col("dim") / lit(sub)).cast("int") + 1).as("cluster"),
-          (col("dim") % lit(sub)).as("d"),
-          col("x"))
-        .groupBy(col("s"), col("cluster"), col("d"))
-        .agg(graft.functions.AggFunctions.avgExact(col("x"), 6).as("m"))
-        .collect()
-      cents = Array.tabulate(m) { s =>
-        means.iterator
-          .filter(r => !r.isNullAt(0) && r.getInt(0) == s)
-          .toArray
-          .groupBy(r => if (r.isNullAt(1)) null.asInstanceOf[java.lang.Long]
-                        else java.lang.Long.valueOf(r.getLong(1)))
-          .collect { case (lbl, rows) if lbl != null =>
-            (lbl.longValue, rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
-          }
-          .toArray
-          .sortBy(_._1)
-      }
+    val clusterCols = (0 until m).map { s =>
+      val (labels, rows) = graft.plans.IvfArgminL2.quantize(
+        seeds.map { case (id, v) => (id, v.slice(s * sub, (s + 1) * sub)) })
+      graft.plans.GraftFunctions.ivfArgmin(
+        slice(col(vecCol), s * sub + 1, sub), labels, rows)
     }
-    cents.map(_.map(_._2))
+    val means = corpus
+      .select(array(clusterCols: _*).as("__cl"), posexplode(col(vecCol)).as(Seq("dim", "x")))
+      .select(
+        (col("dim") / lit(sub)).cast("int").as("s"),
+        element_at(col("__cl"), (col("dim") / lit(sub)).cast("int") + 1).as("cluster"),
+        (col("dim") % lit(sub)).as("d"),
+        col("x"))
+      .groupBy(col("s"), col("cluster"), col("d"))
+      .agg(graft.functions.AggFunctions.avgExact(col("x"), 6).as("m"))
+      .collect()
+    Array.tabulate(m) { s =>
+      means.iterator
+        .filter(r => !r.isNullAt(0) && r.getInt(0) == s)
+        .toArray
+        .groupBy(r => if (r.isNullAt(1)) null.asInstanceOf[java.lang.Long]
+                      else java.lang.Long.valueOf(r.getLong(1)))
+        .collect { case (lbl, rows) if lbl != null =>
+          (lbl.longValue, rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
+        }
+        .toArray
+        .sortBy(_._1)
+        .map(_._2)
+    }
   }
 
   /** Encode each vector as `m` dense codes in column `codes` — the 0-based index of the
@@ -483,7 +466,7 @@ object Similarity {
   }
 
   /** PQ ANN search via asymmetric distance computation (ADC, Jégou et al.
-    * 2011): corpus vectors are quantized to `m` codes; each query
+    * 2011): corpus vectors are quantized to [[PqSubspaces]] codes; each query
     * precomputes an m×k LUT of exact-decimal squared distances from its
     * sub-vectors to every sub-centroid, and a candidate's approximate
     * distance is the LUT sum over its codes — m array lookups + m decimal
@@ -501,28 +484,23 @@ object Similarity {
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
-      vecCol: String,
-      dim: Int,
-      k: Int,
-      m: Int = 4,
-      kCodes: Int = 8,
-      iters: Int = 1): DataFrame = {
-    val books = pqTrain(corpus, idCol, vecCol, dim, m, kCodes, iters)
+      vecCol: String): DataFrame = {
+    val books = pqTrain(corpus, idCol, vecCol)
     // Queries are NOT necessarily a subset of the trained corpus — a
     // ragged query vector would null-pad its LUT and rank garbage first
     // (nulls sort ascending-first); check its width like the corpus's.
-    requireVectorWidth(queries, vecCol, dim, "knnPq queries")
+    requireVectorWidth(queries, vecCol, "knnPq queries")
     val enc = pqEncode(corpus, vecCol, books)
       .select(col(idCol).as("neighbor_id"), col("codes"))
     val q = broadcast(
       queries.select(col(idCol).as("query_id"),
-        pqLut(books, dim / m)(col(vecCol)).as("luts")))
+        pqLut(books)(col(vecCol)).as("luts")))
     // broadcast NL join, map-only
-    adcRank(enc.join(q, col("query_id") =!= col("neighbor_id")), k)
+    adcRank(enc.join(q, col("query_id") =!= col("neighbor_id")))
   }
 
   /** IVFPQ — the FAISS production-ANN composition (Jégou et al. 2011):
-    * the IVF coarse quantizer prunes CANDIDATES (probe `nProbe` nearest
+    * the IVF coarse quantizer prunes CANDIDATES (probe [[IvfProbes]] nearest
     * cells per query), PQ codes built on RESIDUALS (vector − its cell's
     * centroid — residuals cluster far tighter than raw vectors, so the
     * same k codes quantize much finer) compress MEMORY, and ADC scores
@@ -542,25 +520,18 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      dim: Int,
-      k: Int,
-      kClusters: Int = 8,
-      nProbe: Int = 2,
-      m: Int = 4,
-      kCodes: Int = 8,
-      iters: Int = 1,
       pretrained: Option[Array[(Long, Seq[Double])]] = None): DataFrame = {
     // Same contract as knnIvf's `pretrained`: a deterministic retrain of the
-    // identical (corpus, kClusters, iters) quantizer may be shared.
-    val cents = pretrained.getOrElse(ivfTrain(corpus, idCol, vecCol, kClusters, iters))
+    // quantizer on the same corpus may be shared.
+    val cents = pretrained.getOrElse(ivfTrain(corpus, idCol, vecCol))
     // Same contract as knnPq: a ragged query would null-pad both its probe
     // distances and its per-cell residual LUTs.
-    requireVectorWidth(queries, vecCol, dim, "knnIvfPq queries")
+    requireVectorWidth(queries, vecCol, "knnIvfPq queries")
     val centMap = typedLit(cents.map { case (l, cv) => l -> cv }.toMap)
     def residual(v: Column, cluster: Column): Column =
       zip_with(v, element_at(centMap, cluster),
         (x, c) => x.cast("double") - c)
-    // Materialize the assignment+residual ONCE: pqTrain drives m·(iters+1)
+    // Materialize the assignment+residual ONCE: pqTrain drives two
     // actions over it and pqEncode one more — lazily each would re-run the
     // kClusters×dim exact-decimal distance argmin per action (measured 14 s
     // vs 3 s at sf0.1). At production scale this frame is the TRAINING
@@ -569,20 +540,20 @@ object Similarity {
     val assigned = ivfAssign(corpus, vecCol, cents)
       .withColumn("__resid", residual(col(vecCol), col("cluster")))
       .localCheckpoint()
-    val books = pqTrain(assigned, idCol, "__resid", dim, m, kCodes, iters)
+    val books = pqTrain(assigned, idCol, "__resid")
     val enc = pqEncode(assigned, "__resid", books)
       .select(col(idCol).as("neighbor_id"), col("cluster"), col("codes"))
     // Per-query probe list (the knnIvf move) + per-(query, cell) LUTs over
     // the query's residual AGAINST THAT CELL (the IVFPQ subtlety).
     val probes = broadcast(
-      probeExploded(queries, idCol, vecCol, cents, nProbe)
+      probeExploded(queries, idCol, vecCol, cents)
         .select(col("query_id"), col("cluster"),
-          pqLut(books, dim / m)(residual(col("qv"), col("cluster"))).as("luts")))
-    adcRank(enc.join(probes, Seq("cluster")), k)
+          pqLut(books)(residual(col("qv"), col("cluster"))).as("luts")))
+    adcRank(enc.join(probes, Seq("cluster")))
   }
 
   /** Sign bits per [[knnLsh]] signature (8 bits: 256 buckets per table). */
-  val LshPlanes = 8
+  final val LshPlanes = 8
   /** One signature table per seed; a pair is a candidate when it shares a
     * bucket in any table, so each extra table raises recall. */
   val LshSeeds: Seq[Int] = Seq(17, 41, 97)
@@ -597,8 +568,7 @@ object Similarity {
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
-      vecCol: String,
-      k: Int
+      vecCol: String
   ): DataFrame = {
     // One projection computes every seed's signature, then posexplode —
     // a union over seeds would re-scan the frame once per seed. Norms are
@@ -612,7 +582,7 @@ object Similarity {
           struct(
             lit(s).as("tbl"),
             VectorFunctions
-              .packBits(VectorFunctions.hyperplaneSignBits(col(s"${id}_v"), LshPlanes, s))
+              .packBits(VectorFunctions.hyperplaneSignBits(col(s"${id}_v"), s))
               .as("bucket"))): _*)).as("tb"): _*
       ).select(keep :+ col("tb.tbl").as("tbl") :+ col("tb.bucket").as("bucket"): _*)
     }
@@ -627,14 +597,19 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), cos.as("cosine"))
       .distinct()
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    candidates.withColumn("rank", row_number().over(w)).filter(col("rank") <= Neighbors)
   }
+
+  /** Cosine at or above which [[semDedup]] drops the higher id. */
+  final val SemDedupThreshold = 0.35
+  /** [[semDedup]]'s bound on within-cluster pairs per vector. */
+  final val MaxPairsPerVector = 4096L
 
   /** SemDeDup-style semantic pruning (Abbas et al. 2023, "SemDeDup: data-
     * efficient learning at web-scale through semantic deduplication"):
     * cluster embeddings with the IVF coarse quantizer, then WITHIN each
     * cluster drop every vector that has a near-identical lower-id neighbor
-    * (exact-decimal cosine ≥ `threshold`) — the greedy min-id-survivor
+    * (exact-decimal cosine ≥ [[SemDedupThreshold]]) — the greedy min-id-survivor
     * simplification of the paper's rule, fully deterministic.
     *
     * Scale shape: this is the reason SemDeDup clusters first — the
@@ -646,51 +621,42 @@ object Similarity {
     * THE SCALE CONTRACT IS k ∝ N. Σ n_c² only beats n² while per-cluster
     * populations stay bounded — the paper trains cluster counts
     * proportional to the corpus (110k clusters for LAION), keeping n_c
-    * (and so pairs-per-vector) CONSTANT as data grows. A fixed kClusters
-    * is a fixture parameter: an sf10 rehearsal measured k=8 over
+    * (and so pairs-per-vector) CONSTANT as data grows. The fixed
+    * [[IvfCells]] is a fixture size: an sf10 rehearsal measured k=8 over
     * 200k vectors at Σ n_c²/2 ≈ 2.5 BILLION exact-cosine pairs — a
-    * silent >600 s timeout. `maxPairsPerVector` (> 0 to enable) is the
+    * silent >600 s timeout. [[MaxPairsPerVector]] is the
     * scale-relative blowup guard against exactly that: it measures the
     * real pair mass Σ n_c·(n_c−1)/2 with ONE k-row aggregation at
     * operator-call time (the operator is already eager — ivfTrain
     * collects centroids) and fails loudly driver-side as
     * [[CandidateCapExceededException]] BEFORE the pair join is planned,
-    * naming the measured ratio and the fix (raise kClusters with the
+    * naming the measured ratio and the fix (raise the cell count with the
     * corpus). Scale-invariant under k ∝ N, still trips when a fixture k
     * meets grown data.
     *
     * Returns one row per corpus vector: `(cluster, idCol, dropped)` —
     * aggregate for the audit, anti-join the dropped ids for the pruned
     * corpus. */
-  def semDedup(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      kClusters: Int = 8,
-      iters: Int = 1,
-      maxPairsPerVector: Long = 0L): DataFrame = {
-    val assigned = ivfAssign(
-        corpus, vecCol, ivfTrain(corpus, idCol, vecCol, kClusters, iters))
+  def semDedup(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val threshold = SemDedupThreshold
+    val assigned = ivfAssign(corpus, vecCol, ivfTrain(corpus, idCol, vecCol))
       .select(col("cluster"), col(idCol), col(vecCol))
-    if (maxPairsPerVector > 0) {
-      val row = assigned.groupBy(col("cluster"))
-        .agg(count(lit(1)).as("__n"))
-        .agg(
-          coalesce(sum(col("__n").cast("decimal(38,0)") *
-            (col("__n") - 1).cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")),
-          coalesce(sum(col("__n").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")))
-        .collect()(0)
-      val p2 = BigDecimal(row.getDecimal(0)) // Σ n(n−1) = 2·pairs
-      val nVec = BigDecimal(row.getDecimal(1))
-      if (p2 > nVec * BigDecimal(maxPairsPerVector) * 2)
-        throw new CandidateCapExceededException(
-          s"semDedup: within-cluster pairs ${(p2 / 2).toBigInt} over " +
-            s"${nVec.toBigInt} vectors exceed maxPairsPerVector=" +
-            s"$maxPairsPerVector with kClusters=$kClusters — SemDeDup's " +
-            "scale contract is k ∝ N (keep pairs-per-vector constant); " +
-            "raise kClusters with the corpus")
-    }
+    val row = assigned.groupBy(col("cluster"))
+      .agg(count(lit(1)).as("__n"))
+      .agg(
+        coalesce(sum(col("__n").cast("decimal(38,0)") *
+          (col("__n") - 1).cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")),
+        coalesce(sum(col("__n").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")))
+      .collect()(0)
+    val p2 = BigDecimal(row.getDecimal(0)) // Σ n(n−1) = 2·pairs
+    val nVec = BigDecimal(row.getDecimal(1))
+    if (p2 > nVec * BigDecimal(MaxPairsPerVector) * 2)
+      throw new CandidateCapExceededException(
+        s"semDedup: within-cluster pairs ${(p2 / 2).toBigInt} over " +
+          s"${nVec.toBigInt} vectors exceed maxPairsPerVector=" +
+          s"$MaxPairsPerVector with kClusters=$IvfCells — SemDeDup's " +
+          "scale contract is k ∝ N (keep pairs-per-vector constant); " +
+          "raise kClusters with the corpus")
     // Per-vector norms computed ONCE per side before the pair join, and
     // two-phase scoring (the nearDupPairs recipe): the fused double kernel
     // prefilters at a safety margin, only survivors pay the exact decimal
@@ -720,8 +686,11 @@ object Similarity {
         coalesce(col("__d"), lit(false)).as("dropped"))
   }
 
+  /** Negatives [[hardNegatives]] samples per vector. */
+  final val HardNegativeDraws = 4
+
   /** Deterministic hard-negative mining for contrastive training: every
-    * vector samples `k` pseudo-random negatives and keeps the HARDEST —
+    * vector samples [[HardNegativeDraws]] pseudo-random negatives and keeps the HARDEST —
     * the sampled non-match most similar to the anchor, the pair a
     * contrastive loss learns the most from (random negatives are mostly
     * trivial; hardest-of-k is the standard cheap upgrade before true ANN
@@ -748,10 +717,9 @@ object Similarity {
   def hardNegatives(
       emb: DataFrame,
       idCol: String,
-      vecCol: String,
-      k: Int = 4): DataFrame = {
+      vecCol: String): DataFrame = {
     import graft.functions.HashFunctions
-    require(k >= 1, s"need k >= 1 negatives, got $k")
+    val k = HardNegativeDraws
     // The guard must prove ids are EXACTLY {0..N−1}: distinct-count equal
     // to count closes the duplicate-id-plus-gap loophole (ids {0,1,1,3}
     // satisfy min/max/count alone, then gap-mapped candidates silently

@@ -28,6 +28,18 @@ import graft.functions.HashFunctions
   */
 object Sketches {
 
+  /** HyperLogLog register-index bits: m = 2^8 = 256 registers. */
+  final val HllP = 8
+  /** Count-min sketch hash rows and counters per row, and the heavy
+    * hitters [[cmsTopK]] keeps per group. */
+  final val CmsDepth = 4
+  final val CmsWidth = 1024
+  final val CmsTopK = 5
+  /** Bottom-k register size of the KMV quantile sketch. */
+  final val KmvK = 256
+  /** Days each window of [[bitmapSlidingDistinct]] spans. */
+  final val BitmapWindowDays = 7
+
   /** Raw-estimator HyperLogLog with deterministic SplitMix64 hashing.
     *
     * Per group: hash each key to 64 bits; low `p` bits pick one of `m = 2^p`
@@ -52,14 +64,12 @@ object Sketches {
     * the harness-data error; q34 is the exact tier).
     *
     * @param keyCol distinct-counted key (hashed via `cast(long)`)
-    * @param p      register-index bits; m = 2^p registers, default 256
     */
   def hllDistinct(
       df: DataFrame,
       groupCols: Seq[String],
-      keyCol: Column,
-      p: Int = 8): DataFrame =
-    hllEstimateFromRegisters(hllRegisters(df, groupCols, keyCol, p), groupCols, p)
+      keyCol: Column): DataFrame =
+    hllEstimateFromRegisters(hllRegisters(df, groupCols, keyCol), groupCols)
 
   /** The register table `(groupCols..., hll_bucket, hll_reg)` of the
     * [[hllDistinct]] sketch — exposed because registers, not estimates, are
@@ -70,9 +80,8 @@ object Sketches {
   def hllRegisters(
       df: DataFrame,
       groupCols: Seq[String],
-      keyCol: Column,
-      p: Int = 8): DataFrame = {
-    require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
+      keyCol: Column): DataFrame = {
+    val p = HllP
     val m = 1 << p
     val maxRho = 65 - p // rho when the suffix is all zeros
 
@@ -112,9 +121,8 @@ object Sketches {
     * the exact-arithmetic construction). */
   def hllEstimateFromRegisters(
       registers: DataFrame,
-      groupCols: Seq[String],
-      p: Int = 8): DataFrame = {
-    require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
+      groupCols: Seq[String]): DataFrame = {
+    val p = HllP
     val m = 1 << p
     val maxRho = 65 - p
     val g = groupCols.map(col)
@@ -130,22 +138,22 @@ object Sketches {
     registers
       .groupBy(g: _*)
       .agg((sum(scaledInv) + absent).as("__hll_s"))
-      .select(g :+ (lit(hllNumerator(p)) / col("__hll_s").cast("double")).as("est_distinct"): _*)
+      .select(g :+ (lit(HllNumerator) / col("__hll_s").cast("double")).as("est_distinct"): _*)
   }
 
   /** The exact double constant `alpha_m * m^2 * 2^(65-p)` used by
     * [[hllDistinct]], exposed so an external oracle can embed the identical
     * literal (Scala's `Double.toString` round-trips). */
-  def hllNumerator(p: Int): Double = {
-    val m = 1 << p
-    0.7213 / (1 + 1.079 / m) * m * m * math.pow(2.0, 65 - p)
+  val HllNumerator: Double = {
+    val m = 1 << HllP
+    0.7213 / (1 + 1.079 / m) * m * m * math.pow(2.0, 65 - HllP)
   }
 
-  /** Count-min-sketch heavy hitters: top-`k` keys per group ranked by their
+  /** Count-min-sketch heavy hitters: top-[[CmsTopK]] keys per group ranked by their
     * CMS count estimate, with the exact count alongside for auditing.
     *
-    * The sketch: `depth` hash rows (seeded SplitMix64 family,
-    * [[HashFunctions.seeded]]) × `width` counters; a key's estimate is the
+    * The sketch: [[CmsDepth]] hash rows (seeded SplitMix64 family,
+    * [[HashFunctions.seeded]]) × [[CmsWidth]] counters; a key's estimate is the
     * MIN of its `depth` counters, an upper bound on the true count
     * (Cormode & Muthukrishnan's classic bound: overestimate ≤ e·N/width
     * with probability 1 − e^(−depth)). Everything is integer arithmetic —
@@ -163,20 +171,15 @@ object Sketches {
   def cmsTopK(
       df: DataFrame,
       groupCols: Seq[String],
-      keyCol: Column,
-      k: Int = 5,
-      depth: Int = 4,
-      width: Int = 1024): DataFrame = {
-    require(depth >= 1 && depth <= 8, s"depth must be in [1,8], got $depth")
-    require(width >= 2 && (width & (width - 1)) == 0, s"width must be a power of 2, got $width")
+      keyCol: Column): DataFrame = {
     val g = groupCols.map(col)
 
     val seeded = df
       .select(g :+ keyCol.cast("long").as("__cms_key"): _*)
-      .withColumn("__cms_seed", explode(array((0 until depth).map(lit): _*)))
+      .withColumn("__cms_seed", explode(array((0 until CmsDepth).map(lit): _*)))
       .withColumn("__cms_bucket",
         HashFunctions.seeded(col("__cms_key"), col("__cms_seed"))
-          .bitwiseAND(lit((width - 1).toLong)))
+          .bitwiseAND(lit((CmsWidth - 1).toLong)))
 
     val counters = seeded
       .groupBy(g :+ col("__cms_seed") :+ col("__cms_bucket"): _*)
@@ -202,7 +205,7 @@ object Sketches {
     est
       .join(exact, groupCols :+ "__cms_key")
       .withColumn("__cms_rn", row_number().over(w))
-      .filter(col("__cms_rn") <= k)
+      .filter(col("__cms_rn") <= CmsTopK)
       .drop("__cms_rn")
       .withColumnRenamed("__cms_key", "key")
   }
@@ -238,12 +241,11 @@ object Sketches {
       df: DataFrame,
       groupCols: Seq[String],
       idCol: Column,
-      valueCol: Column,
-      k: Int = 256): DataFrame = {
+      valueCol: Column): DataFrame = {
     val g = groupCols.map(col)
     df.groupBy(g: _*)
       .agg(graft.plans.GraftFunctions
-        .kmvBottomK(HashFunctions.mix64(idCol.cast("long")), valueCol.cast("double"), k)
+        .kmvBottomK(HashFunctions.mix64(idCol.cast("long")), valueCol.cast("double"))
         .as("__kmv"))
       .select(g :+ explode(col("__kmv")).as("__e"): _*)
       .select(g :+ col("__e.h").as("kmv_h") :+ col("__e.v").as("kmv_v"): _*)
@@ -253,12 +255,12 @@ object Sketches {
     * register set per group — re-keeping bottom-k over the union of kept
     * pairs, which equals the registers of the combined data exactly
     * (KmvSpec and q98 pin it). */
-  def kmvMerge(registers: DataFrame, groupCols: Seq[String], k: Int = 256): DataFrame = {
+  def kmvMerge(registers: DataFrame, groupCols: Seq[String]): DataFrame = {
     val g = groupCols.map(col)
     registers
       .groupBy(g: _*)
       .agg(graft.plans.GraftFunctions
-        .kmvBottomK(col("kmv_h"), col("kmv_v"), k).as("__kmv"))
+        .kmvBottomK(col("kmv_h"), col("kmv_v")).as("__kmv"))
       .select(g :+ explode(col("__kmv")).as("__e"): _*)
       .select(g :+ col("__e.h").as("kmv_h") :+ col("__e.v").as("kmv_v"): _*)
   }
@@ -318,33 +320,29 @@ object Sketches {
       dfA: DataFrame,
       dfB: DataFrame,
       keyA: Column,
-      keyB: Column,
-      depth: Int = 4,
-      width: Int = 1024): DataFrame = {
-    require(depth >= 1 && depth <= 8, s"depth must be in [1,8], got $depth")
-    require(width >= 2 && (width & (width - 1)) == 0, s"width must be a power of 2, got $width")
+      keyB: Column): DataFrame = {
 
     def counters(df: DataFrame, key: Column, tag: String): DataFrame =
       df.select(key.cast("long").as("__k"))
-        .withColumn("__s", explode(array((0 until depth).map(lit): _*)))
+        .withColumn("__s", explode(array((0 until CmsDepth).map(lit): _*)))
         .withColumn("__b",
           HashFunctions.seeded(col("__k"), col("__s"))
-            .bitwiseAND(lit((width - 1).toLong)))
+            .bitwiseAND(lit((CmsWidth - 1).toLong)))
         .groupBy(col("__s"), col("__b"))
         .agg(count(lit(1)).as(tag))
 
     // Inner join: a bucket missing from either side contributes 0 to the
-    // dot product. Both counter tables are <= depth*width rows — AQE
+    // dot product. Both counter tables are <= CmsDepth*CmsWidth rows — AQE
     // broadcasts this join however large the inputs were. A depth row with
     // NO shared buckets vanishes from the grouped join entirely, but its
     // dot product is 0 — and a 0 row estimate certifies the exact answer
     // is 0 (the row never undercounts) — so the min must see it: if fewer
-    // than `depth` rows survive, the estimate is 0, not min-of-present.
+    // than [[CmsDepth]] rows survive, the estimate is 0, not min-of-present.
     val est = counters(dfA, keyA, "__ca")
       .join(counters(dfB, keyB, "__cb"), Seq("__s", "__b"))
       .groupBy(col("__s"))
       .agg(sum(col("__ca").cast("decimal(19,0)") * col("__cb")).as("__dot"))
-      .agg(when(count(lit(1)) === depth, min(col("__dot")))
+      .agg(when(count(lit(1)) === CmsDepth, min(col("__dot")))
         .otherwise(lit(0)).cast("decimal(38,0)").as("est_pairs"))
 
     def keyCounts(df: DataFrame, key: Column, tag: String): DataFrame =
@@ -385,21 +383,19 @@ object Sketches {
   def bitmapSlidingDistinct(
       events: DataFrame,
       tsCol: String,
-      idCol: String,
-      windowDays: Int): DataFrame = {
-    require(windowDays >= 1, "window must span at least one day")
+      idCol: String): DataFrame = {
     val masks = events
       .select(to_date(col(tsCol)).as("day"),
         expr(s"$idCol div 63").as("w"),
         expr(s"shiftleft(CAST(1 AS BIGINT), CAST($idCol % 63 AS INT))").as("__bit"))
       .groupBy(col("day"), col("w"))
       .agg(expr("bit_or(__bit)").as("mask"))
-    // each day's masks serve the windows ENDING on day .. day+windowDays-1;
+    // each day's masks serve the windows ENDING on day .. day+BitmapWindowDays-1;
     // keep only end-days that exist in the data (trailing ghost windows
     // would report partial ranges)
     val fanned = masks
       .select(col("day"), col("w"), col("mask"),
-        explode(sequence(lit(0), lit(windowDays - 1))).as("__k"))
+        explode(sequence(lit(0), lit(BitmapWindowDays - 1))).as("__k"))
       .select(expr("date_add(day, __k)").as("day"), col("w"), col("mask"))
     val presentDays = masks.select(col("day")).distinct()
     fanned

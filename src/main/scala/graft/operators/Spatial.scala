@@ -28,6 +28,9 @@ import graft.functions.GeoFunctions
   */
 object Spatial {
 
+  /** Side of [[bucketedContainsJoin]]'s square buckets, in coordinate units. */
+  final val CellSize = 8.0
+
   /** Even-odd point-in-polygon over rings. Boundary points follow the
     * half-open edge convention (stable for adjacent tiles: a shared border
     * lands in exactly one tile). */
@@ -77,11 +80,11 @@ object Spatial {
     ).drop("_b")
   }
 
-  /** Grid bucket id for a coordinate at the given cell size. */
-  private def bucket(c: Column, cell: Double): Column = floor(c / cell).cast("long")
+  /** Grid bucket id of a coordinate, cells [[CellSize]] wide. */
+  private def bucket(c: Column): Column = floor(c / CellSize).cast("long")
 
   /** Shuffle-based containment join for big-big inputs: equi-join on a
-    * grid-bucket key. `cellSize` should approximate the median polygon
+    * grid-bucket key. [[CellSize]] should approximate the median polygon
     * envelope edge — too small explodes the polygon side, too large
     * degrades to envelope-only filtering.
     */
@@ -90,20 +93,19 @@ object Spatial {
       polygons: DataFrame,
       xCol: String,
       yCol: String,
-      coordsCol: String,
-      cellSize: Double
+      coordsCol: String
   ): DataFrame = {
     val withBounds = polygons.withColumn("_b", GeoFunctions.polygonBounds(col(coordsCol)))
     // Explode each polygon to every bucket its envelope overlaps; sequence()
     // stays columnar (no UDF) and the count per polygon is
     // ceil(width/cell) × ceil(height/cell).
     val polyBuckets = withBounds
-      .withColumn("_bx", explode(sequence(bucket(col("_b.minx"), cellSize), bucket(col("_b.maxx"), cellSize))))
-      .withColumn("_by", explode(sequence(bucket(col("_b.miny"), cellSize), bucket(col("_b.maxy"), cellSize))))
+      .withColumn("_bx", explode(sequence(bucket(col("_b.minx")), bucket(col("_b.maxx")))))
+      .withColumn("_by", explode(sequence(bucket(col("_b.miny")), bucket(col("_b.maxy")))))
     val x = col(xCol); val y = col(yCol)
     val ptBuckets = points
-      .withColumn("_bx", bucket(x, cellSize))
-      .withColumn("_by", bucket(y, cellSize))
+      .withColumn("_bx", bucket(x))
+      .withColumn("_by", bucket(y))
     ptBuckets.join(polyBuckets, Seq("_bx", "_by"))
       .filter(
         x >= col("_b.minx") && x <= col("_b.maxx") &&

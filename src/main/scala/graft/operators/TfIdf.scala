@@ -30,8 +30,22 @@ object TfIdf {
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  /** Corpus vocabulary: the `topK` most frequent terms that appear in at
-    * least `minDf` distinct documents, ranked by total occurrence count
+  /** Terms [[vocabulary]] keeps, and the distinct documents a term needs. */
+  final val VocabTopK = 100
+  final val VocabMinDf = 2L
+  /** Terms [[topTerms]] keeps per document. */
+  final val TopTermsK = 3
+  /** Pair count below which [[bigramAssociations]] drops a bigram, and the
+    * bigrams it reports. */
+  final val BigramMinCount = 5L
+  final val BigramTopK = 20
+  /** Terms [[groupedVocabulary]] keeps per group. */
+  final val GroupVocabTopK = 5
+  /** Documents [[keywordSearch]] returns. */
+  final val SearchTopK = 10
+
+  /** Corpus vocabulary: the [[VocabTopK]] most frequent terms that appear in at
+    * least [[VocabMinDf]] distinct documents, ranked by total occurrence count
     * (ties broken by term text). `vocab_id` is the 1-based rank — the
     * stable token id a downstream tokenizer ships with the dataset.
     *
@@ -44,15 +58,13 @@ object TfIdf {
   def vocabulary(
       docs: DataFrame,
       idCol: String,
-      textCol: String,
-      minDf: Long,
-      topK: Int): DataFrame = {
+      textCol: String): DataFrame = {
     val byTerm = termCounts(docs, idCol, textCol)
       .groupBy(col("term"))
       .agg(sum(col("tf")).as("term_freq"), count(lit(1)).as("doc_freq"))
-      .filter(col("doc_freq") >= minDf)
+      .filter(col("doc_freq") >= VocabMinDf)
       .orderBy(col("term_freq").desc, col("term").asc)
-      .limit(topK)
+      .limit(VocabTopK)
     byTerm
       .withColumn(
         "vocab_id",
@@ -105,7 +117,7 @@ object TfIdf {
 
   /** Top-k terms per document by tf/df weight (ties broken by term text,
     * so the result is fully deterministic). */
-  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
+  def topTerms(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tf = termCounts(docs, idCol, textCol)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(idCol)
@@ -113,7 +125,7 @@ object TfIdf {
     tf.join(df, "term")
       .withColumn("score", col("tf").cast("double") / col("df").cast("double"))
       .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= TopTermsK)
       .select(col(idCol), col("term"), col("tf"), col("df"), col("score"), col("rnk"))
   }
 
@@ -124,8 +136,8 @@ object TfIdf {
     * `p(xy) / (p(x)·p(y)) = c_xy·N / (c_x·c_y)` reported in parts-per-
     * million, truncated by INTEGRAL division — `ln` of the ratio would rank
     * identically (ln is monotone) but is not cross-platform reproducible,
-    * while the ppm integer is exact in any engine. Pairs below `minCount`
-    * are dropped (PMI of hapax pairs is pure noise — standard practice).
+    * while the ppm integer is exact in any engine. Pairs below
+    * [[BigramMinCount]] are dropped (PMI of hapax pairs is pure noise — standard practice).
     *
     * Scale shape: bigrams are generated by position-explode over the token
     * array (a plain `sequence` feeds the generate, so it stays in
@@ -136,16 +148,13 @@ object TfIdf {
     * both legs. The grand total N rides a 1-row broadcast. Final top-k is
     * TakeOrdered (per-partition heaps), never a global sort.
     *
-    * `assoc_ppm` fits a BIGINT while `10⁶·N / minCount² < 2^63` — i.e. up
-    * to N ≈ 2e11 bigrams at minCount=5; past that raise `minCount` (the
+    * `assoc_ppm` fits a BIGINT while `10⁶·N / BigramMinCount² < 2^63` — i.e. up
+    * to N ≈ 2e11 bigrams at minCount=5; past that raise [[BigramMinCount]] (the
     * statistically sane move anyway) or rescale.
     */
   def bigramAssociations(
       docs: DataFrame,
-      textCol: String,
-      minCount: Long,
-      topK: Int): DataFrame = {
-    require(minCount >= 1 && topK >= 1, "need minCount >= 1 and topK >= 1")
+      textCol: String): DataFrame = {
     val toks = docs.select(TextFunctions.tokens(col(textCol)).as("__toks"))
     val pairs = toks
       .filter(size(col("__toks")) >= 2)
@@ -166,7 +175,7 @@ object TfIdf {
       .agg(count(lit(1)).as("__f"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     pairs
-      .filter(col("pair_freq") >= minCount)
+      .filter(col("pair_freq") >= BigramMinCount)
       .join(uni.select(col("__t").as("w1"), col("__f").as("w1_freq")), Seq("w1"))
       .join(uni.select(col("__t").as("w2"), col("__f").as("w2_freq")), Seq("w2"))
       .crossJoin(broadcast(total))
@@ -177,10 +186,10 @@ object TfIdf {
       .select(col("w1"), col("w2"), col("pair_freq"),
         col("w1_freq"), col("w2_freq"), col("assoc_ppm"))
       .orderBy(col("assoc_ppm").desc, col("w1"), col("w2"))
-      .limit(topK)
+      .limit(BigramTopK)
   }
 
-  /** Per-group vocabulary: the `topK` most frequent terms WITHIN each
+  /** Per-group vocabulary: the [[GroupVocabTopK]] most frequent terms WITHIN each
     * group (a per-language tokenizer vocab), ranked by term count with the
     * term text as tie-break — fully deterministic.
     *
@@ -195,8 +204,7 @@ object TfIdf {
   def groupedVocabulary(
       docs: DataFrame,
       groupCol: String,
-      textCol: String,
-      topK: Int): DataFrame = {
+      textCol: String): DataFrame = {
     // termCounts keyed by the GROUP instead of the document id — same
     // tokenize-explode-aggregate shape, one definition
     val counts = termCounts(docs, groupCol, textCol)
@@ -206,10 +214,10 @@ object TfIdf {
         row_number().over(
           Window.partitionBy(col(groupCol))
             .orderBy(col("term_freq").desc, col("term").asc)).cast("long"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= GroupVocabTopK)
   }
 
-  /** Keyword retrieval: top-k documents for a bag of query terms, scored
+  /** Keyword retrieval: top-[[SearchTopK]] documents for a bag of query terms, scored
     * by exact-integer tf·idf — `score = Σ tf(t,d) · ((N·1e6) div df(t))`.
     * Integral idf-ppm instead of the classic ln(N/df): same ranking
     * monotonicity per term, but bit-reproducible across engines (no libm),
@@ -227,8 +235,7 @@ object TfIdf {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      terms: Seq[String],
-      k: Int): DataFrame = {
+      terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "keywordSearch needs at least one query term")
     val postings = docs
       .select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("term"))
@@ -245,6 +252,6 @@ object TfIdf {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hit_terms"), sum(col("__sc")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+      .limit(SearchTopK)
   }
 }

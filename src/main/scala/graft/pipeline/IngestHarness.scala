@@ -193,8 +193,9 @@ object IngestHarness {
     * — it holds an open directory handle until closed). The data dir —
     * CSVs AND the __stage_* dirs with their _SUCCESS/.crc droppings — is
     * deleted after the loads; the warehouse parquet must outlive the call
-    * (the returned frame reads it lazily). */
-  private[pipeline] def deleteRecursively(root: Path): Unit = {
+    * (the returned frame reads it lazily). Streaming runs reclaim their
+    * checkpoints with it too. */
+  private[graft] def deleteRecursively(root: Path): Unit = {
     if (!Files.exists(root)) return
     val walk = Files.walk(root)
     val all =

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.Graft
-import graft.sources.GeoJsonSource
 
 /** CLI entry point mirroring the reference driver's flags
   * (reference `main.py:56-94`): `--all` runs every stage; `--geometries`,
@@ -22,18 +21,9 @@ object MilanApp {
     val pipe = new MilanPipeline(spark, whDir)
 
     if (all || opts.contains("geometries")) {
-      val gridPath = s"$dataDir/milano-grid.geojson"
-      if (new java.io.File(gridPath).exists()) {
-        val cells = GeoJsonSource.gridCells(spark, gridPath)
-        cells.write.mode("overwrite").parquet(s"$whDir/dim_grid_milan")
-        println(s"[milan] ${cells.count()} grid cells loaded")
-      }
-      val provPath = s"$dataDir/Italian_provinces.geojson"
-      if (new java.io.File(provPath).exists()) {
-        val prov = GeoJsonSource.provinces(spark, provPath)
-        prov.write.mode("overwrite").parquet(s"$whDir/dim_provinces_it")
-        println(s"[milan] ${prov.count()} provinces loaded")
-      }
+      val (cells, provinces) = pipe.loadGeometries(dataDir)
+      println(s"[milan] $cells grid cells loaded")
+      println(s"[milan] $provinces provinces loaded")
     }
     if (all || opts.contains("traffic")) {
       val n = pipe.loadTraffic(dataDir, limitFiles = opts.get("limit-files").map(_.toInt))

@@ -3,16 +3,16 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 import graft.{Graft, Harness, Json}
-import graft.sources.{GeoJsonFixture, GeoJsonSource}
+import graft.sources.GeoJsonFixture
 
 /** End-to-end Milan pipeline run record — the reference's
   * E1 (`main.py --all`, reference main.py:56-94) executed as ONE run over
   * synthesized inputs, emitting a committed datasheet (`MILAN_E2E.json`):
   * per-stage wall seconds, row/file counts, the double-load ledger proof,
   * and the constraint audit's violation counts (expected all-zero). The
-  * four stages call EXACTLY the code `MilanApp --all` dispatches to
-  * (GeoJsonSource loads → MilanPipeline.loadTraffic/loadMobility →
-  * topCells → auditConstraints); this main only adds staging of the
+  * five stages call EXACTLY the code `MilanApp --all` dispatches to
+  * (MilanPipeline.loadGeometries → loadTraffic/loadMobility → topCells →
+  * auditConstraints); this main only adds staging of the
   * deterministic fixtures and structured capture of what each stage
   * returns, where MilanApp prints to stdout for a human.
   *
@@ -92,14 +92,7 @@ object MilanE2E {
       dataDir, "mi-to-provinces", nDayFiles)
 
     // ---- stage 1: geometries (MilanApp --geometries) -------------------
-    val (geo, geoSec) = timed {
-      val cells = GeoJsonSource.gridCells(spark, s"$dataDir/milano-grid.geojson")
-      cells.write.mode("overwrite").parquet(s"$whDir/dim_grid_milan")
-      val prov = GeoJsonSource.provinces(spark, s"$dataDir/Italian_provinces.geojson")
-      prov.write.mode("overwrite").parquet(s"$whDir/dim_provinces_it")
-      (spark.read.parquet(s"$whDir/dim_grid_milan").count(),
-        spark.read.parquet(s"$whDir/dim_provinces_it").count())
-    }
+    val (geo, geoSec) = timed(pipe.loadGeometries(dataDir.toString))
 
     // ---- stage 2: traffic ingest, run TWICE (K4 ledger proof) ----------
     val (traffic, trafficSec) = timed {

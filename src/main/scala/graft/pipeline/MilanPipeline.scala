@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Parquet
 import graft.operators.{Audit, Cleaning, Rollup}
-import graft.sources.MilanCsvSource
+import graft.sources.{GeoJsonSource, MilanCsvSource}
 
 /** The reference's end-to-end pipeline (`main.py --all`,
   * reference `main.py:56-94`) re-expressed Spark-first:
@@ -66,6 +66,24 @@ final class MilanPipeline(spark: SparkSession, warehouseDir: String) {
       .partitionBy("event_date", "src_file")
       .mode(SaveMode.Overwrite)
       .parquet(tablePath(table))
+  }
+
+  /** Load the geometry dimensions (reference `main.py --geometries`):
+    * `milano-grid.geojson` to `dim_grid_milan` and
+    * `Italian_provinces.geojson` to `dim_provinces_it`, each overwritten
+    * when its file is under `dataDir`. Returns the rows written per table
+    * (grid, provinces), 0 for an absent file. */
+  def loadGeometries(dataDir: String): (Long, Long) = {
+    def load(file: String, table: String, read: String => DataFrame): Long = {
+      val path = s"$dataDir/$file"
+      if (!Files.exists(Paths.get(path))) 0L
+      else {
+        read(path).write.mode(SaveMode.Overwrite).parquet(tablePath(table))
+        spark.read.parquet(tablePath(table)).count()
+      }
+    }
+    (load("milano-grid.geojson", "dim_grid_milan", GeoJsonSource.gridCells(spark, _)),
+      load("Italian_provinces.geojson", "dim_provinces_it", GeoJsonSource.provinces(spark, _)))
   }
 
   /** Load new traffic day-files. Returns number of files ingested. */

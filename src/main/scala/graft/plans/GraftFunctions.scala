@@ -22,9 +22,10 @@ object GraftFunctions {
       CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** MinHash signature kernel over an `array<bigint>` of shingle hashes
-    * (see [[MinHashSig]]). */
-  def minHashSig(hashes: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(hashes), numHashes))
+    * (see [[MinHashSig]]), [[graft.operators.Dedup.NumHashes]] long. */
+  def minHashSig(hashes: Column): Column =
+    ColumnBridge.column(
+      MinHashSig(ColumnBridge.expression(hashes), graft.operators.Dedup.NumHashes))
 
   private val cosineBuilder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "graft_cosine expects exactly 2 arguments")
@@ -131,13 +132,14 @@ object GraftFunctions {
     TopKAgg(children(0), children(1), k)
   }
 
-  /** Bottom-k-by-hash aggregate (see [[KmvAgg]]): the k pairs with the
+  /** Bottom-k-by-hash aggregate (see [[KmvAgg]]): the
+    * [[graft.operators.Sketches.KmvK]] pairs with the
     * smallest signed-long hash `h`, payload `v` carried through, sorted by
     * `h` ascending — the register buffer of
     * [[graft.operators.Sketches.kmvRegisters]]. */
-  def kmvBottomK(h: Column, v: Column, k: Int): Column =
+  def kmvBottomK(h: Column, v: Column): Column =
     ColumnBridge.column(
-      KmvAgg(ColumnBridge.expression(h), ColumnBridge.expression(v), k)
+      KmvAgg(ColumnBridge.expression(h), ColumnBridge.expression(v), graft.operators.Sketches.KmvK)
         .toAggregateExpression())
 
   private val kmvBuilder: Seq[Expression] => Expression = { children =>

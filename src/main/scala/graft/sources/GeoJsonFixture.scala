@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import graft.functions.HashFunctions
 
@@ -65,11 +65,19 @@ object GeoJsonFixture {
     s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}]}"""
   }
 
-  /** Write a fixture to `dir/<name>` and return the absolute path. */
+  /** Write a fixture to `dir/<name>` and return the absolute path.
+    * Queries that run at once rewrite the same fixture while others scan
+    * it, so the text lands in a hidden temp file beside it first and
+    * replaces `<name>` by an atomic move: a reader sees the old file or
+    * the new one, never a truncated one. */
   def write(dir: Path, name: String, json: String): String = {
     Files.createDirectories(dir)
     val p = dir.resolve(name)
-    Files.writeString(p, json)
+    val tmp = Files.createTempFile(dir, s".$name", ".tmp")
+    try {
+      Files.writeString(tmp, json)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
     p.toAbsolutePath.toString
   }
 }

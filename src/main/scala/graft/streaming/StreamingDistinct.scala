@@ -57,7 +57,7 @@ object StreamingDistinct {
     var s = BigInt(0)
     var i = 0
     while (i < 256) { s += BigInt(1) << (57 - regs(i)); i += 1 }
-    Sketches.hllNumerator(8) / s.toDouble
+    Sketches.HllNumerator / s.toDouble
   }
 
   /** Per-group running distinct estimate over a streaming feed. A

@@ -88,13 +88,7 @@ object StreamingFunnel {
       spark: SparkSession,
       eventsPath: String,
       steps: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val raw = StreamingHarness.fileSource(spark, eventsPath)
-    val ev = raw.select(
-      col("user_id").cast("long").as("user_id"),
-      col("event_id").cast("long").as("event_id"),
-      col("event_type"),
-      graft.Tables.instantTs(raw.schema, "ts").as("ts")).as[Event]
+    val ev = StreamingHarness.eventSource(spark, eventsPath)
     StreamingHarness.runToMemorySink(
       spark, stepsReached(ev, steps).toDF(), "append", Nil, Seq(eventsPath))
   }

@@ -1,11 +1,16 @@
 package graft.streaming
 
+import java.nio.file.Paths
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Parquet
+import graft.pipeline.IngestHarness
 
 /** Shared scaffolding for running a streaming frame through the REAL
   * Structured-Streaming engine to a terminal, value-checkable result:
@@ -33,6 +38,19 @@ private[graft] object StreamingHarness {
     val reader = spark.readStream.schema(schema)
     if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
     else reader.parquet(path)
+  }
+
+  /** The events parquet at `path` as a streaming `Dataset[Event]`, `ts`
+    * read through [[graft.Tables.instantTs]] — the input of the stateful
+    * event streams. */
+  def eventSource(spark: SparkSession, path: String): Dataset[Event] = {
+    import spark.implicits._
+    val raw = fileSource(spark, path)
+    raw.select(
+      col("user_id").cast("long").as("user_id"),
+      col("event_id").cast("long").as("event_id"),
+      col("event_type"),
+      graft.Tables.instantTs(raw.schema, "ts").as("ts")).as[Event]
   }
 
   /** Run `df` (a streaming frame) to completion under
@@ -100,7 +118,7 @@ private[graft] object StreamingHarness {
     * starves state-operator parallelism (a 64 MiB budget runs the sf10
     * join on 6 partitions). It meters INPUT bytes, a proxy that
     * overweights input-heavy / state-light streams. */
-  val StatePartitionBytes: Long = 8L << 20
+  final val StatePartitionBytes = 8L << 20
 
   /** Scale-adaptive shuffle/state partition count for a terminal streaming
     * run: one partition per [[StatePartitionBytes]] of input, floored at 1
@@ -152,7 +170,7 @@ private[graft] object StreamingHarness {
         .start()
       catch {
         case e: Throwable =>
-          deleteRecursively(ckpt)
+          Try(IngestHarness.deleteRecursively(Paths.get(ckpt)))
           throw e
       }
     try {
@@ -164,22 +182,10 @@ private[graft] object StreamingHarness {
       // Runs on success AND failure: a failed stream must not leak its
       // memory-sink catalog entry (start() registers the view immediately)
       // or its checkpoint. Terminal run — the checkpoint has no future
-      // reader; best-effort deepest-first delete, walk stream closed
-      // (it holds open directory handles until closed).
+      // reader; the delete is best-effort.
       try spark.catalog.dropTempView(name)
       catch { case _: Exception => () }
-      deleteRecursively(ckpt)
+      Try(IngestHarness.deleteRecursively(Paths.get(ckpt)))
     }
   }
-
-  /** Best-effort deepest-first recursive delete; walk stream closed (it
-    * holds open directory handles until closed). */
-  private def deleteRecursively(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    } catch { case _: Exception => () }
 }

@@ -19,7 +19,10 @@ import graft.plans.GraftFunctions
   */
 object StreamingLeaders {
 
-  /** Per-group running top-k of (`ord`, `id`).
+  /** Leaders each group keeps. */
+  final val LeaderK = 3
+
+  /** Per-group running top-[[LeaderK]] of (`ord`, `id`).
     *
     * @return one row per (group, rank): `groupCol..., rnk, ord, id` —
     *         ranks re-emitted each trigger as leaders change
@@ -28,11 +31,10 @@ object StreamingLeaders {
       stream: DataFrame,
       groupCols: Seq[String],
       ord: Column,
-      id: Column,
-      k: Int): DataFrame =
+      id: Column): DataFrame =
     stream
       .groupBy(groupCols.map(col): _*)
-      .agg(GraftFunctions.topK(ord, id, k).as("__top"))
+      .agg(GraftFunctions.topK(ord, id, LeaderK).as("__top"))
       .select(groupCols.map(col) :+ posexplode(col("__top")): _*)
       .select(groupCols.map(col) ++ Seq(
         (col("pos") + 1).cast("long").as("rnk"),
@@ -56,10 +58,7 @@ object StreamingLeaders {
     *
     * EAGER like the q164/q174/q191/q195 twins: a terminal streaming
     * result has no lazy form. */
-  def topKLeadersFileStream(
-      spark: SparkSession,
-      eventsPath: String,
-      k: Int = 3): DataFrame = {
+  def topKLeadersFileStream(spark: SparkSession, eventsPath: String): DataFrame = {
     val raw = StreamingHarness.fileSource(spark, eventsPath)
     val ev = raw
       .select(col("event_type"),
@@ -68,7 +67,7 @@ object StreamingLeaders {
       .filter(col("value").isNotNull)
     StreamingHarness.runToMemorySink(
       spark,
-      topKLeaders(ev, Seq("event_type"), col("value"), col("event_id"), k),
+      topKLeaders(ev, Seq("event_type"), col("value"), col("event_id")),
       "complete", Nil, Seq(eventsPath))
   }
 }

@@ -43,11 +43,15 @@ object StreamingSessionize {
       n_events: Long,
       total_value: Double)
 
-  /** Close sessions after `gapMs` of inactivity (default 30 min, matching
-    * the batch q33 sessionizer). Works on a STREAMING Dataset[Event] with a
-    * watermark already applied to `ts`; emits each session exactly once,
-    * when it closes. */
-  def sessions(events: Dataset[Event], gapMs: Long = 30L * 60 * 1000): Dataset[Session] = {
+  /** Inactivity that closes a session: 30 min, matching the batch q33
+    * sessionizer. */
+  final val SessionGapMs = 30L * 60 * 1000
+
+  /** Close sessions after [[SessionGapMs]] of inactivity. Works on a
+    * STREAMING Dataset[Event] with a watermark already applied to `ts`;
+    * emits each session exactly once, when it closes. */
+  def sessions(events: Dataset[Event]): Dataset[Session] = {
+    val gapMs = SessionGapMs
     implicit val stateEnc = Encoders.product[SessionState]
     implicit val outEnc = Encoders.product[Session]
     events
@@ -121,21 +125,15 @@ object StreamingSessionize {
     * pinned by the q174 DuckDB oracle.
     *
     * EAGER like the q164 twin: a terminal streaming result has no lazy
-    * form. Default watermark delay 0: on a drained bounded stream a delay
-    * only widens the never-emitted tail, and late data is impossible once
-    * the source is exhausted. */
-  def sessionsFileStream(
-      spark: SparkSession,
-      eventsPath: String,
-      gapMs: Long = 30L * 60 * 1000,
-      watermarkDelay: String = "0 seconds"): DataFrame =
-    sessionsFileStream(spark, eventsPath, gapMs, watermarkDelay, Nil)
+    * form. Watermark delay 0: on a drained bounded stream a delay only
+    * widens the never-emitted tail, and late data is impossible once the
+    * source is exhausted. */
+  def sessionsFileStream(spark: SparkSession, eventsPath: String): DataFrame =
+    sessionsFileStream(spark, eventsPath, Nil)
 
   private def sessionsFileStream(
       spark: SparkSession,
       eventsPath: String,
-      gapMs: Long,
-      watermarkDelay: String,
       extraConfs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
     val raw = StreamingHarness.fileSource(spark, eventsPath)
@@ -143,9 +141,9 @@ object StreamingSessionize {
       .withColumn("ts", graft.Tables.instantTs(raw.schema, "ts"))
       .select(col("user_id").cast("long").as("user_id"), col("ts"),
         col("value").cast("double").as("value"))
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "0 seconds")
       .as[Event]
-    StreamingHarness.runToMemorySink(spark, sessions(ev, gapMs).toDF(), "append",
+    StreamingHarness.runToMemorySink(spark, sessions(ev).toDF(), "append",
       extraConfs, Seq(eventsPath))
   }
 
@@ -162,6 +160,5 @@ object StreamingSessionize {
     * hash-mismatch). Conf set/restore rides
     * [[StreamingHarness.runToMemorySink]]'s hook. */
   def sessionsFileStreamRocksDb(spark: SparkSession, eventsPath: String): DataFrame =
-    sessionsFileStream(spark, eventsPath, 30L * 60 * 1000, "0 seconds",
-      StreamingDedup.RocksDbConfs)
+    sessionsFileStream(spark, eventsPath, StreamingDedup.RocksDbConfs)
 }

@@ -24,10 +24,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingThrottle {
 
-  /** Admit the first `limit` events per key from a STREAMING
+  /** Events per key the streaming throttle admits. */
+  final val StreamQuota = 5
+  /** Events per key the batch audit ([[throttleBatch]]) keeps. */
+  final val AuditQuota = 20
+
+  /** Admit the first [[StreamQuota]] events per key from a STREAMING
     * Dataset[Event]; drop the rest. */
-  def throttled(events: Dataset[Event], limit: Int): Dataset[Event] = {
-    require(limit > 0, "throttle limit must be positive")
+  def throttled(events: Dataset[Event]): Dataset[Event] = {
     implicit val stateEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Event]
     events
@@ -36,23 +40,23 @@ object StreamingThrottle {
         (_: Long, batch: Iterator[Event], state: GroupState[Long]) => {
           val sorted = batch.toSeq.sortBy(e => (Event.micros(e.ts), e.event_id))
           var n = state.getOption.getOrElse(0L)
-          val out = sorted.take(math.max(0L, limit.toLong - n).toInt)
+          val out = sorted.take(math.max(0L, StreamQuota.toLong - n).toInt)
           n += sorted.size // count ALL seen, so quota can't re-open
           state.update(n)
           out.iterator
         })
   }
 
-  /** Batch twin: the first `limit` rows per key in (ts, event_id) order —
-    * exactly what [[throttled]] admits under event-time-ordered delivery.
+  /** Batch twin: the first [[AuditQuota]] rows per key in (ts, event_id)
+    * order; under event-time-ordered delivery [[throttled]] admits the
+    * first [[StreamQuota]] of them.
     * A row_number window per key; at scale this is the one genuinely
     * ordered per-key pass, same budget as `Sampling.budgetPerGroup`. */
-  def throttleBatch(events: DataFrame, limit: Int): DataFrame = {
-    require(limit > 0, "throttle limit must be positive")
+  def throttleBatch(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     events
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= limit)
+      .filter(col("__rn") <= AuditQuota)
       .drop("__rn")
   }
 
@@ -64,7 +68,7 @@ object StreamingThrottle {
     *
     * The count projection is what makes the gate row deterministic under
     * ANY file batching: the state counter counts every event seen, so the
-    * total admitted per user is min(limit, total events) whatever order
+    * total admitted per user is min(StreamQuota, total events) whatever order
     * batches deliver them in — only WHICH events are admitted varies, and
     * that set is pinned (as exactly the batch twin's `throttleBatch`
     * prefix) by StreamingSpec's MemoryStream test, where batch boundaries
@@ -73,19 +77,10 @@ object StreamingThrottle {
     *
     * EAGER like the q164/q174/q191/q195 twins: a terminal streaming
     * result has no lazy form. */
-  def throttledFileStream(
-      spark: SparkSession,
-      eventsPath: String,
-      limit: Int = 5): DataFrame = {
-    import spark.implicits._
-    val raw = StreamingHarness.fileSource(spark, eventsPath)
-    val ev = raw.select(
-      col("user_id").cast("long").as("user_id"),
-      col("event_id").cast("long").as("event_id"),
-      col("event_type"),
-      graft.Tables.instantTs(raw.schema, "ts").as("ts")).as[Event]
+  def throttledFileStream(spark: SparkSession, eventsPath: String): DataFrame = {
+    val ev = StreamingHarness.eventSource(spark, eventsPath)
     StreamingHarness
-      .runToMemorySink(spark, throttled(ev, limit).toDF(), "append", Nil, Seq(eventsPath))
+      .runToMemorySink(spark, throttled(ev).toDF(), "append", Nil, Seq(eventsPath))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_admitted"))
   }

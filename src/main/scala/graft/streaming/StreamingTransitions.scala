@@ -75,13 +75,7 @@ object StreamingTransitions {
     * EAGER like the q164/q174/q191/q195 twins: a terminal streaming
     * result has no lazy form. */
   def edgesFileStream(spark: SparkSession, eventsPath: String): DataFrame = {
-    import spark.implicits._
-    val raw = StreamingHarness.fileSource(spark, eventsPath)
-    val ev = raw.select(
-      col("user_id").cast("long").as("user_id"),
-      col("event_id").cast("long").as("event_id"),
-      col("event_type"),
-      graft.Tables.instantTs(raw.schema, "ts").as("ts")).as[Event]
+    val ev = StreamingHarness.eventSource(spark, eventsPath)
     StreamingHarness
       .runToMemorySink(spark, edges(ev).toDF(), "append", Nil, Seq(eventsPath))
       .groupBy(col("from_type"), col("to_type"))

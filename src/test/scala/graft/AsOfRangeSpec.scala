@@ -59,7 +59,7 @@ class AsOfRangeSpec extends SparkSpec {
       (5L, "u2", ts("2024-01-01 10:15:00"), 16.0) // other key: never counted for u1
     ).toDF("id", "user", "t", "v")
     val out = Rollup
-      .forwardRangeAgg(rows, "user", "t", "v", horizonSec = 3600L)
+      .forwardRangeAgg(rows, "user", "t", "v")
       .orderBy("id")
       .collect()
     val got = out.map(r => (r.getAs[Long]("id"), r.getAs[Long]("n_next"), r.getAs[Double]("sum_next")))
@@ -93,11 +93,12 @@ class AsOfRangeSpec extends SparkSpec {
   test("stratifiedHashSample applies per-stratum rates") {
     val df = (0L until 3000L).map(i => (i, if (i % 3 == 0) "big" else "small")).toDF("id", "s")
     val out = Sampling
-      .stratifiedHashSample(df, "id", "s", Map("big" -> 0.9), default = 0.1, salt = 3L)
+      .stratifiedHashSample(df, "id", "s", Map("big" -> 0.1))
       .groupBy("s").count().collect()
       .map(r => r.getAs[String]("s") -> r.getAs[Long]("count")).toMap
-    assert(out("big") > 800 && out("big") <= 1000, s"big: ${out("big")}")
-    assert(out("small") < 300, s"small: ${out("small")}")
+    // big at its mapped 0.1 of 1000, small at the default 0.6 of 2000
+    assert(out("big") < 150, s"big: ${out("big")}")
+    assert(out("small") > 1050 && out("small") < 1350, s"small: ${out("small")}")
   }
 
   test("stratified sampling decisions agree with the scalar hash formula") {
@@ -124,7 +125,7 @@ class AsOfRangeSpec extends SparkSpec {
       col("doc_id"),
       TextFunctions.dupTokenFraction(toks).as("dup"),
       TextFunctions.topTokenFraction(toks).as("top"),
-      TextFunctions.dupShingleFraction(toks, 2).as("big")
+      TextFunctions.dupShingleFraction(toks).as("big")
     ).orderBy("doc_id").collect()
     assert(out(0).getDouble(1) == 0.5) // (4-2)/4
     assert(out(0).getDouble(2) == 0.75) // 3/4

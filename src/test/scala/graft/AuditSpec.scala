@@ -49,18 +49,18 @@ class AuditSpec extends SparkSpec {
   }
 
   test("kAnonymity: group sizes, risk share, null QI forms its own group") {
-    // groups: (n1,s1)x5, (n1,s2)x2, (n2,s1)x1, (NULL,s1)x2 → k-anonymity 1,
-    // violating (<3): 3 groups, 5 rows at risk of 10
-    val rows = Seq.fill(5)((Option(1), "s1")) ++ Seq.fill(2)((Option(1), "s2")) ++
+    // groups: (n1,s1)x15, (n1,s2)x2, (n2,s1)x1, (NULL,s1)x2 → k-anonymity 1,
+    // violating (<10): 3 groups, 5 rows at risk of 20
+    val rows = Seq.fill(15)((Option(1), "s1")) ++ Seq.fill(2)((Option(1), "s2")) ++
       Seq((Option(2), "s1")) ++ Seq.fill(2)((Option.empty[Int], "s1"))
     val df = rows.toDF("nat", "seg")
-    val r = graft.operators.Audit.kAnonymity(df, Seq("nat", "seg"), k = 3).collect().head
-    assert(r.getAs[Long]("n_rows") == 10L)
+    val r = graft.operators.Audit.kAnonymity(df, Seq("nat", "seg")).collect().head
+    assert(r.getAs[Long]("n_rows") == 20L)
     assert(r.getAs[Long]("n_groups") == 4L)
     assert(r.getAs[Long]("k_anonymity") == 1L)
     assert(r.getAs[Long]("n_violating_groups") == 3L)
     assert(r.getAs[Long]("n_rows_at_risk") == 5L)
-    assert(r.getAs[Long]("risk_ppm") == 500000L)
+    assert(r.getAs[Long]("risk_ppm") == 250000L)
   }
 
   test("valueReconciliation: exact integer-unit deltas, no-child parents, decimal schema") {
@@ -89,7 +89,7 @@ class AuditSpec extends SparkSpec {
       (2, "s1", Option("a")), (2, "s1", Option("a")),
       (3, "s1", Option("a")), (3, "s1", Option.empty[String]))
     val r = graft.operators.Audit.lDiversity(
-      rows.toDF("nat", "seg", "sens"), Seq("nat", "seg"), "sens", l = 2).collect().head
+      rows.toDF("nat", "seg", "sens"), Seq("nat", "seg"), "sens").collect().head
     assert(r.getAs[Long]("n_rows") == 7L)
     assert(r.getAs[Long]("n_groups") == 3L)
     assert(r.getAs[Long]("l_diversity") == 1L)
@@ -97,17 +97,14 @@ class AuditSpec extends SparkSpec {
     assert(r.getAs[Long]("n_rows_at_risk") == 2L)
     intercept[IllegalArgumentException] {
       graft.operators.Audit.lDiversity(
-        rows.toDF("nat", "seg", "sens"), Seq("nat", "sens"), "sens", l = 2)
+        rows.toDF("nat", "seg", "sens"), Seq("nat", "sens"), "sens")
     }
   }
 
   test("kAnonymity validates inputs") {
     val df = Seq((1, "a")).toDF("x", "y")
     intercept[IllegalArgumentException] {
-      graft.operators.Audit.kAnonymity(df, Seq("x"), k = 1)
-    }
-    intercept[IllegalArgumentException] {
-      graft.operators.Audit.kAnonymity(df, Nil, k = 2)
+      graft.operators.Audit.kAnonymity(df, Nil)
     }
   }
 }

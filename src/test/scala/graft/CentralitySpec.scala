@@ -23,7 +23,7 @@ class CentralitySpec extends SparkSpec {
 
   private def run(pairs: Seq[(Long, Long)], parts: Int = 1): Map[Long, Long] =
     Centrality.pageRank(
-      pairs.toDF("a", "b").repartition(parts), "a", "b", iterations = 5)
+      pairs.toDF("a", "b").repartition(parts), "a", "b")
       .as[(Long, Long)].collect().toMap
 
   test("star graph: hub dominates, leaves tie, values match the replay exactly") {
@@ -41,13 +41,6 @@ class CentralitySpec extends SparkSpec {
     assert(one == replay(g, 5))
     assert(run(g, parts = 7) == one) // integer sums are order-independent
     assert(one(2L) > one(3L) && one(3L) > one(4L))
-  }
-
-  test("iteration count validation") {
-    val e = Seq((0L, 1L)).toDF("a", "b")
-    intercept[IllegalArgumentException] {
-      Centrality.pageRank(e, "a", "b", iterations = 0)
-    }
   }
 
   private def triangles(pairs: Seq[(Long, Long)]): Map[Long, Long] =
@@ -76,13 +69,21 @@ class CentralitySpec extends SparkSpec {
     assert(triangles(tail) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
-  private def kcore(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] =
-    Centrality.kCore(pairs.toDF("a", "b"), "a", "b", k)
+  /** Distinct a < b pairs without self-loops: kCore's input contract. */
+  private def canonical(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    pairs.map { case (a, b) => (a min b, a max b) }.filter(p => p._1 != p._2).distinct
+
+  private def kcore(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    Centrality.kCore(canonical(pairs).toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toMap
+
+  /** Nodes 0 until n, each adjacent to every node within `reach` of it. */
+  private def band(n: Int, reach: Int): Seq[(Long, Long)] =
+    for (i <- 0 until n; j <- i + 1 to math.min(n - 1, i + reach)) yield (i.toLong, j.toLong)
 
   /** Driver-side peel replay to the fixpoint. */
   private def bruteKCore(pairs: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
-    var es = pairs.map { case (a, b) => (a min b, a max b) }.filter(p => p._1 != p._2).distinct
+    var es = canonical(pairs)
     var changed = true
     while (changed) {
       val deg = (es ++ es.map(_.swap)).groupBy(_._1).map { case (n, xs) => n -> xs.size }
@@ -93,26 +94,28 @@ class CentralitySpec extends SparkSpec {
     (es ++ es.map(_.swap)).groupBy(_._1).map { case (n, xs) => n -> xs.size.toLong }
   }
 
-  test("kCore: cycle survives, tails and paths peel, K5 is its own 4-core") {
-    // cycle 1-2-3-4 with tail 4-5-6: the 2-core is exactly the cycle
-    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L), (5L, 6L))
-    assert(kcore(g, 2) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 2L))
-    // pure path: 2-core empty (cascading peel, one end per round)
+  test("kCore: a clique survives, tails and paths peel, K31 is its own 30-core") {
+    val k31 = band(31, 30)
+    // K31 on 0..30 with a tail 30-31-32: the 30-core is exactly the clique
+    val g = k31 ++ Seq((30L, 31L), (31L, 32L))
+    assert(kcore(g) == (0L to 30L).map(_ -> 30L).toMap)
+    assert(kcore(k31) == kcore(g))
+    // pure path: 30-core empty
     val path = (1L to 8L).sliding(2).map(s => (s(0), s(1))).toSeq
-    assert(kcore(path, 2) == Map.empty[Long, Long])
-    val k5 = for (i <- 0L to 4L; j <- (i + 1) to 4L) yield (i, j)
-    assert(kcore(k5, 4) == (0L to 4L).map(_ -> 4L).toMap)
+    assert(kcore(path) == Map.empty[Long, Long])
   }
 
   test("kCore matches the driver replay on random graphs and fails loudly past maxIter") {
     val rng = new scala.util.Random(11)
-    val pairs = (1 to 150).map(_ => (rng.nextInt(25).toLong, rng.nextInt(25).toLong))
-    for (k <- Seq(2, 4, 6))
-      assert(kcore(pairs, k) == bruteKCore(pairs, k), s"mismatch at k=$k")
-    // a 66-node path peels one node off each end per round: 33 rounds
-    // exceed the 30-round budget, which must throw, not return
-    val path = (1L to 66L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val e = intercept[IllegalStateException] { kcore(path, 2) }
+    // 45 nodes, 1700 raw pairs: a 30-core that peels two nodes
+    val pairs = (1 to 1700).map(_ => (rng.nextInt(45).toLong, rng.nextInt(45).toLong))
+    val want = bruteKCore(pairs, Centrality.CoreK)
+    assert(want.nonEmpty && want.size < 45, s"degenerate fixture: core of ${want.size}")
+    assert(kcore(pairs) == want)
+    // 100 nodes, each adjacent to the 29 on either side: every round peels
+    // one node off each end, and the 37 rounds this takes exceed the
+    // 30-round budget, which must throw, not return
+    val e = intercept[IllegalStateException] { kcore(band(100, 29)) }
     assert(e.getMessage.contains("fixpoint"))
   }
 
@@ -120,7 +123,7 @@ class CentralitySpec extends SparkSpec {
     val e = Seq(("a", "b")).toDF("x", "y")
     val t = intercept[IllegalArgumentException] { Centrality.triangleCounts(e, "x", "y") }
     assert(t.getMessage.contains("integral"))
-    val k = intercept[IllegalArgumentException] { Centrality.kCore(e, "x", "y", 2) }
+    val k = intercept[IllegalArgumentException] { Centrality.kCore(e, "x", "y") }
     assert(k.getMessage.contains("integral"))
   }
 

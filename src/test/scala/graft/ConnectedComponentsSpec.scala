@@ -92,8 +92,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     r.shuffle((base ++ bridges).map(orient) ++ dups ++ selfs)
   }
 
-  private def driver(df: DataFrame) = ConnectedComponents.components(df, "a", "b", 32, Long.MaxValue)
-  private def distributed(df: DataFrame) = ConnectedComponents.components(df, "a", "b", 32, -1L)
+  private def driver(df: DataFrame) = ConnectedComponents.components(df, "a", "b", Long.MaxValue)
+  private def distributed(df: DataFrame) = ConnectedComponents.components(df, "a", "b", -1L)
 
   test("driver union-find and the distributed loop agree on random graphs (seeded)") {
     for (seed <- 1L to 4L) {

@@ -24,7 +24,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngram jaccard pairs rank near-duplicates high") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, minShared = 2)
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard")))
     val dupPair = pairs.find(p => p._1 == 0L && p._2 == 1L)
     assert(dupPair.exists(_._3 == 1.0)) // identical docs → jaccard 1
@@ -84,14 +84,14 @@ class DedupSpec extends SparkSpec {
     // healthy: distinct texts, tiny buckets — well under 4 pairs/entry
     val ok = Seq.tabulate(12)(i => (i.toLong, s"alpha$i beta$i gamma$i delta$i"))
       .toDF("id", "text")
-    assert(Dedup.prefixFilterJaccardJoin(ok, "id", "text", 7, 10,
+    assert(Dedup.prefixFilterJaccardJoin(ok, "id", "text", 7,
       maxPairsPerEntry = 4L).count() == 0L)
     // hot: every doc shares the same rare tokens — one bucket holds all 12
     // docs, mass 12*11/2 = 66 over ~24 entries > 2 pairs/entry
     val hot = Seq.tabulate(12)(i => (i.toLong, "alpha beta gamma delta"))
       .toDF("id", "text")
     val e = intercept[Exception] {
-      Dedup.prefixFilterJaccardJoin(hot, "id", "text", 7, 10,
+      Dedup.prefixFilterJaccardJoin(hot, "id", "text", 7,
         maxPairsPerEntry = 2L).count()
     }
     assert(e.getMessage.contains("exceed the cap"), e.getMessage)
@@ -126,7 +126,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signatures are identical for identical texts, close for near-dups") {
-    val sig = docs.select(col("doc_id"), Dedup.minHashSignature(col("text"), 3, 64).as("sig"))
+    val sig = docs.select(col("doc_id"), Dedup.minHashSignature(col("text")).as("sig"))
     val est = sig.as("a").join(sig.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(
         col("a.doc_id").as("da"), col("b.doc_id").as("db"),
@@ -149,7 +149,7 @@ class DedupSpec extends SparkSpec {
       (15L, "unrelated new material regarding streaming watermarks and state") // dup WITHIN incoming
     ).toDF("doc_id", "text")
     val pairs = Dedup
-      .minHashLshPairsAgainst(incoming, reference, "doc_id", "text", k = 3, numHashes = 16, rowsPerBand = 2)
+      .minHashLshPairsAgainst(incoming, reference, "doc_id", "text")
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((11L, 0L)))
     // intra-incoming duplicates are NOT this operator's job
@@ -199,10 +199,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH banding surfaces duplicate and near-duplicate candidates") {
-    // rowsPerBand=2 → 32 bands: collision prob ≈ 1-(1-j²)³² ≈ 0.996 at
-    // j=0.4, so the near-dup pair is found with near-certainty while the
-    // j≈0 unrelated pair stays out.
-    val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text", k = 3, numHashes = 64, rowsPerBand = 2)
+    // 2 rows per band → 8 bands: collision prob ≈ 1-(1-j²)⁸ ≈ 0.95 at
+    // j=5/9 (the 3-shingle Jaccard of docs 0 and 3), so the near-dup pair
+    // is found with near-certainty while the j≈0 unrelated pair stays out.
+    val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(pairs.contains((0L, 3L)))
@@ -228,7 +228,7 @@ class DedupSpec extends SparkSpec {
       (3L, "short doc") // < 5 tokens → no shingles → clean
     ).toDF("doc_id", "text")
     val out = Dedup
-      .contaminationFlags(corpus, evalSet, "doc_id", "text", k = 5, minShared = 1)
+      .contaminationFlags(corpus, evalSet, "doc_id", "text")
       .orderBy("doc_id")
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_overlap"), r.getAs[Boolean]("contaminated")))
@@ -283,10 +283,10 @@ class DedupSpec extends SparkSpec {
   private val NoTripCap = 1L << 20
 
   private def runPrefixJoin(
-      rows: Seq[(Long, String)], tauNum: Int, tauDen: Int,
+      rows: Seq[(Long, String)], tauNum: Int,
       k: Int = 1): Set[(Long, Long, Long, Long)] =
     Dedup.prefixFilterJaccardJoin(
-        rows.toDF("doc_id", "text"), "doc_id", "text", tauNum, tauDen,
+        rows.toDF("doc_id", "text"), "doc_id", "text", tauNum,
         maxPairsPerEntry = NoTripCap, shingleK = k)
       .select("doc_a", "doc_b", "n_inter", "n_union")
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -304,7 +304,7 @@ class DedupSpec extends SparkSpec {
       (5L, "   "),                         // empty after trim → matches nothing
       (6L, "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10") // disjoint from everything
     )
-    val got = runPrefixJoin(fixture, 7, 10)
+    val got = runPrefixJoin(fixture, 7)
     assert(got == bruteJaccard(fixture, 7, 10))
     assert(got.contains((0L, 1L, 7L, 10L))) // the boundary pair survived
     assert(got.contains((3L, 4L, 1L, 1L)))
@@ -318,17 +318,17 @@ class DedupSpec extends SparkSpec {
       val n = 1 + rng.nextInt(12)
       id -> Seq.fill(n)(vocab(rng.nextInt(vocab.size))).mkString(" ")
     }
-    for ((tn, td) <- Seq((1, 2), (3, 5), (9, 10), (1, 1)))
-      assert(runPrefixJoin(rows, tn, td) == bruteJaccard(rows, tn, td),
-        s"mismatch at tau=$tn/$td")
+    for (tn <- Seq(5, 6, 9, 10))
+      assert(runPrefixJoin(rows, tn) == bruteJaccard(rows, tn, Dedup.TauDen),
+        s"mismatch at tau=$tn/${Dedup.TauDen}")
     // shingle mode: sequence-sensitive sets, docs shorter than k drop out
-    for ((tn, td) <- Seq((1, 2), (7, 10)))
-      assert(runPrefixJoin(rows, tn, td, k = 3) == bruteJaccard(rows, tn, td, k = 3),
-        s"shingle mismatch at tau=$tn/$td")
+    for (tn <- Seq(5, 7))
+      assert(runPrefixJoin(rows, tn, k = 3) == bruteJaccard(rows, tn, Dedup.TauDen, k = 3),
+        s"shingle mismatch at tau=$tn/${Dedup.TauDen}")
   }
 
   test("prefixFilterJaccardJoin blowup guard: trips on boilerplate, silent in-bound") {
-    // Pathological corpus: every doc is the SAME text, so with tau=1/2 the
+    // Pathological corpus: every doc is the SAME text, so with tau=5/10 the
     // rarest prefix tokens are shared by all 40 docs — same-prefix pair
     // mass goes quadratic (the failure mode the guard exists for).
     // 40 docs × 4-token prefix ⇒ Σ n(n−1)/2 = 4·780 = 3120 pairs over 160
@@ -336,7 +336,7 @@ class DedupSpec extends SparkSpec {
     val boiler = (0L until 40L).map(id => (id, "the same boilerplate text every doc"))
     val e = intercept[Exception] {
       Dedup.prefixFilterJaccardJoin(
-          boiler.toDF("doc_id", "text"), "doc_id", "text", 1, 2,
+          boiler.toDF("doc_id", "text"), "doc_id", "text", 5,
           maxPairsPerEntry = 4L)
         .count()
     }
@@ -353,18 +353,18 @@ class DedupSpec extends SparkSpec {
       id -> Seq.fill(1 + rng.nextInt(12))(vocab(rng.nextInt(vocab.size))).mkString(" ")
     }
     val guarded = Dedup.prefixFilterJaccardJoin(
-        rows.toDF("doc_id", "text"), "doc_id", "text", 3, 5,
+        rows.toDF("doc_id", "text"), "doc_id", "text", 6,
         maxPairsPerEntry = NoTripCap)
       .select("doc_a", "doc_b", "n_inter", "n_union")
       .as[(Long, Long, Long, Long)].collect().toSet
-    assert(guarded == bruteJaccard(rows, 3, 5))
+    assert(guarded == bruteJaccard(rows, 6, Dedup.TauDen))
   }
 
   test("prefixFilterJaccardJoin rejects a non-positive maxPairsPerEntry, naming it") {
     val docs = Seq((0L, "a b c"), (1L, "a b c")).toDF("doc_id", "text")
     for (cap <- Seq(0L, -1L)) {
       val e = intercept[IllegalArgumentException] {
-        Dedup.prefixFilterJaccardJoin(docs, "doc_id", "text", 7, 10, maxPairsPerEntry = cap)
+        Dedup.prefixFilterJaccardJoin(docs, "doc_id", "text", 7, maxPairsPerEntry = cap)
       }
       assert(e.getMessage.contains(s"maxPairsPerEntry must be > 0, got $cap"), e.getMessage)
     }
@@ -372,7 +372,7 @@ class DedupSpec extends SparkSpec {
 
   test("dropDuplicatedLines: cross-doc lines drop, within-doc repeats and unique lines survive") {
     val docs = Seq(
-      // "banner" appears in docs 1,2,3 (>= minDocs=3) -> removed everywhere
+      // "banner" appears in docs 1,2,3,6,8 (>= 5 docs) -> removed everywhere
       (1L, "banner\nalpha one\nbanner"), // repeated WITHIN doc 1 too
       (2L, "banner\nbeta two"),
       (3L, "banner\ngamma three"),
@@ -384,9 +384,10 @@ class DedupSpec extends SparkSpec {
       // every line boilerplate -> cleaned_text must be ""
       (6L, "banner"),
       // ALL lines blank -> still one output row, (0, 0, "")
-      (7L, "\n  \n")).toDF("doc_id", "text")
-    // doc 6 makes "banner" 4 distinct docs; threshold 3
-    val got = Dedup.dropDuplicatedLines(docs, "doc_id", "text", minDocs = 3L)
+      (7L, "\n  \n"),
+      (8L, "banner")).toDF("doc_id", "text")
+    // docs 6 and 8 make "banner" 5 distinct docs, the boilerplate threshold
+    val got = Dedup.dropDuplicatedLines(docs, "doc_id", "text")
       .orderBy("doc_id")
       .as[(Long, Long, Long, String)].collect().toSeq
     assert(got == Seq(
@@ -396,7 +397,8 @@ class DedupSpec extends SparkSpec {
       (4L, 3L, 0L, "echo\necho\ndelta four"),
       (5L, 1L, 0L, "zeta five"),
       (6L, 1L, 1L, ""),
-      (7L, 0L, 0L, "")))
+      (7L, 0L, 0L, ""),
+      (8L, 1L, 1L, "")))
   }
 
   test("dropDuplicatedLines preserves original line order in reassembly") {
@@ -405,7 +407,7 @@ class DedupSpec extends SparkSpec {
     val docs = (0L until 12L).map { i =>
       (i, s"z$i first\nx\na$i middle\nx\nm$i last")
     }.toDF("doc_id", "text")
-    val got = Dedup.dropDuplicatedLines(docs, "doc_id", "text", minDocs = 10L)
+    val got = Dedup.dropDuplicatedLines(docs, "doc_id", "text")
       .orderBy("doc_id")
       .as[(Long, Long, Long, String)].collect()
     assert(got.forall { case (i, n, r, t) =>

@@ -8,49 +8,53 @@ class DriftSpec extends SparkSpec {
 
   private def df(grp: String, vs: Seq[Double]) = vs.map((grp, _)).toDF("g", "v")
 
+  /** `vs` in units of one ksDrift bin: v lands in bin ⌊v⌋. */
+  private val binWidth = (Diagnostics.KsHi - Diagnostics.KsLo) / Diagnostics.KsBins
+  private def binned(grp: String, vs: Seq[Double]) = df(grp, vs.map(_ * binWidth))
+
   test("ksDrift is zero for identical samples and maximal for disjoint ones") {
-    val a = df("g", Seq(1.0, 2.0, 3.0, 7.0))
-    val same = Diagnostics.ksDrift(a, a, Seq("g"), col("v"), bins = 8, lo = 0.0, hi = 8.0)
+    val a = binned("g", Seq(1.0, 2.0, 3.0, 7.0))
+    val same = Diagnostics.ksDrift(a, a, Seq("g"), col("v"))
       .select("n_a", "n_b", "ks_stat").as[(Long, Long, Double)].head()
     assert(same == ((4L, 4L, 0.0)))
 
     // A entirely in low bins, B entirely in high bins → sup |cdfA - cdfB| = 1
     val apart = Diagnostics.ksDrift(
-        df("g", Seq(0.5, 1.5)), df("g", Seq(6.5, 7.5)),
-        Seq("g"), col("v"), bins = 8, lo = 0.0, hi = 8.0)
+        binned("g", Seq(0.5, 1.5)), binned("g", Seq(6.5, 7.5)),
+        Seq("g"), col("v"))
       .select("ks_stat").as[Double].head()
     assert(apart == 1.0)
   }
 
   test("ksDrift numerator is the exact cross-multiplied CDF gap") {
-    // bins of width 1 over [0,4): A = {0,1,2}, B = {0,3,3}
+    // bins 0..3: A = {0,1,2}, B = {0,3,3}
     // cum A = 1,2,3,3 ; cum B = 1,1,1,3 ; nA=3 nB=3
     // |cumA*nB - cumB*nA| per bin = 0,3,6,0 → ks_num 6, ks = 6/9
     val out = Diagnostics.ksDrift(
-        df("g", Seq(0.5, 1.5, 2.5)), df("g", Seq(0.5, 3.5, 3.5)),
-        Seq("g"), col("v"), bins = 4, lo = 0.0, hi = 4.0)
+        binned("g", Seq(0.5, 1.5, 2.5)), binned("g", Seq(0.5, 3.5, 3.5)),
+        Seq("g"), col("v"))
       .select("ks_num", "ks_stat").as[(java.math.BigDecimal, Double)].head()
     assert(out._1.longValueExact == 6L)
     assert(out._2 == 6.0 / 9.0)
   }
 
   test("ksDrift drops one-sided groups and is independent of partition layout") {
-    val a = df("both", Seq(1.0, 2.0)).union(df("onlyA", Seq(3.0)))
-    val b = df("both", Seq(5.0, 6.0))
-    val out = Diagnostics.ksDrift(a, b, Seq("g"), col("v"), bins = 8, lo = 0.0, hi = 8.0)
+    val a = binned("both", Seq(1.0, 2.0)).union(binned("onlyA", Seq(3.0)))
+    val b = binned("both", Seq(5.0, 6.0))
+    val out = Diagnostics.ksDrift(a, b, Seq("g"), col("v"))
     assert(out.select("g").as[String].collect().toSeq == Seq("both"))
 
     val re = Diagnostics.ksDrift(
       a.repartition(7, col("v")), b.repartition(3, col("v")),
-      Seq("g"), col("v"), bins = 8, lo = 0.0, hi = 8.0)
+      Seq("g"), col("v"))
     assert(re.collect().toSeq == out.collect().toSeq)
   }
 
   test("ksDrift clamps out-of-range values into the edge bins") {
     // -5 clamps to bin 0, 99 clamps to the top bin: both still counted
     val out = Diagnostics.ksDrift(
-        df("g", Seq(-5.0, 99.0)), df("g", Seq(0.5, 7.9)),
-        Seq("g"), col("v"), bins = 8, lo = 0.0, hi = 8.0)
+        binned("g", Seq(-5.0, 99.0)), binned("g", Seq(0.5, 7.9)),
+        Seq("g"), col("v"))
       .select("n_a", "n_b").as[(Long, Long)].head()
     assert(out == ((2L, 2L)))
   }
@@ -65,7 +69,7 @@ class DriftSpec extends SparkSpec {
     val d = events(
       ((1 to 9).map(i => ("spiky", i, 1)) :+ (("spiky", 10, 5))) ++
         (1 to 4).map(i => ("flat", i, 3)))
-    val out = Diagnostics.countAnomalies(d, Seq("g"), col("b"), z = 2)
+    val out = Diagnostics.countAnomalies(d, Seq("g"), col("b"))
     val spiky = out.filter(col("g") === "spiky" && col("is_anomalous"))
       .select("bucket", "n_rows").as[(Int, Long)].collect().toSeq
     assert(spiky == Seq((10, 5L)))
@@ -78,32 +82,33 @@ class DriftSpec extends SparkSpec {
     // exact integer arithmetic keeps the strict > stable where a
     // stddev-double comparison would flip on rounding.
     val d = events((1 to 4).map(i => ("g", i, 1)) :+ (("g", 5, 42)))
-    assert(Diagnostics.countAnomalies(d, Seq("g"), col("b"), z = 2)
+    assert(Diagnostics.countAnomalies(d, Seq("g"), col("b"))
       .filter(col("is_anomalous")).count() == 0)
   }
 
   test("countAnomalies verdicts are partition-layout independent") {
     val d = events(
       (1 to 9).map(i => ("spiky", i, 1)) :+ (("spiky", 10, 5)))
-    val a = Diagnostics.countAnomalies(d, Seq("g"), col("b"), z = 2)
+    val a = Diagnostics.countAnomalies(d, Seq("g"), col("b"))
       .orderBy("bucket").collect().toSeq
-    val b = Diagnostics.countAnomalies(d.repartition(7, col("b")), Seq("g"), col("b"), z = 2)
+    val b = Diagnostics.countAnomalies(d.repartition(7, col("b")), Seq("g"), col("b"))
       .orderBy("bucket").collect().toSeq
     assert(a == b)
   }
 
   test("slidingAnomalies: local baseline flags what a global test misses, NULL under-baseline") {
     // A level shift: 8 buckets of 2, then 8 buckets of 10, then one 30.
-    // Global μ≈7.2 makes the whole second level "high"; the trailing-4
+    // Global μ≈7.2 makes the whole second level "high"; the trailing-7
     // baseline flags ONLY the step day, the spike day — and not the
     // steady plateau after the step.
     val d = events(
       (1 to 8).map(i => ("g", i, 2)) ++ (9 to 16).map(i => ("g", i, 10)) :+ (("g", 17, 30)))
-    val out = Diagnostics.slidingAnomalies(d, Seq("g"), col("b"), window = 4, z = 2)
+    val out = Diagnostics.slidingAnomalies(d, Seq("g"), col("b"))
       .select("bucket", "n_rows", "baseline_n", "is_anomalous")
       .as[(Int, Long, Long, Option[Boolean])].collect().sortBy(_._1).toSeq
-    // first 4 buckets: no full baseline -> NULL verdict
-    assert(out.take(4).forall(r => r._4.isEmpty && r._3 < 4))
+    // first 7 buckets: no full baseline -> NULL verdict
+    val w = Diagnostics.BaselineWindow
+    assert(out.take(w).forall(r => r._4.isEmpty && r._3 < w))
     val flagged = out.collect { case (b, _, _, Some(true)) => b }
     assert(flagged.contains(9) && flagged.contains(17)) // step + spike
     assert(!flagged.exists(b => b >= 13 && b <= 16))    // plateau is clean
@@ -111,10 +116,10 @@ class DriftSpec extends SparkSpec {
 
   test("slidingAnomalies verdicts are partition-layout independent") {
     val d = events((1 to 12).map(i => ("g", i, if (i == 11) 9 else i % 3 + 1)))
-    val a = Diagnostics.slidingAnomalies(d, Seq("g"), col("b"), window = 5, z = 2)
+    val a = Diagnostics.slidingAnomalies(d, Seq("g"), col("b"))
       .orderBy("bucket").collect().toSeq
     val b = Diagnostics.slidingAnomalies(
-        d.repartition(7, col("b")), Seq("g"), col("b"), window = 5, z = 2)
+        d.repartition(7, col("b")), Seq("g"), col("b"))
       .orderBy("bucket").collect().toSeq
     assert(a == b)
   }
@@ -149,7 +154,7 @@ class DriftSpec extends SparkSpec {
       ("v", t("2024-01-01 00:00:00"), 5L, "x") // lone first event: on time
     ).toDF("user_id", "ts", "arr", "event_type")
     val r = Diagnostics.latenessAudit(d, "user_id", "ts",
-        Seq(col("arr")), Seq("event_type"), lateThresholdUs = 1800000000L)
+        Seq(col("arr")), Seq("event_type"))
       .collect().head
     assert(r.getAs[Long]("n_events") == 5L)
     assert(r.getAs[Long]("n_out_of_order") == 2L)
@@ -159,19 +164,20 @@ class DriftSpec extends SparkSpec {
   }
 
   test("topContributorShare: bounded top-k election, tie-break, integral-id guard") {
-    // group g: contributors 1x5, 2x3, 3x3, 4x1 -> top-2 = {1, 2} (tie 2/3
-    // at 3 breaks toward the SMALLER id) -> 8 of 12 rows = 666666 ppm
-    val rows = Seq.fill(5)(("g", 1L)) ++ Seq.fill(3)(("g", 2L)) ++
-      Seq.fill(3)(("g", 3L)) :+ (("g", 4L))
+    // group g: contributors 1..9 x5, 10x3, 11x3, 12x1 -> top-10 = {1..10}
+    // (tie 10/11 at 3 breaks toward the SMALLER id) -> 48 of 52 rows =
+    // 923076 ppm
+    val rows = (1L to 9L).flatMap(id => Seq.fill(5)(("g", id))) ++ Seq.fill(3)(("g", 10L)) ++
+      Seq.fill(3)(("g", 11L)) :+ (("g", 12L))
     val r = Diagnostics.topContributorShare(rows.toDF("grp", "uid"),
-      Seq("grp"), "uid", k = 2).collect().head
-    assert(r.getAs[Long]("n_rows") == 12L)
-    assert(r.getAs[Long]("n_contributors") == 4L)
-    assert(r.getAs[Long]("topk_rows") == 8L)
-    assert(r.getAs[Long]("topk_share_ppm") == 666666L)
+      Seq("grp"), "uid").collect().head
+    assert(r.getAs[Long]("n_rows") == 52L)
+    assert(r.getAs[Long]("n_contributors") == 12L)
+    assert(r.getAs[Long]("topk_rows") == 48L)
+    assert(r.getAs[Long]("topk_share_ppm") == 923076L)
     intercept[IllegalArgumentException] {
       Diagnostics.topContributorShare(
-        Seq(("g", "s")).toDF("grp", "uid"), Seq("grp"), "uid", k = 2)
+        Seq(("g", "s")).toDF("grp", "uid"), Seq("grp"), "uid")
     }
   }
 
@@ -204,7 +210,7 @@ class DriftSpec extends SparkSpec {
     // y = 2x (corr +1), z = -x + 4 (corr -1); x = 1,2,3 in 0.01 units
     val df = Seq((0.01, 0.02, 0.03), (0.02, 0.04, 0.02), (0.03, 0.06, 0.01))
       .toDF("x", "y", "z")
-    val got = Diagnostics.correlationMatrix(df, Seq("x", "y", "z"), scale = 100L)
+    val got = Diagnostics.correlationMatrix(df, Seq("x", "y", "z"))
       .collect()
       .map(r => ((r.getString(0), r.getString(1)),
         (r.getAs[Long]("n"), r.getAs[Double]("num"), r.getAs[Double]("den_a"),
@@ -216,7 +222,7 @@ class DriftSpec extends SparkSpec {
     assert(math.abs(got(("x", "z"))._5 + 1.0) < 1e-12)
     assert(math.abs(got(("y", "z"))._5 + 1.0) < 1e-12)
     // partition-layout invariance of the exact moments
-    val re = Diagnostics.correlationMatrix(df.repartition(7), Seq("x", "y", "z"), 100L)
+    val re = Diagnostics.correlationMatrix(df.repartition(7), Seq("x", "y", "z"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getAs[Double]("num"))).toSet
     assert(re == got.map { case ((a, b), v) => (a, b, v._2) }.toSet)
   }

@@ -45,15 +45,16 @@ class ExpressionSpec extends SparkSpec {
       (3L, "")
     ).toDF("id", "text")
     val hashes = transform(
-      TextFunctions.distinctShingles($"text", 3),
+      TextFunctions.distinctShingles($"text"),
       s => HashFunctions.tokenHash(s))
-    val seeds = sequence(lit(0), lit(15))
+    val n = graft.operators.Dedup.NumHashes
+    val seeds = sequence(lit(0), lit(n - 1))
     val composed = aggregate(
       hashes,
-      array_repeat(lit(Long.MaxValue), 16),
+      array_repeat(lit(Long.MaxValue), n),
       (acc, h) => zip_with(acc, seeds, (m, s) => least(m, HashFunctions.seeded(h, s))))
     val rows = docs.select(
-      GraftFunctions.minHashSig(hashes, 16).as("fast"),
+      GraftFunctions.minHashSig(hashes).as("fast"),
       composed.as("hof")
     ).collect()
     rows.foreach { r =>
@@ -66,11 +67,11 @@ class ExpressionSpec extends SparkSpec {
     val e = graft.plans.MinHashSig(
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         hs, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
-      numHashes = 8)
+      numHashes = graft.operators.Dedup.NumHashes)
     val interp = e.eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
     val viaDf = Seq(Tuple1(hs)).toDF("h")
-      .select(GraftFunctions.minHashSig($"h", 8))
+      .select(GraftFunctions.minHashSig($"h"))
       .head().getSeq[Long](0)
     assert(interp == viaDf)
   }
@@ -86,7 +87,7 @@ class ExpressionSpec extends SparkSpec {
 
   test("MinHashSig participates in codegen (no CodegenFallback)") {
     val plan = Seq(Tuple1(Array(1L, 2L))).toDF("h")
-      .select(GraftFunctions.minHashSig($"h", 4))
+      .select(GraftFunctions.minHashSig($"h"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CodegenFallback"))
   }

@@ -76,8 +76,7 @@ class FunnelSpec extends SparkSpec {
       (21L, 3L, "a", ts("2024-01-03 10:00:00"))
     ).toDF("event_id", "user_id", "event_type", "ts")
     val got = Funnel
-      .sessionPaths(ev, "user_id", "event_type", "ts", "event_id",
-        gapMinutes = 30, maxSteps = 5)
+      .sessionPaths(ev, "user_id", "event_type", "ts", "event_id")
       .collect()
       .map(r => (r.getAs[String]("path"), r.getAs[Long]("n_sessions"))).toMap
     assert(got == Map("a>b" -> 2L, "c" -> 1L, "a>b>c>d>e" -> 1L))

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.GeoJsonSource
+import graft.sources.{GeoJsonFixture, GeoJsonSource}
 
 class GeoJsonSpec extends SparkSpec {
 
@@ -59,5 +59,32 @@ class GeoJsonSpec extends SparkSpec {
     assert(rows.length == 1)
     assert(rows(0).getAs[String]("provincia") == "TORINO")
     assert(rows(0).getAs[Int]("population") == 0)
+  }
+
+  test("fixture writes are atomic: a concurrent reader never sees a partial file") {
+    // Concurrent catalog queries rewrite the same fixture while others
+    // scan it: every read must see one whole file, never a truncated one.
+    val dir = Files.createTempDirectory("geojson-atomic")
+    val text = GeoJsonFixture.gridJson(0L until 300L)
+    val path = java.nio.file.Paths.get(GeoJsonFixture.write(dir, "grid.geojson", text))
+    @volatile var stop = false
+    val writer = new Thread(() => while (!stop) GeoJsonFixture.write(dir, "grid.geojson", text))
+    writer.start()
+    var (reads, partial) = (0, 0)
+    try {
+      val deadline = System.nanoTime() + 1000000000L
+      while (System.nanoTime() < deadline) {
+        if (Files.readString(path) != text) partial += 1
+        reads += 1
+      }
+    } finally {
+      stop = true
+      writer.join()
+    }
+    assert(reads > 0)
+    assert(partial == 0, s"$partial of $reads reads saw a partial file")
+    val left = Files.list(dir)
+    try assert(left.count() == 1L, "a temp file was left beside the fixture")
+    finally left.close()
   }
 }

@@ -33,7 +33,7 @@ class ImportanceSpec extends SparkSpec {
   test("selected applies the exact rational threshold, excludes empty docs") {
     val target = corpus.filter($"doc_id" === 1L)
     val kept = Importance.enrichmentScores(corpus, target, "doc_id", "text")
-      .filter(Importance.selected(1L, 2L)) // enrich_frac >= 1/2
+      .filter(Importance.selected) // enrich_frac >= 1/2
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(1L, 3L))
   }

@@ -61,18 +61,18 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactionPlan: greedy first-fit groups, oversized file isolation, per-partition plans") {
-    // target 100: [60, 30, 50, 250, 10, 90] in order →
-    // cum-before  [ 0, 60, 90, 140, 390, 400]
-    // group       [ 0,  0,  0,   1,   3,   4]
-    // 250 lands in group 1 (bytes before it: 140) and pushes the next file
+    // in units of 1/16 of the 256 KiB target: [10, 5, 8, 40, 2, 15] in
+    // order → cum-before [0, 10, 15, 23, 63, 65], group [0, 0, 0, 1, 3, 4].
+    // 40 lands in group 1 (units before it: 23) and pushes the next file
     // to group 3 — an oversized file never splits, it absorbs its span.
+    val u = Layout.CompactionTargetBytes / 16
     val files = Seq(
-      ("p", 1L, 60L), ("p", 2L, 30L), ("p", 3L, 50L),
-      ("p", 4L, 250L), ("p", 5L, 10L), ("p", 6L, 90L),
-      ("q", 1L, 10L), ("q", 2L, 10L) // separate partition: its own plan
+      ("p", 1L, 10 * u), ("p", 2L, 5 * u), ("p", 3L, 8 * u),
+      ("p", 4L, 40 * u), ("p", 5L, 2 * u), ("p", 6L, 15 * u),
+      ("q", 1L, u), ("q", 2L, u) // separate partition: its own plan
     ).toDF("part", "seq", "bytes")
     val out = Layout.compactionPlan(files, "bytes", Seq("seq"),
-        targetBytes = 100L, partitionCols = Seq("part"))
+        partitionCols = Seq("part"))
       .select("part", "seq", "compaction_group", "group_seq")
       .as[(String, Long, Long, Int)].collect().toSeq.sorted
     assert(out == Seq(
@@ -84,10 +84,7 @@ class LayoutSpec extends SparkSpec {
   test("compactionPlan validates inputs") {
     val f = Seq(("a", 1L)).toDF("k", "bytes")
     intercept[IllegalArgumentException] {
-      Layout.compactionPlan(f, "bytes", Seq("k"), targetBytes = 0L)
-    }
-    intercept[IllegalArgumentException] {
-      Layout.compactionPlan(f, "bytes", Nil, targetBytes = 10L)
+      Layout.compactionPlan(f, "bytes", Nil)
     }
   }
 }

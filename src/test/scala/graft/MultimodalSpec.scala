@@ -52,7 +52,7 @@ class MultimodalSpec extends SparkSpec {
     // Round-trip: decoded dims are the requested 8×8 and the channel sum
     // equals the direct sum of the synthetic bytes (PNG is lossless).
     val out = Multimodal.codecRoundTrip(
-        Seq(7L, 123L).map(java.lang.Long.valueOf).toDS(), 8, 8)
+        Seq(7L, 123L).map(java.lang.Long.valueOf).toDS())
       .collect().sortBy(_.doc_id)
     for (r <- out) {
       assert(r.decoded_w == 8L && r.decoded_h == 8L)
@@ -103,12 +103,12 @@ class MultimodalSpec extends SparkSpec {
   test("audioRoundTrip: decoded sample sum equals the direct mix64 sum") {
     import graft.functions.HashFunctions
     val out = Multimodal.audioRoundTrip(
-        Seq(5L, 321L).map(java.lang.Long.valueOf).toDS(), 64)
+        Seq(5L, 321L).map(java.lang.Long.valueOf).toDS())
       .collect().sortBy(_.doc_id)
     for (r <- out) {
-      assert(r.n_samples == 64L && r.n_channels == 1L)
-      val expected = (0 until 64).map(i =>
-        (HashFunctions.mix64Long(r.doc_id * 64 + i) & 0xffffL) - 32768L).sum
+      assert(r.n_samples == 256L && r.n_channels == 1L)
+      val expected = (0 until 256).map(i =>
+        (HashFunctions.mix64Long(r.doc_id * 256 + i) & 0xffffL) - 32768L).sum
       assert(r.sample_sum == expected, s"doc ${r.doc_id}")
     }
   }
@@ -147,8 +147,7 @@ class MultimodalSpec extends SparkSpec {
   test("videoRoundTrip: decoded per-frame pixel sums equal the direct mix64 sums") {
     import graft.functions.HashFunctions
     val out = Multimodal.videoRoundTrip(
-        Seq(5L, 321L).map(java.lang.Long.valueOf).toDS(),
-        nFrames = 6, w = 16, h = 8, maxFrames = 4)
+        Seq(5L, 321L).map(java.lang.Long.valueOf).toDS())
       .collect().sortBy(r => (r.doc_id, r.frame_idx))
     assert(out.length == 8)
     for (r <- out) {
@@ -165,18 +164,17 @@ class MultimodalSpec extends SparkSpec {
 
   test("frameSignatures: decoded-raster dedup keys — shared contents collide, signatures are exact") {
     import graft.functions.HashFunctions
-    // contents=2: with 4 docs × 6 frames over 2 contents, cross-video
-    // duplicates are guaranteed; every frame of the same content must
-    // produce the IDENTICAL (sum, possum, sha) triple from its decoded
-    // raster, and different contents must differ.
+    // 16 docs × 6 frames over 64 contents: cross-video duplicates are
+    // guaranteed (96 > 64); every frame of the same content must produce
+    // the IDENTICAL (sum, possum, sha) triple from its decoded raster, and
+    // different contents must differ.
     val out = Multimodal.frameSignatures(
-        (1L to 4L).map(java.lang.Long.valueOf).toDS(),
-        nFrames = 6, w = 16, h = 8, contents = 2)
+        (1L to 16L).map(java.lang.Long.valueOf).toDS())
       .collect()
-    assert(out.length == 24)
+    assert(out.length == 96)
     val byContent = out.groupBy(r =>
-      HashFunctions.mix64Long(r.doc_id * 6 + r.frame_idx) & 1L)
-    assert(byContent.keySet == Set(0L, 1L))
+      HashFunctions.mix64Long(r.doc_id * 6 + r.frame_idx) & 63L)
+    assert(byContent.size < out.length)
     for ((c, rows) <- byContent) {
       // one signature triple per content — decoded bytes are identical
       assert(rows.map(r => (r.pixel_sum, r.pixel_possum, r.sha256_hex)).toSet.size == 1,
@@ -187,13 +185,7 @@ class MultimodalSpec extends SparkSpec {
       assert(rows.head.pixel_possum ==
         bytes.zipWithIndex.map { case (v, i) => (i + 1L) * v }.sum)
     }
-    assert(byContent.values.map(_.head.sha256_hex).toSet.size == 2,
+    assert(byContent.values.map(_.head.sha256_hex).toSet.size == byContent.size,
       "distinct contents must hash differently")
-
-    // power-of-two guard
-    intercept[IllegalArgumentException] {
-      Multimodal.frameSignatures(
-        Seq(1L).map(java.lang.Long.valueOf).toDS(), 2, 4, 2, contents = 3)
-    }
   }
 }

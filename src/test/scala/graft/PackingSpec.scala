@@ -8,25 +8,27 @@ class PackingSpec extends SparkSpec {
   import spark.implicits._
 
   test("packOffsets: offsets are a per-shard prefix sum in id order") {
-    val docs = Seq((1L, 10L), (2L, 5L), (3L, 7L), (4L, 2000L), (5L, 100L))
+    // ids 2, 4, 5, 8, 10 all hash to shard 2 of 4
+    val docs = Seq((2L, 10L), (4L, 5L), (5L, 7L), (8L, 2040L), (10L, 2100L))
       .toDF("doc_id", "n")
     val out = Packing
-      .packOffsets(docs, "doc_id", col("n"), capacity = 1024, nShards = 1)
+      .packOffsets(docs, "doc_id", col("n"))
       .orderBy("doc_id")
-      .select("doc_id", "start_tok", "first_window", "last_window", "spans_boundary")
-      .as[(Long, Long, Long, Long, Boolean)].collect().toSeq
-    // single shard: layout is pure id order
-    assert(out.map(_._2) == Seq(0L, 10L, 15L, 22L, 2022L))
-    // doc 4: tokens [22, 2022) spans windows 0 and 1
-    assert(out(3) == ((4L, 22L, 0L, 1L, true)))
-    // doc 5: tokens [2022, 2122) crosses the 2048 boundary → windows 1..2
-    assert(out(4) == ((5L, 2022L, 1L, 2L, true)))
+      .select("shard", "doc_id", "start_tok", "first_window", "last_window", "spans_boundary")
+      .as[(Long, Long, Long, Long, Long, Boolean)].collect().toSeq
+    // one shard: layout is pure id order
+    assert(out.map(_._1).toSet == Set(2L))
+    assert(out.map(_._3) == Seq(0L, 10L, 15L, 22L, 2062L))
+    // doc 8: tokens [22, 2062) crosses the 2048 boundary → windows 0..1
+    assert(out(3).productIterator.toSeq.drop(1) == Seq(8L, 22L, 0L, 1L, true))
+    // doc 10: tokens [2062, 4162) crosses the 4096 boundary → windows 1..2
+    assert(out(4).productIterator.toSeq.drop(1) == Seq(10L, 2062L, 1L, 2L, true))
   }
 
   test("packOffsets: zero-token docs occupy no space and never span") {
     val docs = Seq((1L, 0L), (2L, 3L)).toDF("doc_id", "n")
     val out = Packing
-      .packOffsets(docs, "doc_id", col("n"), capacity = 4, nShards = 1)
+      .packOffsets(docs, "doc_id", col("n"))
       .orderBy("doc_id")
       .select("start_tok", "spans_boundary")
       .as[(Long, Boolean)].collect().toSeq
@@ -43,20 +45,20 @@ class PackingSpec extends SparkSpec {
   }
 
   test("chunkWindows: window/stride tiling with a short tail") {
-    // 40 tokens, window 16, stride 8 → 1 + ceil((40-16)/8) = 4 chunks
-    // at starts 0,8,16,24; the last one ends exactly at token 40
-    val text = (1 to 40).map(i => s"t$i").mkString(" ")
+    // 70 tokens, window 32, stride 24 → 1 + ceil((70-32)/24) = 3 chunks
+    // at starts 0,24,48; the last one is the 22-token tail
+    val text = (1 to 70).map(i => s"t$i").mkString(" ")
     val out = Chunking
-      .chunkWindows(Seq((1L, text)).toDF("doc_id", "text"), "doc_id", "text", 16, 8)
+      .chunkWindows(Seq((1L, text)).toDF("doc_id", "text"), "doc_id", "text")
       .orderBy("chunk_idx")
       .select("chunk_idx", "start_tok", "n_chunk_tokens")
       .as[(Long, Long, Long)].collect().toSeq
-    assert(out == Seq((0L, 0L, 16L), (1L, 8L, 16L), (2L, 16L, 16L), (3L, 24L, 16L)))
+    assert(out == Seq((0L, 0L, 32L), (1L, 24L, 32L), (2L, 48L, 22L)))
   }
 
   test("chunkWindows: doc shorter than one window is a single short chunk") {
     val out = Chunking
-      .chunkWindows(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text", 16, 8)
+      .chunkWindows(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text")
       .select("chunk_idx", "start_tok", "n_chunk_tokens")
       .as[(Long, Long, Long)].collect().toSeq
     assert(out == Seq((0L, 0L, 3L)))
@@ -64,14 +66,14 @@ class PackingSpec extends SparkSpec {
 
   test("chunkWindows: empty doc yields no chunks") {
     val out = Chunking
-      .chunkWindows(Seq((1L, "   ")).toDF("doc_id", "text"), "doc_id", "text", 16, 8)
+      .chunkWindows(Seq((1L, "   ")).toDF("doc_id", "text"), "doc_id", "text")
       .count()
     assert(out == 0L)
   }
 
   test("chunkWindows: fingerprints identify identical windows across docs") {
     val docs = Seq((1L, "x y z"), (2L, "x y z")).toDF("doc_id", "text")
-    val fps = Chunking.chunkWindows(docs, "doc_id", "text", 8, 8)
+    val fps = Chunking.chunkWindows(docs, "doc_id", "text")
       .select("chunk_fp").as[String].collect().toSeq
     assert(fps.distinct.size == 1)
   }
@@ -135,7 +137,7 @@ class PackingSpec extends SparkSpec {
       ("web", 100L), ("web", 512L), ("web", 513L), // pads: 512, 512, 1024
       ("books", 0L), ("books", 1L)                 // pads: 0, 512
     ).toDF("source", "n")
-    val out = graft.operators.Packing.paddingWaste(d, "source", col("n"), seqLen = 512)
+    val out = graft.operators.Packing.paddingWaste(d, "source", col("n"))
       .orderBy("source")
       .collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
@@ -148,7 +150,7 @@ class PackingSpec extends SparkSpec {
 
   test("paddingWaste: an all-empty group reports zero waste, not NaN") {
     val d = Seq(("empty", 0L)).toDF("source", "n")
-    val out = graft.operators.Packing.paddingWaste(d, "source", col("n"), seqLen = 512)
+    val out = graft.operators.Packing.paddingWaste(d, "source", col("n"))
       .select("waste_frac").as[Double].head()
     assert(out == 0.0)
   }

@@ -15,22 +15,21 @@ class PercentileSpec extends SparkSpec {
     // deterministic non-uniform values, two groups
     val df = (1 to n).map(i => (if (i % 2 == 0) "a" else "b", (i * i % 9973).toDouble))
       .toDF("g", "v")
-    val exact = df.groupBy($"g")
-      .agg(percentile($"v", lit(0.5)).as("p50"), percentile($"v", lit(0.9)).as("p90"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val approx = df.groupBy($"g")
-      .agg(
-        AggFunctions.percentileApprox($"v", 0.5).as("p50"),
-        AggFunctions.percentileApprox($"v", 0.9).as("p90"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    // accuracy=10000 on 10k-row groups → rank error ≤ ~1 rank; values are
-    // spread over ~10k distinct ints, so a few value-units of slack is a
-    // generous bound that still catches a broken sketch
-    for (g <- Seq("a", "b")) {
-      assert(math.abs(approx(g)._1 - exact(g)._1) <= 50.0,
-        s"p50 group $g: approx=${approx(g)._1} exact=${exact(g)._1}")
-      assert(math.abs(approx(g)._2 - exact(g)._2) <= 50.0,
-        s"p90 group $g: approx=${approx(g)._2} exact=${exact(g)._2}")
+    val est = df.groupBy($"g").agg(AggFunctions.medianApprox($"v").as("m"))
+    // the estimate's exact rank interval [lt+1, le] must reach the median
+    // rank within the sketch's bound: n/accuracy = 100 ranks per 10k-row group
+    val ranks = df.join(broadcast(est), Seq("g"))
+      .groupBy($"g")
+      .agg(count(lit(1)).as("n"),
+        count(when($"v" < $"m", 1)).as("lt"),
+        count(when($"v" <= $"m", 1)).as("le"))
+      .collect()
+    assert(ranks.length == 2)
+    for (r <- ranks) {
+      val (n, lt, le) = (r.getLong(1), r.getLong(2), r.getLong(3))
+      val slack = n / AggFunctions.ApproxAccuracy
+      assert(lt <= n / 2 + slack && le >= n / 2 - slack,
+        s"group ${r.getString(0)}: lt=$lt le=$le n=$n")
     }
   }
 
@@ -44,7 +43,7 @@ class PercentileSpec extends SparkSpec {
       .map(i => (if (i % 2 == 0) "a" else "b", (i * i % 23).toDouble))
       .toDF("g", "v")
     val est = df.groupBy($"g")
-      .agg(AggFunctions.percentileApprox($"v", 0.5, 100).as("m"))
+      .agg(AggFunctions.medianApprox($"v").as("m"))
     val audit = df.join(broadcast(est), Seq("g"))
       .groupBy($"g")
       .agg(count(lit(1)).as("n"),

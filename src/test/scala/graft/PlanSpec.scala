@@ -78,7 +78,7 @@ class PlanSpec extends SparkSpec {
 
   test("salted rollup equals the plain rollup (value-identical)") {
     val ev = Tables.events(spark, sf)
-    val salted = Rollup.saltedSumCount(ev, Seq("event_type"), "value", nSalts = 8)
+    val salted = Rollup.saltedSumCount(ev, Seq("event_type"), "value")
       .orderBy("event_type").collect().toSeq
     val plain = ev.groupBy(col("event_type"))
       .agg(

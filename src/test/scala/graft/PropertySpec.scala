@@ -84,8 +84,8 @@ class PropertySpec extends SparkSpec {
   test("minhash jaccard estimates stay in [0,1]; equal shingle sets give exactly 1.0") {
     val d = textDf.filter(TextFunctions.tokenCount(col("text")) >= 3)
     val sig = d.select(col("doc_id"),
-      graft.operators.Dedup.minHashSignature(col("text"), 3, 32).as("sig"),
-      sort_array(TextFunctions.distinctShingles(col("text"), 3)).as("sh"))
+      graft.operators.Dedup.minHashSignature(col("text")).as("sig"),
+      sort_array(TextFunctions.distinctShingles(col("text"))).as("sh"))
     val est = sig.as("a").join(sig.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(
         graft.operators.Dedup.minHashJaccardEstimate(col("a.sig"), col("b.sig")).as("est"),
@@ -100,14 +100,14 @@ class PropertySpec extends SparkSpec {
       .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L)).get
     val df = keys.zipWithIndex.map { case (k, i) => ("g", k, i % 4) }.toDF("g", "k", "slice")
     def est(d: org.apache.spark.sql.DataFrame) =
-      Sketches.hllDistinct(d, Seq("g"), col("k"), p = 8).select("est_distinct").as[Double].head()
+      Sketches.hllDistinct(d, Seq("g"), col("k")).select("est_distinct").as[Double].head()
     // duplicate-insensitivity: unioning the data with itself changes nothing
     assert(est(df) == est(df.unionAll(df)))
     // slice-merge law on random slices
     val merged = Sketches.hllEstimateFromRegisters(
       Sketches.hllMerge(
-        Sketches.hllRegisters(df, Seq("g", "slice"), col("k"), p = 8).drop("slice"),
-        Seq("g")), Seq("g"), p = 8).select("est_distinct").as[Double].head()
+        Sketches.hllRegisters(df, Seq("g", "slice"), col("k")).drop("slice"),
+        Seq("g")), Seq("g")).select("est_distinct").as[Double].head()
     assert(merged == est(df))
     // registers only grow when data is added (estimate monotone non-decreasing)
     val half = df.filter(col("slice") < 2)

@@ -55,22 +55,22 @@ class RollupSpec extends SparkSpec {
       (ts("2024-01-24 08:00:00"), "a"),
       (ts("2024-01-31 23:00:00"), "b")
     ).toDF("when", "grp")
-    val out = Rollup.decayedCounts(ev, Seq("grp"), col("when"), stepDays = 3, maxSteps = 4)
+    val out = Rollup.decayedCounts(ev, Seq("grp"), col("when"))
       .orderBy("grp").as[(String, Long, Double)].collect()
-    // weights: 2^4, 2^3, 2^2 → (16+8+4)/16 = 1.75; b: 16/16 = 1.0
+    // weights: 2^9, 2^8, 2^7 → (512+256+128)/512 = 1.75; b: 512/512 = 1.0
     assert(out.toSeq == Seq(("a", 3L, 1.75), ("b", 1L, 1.0)))
   }
 
   test("decayedCounts clamps ages beyond maxSteps") {
     val ev = Seq(
       (ts("2024-02-01 00:00:00"), "g"), // the newest date: step 0
-      (ts("2024-01-01 00:00:00"), "g"), // 31 days old at stepDays=1 → clamped to maxSteps
-      (ts("2024-01-31 12:00:00"), "g") // 1 day old → step 1
+      (ts("2024-01-01 00:00:00"), "g"), // 31 days old → step 10, clamped to maxSteps 9
+      (ts("2024-01-29 12:00:00"), "g") // 3 days old → step 1
     ).toDF("when", "grp")
-    val out = Rollup.decayedCounts(ev, Seq("grp"), col("when"), stepDays = 1, maxSteps = 2)
+    val out = Rollup.decayedCounts(ev, Seq("grp"), col("when"))
       .as[(String, Long, Double)].head()
-    // weights: 4 (newest), 1 (clamped old), 2 → 7/4
-    assert(out == (("g", 3L, 1.75)))
+    // weights: 512 (newest), 1 (clamped old), 256 → 769/512
+    assert(out == (("g", 3L, 769.0 / 512)))
   }
 
   test("forwardFillDaily: complete spine, closing election, carry across gaps") {

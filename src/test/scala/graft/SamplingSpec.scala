@@ -76,28 +76,26 @@ class SamplingSpec extends SparkSpec {
 
   test("epochMixPlan: integer identities hold, budget undershoot bounded by |groups|") {
     val df = ((1L to 300L).map(("a", _)) ++ (1L to 40L).map(("b", _))).toDF("grp", "id")
-    val plan = Sampling.epochMixPlan(df, "grp", Map("a" -> 1L, "b" -> 2L), budgetRows = 500L)
+    val plan = Sampling.epochMixPlan(df, "grp", Map("a" -> 1L, "b" -> 2L))
       .as[(String, Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
-    // target = floor(budget*w/sumW): a -> 166, b -> 333
-    assert(plan("a")._4 == 166L && plan("b")._4 == 333L)
+    // target = floor(budget*w/sumW) with budget 1000: a -> 333, b -> 666
+    assert(plan("a")._4 == 333L && plan("b")._4 == 666L)
     // identity: target = epochs*n + remainder, 0 <= remainder < n
     for ((_, (_, n, _, t, e, r)) <- plan) {
       assert(t == e * n + r)
       assert(r >= 0 && r < n)
     }
-    // a: 166 of 300 rows -> 0 full epochs; b: 333 of 40 -> 8 epochs + 13
-    assert(plan("a")._5 == 0L && plan("a")._6 == 166L)
-    assert(plan("b")._5 == 8L && plan("b")._6 == 13L)
+    // a: 333 of 300 rows -> 1 full epoch + 33; b: 666 of 40 -> 16 epochs + 26
+    assert(plan("a")._5 == 1L && plan("a")._6 == 33L)
+    assert(plan("b")._5 == 16L && plan("b")._6 == 26L)
     // floor undershoot bounded by the group count
     val totalTarget = plan.values.map(_._4).sum
-    assert(totalTarget <= 500L && 500L - totalTarget < 2)
-    // guards
+    val budget = Sampling.MixBudgetRows
+    assert(totalTarget <= budget && budget - totalTarget < 2)
+    // guard
     intercept[IllegalArgumentException] {
-      Sampling.epochMixPlan(df, "grp", Map("a" -> 1L), budgetRows = 0L)
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.epochMixPlan(df, "grp", Map("a" -> 0L), budgetRows = 10L)
+      Sampling.epochMixPlan(df, "grp", Map("a" -> 0L))
     }
   }
 
@@ -111,14 +109,15 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("capPerGroup keeps at most k per group in salted-hash order") {
-    val df = ((1L to 200L).map(("big", _)) ++ (1001L to 1010L).map(("mid", _)) ++
+    val df = ((1L to 200L).map(("big", _)) ++ (1001L to 1020L).map(("mid", _)) ++
       (2001L to 2003L).map(("tiny", _))).toDF("grp", "id")
-    val out = Sampling.capPerGroup(df, "grp", "id", k = 10, salt = 7L)
+    val out = Sampling.capPerGroup(df, "grp", "id", salt = 7L)
       .as[(String, Long, Long)].collect()
 
+    val k = Sampling.GroupCap
     val byGrp = out.groupBy(_._1)
-    assert(byGrp("big").length == 10)
-    assert(byGrp("mid").length == 10) // exactly at the cap
+    assert(byGrp("big").length == k)
+    assert(byGrp("mid").length == k) // exactly at the cap
     assert(byGrp("tiny").length == 3) // under the cap: kept whole
     // ranks are 1..n within each group
     byGrp.values.foreach { rows =>
@@ -132,30 +131,41 @@ class SamplingSpec extends SparkSpec {
       val m = h % (1L << 52)
       if (m < 0) m + (1L << 52) else m
     }
-    val expectBig = (1L to 200L).sortBy(id => (rank52(id), id)).take(10)
+    val expectBig = (1L to 200L).sortBy(id => (rank52(id), id)).take(k)
     assert(byGrp("big").sortBy(_._3).map(_._2).toSeq == expectBig)
   }
 
   test("budgetPerGroup respects the budget and is prefix-closed in hash order") {
-    val df = (1L to 50L).map(i => ("s" + (i % 3), i, 10L + i % 7)).toDF("grp", "id", "cost")
-    val kept = Sampling.budgetPerGroup(df, "grp", "id", col("cost"), budget = 60L, salt = 3L)
+    val budget = Sampling.GroupBudget
+    val raw = (1L to 50L).map(i => ("s" + (i % 3), i, (10L + i % 7) * 100))
+    val df = raw.toDF("grp", "id", "cost")
+    val kept = Sampling.budgetPerGroup(df, "grp", "id", col("cost"), salt = 3L)
     val rows = kept.select("grp", "id", "cost", "cum_cost").as[(String, Long, Long, Long)].collect()
 
     // every kept row's running total is within budget, and per-group sums agree
-    assert(rows.forall(_._4 <= 60L))
+    assert(rows.forall(_._4 <= budget))
     rows.groupBy(_._1).foreach { case (_, rs) =>
       assert(rs.map(_._3).sum == rs.map(_._4).max)
     }
 
-    // growing the budget only ever ADDS rows (prefix-closed selection)
-    val bigger = Sampling.budgetPerGroup(df, "grp", "id", col("cost"), budget = 120L, salt = 3L)
-      .select("id").as[Long].collect().toSet
-    assert(rows.map(_._2).toSet.subsetOf(bigger))
+    // the kept set is each group's salted-hash-order prefix within budget
+    // (replayed on the driver through the shared HashRef mix64)
+    def rank52(id: Long): Long = {
+      val h = HashRef.mix64(id + 3L * 0x9E3779B97F4A7C15L)
+      val m = h % (1L << 52)
+      if (m < 0) m + (1L << 52) else m
+    }
+    val expected = raw.groupBy(_._1).values.flatMap { rs =>
+      val ordered = rs.sortBy(r => (rank52(r._2), r._2))
+      ordered.zip(ordered.scanLeft(0L)(_ + _._3).tail).takeWhile(_._2 <= budget).map(_._1._2)
+    }.toSet
+    assert(expected.nonEmpty && expected.size < raw.size)
+    assert(rows.map(_._2).toSet == expected)
 
     // a row larger than the remaining budget is skipped along with its suffix
     // (cumulative semantics), never partially counted
     val one = Sampling.budgetPerGroup(
-      Seq(("g", 1L, 100L)).toDF("grp", "id", "cost"), "grp", "id", col("cost"), budget = 60L)
+      Seq(("g", 1L, budget + 1)).toDF("grp", "id", "cost"), "grp", "id", col("cost"))
     assert(one.count() == 0)
   }
 
@@ -168,7 +178,7 @@ class SamplingSpec extends SparkSpec {
     val df = ids.zipWithIndex.map { case (id, i) =>
       (id, if (i < 5) "a" else "b", (i + 1).toDouble)
     }.toSeq.toDF("id", "grp", "v")
-    val thr = Sampling.quantileThresholds(df, "id", "grp", "v", q = 0.25, salt = 1L)
+    val thr = Sampling.quantileThresholds(df, "id", "grp", "v", salt = 1L)
       .orderBy("grp")
       .collect()
       .map(r => (r.getAs[String]("grp"), r.getAs[Double]("threshold"), r.getAs[Long]("n_sample")))
@@ -178,8 +188,7 @@ class SamplingSpec extends SparkSpec {
 
   test("quantileThresholds sampling predicate actually thins the input") {
     val df = (1L to 1000L).map(i => (i, "g", i.toDouble)).toDF("id", "grp", "v")
-    val n = Sampling.quantileThresholds(df, "id", "grp", "v",
-        q = 0.5, salt = 3L)
+    val n = Sampling.quantileThresholds(df, "id", "grp", "v", salt = 3L)
       .select("n_sample").as[Long].head()
     // ~25% of 1000 with binomial spread
     assert(n > 150 && n < 350, s"sample size $n")
@@ -188,12 +197,12 @@ class SamplingSpec extends SparkSpec {
   test("hash-keyed split and thresholds reject non-integral ids loudly") {
     val sdf = Seq(("u1", "g", 1.0)).toDF("id", "grp", "v")
     val e1 = intercept[IllegalArgumentException] {
-      Sampling.quantileThresholds(sdf, "id", "grp", "v", q = 0.5, salt = 1L)
+      Sampling.quantileThresholds(sdf, "id", "grp", "v", salt = 1L)
     }
     assert(e1.getMessage.contains("integral id"))
     val comp = Seq((1L, 1L)).toDF("node", "cluster")
     val e2 = intercept[IllegalArgumentException] {
-      Sampling.leakageSafeSplit(sdf, "id", comp, 1L, 0.8, 0.1)
+      Sampling.leakageSafeSplit(sdf, "id", comp, 1L)
     }
     assert(e2.getMessage.contains("integral id"))
   }
@@ -203,8 +212,7 @@ class SamplingSpec extends SparkSpec {
     // two clusters: {1,2,3} labeled 1 and {10,11} labeled 10
     val comp = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))
       .toDF("node", "cluster")
-    val sp = Sampling.leakageSafeSplit(docs, "doc_id", comp, salt = 7L,
-        trainFrac = 0.8, valFrac = 0.1)
+    val sp = Sampling.leakageSafeSplit(docs, "doc_id", comp, salt = 7L)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(sp.size == 200 && sp.values.toSet.subsetOf(Set("train", "val", "test")))
     assert(sp(1L) == sp(2L) && sp(2L) == sp(3L))

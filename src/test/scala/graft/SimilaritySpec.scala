@@ -7,6 +7,15 @@ import graft.operators.Similarity
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  /** Eight planted clusters of [[Similarity.PqDim]]-wide vectors: member i
+    * of cluster c sits at 10 on axis 8c plus a small deterministic
+    * jitter. Ids interleave (id % 8 == c), so the 8 smallest ids seed one
+    * IVF cell per planted cluster. */
+  private def planted(perCluster: Int): Seq[(Long, Array[Float])] =
+    for (i <- 0 until perCluster; c <- 0 until 8) yield
+      (i * 8L + c, Array.tabulate(Similarity.PqDim)(d =>
+        ((if (d == c * 8) 10.0 else 0.0) + math.sin(i * 31 + d * 7) * 0.1).toFloat))
+
   test("cosine/cosineExact compute correct values on known vectors") {
     val df = Seq(
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f), 0.0),
@@ -24,17 +33,21 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("knnExact returns the true top-k by cosine") {
+    // six candidates for the top-5: 2 and 5 tie at cosine 0 (smaller id
+    // first), and 3, the farthest, falls past the cut
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f)),
       (1L, Array(0.9f, 0.1f)),
       (2L, Array(0.0f, 1.0f)),
       (3L, Array(-1.0f, 0.0f)),
-      (4L, Array(0.7f, 0.7f))
+      (4L, Array(0.7f, 0.7f)),
+      (5L, Array(0.0f, -1.0f)),
+      (6L, Array(-0.7f, -0.7f))
     ).toDF("vec_id", "embedding")
-    val knn = Similarity.knnExact(vecs, vecs.filter($"vec_id" === 0L), "vec_id", "embedding", k = 2)
+    val knn = Similarity.knnExact(vecs, vecs.filter($"vec_id" === 0L), "vec_id", "embedding")
       .orderBy("rank")
       .collect().map(r => r.getAs[Long]("neighbor_id"))
-    assert(knn.toSeq == Seq(1L, 4L))
+    assert(knn.toSeq == Seq(1L, 4L, 2L, 5L, 6L))
   }
 
   test("LSH ANN achieves reasonable recall vs exact KNN on deterministic data") {
@@ -46,11 +59,10 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val queries = corpus.filter($"vec_id" < 5)
-    val k = 5
-    val exact = Similarity.knnExact(corpus, queries, "vec_id", "embedding", k)
+    val exact = Similarity.knnExact(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.knnLsh(corpus, queries, "vec_id", "embedding", k)
+    val approx = Similarity.knnLsh(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.intersect(approx).size.toDouble / exact.size
@@ -63,23 +75,18 @@ class SimilaritySpec extends SparkSpec {
       (1L, Array(0.99f, 0.01f, 0.0f)), // near-dup of 0
       (2L, Array(0.0f, 1.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val pairs = Similarity.nearDupPairs(vecs, "vec_id", "embedding", threshold = 0.95)
+    val pairs = Similarity.nearDupPairs(vecs, "vec_id", "embedding")
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(pairs == Set((0L, 1L)))
   }
 
   test("ivfTrain converges to the planted cluster structure and assignment is total") {
-    // 4 well-separated clusters of 25 vectors each around axis-aligned means
-    val dim = 8
-    def vec(cl: Int, i: Int): Array[Float] =
-      Array.tabulate(dim)(d => (if (d == cl * 2) 10.0 else 0.0).toFloat + (math.sin(i * 31 + d * 7) * 0.1).toFloat)
-    // interleaved ids (vec_id % 4 == planted cluster): deterministic seeding
-    // takes the 4 smallest ids, giving one seed per planted cluster — the
-    // farthest-point-style seeding a real pipeline would arrange
-    val rows = for (cl <- 0 until 4; i <- 0 until 25) yield (i * 4L + cl, vec(cl, i))
-    val df = rows.toDF("vec_id", "embedding")
-    val cents = Similarity.ivfTrain(df, "vec_id", "embedding", k = 4, iters = 2)
-    assert(cents.length == 4)
+    // 8 well-separated clusters of 25 vectors; the deterministic seeding
+    // takes one seed per planted cluster — the farthest-point-style
+    // seeding a real pipeline would arrange
+    val df = planted(25).toDF("vec_id", "embedding")
+    val cents = Similarity.ivfTrain(df, "vec_id", "embedding")
+    assert(cents.length == Similarity.IvfCells)
     val assigned = Similarity.ivfAssign(df, "embedding", cents)
     // assignment is total and deterministic
     assert(assigned.filter(col("cluster").isNull).count() == 0)
@@ -88,8 +95,8 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id", "cluster").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(a1 == a2)
     // all 25 members of a planted cluster land together
-    (0 until 4).foreach { cl =>
-      val labels = (0 until 25).map(i => a1(i * 4L + cl)).toSet
+    (0 until 8).foreach { cl =>
+      val labels = (0 until 25).map(i => a1(i * 8L + cl)).toSet
       assert(labels.size == 1, s"planted cluster $cl split across ${labels.size} IVF cells")
     }
   }
@@ -97,52 +104,71 @@ class SimilaritySpec extends SparkSpec {
   test("knnIvf achieves high recall vs exact KNN with all clusters probed") {
     val n = 100
     val dim = 16
+    def vec(i: Int) = Array.tabulate(dim)(d => math.sin(i * 31 + d * 7).toFloat)
+    // ids 0..7 alternate between two vectors, so the 8 seeds collapse into
+    // 2 cells (ties go to the smaller label) and the 2 probes cover both
     val corpus = (0 until n).map { i =>
-      (i.toLong, Array.tabulate(dim)(d => math.sin(i * 31 + d * 7).toFloat))
+      (i.toLong, vec(if (i < 8) 1000 + i % 2 else i))
     }.toDF("vec_id", "embedding")
-    val queries = corpus.filter($"vec_id" < 5)
-    val exact = Similarity.knnExact(corpus, queries, "vec_id", "embedding", k = 5)
+    assert(Similarity.ivfTrain(corpus, "vec_id", "embedding").length == Similarity.IvfProbes)
+    val queries = corpus.filter($"vec_id" >= 8 && $"vec_id" < 13)
+    val exact = Similarity.knnExact(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // nProbe = kClusters → IVF scans everything → recall must be exact
-    val full = Similarity.knnIvf(corpus, queries, "vec_id", "embedding", k = 5,
-        kClusters = 4, nProbe = 4, iters = 1)
+    // every cell probed → IVF scans everything → recall must be exact
+    val full = Similarity.knnIvf(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full == exact)
-    // partial probing keeps useful recall on this corpus
-    val partial = Similarity.knnIvf(corpus, queries, "vec_id", "embedding", k = 5,
-        kClusters = 4, nProbe = 2, iters = 1)
+  }
+
+  test("knnIvf keeps useful recall probing IvfProbes of IvfCells cells") {
+    val corpus = (0 until 100).map { i =>
+      (i.toLong, Array.tabulate(16)(d => math.sin(i * 31 + d * 7).toFloat))
+    }.toDF("vec_id", "embedding")
+    // 8 distinct seeds: all IvfCells cells exist, so 2 probes are partial
+    assert(Similarity.ivfTrain(corpus, "vec_id", "embedding").length == Similarity.IvfCells)
+    val queries = corpus.filter($"vec_id" < 5)
+    val exact = Similarity.knnExact(corpus, queries, "vec_id", "embedding")
+      .select("query_id", "neighbor_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val partial = Similarity.knnIvf(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.intersect(partial).size.toDouble / exact.size
-    assert(recall >= 0.5, s"IVF nProbe=2 recall too low: $recall")
+    assert(recall >= 0.5, s"IVF recall at ${Similarity.IvfProbes} of ${Similarity.IvfCells} probes too low: $recall")
   }
 
   test("pqTrain/pqEncode recover planted per-subspace structure, codes dense and stable") {
-    // 2 subspaces × 2 dims; each subspace independently draws one of 3
-    // well-separated patterns — PQ must give the same code to rows sharing
-    // a subspace pattern even when their OTHER subspace differs (the
+    // 4 subspaces × 16 dims; subspace s of row i draws pattern
+    // (i + s·(i / 8)) % 8 of 8 well-separated ones — the 8 smallest ids
+    // seed every pattern in every subspace, and later rows pair patterns
+    // differently per subspace. PQ must give the same code to rows sharing
+    // a subspace pattern even when their OTHER subspaces differ (the
     // product structure a single whole-vector quantizer can't factor).
-    val pat = Array(Array(10.0f, 0.0f), Array(0.0f, 10.0f), Array(-10.0f, -10.0f))
-    val rows = (0 until 36).map { i =>
-      val (pa, pb) = (i % 3, (i / 3) % 3)
-      (i.toLong, (pat(pa) ++ pat(pb)).map(v => v + 0.01f * (i % 7)))
+    val (m, sub) = (Similarity.PqSubspaces, Similarity.PqDim / Similarity.PqSubspaces)
+    def pattern(i: Int, s: Int) = (i + s * (i / 8)) % 8
+    val rows = (0 until 64).map { i =>
+      (i.toLong, Array.tabulate(Similarity.PqDim) { d =>
+        val (s, x) = (d / sub, d % sub)
+        (if (x == 2 * pattern(i, s)) 10.0f else 0.0f) + 0.01f * (i % 7)
+      })
     }
     val df = rows.toDF("vec_id", "embedding")
-    val books = Similarity.pqTrain(df, "vec_id", "embedding", dim = 4, m = 2, k = 3, iters = 2)
-    assert(books.length == 2 && books.forall(_.length == 3))
-    assert(books.forall(_.forall(_.size == 2)))
+    val books = Similarity.pqTrain(df, "vec_id", "embedding")
+    assert(books.length == m && books.forall(_.length == Similarity.PqCodes))
+    assert(books.forall(_.forall(_.size == sub)))
     val enc = Similarity.pqEncode(df, "embedding", books)
       .select($"vec_id", $"codes").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     // codes are m-long, in [0, k)
-    assert(enc.values.forall(c => c.length == 2 && c.forall(x => x >= 0 && x < 3)))
-    // rows with the same planted pattern pair get the same code pair
-    val byPattern = rows.groupBy { case (id, _) => ((id % 3).toInt, ((id / 3) % 3).toInt) }
-    byPattern.foreach { case (_, members) =>
-      val codes = members.map { case (id, _) => enc(id) }.toSet
-      assert(codes.size == 1, s"same planted pattern pair mapped to ${codes.size} code pairs")
+    assert(enc.values.forall(c => c.length == m && c.forall(x => x >= 0 && x < Similarity.PqCodes)))
+    // rows with the same planted pattern in a subspace get the same code there
+    (0 until m).foreach { s =>
+      (0 until 64).groupBy(pattern(_, s)).foreach { case (_, members) =>
+        val codes = members.map(i => enc(i.toLong)(s)).toSet
+        assert(codes.size == 1, s"subspace $s: one planted pattern mapped to ${codes.size} codes")
+      }
     }
     // stable across partitioning
     val enc2 = Similarity.pqEncode(df.repartition(7), "embedding", books)
@@ -152,41 +178,42 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("knnPq ADC ranking has high recall vs exact squared-L2 top-k") {
-    val n = 120
-    val dim = 16
-    def vec(i: Int): Array[Float] =
-      Array.tabulate(dim)(d => math.sin(i * 31 + d * 7).toFloat)
-    val corpus = (0 until n).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    // 8 planted clusters of 6: each query's exact top-5 is its 5
+    // cluster-mates, which share its code in the spiked subspace
+    val rows = planted(6)
+    val corpus = rows.toDF("vec_id", "embedding")
     val queries = corpus.filter($"vec_id" < 5)
-    val k = 5
-    // exact squared-L2 ground truth, computed locally (test-side oracle)
-    val all = (0 until n).map(i => i.toLong -> vec(i)).toMap
-    val truth = (0 until 5).flatMap { q =>
-      all.toSeq.filter(_._1 != q)
-        .map { case (id, v) =>
-          val d = v.zip(all(q.toLong)).map { case (a, b) => (a - b).toDouble * (a - b) }.sum
-          (id, d)
-        }
-        .sortBy { case (id, d) => (d, id) }.take(k)
-        .map { case (id, _) => (q.toLong, id) }
-    }.toSet
-    val pq = Similarity.knnPq(corpus, queries, "vec_id", "embedding",
-        dim = dim, k = k, m = 4, kCodes = 8, iters = 2)
+    val truth = l2Truth(rows, 5)
+    val pq = Similarity.knnPq(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truth.intersect(pq).size.toDouble / truth.size
     assert(recall >= 0.5, s"PQ ADC recall too low: $recall")
   }
 
+  /** Exact squared-L2 top-[[Similarity.Neighbors]] of the ids below
+    * `nQueries`, computed locally (test-side oracle). */
+  private def l2Truth(rows: Seq[(Long, Array[Float])], nQueries: Int): Set[(Long, Long)] = {
+    val all = rows.toMap
+    (0L until nQueries.toLong).flatMap { q =>
+      all.toSeq.filter(_._1 != q)
+        .map { case (id, v) =>
+          (id, v.zip(all(q)).map { case (a, b) => (a - b).toDouble * (a - b) }.sum)
+        }
+        .sortBy { case (id, d) => (d, id) }.take(Similarity.Neighbors)
+        .map { case (id, _) => (q, id) }
+    }.toSet
+  }
+
   test("ivfRecallSweep: monotone in nProbe, exactly 1.0 at full probe") {
-    val n = 96
-    val dim = 8
-    def vec(i: Int): Array[Float] =
-      Array.tabulate(dim)(d => math.sin(i * 17 + d * 3).toFloat)
-    val corpus = (0 until n).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    // seeded uniform vectors: spread over all 8 dimensions, so cosine
+    // neighbours cross the L2 cells
+    val rng = new scala.util.Random(3)
+    val corpus = (0 until 96).map(i => (i.toLong, Array.fill(8)(rng.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
     val queries = corpus.filter($"vec_id" < 6)
     val got = Similarity.ivfRecallSweep(corpus, queries, "vec_id", "embedding",
-        k = 5, kClusters = 4, nProbes = Seq(1, 2, 3, 4))
+        nProbes = Seq(1, 2, 4, 8))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(4)))
     // per query, recall must be non-decreasing in nProbe: more candidates
     // under the SAME (truth) metric can only add true neighbors to top-k
@@ -196,9 +223,9 @@ class SimilaritySpec extends SparkSpec {
         s"query $q recall not monotone: ${byNp.toSeq}")
     }
     // full probe = whole corpus under the truth metric → recall exactly 1
-    assert(got.filter(_._1 == 4).forall(_._3 == 1.0))
+    assert(got.filter(_._1 == Similarity.IvfCells).forall(_._3 == 1.0))
     // and at least one partial-probe row is a real (non-trivial) point
-    assert(got.exists(r => r._1 < 4 && r._3 < 1.0),
+    assert(got.exists(r => r._1 < Similarity.IvfCells && r._3 < 1.0),
       "fixture degenerate: partial probes all perfect")
   }
 
@@ -224,76 +251,65 @@ class SimilaritySpec extends SparkSpec {
         .sortBy { case (id, d) => (d, id) }.take(k).zipWithIndex
         .map { case ((id, _), r) => (qi.toLong, id, r + 1) }
     }.toSet
-    val got = Similarity.knnExactL2(corpus, queries, "vec_id", "embedding", k)
+    val got = Similarity.knnExactL2(corpus, queries, "vec_id", "embedding")
       .select("query_id", "neighbor_id", "rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == want)
   }
 
   test("knnIvfPq: full probing recovers good recall, partial probing stays useful, deterministic") {
-    val n = 120
-    val dim = 16
-    def vec(i: Int): Array[Float] =
-      Array.tabulate(dim)(d => math.sin(i * 31 + d * 7).toFloat)
-    val corpus = (0 until n).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    val rows = planted(6)
+    val corpus = rows.toDF("vec_id", "embedding")
     val queries = corpus.filter($"vec_id" < 5)
-    val k = 5
-    val all = (0 until n).map(i => i.toLong -> vec(i)).toMap
-    val truth = (0 until 5).flatMap { q =>
-      all.toSeq.filter(_._1 != q)
-        .map { case (id, v) =>
-          (id, v.zip(all(q.toLong)).map { case (a, b) => (a - b).toDouble * (a - b) }.sum)
-        }
-        .sortBy { case (id, d) => (d, id) }.take(k)
-        .map { case (id, _) => (q.toLong, id) }
-    }.toSet
-    def run(nProbe: Int) = Similarity.knnIvfPq(corpus, queries, "vec_id", "embedding",
-        dim = dim, k = k, kClusters = 4, nProbe = nProbe, m = 4, kCodes = 8, iters = 1)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val full = run(nProbe = 4)
-    val fullRecall = truth.intersect(full).size.toDouble / truth.size
+    val truth = l2Truth(rows, 5)
+    def run(cells: Option[Array[(Long, Seq[Double])]]) =
+      Similarity.knnIvfPq(corpus, queries, "vec_id", "embedding", cells)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def recall(got: Set[(Long, Long)]) = truth.intersect(got).size.toDouble / truth.size
+    // a quantizer of IvfProbes cells: every vector sits in a probed cell
+    val probedCells = Array(
+      0L -> Seq.fill(Similarity.PqDim)(0.0), 1L -> Seq.fill(Similarity.PqDim)(1.0))
+    assert(probedCells.length == Similarity.IvfProbes)
+    val fullRecall = recall(run(Some(probedCells)))
     assert(fullRecall >= 0.5, s"IVFPQ full-probe recall too low: $fullRecall")
-    val partial = run(nProbe = 2)
-    val partialRecall = truth.intersect(partial).size.toDouble / truth.size
-    assert(partialRecall >= 0.3, s"IVFPQ nProbe=2 recall too low: $partialRecall")
-    assert(run(nProbe = 2) == partial, "IVFPQ search must be deterministic")
+    // the trained quantizer has IvfCells cells: the query's own cell holds
+    // its 5 cluster-mates; the second probed cell's residual LUTs put its
+    // members far behind them
+    assert(Similarity.ivfTrain(corpus, "vec_id", "embedding").length == Similarity.IvfCells)
+    val partial = run(None)
+    val partialRecall = recall(partial)
+    assert(partialRecall >= 0.5, s"IVFPQ recall at ${Similarity.IvfProbes} of " +
+      s"${Similarity.IvfCells} probes too low: $partialRecall")
+    assert(run(None) == partial, "IVFPQ search must be deterministic")
   }
 
   test("pqTrain rejects a declared dim that disagrees with the data") {
     val df = Seq((0L, Array(1.0f, 2.0f)), (1L, Array(2.0f, 1.0f))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
-      Similarity.pqTrain(df, "vec_id", "embedding", dim = 4, m = 2, k = 2)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.pqTrain(df, "vec_id", "embedding", dim = 2, m = 3, k = 2)
+      Similarity.pqTrain(df, "vec_id", "embedding")
     }
   }
 
   test("knnPq/knnIvfPq reject ragged QUERY vectors loudly") {
-    // Corpus is clean 4-wide; the query set is NOT a subset of the corpus
-    // and carries a 3-wide vector — unchecked, its LUT would null-pad and
-    // nulls-first ascending ranking would put garbage at the top.
-    val corpus = (0L until 8L).map(i =>
-      (i, Array(i.toFloat, (i * 2).toFloat, (i % 3).toFloat, 1.0f)))
-      .toDF("vec_id", "embedding")
-    val ragged = Seq(
-      (100L, Array(1.0f, 2.0f, 3.0f, 4.0f)),
-      (101L, Array(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
+    // Corpus is clean PqDim-wide; the query set is NOT a subset of the
+    // corpus and carries a narrower vector — unchecked, its LUT would
+    // null-pad and nulls-first ascending ranking would put garbage at the top.
+    val dim = Similarity.PqDim
+    def vec(i: Long, width: Int) = Array.tabulate(width)(d => ((i * (d + 1)) % 7).toFloat)
+    val corpus = (0L until 8L).map(i => (i, vec(i, dim))).toDF("vec_id", "embedding")
+    val ragged = Seq((100L, vec(100L, dim)), (101L, vec(101L, dim - 1))).toDF("vec_id", "embedding")
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.knnPq(corpus, ragged, "vec_id", "embedding",
-        dim = 4, k = 2, m = 2, kCodes = 2)
+      Similarity.knnPq(corpus, ragged, "vec_id", "embedding")
     }
     assert(e1.getMessage.contains("knnPq queries"))
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.knnIvfPq(corpus, ragged, "vec_id", "embedding",
-        dim = 4, k = 2, kClusters = 2, nProbe = 1, m = 2, kCodes = 2)
+      Similarity.knnIvfPq(corpus, ragged, "vec_id", "embedding")
     }
     assert(e2.getMessage.contains("knnIvfPq queries"))
     // Clean external queries still work end-to-end (guard is not overtight).
-    val clean = Seq((100L, Array(1.0f, 2.0f, 3.0f, 4.0f))).toDF("vec_id", "embedding")
-    assert(Similarity.knnPq(corpus, clean, "vec_id", "embedding",
-      dim = 4, k = 2, m = 2, kCodes = 2).count() == 2L)
+    val clean = Seq((100L, vec(100L, dim))).toDF("vec_id", "embedding")
+    assert(Similarity.knnPq(corpus, clean, "vec_id", "embedding").count() == Similarity.Neighbors)
   }
 
   test("centroids computes exact element means per group") {
@@ -309,42 +325,36 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semDedup drops the higher-id member of a near-identical pair, within clusters only") {
-    // ids 0,1 seed two clusters: {0,2,3} near (1,0) and {1,4} near (0,1).
-    // 2 is near-identical to 0 (drop 2, keep 0); 3 is distinct enough to
-    // survive; 4 is near-identical to 1 (drop 4).
-    val vecs = Seq(
-      (0L, Array(1.0f, 0.0f)),
-      (1L, Array(0.0f, 1.0f)),
-      (2L, Array(0.999f, 0.01f)),
-      (3L, Array(0.8f, 0.6f)),
-      (4L, Array(0.01f, 0.999f))
-    ).toDF("vec_id", "embedding")
-    val out = Similarity.semDedup(vecs, "vec_id", "embedding",
-        threshold = 0.99, kClusters = 2, iters = 1)
+    // ids 0..7 seed the 8 cells: 0 = e0, 1 = 10·e0 (same direction as 0
+    // but its own cell), 2..7 = e1..e6. 8 is near-identical to 0 and 9 to
+    // 1, each in that seed's cell: both drop. 1 survives although 0 has
+    // cosine 1 with it — they sit in different cells.
+    def e(axis: Int, scale: Float = 1.0f) = Array.tabulate(8)(d => if (d == axis) scale else 0.0f)
+    val seeds = (0L, e(0)) +: (1L, e(0, 10.0f)) +: (2 to 7).map(i => (i.toLong, e(i - 1)))
+    val vecs = (seeds ++ Seq(
+      (8L, Array(1.01f, 0.01f) ++ Array.fill(6)(0.0f)),
+      (9L, Array(10.0f, 0.1f) ++ Array.fill(6)(0.0f))
+    )).toDF("vec_id", "embedding")
+    val out = Similarity.semDedup(vecs, "vec_id", "embedding")
       .collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("dropped")).toMap
-    assert(out == Map(0L -> false, 1L -> false, 2L -> true, 3L -> false, 4L -> true))
+    assert(out == (0L to 9L).map(i => i -> (i >= 8L)).toMap)
   }
 
   test("semDedup blowup guard: trips when a fixture k meets grown data, silent in-bound") {
-    // 40 near-identical vectors collapse into ONE cluster at kClusters=2:
-    // pairs/vector ≈ 19.5, so a cap of 8 must trip driver-side (before
-    // any pair join runs) and name the k ∝ N contract.
-    val vecs = (0L until 40L)
-      .map(i => (i, Array(1.0f, (i % 3) * 1e-4f))).toDF("vec_id", "embedding")
+    // 8200 identical vectors collapse into ONE cell: pairs/vector ≈ 4100
+    // exceeds MaxPairsPerVector, so the guard must trip driver-side
+    // (before any pair join runs) and name the k ∝ N contract.
+    val n = 2 * Similarity.MaxPairsPerVector + 8
+    val grown = (0L until n).map(i => (i, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
     val e = intercept[graft.operators.CandidateCapExceededException] {
-      Similarity.semDedup(vecs, "vec_id", "embedding",
-        threshold = 0.99, kClusters = 2, iters = 1, maxPairsPerVector = 8L)
+      Similarity.semDedup(grown, "vec_id", "embedding")
     }
     assert(e.getMessage.contains("k ∝ N"), e.getMessage)
-    // same data, cap above the measured mass → identical results to uncapped
-    val uncapped = Similarity.semDedup(vecs, "vec_id", "embedding",
-        threshold = 0.99, kClusters = 2, iters = 1)
-      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("dropped")).toSet
-    val capped = Similarity.semDedup(vecs, "vec_id", "embedding",
-        threshold = 0.99, kClusters = 2, iters = 1, maxPairsPerVector = 64L)
-      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("dropped")).toSet
-    assert(capped == uncapped)
+    // 40 of them stay far inside the bound: every later copy drops
+    val small = Similarity.semDedup(grown.filter($"vec_id" < 40L), "vec_id", "embedding")
+      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("dropped")).toMap
+    assert(small == (0L until 40L).map(i => i -> (i > 0L)).toMap)
   }
 
   test("ivfAssign kernel: bit-identical to the k-way least-struct form; exact ties to smaller label") {
@@ -483,7 +493,7 @@ class SimilaritySpec extends SparkSpec {
     val n = 20
     val vecs = (0L until n.toLong).map(id =>
       (id, Array.fill(8)(rng.nextFloat() - 0.5f))).toDF("vec_id", "embedding")
-    val out = Similarity.hardNegatives(vecs, "vec_id", "embedding", k = 4)
+    val out = Similarity.hardNegatives(vecs, "vec_id", "embedding")
       .collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("hard_neg_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("n_cand"))).sortBy(_._1)

@@ -13,7 +13,7 @@ class SketchesSpec extends SparkSpec {
   test("hllDistinct estimate lands within the standard error envelope") {
     val n = 5000
     val df = (1 to n).map(i => ("g", i.toLong)).toDF("g", "k")
-    val est = Sketches.hllDistinct(df, Seq("g"), col("k"), p = 8)
+    val est = Sketches.hllDistinct(df, Seq("g"), col("k"))
       .select("est_distinct").as[Double].head()
     // raw estimator, m=256 → ~6.5% standard error; allow 3 sigma
     assert(math.abs(est - n) / n < 0.20, s"estimate $est too far from $n")
@@ -22,11 +22,11 @@ class SketchesSpec extends SparkSpec {
   test("hllDistinct is invariant to partitioning and row order") {
     val df = (1 to 2000).map(i => (if (i % 2 == 0) "a" else "b", (i * 7919).toLong))
       .toDF("g", "k")
-    val base = Sketches.hllDistinct(df, Seq("g"), col("k"), p = 8)
+    val base = Sketches.hllDistinct(df, Seq("g"), col("k"))
       .orderBy("g").collect().map(r => (r.getString(0), r.getDouble(1)))
     val shuffled = Sketches.hllDistinct(
         df.repartition(13, col("k")).sortWithinPartitions(col("k").desc),
-        Seq("g"), col("k"), p = 8)
+        Seq("g"), col("k"))
       .orderBy("g").collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(base.toSeq == shuffled.toSeq) // bit-identical doubles
   }
@@ -34,7 +34,7 @@ class SketchesSpec extends SparkSpec {
   test("hllDistinct matches a driver-side replay of the same math") {
     val keys = (1 to 1200).map(i => (i * 104729).toLong)
     val df = keys.map(("g", _)).toDF("g", "k")
-    val est = Sketches.hllDistinct(df, Seq("g"), col("k"), p = 8)
+    val est = Sketches.hllDistinct(df, Seq("g"), col("k"))
       .select("est_distinct").as[Double].head()
 
     val m = 256
@@ -47,17 +47,17 @@ class SketchesSpec extends SparkSpec {
       if (rho > regs(b)) regs(b) = rho
     }
     val s = regs.map(r => BigInt(1) << (57 - r)).sum
-    val expected = Sketches.hllNumerator(8) / s.toDouble
+    val expected = Sketches.HllNumerator / s.toDouble
     assert(est == expected) // exact: same integer path, one final division
   }
 
   test("hllMerge of sliced registers equals the full-data sketch exactly") {
     val df = (1 to 3000).map(i => ("g", (i * 6007).toLong, i % 3)).toDF("g", "k", "slice")
-    val sliced = Sketches.hllRegisters(df, Seq("g", "slice"), col("k"), p = 8)
+    val sliced = Sketches.hllRegisters(df, Seq("g", "slice"), col("k"))
     val merged = Sketches.hllMerge(sliced.drop("slice"), Seq("g"))
-    val estMerged = Sketches.hllEstimateFromRegisters(merged, Seq("g"), p = 8)
+    val estMerged = Sketches.hllEstimateFromRegisters(merged, Seq("g"))
       .select("est_distinct").as[Double].head()
-    val estFull = Sketches.hllDistinct(df, Seq("g"), col("k"), p = 8)
+    val estFull = Sketches.hllDistinct(df, Seq("g"), col("k"))
       .select("est_distinct").as[Double].head()
     assert(estMerged == estFull) // register max is the loss-free merge law
   }
@@ -83,8 +83,8 @@ class SketchesSpec extends SparkSpec {
       .drop("day", "__off")
       .withColumnRenamed("target_day", "day")
     val est = Sketches.hllEstimateFromRegisters(
-        Sketches.hllMerge(fan(Sketches.hllRegisters(ev, Seq("day"), col("user_id"), p = 8)),
-          Seq("day")), Seq("day"), p = 8)
+        Sketches.hllMerge(fan(Sketches.hllRegisters(ev, Seq("day"), col("user_id"))),
+          Seq("day")), Seq("day"))
       .collect().map(r => (r.getTimestamp(0), r.getDouble(1))).toMap
     val exact = fan(ev.distinct())
       .groupBy("day").agg(count_distinct(col("user_id")).as("n"))
@@ -106,29 +106,22 @@ class SketchesSpec extends SparkSpec {
       (java.sql.Timestamp.valueOf("2024-01-02 10:00:00"), 64L),
       (java.sql.Timestamp.valueOf("2024-01-03 10:00:00"), 0L),  // repeat across days
       (java.sql.Timestamp.valueOf("2024-01-05 10:00:00"), 127L),
-      (java.sql.Timestamp.valueOf("2024-01-09 10:00:00"), 200L) // day 1 falls out of its window
+      (java.sql.Timestamp.valueOf("2024-01-09 10:00:00"), 200L) // days 1-2 fall out of its window
     ).toDF("ts", "user_id")
     val got = graft.operators.Sketches
-      .bitmapSlidingDistinct(ev, "ts", "user_id", windowDays = 3)
+      .bitmapSlidingDistinct(ev, "ts", "user_id")
       .collect()
       .map(r => (r.getAs[java.sql.Date]("day").toString, r.getAs[Long]("n_exact"))).toMap
-    // brute force over the same 3-day windows
+    // brute force over the same 7-day windows
     assert(got == Map(
       "2024-01-01" -> 2L, // {0,63}
       "2024-01-02" -> 3L, // {0,63,64}
       "2024-01-03" -> 3L, // {0,63,64} (0 repeats)
-      "2024-01-05" -> 2L, // {0,127} (day3's 0 still inside, day1 aged out)
-      "2024-01-09" -> 1L  // {200}
+      "2024-01-05" -> 4L, // {0,63,64,127}
+      "2024-01-09" -> 3L  // {0,127,200} (day3's 0 still inside, days 1-2 aged out)
     ))
     // only days present in the data appear — no trailing ghost windows
     assert(!got.contains("2024-01-04") && !got.contains("2024-01-10"))
-  }
-
-  test("hllDistinct rejects out-of-range precision") {
-    val df = Seq(("g", 1L)).toDF("g", "k")
-    intercept[IllegalArgumentException] {
-      Sketches.hllDistinct(df, Seq("g"), col("k"), p = 20)
-    }
   }
 
   // ---- NFC normalization ----
@@ -171,9 +164,10 @@ class SketchesSpec extends SparkSpec {
     // key 7 appears 300x, key 13 100x, 400 singletons
     val rows = Seq.fill(300)(7L) ++ Seq.fill(100)(13L) ++ (1000L until 1400L)
     val df = rows.map(("g", _)).toDF("g", "k")
-    val top = Sketches.cmsTopK(df, Seq("g"), col("k"), k = 2, depth = 4, width = 1024)
-      .orderBy(col("est_count").desc).collect()
-    assert(top.map(_.getAs[Long]("key")).toSeq == Seq(7L, 13L))
+    val top = Sketches.cmsTopK(df, Seq("g"), col("k"))
+      .orderBy(col("est_count").desc, col("key")).collect()
+    assert(top.length == Sketches.CmsTopK)
+    assert(top.map(_.getAs[Long]("key")).take(2).toSeq == Seq(7L, 13L))
     top.foreach { r =>
       assert(r.getAs[Long]("est_count") >= r.getAs[Long]("exact_count")) // CMS never undercounts
     }
@@ -183,18 +177,11 @@ class SketchesSpec extends SparkSpec {
   test("cmsTopK is deterministic under repartitioning") {
     val rows = (1 to 500).map(i => ("g", (i % 37).toLong))
     val df = rows.toDF("g", "k")
-    val a = Sketches.cmsTopK(df, Seq("g"), col("k"), k = 5)
+    val a = Sketches.cmsTopK(df, Seq("g"), col("k"))
       .orderBy(col("est_count").desc, col("key")).collect().toSeq
-    val b = Sketches.cmsTopK(df.repartition(11, col("k")), Seq("g"), col("k"), k = 5)
+    val b = Sketches.cmsTopK(df.repartition(11, col("k")), Seq("g"), col("k"))
       .orderBy(col("est_count").desc, col("key")).collect().toSeq
     assert(a == b)
-  }
-
-  test("cmsTopK validates sketch geometry") {
-    val df = Seq(("g", 1L)).toDF("g", "k")
-    intercept[IllegalArgumentException] {
-      Sketches.cmsTopK(df, Seq("g"), col("k"), width = 1000) // not a power of 2
-    }
   }
 
   // ---- upsert merge ----
@@ -260,15 +247,5 @@ class SketchesSpec extends SparkSpec {
     // only hash collisions contribute; with 40×41 keys in 1024×4 buckets the
     // min over depth rows is a small number, and never negative
     assert(out._1 >= 0L && out._1 <= 20L)
-  }
-
-  test("cmsJoinSize validates depth and width") {
-    val df = Seq(1L).toDF("k")
-    intercept[IllegalArgumentException] {
-      Sketches.cmsJoinSize(df, df, col("k"), col("k"), depth = 0)
-    }
-    intercept[IllegalArgumentException] {
-      Sketches.cmsJoinSize(df, df, col("k"), col("k"), width = 1000)
-    }
   }
 }

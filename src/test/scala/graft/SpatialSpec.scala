@@ -48,17 +48,34 @@ class SpatialSpec extends SparkSpec {
   }
 
   test("bucketedContainsJoin agrees with the broadcast tier") {
-    val broadcastRes = Spatial.containsJoin(points, polys, "x", "y", "coords")
+    // Besides the tiles above (one bucket each), a triangle and the donut
+    // scaled by CellSize: each envelope spans 5 × 5 buckets, and the points
+    // sit in different buckets of them — inside, in the hole, and inside
+    // the triangle's envelope but outside the triangle.
+    val c = Spatial.CellSize
+    val tri = Seq(Seq(Seq(0.0, 20.0), Seq(4 * c, 20.0), Seq(0.0, 20.0 + 4 * c), Seq(0.0, 20.0)))
+    val bigDonut = donut.map(_.map(_.map(_ * c)))
+    val allPolys = polys.union(Seq(("tri", tri), ("bigDonut", bigDonut)).toDF("poly_id", "coords"))
+    val allPoints = points.union(Seq(
+      (10L, 1.0, 21.0),               // tri, its south-west bucket
+      (11L, 3 * c, 20.5),             // tri, three buckets east
+      (12L, 0.5, 20.0 + 3.5 * c),     // tri, three buckets north
+      (13L, 3.5 * c, 20.0 + 3.5 * c), // tri's envelope, outside tri
+      (14L, 10.5 * c, 13.5 * c),      // bigDonut ring, north-west
+      (15L, 13.5 * c, 10.5 * c),      // bigDonut ring, south-east
+      (16L, 12.0 * c, 12.0 * c)       // bigDonut hole
+    ).toDF("pt_id", "x", "y"))
+    val broadcastRes = Spatial.containsJoin(allPoints, allPolys, "x", "y", "coords")
       .select("pt_id", "poly_id").as[(Long, String)].collect().toSet
-    for (cell <- Seq(0.5, 1.0, 3.0)) {
-      val bucketed = Spatial.bucketedContainsJoin(points, polys, "x", "y", "coords", cell)
-        .select("pt_id", "poly_id").as[(Long, String)].collect().toSet
-      assert(bucketed == broadcastRes, s"cellSize=$cell")
-    }
+    assert(broadcastRes == Set((1L, "west"), (2L, "east"), (4L, "donut"),
+      (10L, "tri"), (11L, "tri"), (12L, "tri"), (14L, "bigDonut"), (15L, "bigDonut")))
+    val bucketed = Spatial.bucketedContainsJoin(allPoints, allPolys, "x", "y", "coords")
+      .select("pt_id", "poly_id").as[(Long, String)].collect().toSet
+    assert(bucketed == broadcastRes)
   }
 
   test("bucketed join plans an equi-join shuffle, not a cross product") {
-    val plan = Spatial.bucketedContainsJoin(points, polys, "x", "y", "coords", 1.0)
+    val plan = Spatial.bucketedContainsJoin(points, polys, "x", "y", "coords")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)

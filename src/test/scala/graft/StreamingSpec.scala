@@ -329,7 +329,7 @@ class StreamingSpec extends SparkSpec {
       // estimates are bit-identical for the same key multiset
       val batchEst = graft.operators.Sketches
         .hllDistinct((batch1 ++ batch2).map(e => ("g", e.key)).toDF("g", "k"),
-          Seq("g"), col("k"), p = 8)
+          Seq("g"), col("k"))
         .select("est_distinct").as[Double].head()
       assert(streamed._1 == batchEst)
     } finally q.stop()
@@ -352,7 +352,7 @@ class StreamingSpec extends SparkSpec {
       .select("group", "est_distinct", "n_events")
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).sortBy(_._1)
     val want = graft.operators.Sketches
-      .hllDistinct(df.select($"event_type".as("g"), $"user_id".as("k")), Seq("g"), col("k"), p = 8)
+      .hllDistinct(df.select($"event_type".as("g"), $"user_id".as("k")), Seq("g"), col("k"))
       .join(df.groupBy($"event_type".as("g")).count(), Seq("g"))
       .select("g", "est_distinct", "count")
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).sortBy(_._1)
@@ -479,40 +479,38 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming throttle admits the batch twin's set under ordered delivery") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Event
+    import graft.streaming.{Event, StreamingThrottle}
     val input = MemoryStream[Event]
-    val out = graft.streaming.StreamingThrottle.throttled(input.toDS(), limit = 2)
+    val out = StreamingThrottle.throttled(input.toDS())
     val q = out.writeStream
       .format("memory")
       .queryName("throttle_test")
       .outputMode(OutputMode.Append())
       .start()
+    def at(h: Int, day: Int = 1) = Timestamp.valueOf(f"2024-01-0$day%d $h%02d:00:00")
+    // u1: 25 events, past both quotas, delivered over two batches; u2: a
+    // same-ts run decided by event_id, then one more over the stream quota
+    val u1 = (1 to 25).map(i => Event(1L, i.toLong, "a", at((i - 1) % 24, day = 1 + (i - 1) / 24)))
+    val u2 = Seq(Event(2L, 36L, "a", at(10, 2)), Event(2L, 35L, "b", at(10, 2)),
+      Event(2L, 34L, "a", at(10, 2)), Event(2L, 33L, "b", at(10, 2)),
+      Event(2L, 32L, "a", at(10, 2)), Event(2L, 37L, "c", at(11, 2)))
     try {
-      // u1 over quota across batches; u2's same-ts pair decided by event_id
-      input.addData(
-        Event(1L, 1L, "a", Timestamp.valueOf("2024-01-01 10:00:00")),
-        Event(1L, 2L, "b", Timestamp.valueOf("2024-01-01 11:00:00")),
-        Event(2L, 6L, "a", Timestamp.valueOf("2024-01-02 10:00:00")),
-        Event(2L, 5L, "b", Timestamp.valueOf("2024-01-02 10:00:00")))
+      input.addData(u1.take(3) ++ u2.take(4): _*)
       q.processAllAvailable()
-      input.addData(
-        Event(1L, 3L, "c", Timestamp.valueOf("2024-01-01 12:00:00")), // over quota
-        Event(2L, 7L, "c", Timestamp.valueOf("2024-01-02 11:00:00"))) // over quota
+      input.addData(u1.drop(3) ++ u2.drop(4): _*) // u1's 6th on and u2's 37 are over quota
       q.processAllAvailable()
       val streamed = spark.table("throttle_test")
         .select("event_id").as[Long].collect().toSet
-      assert(streamed == Set(1L, 2L, 5L, 6L))
-      val batchEv = Seq(
-        (1L, 1L, "a", Timestamp.valueOf("2024-01-01 10:00:00")),
-        (2L, 1L, "b", Timestamp.valueOf("2024-01-01 11:00:00")),
-        (3L, 1L, "c", Timestamp.valueOf("2024-01-01 12:00:00")),
-        (5L, 2L, "b", Timestamp.valueOf("2024-01-02 10:00:00")),
-        (6L, 2L, "a", Timestamp.valueOf("2024-01-02 10:00:00")),
-        (7L, 2L, "c", Timestamp.valueOf("2024-01-02 11:00:00"))
-      ).toDF("event_id", "user_id", "event_type", "ts")
-      val batch = graft.streaming.StreamingThrottle.throttleBatch(batchEv, 2)
-        .select("event_id").as[Long].collect().toSet
-      assert(streamed == batch)
+      assert(streamed == Set(1L, 2L, 3L, 4L, 5L, 32L, 33L, 34L, 35L, 36L))
+      // the batch twin keeps its longer (ts, event_id) prefix; the stream
+      // admitted exactly the first StreamQuota of it per user
+      val batch = StreamingThrottle.throttleBatch((u1 ++ u2).toDF())
+        .select("user_id", "ts", "event_id").as[(Long, Timestamp, Long)].collect()
+      assert(batch.count(_._1 == 1L) == StreamingThrottle.AuditQuota)
+      val prefix = batch.groupBy(_._1).values
+        .flatMap(_.sortBy(r => (r._2.getTime, r._3)).take(StreamingThrottle.StreamQuota))
+        .map(_._3).toSet
+      assert(streamed == prefix)
     } finally q.stop()
   }
 
@@ -570,22 +568,22 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.Event
     val input = MemoryStream[Event]
-    val out = graft.streaming.StreamingThrottle.throttled(input.toDS(), limit = 1)
+    val out = graft.streaming.StreamingThrottle.throttled(input.toDS())
     val q = out.writeStream
       .format("memory")
       .queryName("throttle_reopen_test")
       .outputMode(OutputMode.Append())
       .start()
     try {
-      input.addData(
-        Event(1L, 1L, "a", Timestamp.valueOf("2024-01-01 10:00:00")),
-        Event(1L, 2L, "b", Timestamp.valueOf("2024-01-01 11:00:00")))
+      // the first batch exhausts the quota of 5 and overshoots it by one
+      input.addData((1 to 6).map(i =>
+        Event(1L, i.toLong, "a", Timestamp.valueOf(f"2024-01-01 1$i%d:00:00"))): _*)
       q.processAllAvailable()
-      input.addData(Event(1L, 3L, "c", Timestamp.valueOf("2024-01-01 12:00:00")))
+      input.addData(Event(1L, 7L, "c", Timestamp.valueOf("2024-01-01 18:00:00")))
       q.processAllAvailable()
       val streamed = spark.table("throttle_reopen_test")
         .select("event_id").as[Long].collect().toSet
-      assert(streamed == Set(1L))
+      assert(streamed == (1L to 5L).toSet)
     } finally q.stop()
   }
 
@@ -593,23 +591,23 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Double, Long)]
     val leaders = StreamingLeaders.topKLeaders(
-      input.toDF().toDF("g", "v", "id"), Seq("g"), $"v", $"id", k = 2)
+      input.toDF().toDF("g", "v", "id"), Seq("g"), $"v", $"id")
     val q = leaders.writeStream
       .format("memory").queryName("leaders_test")
       .outputMode(OutputMode.Complete())
       .start()
     try {
-      input.addData(("a", 1.0, 1L), ("a", 5.0, 2L), ("b", 7.0, 3L))
+      input.addData(("a", 1.0, 1L), ("a", 5.0, 2L), ("a", 0.5, 6L), ("b", 7.0, 3L))
       q.processAllAvailable()
       val r1 = spark.table("leaders_test").orderBy("g", "rnk")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-      assert(r1 == Seq(("a", 1L, 5.0, 2L), ("a", 2L, 1.0, 1L), ("b", 1L, 7.0, 3L)))
+      assert(r1 == Seq(("a", 1L, 5.0, 2L), ("a", 2L, 1.0, 1L), ("a", 3L, 0.5, 6L), ("b", 1L, 7.0, 3L)))
       // a later batch evicts a leader — state carried the old heap over
       input.addData(("a", 9.0, 4L), ("a", 6.0, 5L))
       q.processAllAvailable()
       val r2 = spark.table("leaders_test").orderBy("g", "rnk")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-      assert(r2 == Seq(("a", 1L, 9.0, 4L), ("a", 2L, 6.0, 5L), ("b", 1L, 7.0, 3L)))
+      assert(r2 == Seq(("a", 1L, 9.0, 4L), ("a", 2L, 6.0, 5L), ("a", 3L, 5.0, 2L), ("b", 1L, 7.0, 3L)))
     } finally q.stop()
   }
 

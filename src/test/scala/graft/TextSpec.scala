@@ -19,8 +19,9 @@ class TextSpec extends SparkSpec {
   }
 
   test("wordShingles produce n-k+1 shingles, empty below k") {
+    assert(graft.operators.Dedup.MinHashK == 3)
     val sh = Seq("a b c d", "a b").toDF("t")
-      .select(TextFunctions.wordShingles($"t", 3).as("s"))
+      .select(TextFunctions.wordShingles($"t").as("s"))
       .select(size($"s")).as[Int].collect().toSeq
     assert(sh == Seq(2, 0))
   }

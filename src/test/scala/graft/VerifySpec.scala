@@ -23,7 +23,7 @@ class VerifySpec extends SparkSpec {
   test("runAll with a filter matching nothing dumps zero queries") {
     val out = java.nio.file.Files.createTempDirectory("graft-verify-spec").toString
     val (ok, failed) =
-      Verify.runAll(spark, "/nonexistent-sf-dir", out, Some(Set("__no_such_query__")), 1, 600)
+      Verify.runAll(spark, "/nonexistent-sf-dir", out, Some(Set("__no_such_query__")), 600)
     assert(ok == 0 && failed == 0)
   }
 
